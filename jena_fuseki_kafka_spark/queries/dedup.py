@@ -435,8 +435,11 @@ def d06(spark, sf_dir):
 # even when lazy) plus a cluster job.  Same size-adaptive pattern as the
 # QuadStore driver commit: request-scale inputs skip the distributed
 # machinery, production-scale inputs (a 100 TB corpus' near-dup graph)
-# exceed the bound and keep the distributed fixpoint unchanged.  16
-# bytes x 200k edges ~ 3 MB on the driver — far under any collect limit.
+# exceed the bound and keep the distributed fixpoint unchanged.  Driver
+# memory at the bound: the collected Rows, the node set, the union-find
+# parents and the sorted labels peak at ~500 bytes per edge, ~100 MB for
+# 200k edges (tracemalloc, CPython 3.11, int and short string ids, path
+# graph) — well inside a default driver heap.
 CC_DRIVER_MAX_EDGES = 200_000
 
 
@@ -502,7 +505,11 @@ def connected_components(
     ``CC_DRIVER_MAX_EDGES``; pass 0 to force the distributed path) is
     solved with union-find on the driver — identical labels, none of the
     per-round planning+job toll.  Above the bound the distributed
-    fixpoint below runs unchanged.
+    fixpoint below runs unchanged.  ``max_rounds`` bounds only that
+    distributed fixpoint; the driver union-find needs no rounds.
+
+    A pair with a null id links nothing (a null names no document): it is
+    dropped before either path runs, so both return the same labels.
 
     Each round does two steps, both |edges|/|V|-bounded shuffles with
     localCheckpoint truncating the per-round lineage:
@@ -523,6 +530,7 @@ def connected_components(
     (now only reachable via an adversarial max_rounds override or a bug):
     partial labels would silently split components — d06/s06 would emit
     wrong clusters and p04 a LEAKY train/test split with no signal."""
+    pairs = pairs.filter(F.col("doc_a").isNotNull() & F.col("doc_b").isNotNull())
     edges = (
         pairs.unionByName(
             pairs.select(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b"))

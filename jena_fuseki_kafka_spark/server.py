@@ -20,13 +20,16 @@ operations over the engine:
   POST      /{ds}/patch   (same, for clients that can't send PATCH)
 
 Single-process by design: this is the driver-side control surface (like
-Fuseki's HTTP layer in front of the store), not a data-plane service —
-reads and writes execute as Spark jobs on the cluster.
+Fuseki's HTTP layer in front of the store), not a data-plane service.
+Reads execute as Spark jobs on the cluster.  Writes hand the parsed rows
+to ``QuadStore.commit``, which applies request-sized writes to a small
+store on the driver without a Spark job and everything else as Spark jobs.
 """
 
 from __future__ import annotations
 
 import json
+import logging
 import threading
 import uuid
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
@@ -34,7 +37,7 @@ from urllib.parse import parse_qs, urlparse
 
 from pyspark.sql import SparkSession, functions as F
 
-from .model import DEFAULT_GRAPH, QUAD_SCHEMA, RdfParseError
+from .model import DEFAULT_GRAPH, RdfParseError
 from .rdf.content_types import parse_payload
 from .rdf.serialize import (
     iter_nquads,
@@ -49,6 +52,8 @@ from .sparql.update import UpdateEngine
 from .store import QuadStore
 
 _JSON = "application/sparql-results+json"
+
+_log = logging.getLogger(__name__)
 
 # SELECTs whose row count is provably small FROM THE QUERY SHAPE are
 # collect()-ed instead of streamed through toLocalIterator: one job
@@ -74,16 +79,6 @@ def _bounded_result(ast) -> bool:
         )
     return False
 
-
-
-def _local_df(spark, rows, schema):
-    """Request-sized rows -> a SINGLE-partition DataFrame.  The default
-    createDataFrame parallelizes over defaultParallelism slices; a later
-    coalesce(1) (the store's small-commit write) then walks every Python
-    partition SERIALLY — ~32 Python-worker round-trips for a 1000-row
-    payload (measured 6s vs 0.4s).  One slice keeps the whole request on
-    one executor thread end-to-end."""
-    return spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
 
 
 class NotAcceptable(Exception):
@@ -228,45 +223,23 @@ class SparqlHttpServer:
                 raise RdfParseError("GSP write body must not contain deletes")
             g = op[1] if op[1] != DEFAULT_GRAPH and graph is None else target
             rows.append((g,) + tuple(op[2:]))
-        # dedup on the driver (request-sized list) so commit can skip the
-        # dropDuplicates shuffle; the row count is the store's size hint
         rows = list(dict.fromkeys(rows))
-        adds = _local_df(self.spark, rows, QUAD_SCHEMA)
-        deletes = None
-        if replace and store.version > 0:
-            # an empty store has nothing to replace — keep deletes None so
-            # the hinted single-action commit applies on first upload
-            deletes = store.read(self.spark).filter(F.col("graph") == target)
+        # PUT replaces the target graph: a graph-scoped delete, then the adds
         store.commit(
-            self.spark, adds=adds, deletes=deletes, txn_id=self._next_txn("gsp"),
-            assume_unique=True,
-            # a replaced graph is store-sized: shuffle, never broadcast
-            broadcast_deletes=deletes is None,
-            n_adds_hint=len(rows) if deletes is None else None,
+            self.spark, adds=rows, deletes=[(target,)] if replace else None,
+            txn_id=self._next_txn("gsp"),
         )
         return len(rows)
 
     def gsp_delete(self, store: QuadStore, graph: str | None):
         target = DEFAULT_GRAPH if graph in (None, "default") else graph
-        deletes = store.read(self.spark).filter(F.col("graph") == target)
-        store.commit(
-            self.spark, deletes=deletes, txn_id=self._next_txn("gsp-del"),
-            broadcast_deletes=False,
-        )
+        store.commit(self.spark, deletes=[(target,)], txn_id=self._next_txn("gsp-del"))
 
     def apply_patch(self, store: QuadStore, body: bytes, content_type: str | None):
         ops = parse_payload(body, content_type or "application/rdf-patch")
         adds = list(dict.fromkeys(op[1:] for op in ops if op[0] == "A"))
         dels = [op[1:] for op in ops if op[0] == "D"]
-        store.commit(
-            self.spark,
-            adds=_local_df(self.spark, adds, QUAD_SCHEMA) if adds else None,
-            deletes=_local_df(self.spark, dels, QUAD_SCHEMA) if dels else None,
-            txn_id=self._next_txn("patch"),
-            assume_unique=True,
-            n_adds_hint=len(adds) if adds else None,
-            n_deletes_hint=len(dels) if dels else None,
-        )
+        store.commit(self.spark, adds=adds, deletes=dels, txn_id=self._next_txn("patch"))
         return len(adds), len(dels)
 
 
@@ -321,6 +294,12 @@ def _make_handler(server: SparqlHttpServer):
         def _error(self, code: int, msg: str):
             self._send(code, "text/plain", msg + "\n")
 
+        def _server_error(self, e: Exception):
+            """A failure the client did not cause: 500 with the message,
+            traceback to the log."""
+            _log.exception("%s %s failed", self.command, self.path)
+            return self._error(500, str(e))
+
         def _route(self):
             parsed = urlparse(self.path)
             parts = [p for p in parsed.path.split("/") if p]
@@ -358,7 +337,7 @@ def _make_handler(server: SparqlHttpServer):
                 except NotAcceptable as e:
                     return self._error(406, str(e))
                 except Exception as e:  # pragma: no cover - defensive
-                    return self._error(500, str(e))
+                    return self._server_error(e)
             return self._error(404, "unknown endpoint")
 
         def do_POST(self):
@@ -393,6 +372,8 @@ def _make_handler(server: SparqlHttpServer):
                     return self._send(200, "application/json", json.dumps(res))
                 except RdfParseError as e:
                     return self._error(400, str(e))
+                except Exception as e:
+                    return self._server_error(e)
             if op == "data":
                 return self._gsp_write(store, body, ct, qs, replace=False)
             if op == "patch":
@@ -415,7 +396,7 @@ def _make_handler(server: SparqlHttpServer):
                 server.gsp_delete(store, self._graph_param(qs))
                 return self._send(204, "text/plain", "")
             except Exception as e:
-                return self._error(500, str(e))
+                return self._server_error(e)
 
         def do_PATCH(self):
             store, op, _ = self._route()
@@ -458,6 +439,8 @@ def _make_handler(server: SparqlHttpServer):
                 return self._send(200, "application/json", json.dumps({"quads": n}))
             except RdfParseError as e:
                 return self._error(400, str(e))
+            except Exception as e:
+                return self._server_error(e)
 
         def _patch(self, store, body, ct):
             try:
@@ -467,5 +450,7 @@ def _make_handler(server: SparqlHttpServer):
                 )
             except RdfParseError as e:
                 return self._error(400, str(e))
+            except Exception as e:
+                return self._server_error(e)
 
     return Handler

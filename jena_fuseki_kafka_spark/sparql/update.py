@@ -1,4 +1,4 @@
-"""SPARQL 1.1 Update + Graph Store Protocol over the QuadStore.
+"""SPARQL 1.1 Update over the QuadStore.
 
 The reference serves these via Fuseki HTTP endpoints (fuseki:update and
 fuseki:gsp-rw wired in config-connector.ttl:14-17) while deliberately
@@ -23,17 +23,18 @@ Supported update forms:
   adds), so 'INSERT DATA { q }; DELETE DATA { q }' leaves q absent and a
   DELETE WHERE sees quads inserted earlier in the same request
 
-Graph Store Protocol (get/put/post/delete on a graph) maps to
-filter/overwrite/append/delete on the graph column.
+Graph Store Protocol writes live in ``server.SparqlHttpServer``.
 """
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..checkpointing import stable_checkpoint
-from ..model import DEFAULT_GRAPH, QUAD_COLS, QUAD_SCHEMA, RdfParseError
-from ..store import QuadStore
+from ..model import DEFAULT_GRAPH, QUAD_COLS, RdfParseError
+from ..store import QuadStore, quad_frame
 from ..store.quadstore import _anti_join_quads
 from .ast import BGP
 from .parser import SparqlParser
@@ -338,6 +339,175 @@ def _pattern_is_constrained(pattern) -> bool:
     return False
 
 
+class _Pending:
+    """A request's pending net effect.  Every operation evaluates against
+    ``view()`` = base MINUS pending deletes UNION pending adds (SPARQL 1.1
+    sequential semantics), and the request ends in one store commit.
+
+    The state starts as driver-side rows — graphs cleared in full, quads
+    deleted, quads inserted: the order the store commit applies them — and
+    switches to DataFrames, for the rest of the request, at the first
+    operation whose quads are not collected on the driver (ADD/COPY/MOVE,
+    CLEAR NAMED/ALL, an unconstrained or overflowing WHERE, a bnode INSERT
+    template).  Both forms are kept net (inserting a quad removes it from
+    the pending deletes and vice versa), so no quad is ever in both and the
+    commit's delete-then-add order is safe.
+
+    The DataFrame form tracks the broadcast gate: True while every
+    contribution is request-sized (constants, loaded documents,
+    constrained patterns); store-sized sets must ride shuffle joins, never
+    a broadcast."""
+
+    def __init__(self, spark: SparkSession, store: QuadStore):
+        self.spark = spark
+        self.store = store
+        self._base: DataFrame | None = None
+        self.graphs: set[str] = set()
+        self.dels: dict[tuple, None] = {}
+        self.adds: dict[tuple, None] = {}
+        self.frames = False
+        self.del_df: DataFrame | None = None
+        self.add_df: DataFrame | None = None
+        self.adds_bounded = True
+        self.dels_bounded = True
+
+    def base(self) -> DataFrame:
+        if self._base is None:
+            self._base = self.store.read(self.spark)
+        return self._base
+
+    def view(self) -> DataFrame:
+        v = self.base()
+        if self.frames:
+            if self.del_df is not None:
+                v = _anti_join_quads(v, self.del_df, broadcast_right=self.dels_bounded)
+            if self.add_df is not None:
+                v = v.unionByName(self.add_df).dropDuplicates(QUAD_COLS)
+            return v
+        if self.graphs:
+            v = v.filter(~F.col("graph").isin(sorted(self.graphs)))
+        if self.dels:
+            v = _anti_join_quads(
+                v, quad_frame(self.spark, list(self.dels)), broadcast_right=True
+            )
+        if self.adds:
+            v = v.unionByName(quad_frame(self.spark, list(self.adds))).dropDuplicates(QUAD_COLS)
+        return v
+
+    # -- rows -------------------------------------------------------------
+    def insert_rows(self, rows: list[tuple]) -> None:
+        if self.frames:
+            return self.insert_df(quad_frame(self.spark, rows))
+        for r in rows:
+            self.dels.pop(r, None)
+            self.adds[r] = None
+
+    def delete_rows(self, rows: list[tuple]) -> None:
+        if self.frames:
+            return self.delete_df(quad_frame(self.spark, rows))
+        for r in rows:
+            self.adds.pop(r, None)
+            self.dels[r] = None
+
+    def clear_graph(self, graph: str) -> None:
+        if self.frames:
+            return self.delete_df(
+                self.view().filter(F.col("graph") == graph), bounded=False
+            )
+        self.graphs.add(graph)
+        self.adds = {r: None for r in self.adds if r[0] != graph}
+
+    # -- DataFrames -------------------------------------------------------
+    def _to_frames(self) -> None:
+        if self.frames:
+            return
+        parts = []
+        if self.graphs:
+            parts.append(self.base().filter(F.col("graph").isin(sorted(self.graphs))))
+            self.dels_bounded = False
+        if self.dels:
+            parts.append(quad_frame(self.spark, list(self.dels)))
+        self.del_df = reduce(DataFrame.unionByName, parts) if parts else None
+        self.add_df = quad_frame(self.spark, list(self.adds)) if self.adds else None
+        self.frames = True
+
+    def insert_df(self, df: DataFrame, bounded: bool = True) -> None:
+        self._to_frames()
+        df = df.select(*QUAD_COLS)
+        if self.del_df is not None:
+            self.del_df = _anti_join_quads(self.del_df, df, broadcast_right=bounded)
+        self.adds_bounded = self.adds_bounded and bounded
+        self.add_df = (
+            df if self.add_df is None
+            else self.add_df.unionByName(df).dropDuplicates(QUAD_COLS)
+        )
+
+    def delete_df(self, df: DataFrame, bounded: bool = True) -> None:
+        self._to_frames()
+        df = df.select(*QUAD_COLS)
+        if self.add_df is not None:
+            self.add_df = _anti_join_quads(self.add_df, df, broadcast_right=bounded)
+        self.dels_bounded = self.dels_bounded and bounded
+        self.del_df = (
+            df if self.del_df is None
+            else self.del_df.unionByName(df).dropDuplicates(QUAD_COLS)
+        )
+
+    # -- commit -----------------------------------------------------------
+    def broadcast(self) -> dict[str, bool]:
+        if self.frames:
+            return {"adds": self.adds_bounded, "deletes": self.dels_bounded}
+        # the store never broadcasts a graph-scoped delete
+        return {"adds": True, "deletes": not self.graphs}
+
+    def commit(self, txn_id: str | None) -> int:
+        if self.frames:
+            return self.store.commit(
+                self.spark, adds=self.add_df, deletes=self.del_df, txn_id=txn_id,
+                broadcast_adds=self.adds_bounded, broadcast_deletes=self.dels_bounded,
+            )
+        deletes = [(g,) for g in sorted(self.graphs)] + list(self.dels)
+        return self.store.commit(
+            self.spark, adds=list(self.adds), deletes=deletes, txn_id=txn_id
+        )
+
+
+def _has_bnode(tmpl) -> bool:
+    return any(t is not None and t[0] == "bnode" for quad in tmpl for t in quad)
+
+
+def _instantiate_rows(solutions: list, template: list) -> list[tuple]:
+    """Driver twin of ``UpdateEngine._instantiate`` for a bnode-free
+    template over collected bindings: the same quads, as row tuples.  A
+    variable binding is a (kind, value, datatype, lang) struct; a template
+    quad with an unbound variable is skipped (SPARQL 1.1 Update §3.1.3)."""
+    out: dict[tuple, None] = {}
+    for sol in solutions:
+        b = sol.asDict()
+
+        def value(t):
+            if t[0] != "var":
+                return t[1]
+            v = b.get(t[1])
+            return None if v is None else v["value"]
+
+        for s, p, o, g in template:
+            if o[0] == "var":
+                v = b.get(o[1])
+                obj = (
+                    (None,) * 4 if v is None
+                    else (v["kind"], v["value"], v["datatype"] or None, v["lang"] or None)
+                )
+            elif o[0] == "literal":
+                obj = ("literal", o[1], o[2] or None, o[3] or None)
+            else:
+                obj = (o[0], o[1], None, None)
+            row = (DEFAULT_GRAPH if g is None else value(g), value(s), value(p)) + obj
+            if None not in row[:5]:
+                out[row] = None
+    return list(out)
+
+
 class UpdateEngine:
     def __init__(self, spark: SparkSession, store: QuadStore):
         self.spark = spark
@@ -354,11 +524,11 @@ class UpdateEngine:
         protocol_dataset: tuple | None = None,
     ) -> dict:
         """Apply a SPARQL Update request atomically (one store commit),
-        sequentially within the request: every operation evaluates against
-        ``base MINUS pending_deletes UNION pending_adds``.  The pending
-        sets are net-effect maintained (inserting a quad removes it from
-        pending deletes and vice versa), so no quad ever lands in both and
-        the final commit's delete-then-add application is order-safe.
+        sequentially within the request (see ``_Pending``).  INSERT DATA,
+        DELETE DATA, LOAD, CLEAR GRAPH/DEFAULT and a constrained WHERE
+        whose bindings fit ``DRIVER_COMMIT_ROWS`` stay rows, so on a small
+        store the request commits without a Spark job beyond the WHERE
+        evaluation.
 
         ``protocol_dataset`` = (using_iris, using_named_iris) carries the
         SPARQL 1.1 Protocol ``using-graph-uri``/``using-named-graph-uri``
@@ -373,58 +543,8 @@ class UpdateEngine:
                         "an update containing USING or WITH (SPARQL 1.1 "
                         "Protocol §2.2.3)"
                     )
-        base = self.store.read(self.spark)
-        pending_adds: DataFrame | None = None
-        pending_dels: DataFrame | None = None
-        # broadcast gate: True while every contribution to the pending set
-        # is request-sized (constants, loaded documents, constrained
-        # patterns).  CLEAR/DROP, whole-graph ADD/COPY/MOVE, and
-        # unconstrained DELETE WHERE flip the flag — those sets are
-        # store-sized and must ride shuffle joins, never a broadcast.
-        adds_bounded = True
-        dels_bounded = True
-        # row-count hints: exact while every contribution came from local
-        # rows (INSERT/DELETE DATA, LOAD); a pattern-derived set (unknown
-        # size) resets to None and commit falls back to its stats action
-        adds_hint: int | None = 0
-        dels_hint: int | None = 0
+        pending = _Pending(self.spark, self.store)
         load_index = 0  # per-request LOAD sequence number (bnode freshness)
-
-        def view() -> DataFrame:
-            v = base
-            if pending_dels is not None:
-                v = _anti_join_quads(v, pending_dels, broadcast_right=dels_bounded)
-            if pending_adds is not None:
-                v = v.unionByName(pending_adds).dropDuplicates(QUAD_COLS)
-            return v
-
-        def do_insert(df: DataFrame, bounded: bool = True) -> None:
-            nonlocal pending_adds, pending_dels, adds_bounded, adds_hint
-            n = getattr(df, "_const_quad_count", None)
-            adds_hint = (adds_hint + n) if (n is not None and adds_hint is not None) else None
-            df = df.select(*QUAD_COLS)
-            if pending_dels is not None:
-                pending_dels = _anti_join_quads(pending_dels, df, broadcast_right=bounded)
-            adds_bounded = adds_bounded and bounded
-            pending_adds = (
-                df
-                if pending_adds is None
-                else pending_adds.unionByName(df).dropDuplicates(QUAD_COLS)
-            )
-
-        def do_delete(df: DataFrame, bounded: bool = True) -> None:
-            nonlocal pending_adds, pending_dels, dels_bounded, dels_hint
-            n = getattr(df, "_const_quad_count", None)
-            dels_hint = (dels_hint + n) if (n is not None and dels_hint is not None) else None
-            df = df.select(*QUAD_COLS)
-            if pending_adds is not None:
-                pending_adds = _anti_join_quads(pending_adds, df, broadcast_right=bounded)
-            dels_bounded = dels_bounded and bounded
-            pending_dels = (
-                df
-                if pending_dels is None
-                else pending_dels.unionByName(df).dropDuplicates(QUAD_COLS)
-            )
 
         import hashlib
         import uuid as _uuid
@@ -437,46 +557,37 @@ class UpdateEngine:
         def _op_suffix(op_index: int) -> str:
             return hashlib.md5(f"{req_seed}|op{op_index}".encode()).hexdigest()[:12]
 
-        def _has_bnode(tmpl) -> bool:
-            return any(
-                t is not None and t[0] == "bnode"
-                for quad in tmpl
-                for t in quad
-            )
-
         for op_index, op in enumerate(ops):
             kind = op[0]
             if kind == "insert_data":
-                do_insert(self._const_quads(op[1], bnode_suffix=_op_suffix(op_index)))
+                pending.insert_rows(self._const_rows(op[1], bnode_suffix=_op_suffix(op_index)))
             elif kind == "delete_data":
                 if _has_bnode(op[1]):
                     # SPARQL 1.1 Update §3.1.2: bnodes are disallowed in
                     # DELETE DATA (they could never denote a stored node)
                     raise RdfParseError("DELETE DATA must not contain blank nodes")
-                do_delete(self._const_quads(op[1]))
+                pending.delete_rows(self._const_rows(op[1]))
             elif kind == "clear":
                 target = op[1]
-                if target == "default":
-                    cond = F.col("graph") == DEFAULT_GRAPH
-                elif target == "named":
+                if target == "named":
                     cond = F.col("graph") != DEFAULT_GRAPH
+                    pending.delete_df(pending.view().filter(cond), bounded=False)
                 elif target == "all":
-                    cond = F.lit(True)
+                    pending.delete_df(pending.view(), bounded=False)
                 else:
-                    cond = F.col("graph") == target
-                do_delete(view().filter(cond), bounded=False)
+                    pending.clear_graph(DEFAULT_GRAPH if target == "default" else target)
             elif kind == "load":
                 silent, src, into = op[1], op[2], op[3]
                 load_index += 1
                 try:
-                    quads = self._load_document(
+                    rows = self._load_rows(
                         src, into, txn_id=txn_id, load_index=load_index
                     )
                 except Exception:
                     if silent:
                         continue
                     raise
-                do_insert(quads)
+                pending.insert_rows(rows)
             elif kind == "create":
                 pass  # a quad set has no empty graphs (same as Fuseki TDB)
             elif kind in ("add", "copy", "move"):
@@ -487,86 +598,83 @@ class UpdateEngine:
                 dst_g = DEFAULT_GRAPH if dst is None else dst
                 # build the source selection against the pre-op state BEFORE
                 # mutating pending sets (DataFrames capture the plan now)
+                view = pending.view()
                 moved = (
-                    view()
-                    .filter(F.col("graph") == src_g)
+                    view.filter(F.col("graph") == src_g)
                     .withColumn("graph", F.lit(dst_g))
                 )
                 if kind in ("copy", "move"):
-                    do_delete(view().filter(F.col("graph") == dst_g), bounded=False)
+                    pending.delete_df(view.filter(F.col("graph") == dst_g), bounded=False)
                 if kind == "move":
-                    do_delete(view().filter(F.col("graph") == src_g), bounded=False)
-                do_insert(moved, bounded=False)
+                    pending.delete_df(view.filter(F.col("graph") == src_g), bounded=False)
+                pending.insert_df(moved, bounded=False)
             elif kind == "modify":
-                del_tmpl, ins_tmpl, pattern = op[1], op[2], op[3]
-                with_graph, using, using_named = op[4], op[5], op[6]
-                if protocol_dataset is not None:
-                    using, using_named = protocol_dataset
-                # WITH scopes unqualified template quads and (absent USING)
-                # the WHERE pattern's default graph (SPARQL 1.1 Update §3.1.3)
-                if with_graph is not None:
-                    wg = ("iri", with_graph)
-                    if del_tmpl:
-                        del_tmpl = [(s, p, o, g or wg) for s, p, o, g in del_tmpl]
-                    if ins_tmpl:
-                        ins_tmpl = [(s, p, o, g or wg) for s, p, o, g in ins_tmpl]
-                dataset = view()
-                graph_arg = None
-                if using or using_named:
-                    # USING builds the pattern's dataset: default graph :=
-                    # union of USING graphs (relabeled), named graphs :=
-                    # the USING NAMED set.  WITH is ignored for the pattern.
-                    parts = []
-                    if using:
-                        parts.append(
-                            dataset.filter(F.col("graph").isin(*using))
-                            .withColumn("graph", F.lit(DEFAULT_GRAPH))
-                        )
-                    if using_named:
-                        parts.append(dataset.filter(F.col("graph").isin(*using_named)))
-                    dataset = parts[0]
-                    for extra in parts[1:]:
-                        dataset = dataset.unionByName(extra)
-                elif with_graph is not None:
-                    graph_arg = ("iri", with_graph)
-                # translate the WHERE pattern once against the accumulated
-                # state, instantiate both templates from the same bindings
-                translator = Translator(dataset)
-                df = translator._pattern(translator._rewrite_exists(pattern), graph=graph_arg)
-                # materialize the (request-sized) bindings once: both
-                # templates instantiate from it, and later ops' anti-joins
-                # would otherwise re-evaluate the whole pattern lineage
-                if del_tmpl and ins_tmpl:
-                    df = stable_checkpoint(df, eager=True)
-                bounded = _pattern_is_constrained(pattern)
+                self._modify(pending, op, protocol_dataset, _op_suffix(op_index))
+        self.last_commit_broadcast = pending.broadcast()
+        return {"version": pending.commit(txn_id)}
+
+    def _modify(self, pending: _Pending, op: tuple, protocol_dataset, bnode_suffix: str):
+        """DELETE/INSERT ... WHERE: evaluate the pattern once against the
+        pending view and instantiate both templates from the same
+        bindings."""
+        del_tmpl, ins_tmpl, pattern = op[1], op[2], op[3]
+        with_graph, using, using_named = op[4], op[5], op[6]
+        if del_tmpl and _has_bnode(del_tmpl):
+            # §3.1.3: DELETE templates must not contain bnodes
+            raise RdfParseError("DELETE template must not contain blank nodes")
+        if protocol_dataset is not None:
+            using, using_named = protocol_dataset
+        # WITH scopes unqualified template quads and (absent USING) the
+        # WHERE pattern's default graph (SPARQL 1.1 Update §3.1.3)
+        if with_graph is not None:
+            wg = ("iri", with_graph)
+            if del_tmpl:
+                del_tmpl = [(s, p, o, g or wg) for s, p, o, g in del_tmpl]
+            if ins_tmpl:
+                ins_tmpl = [(s, p, o, g or wg) for s, p, o, g in ins_tmpl]
+        dataset = pending.view()
+        graph_arg = None
+        if using or using_named:
+            # USING builds the pattern's dataset: default graph := union of
+            # USING graphs (relabeled), named graphs := the USING NAMED set.
+            # WITH is ignored for the pattern.
+            parts = []
+            if using:
+                parts.append(
+                    dataset.filter(F.col("graph").isin(*using))
+                    .withColumn("graph", F.lit(DEFAULT_GRAPH))
+                )
+            if using_named:
+                parts.append(dataset.filter(F.col("graph").isin(*using_named)))
+            dataset = reduce(DataFrame.unionByName, parts)
+        elif with_graph is not None:
+            graph_arg = ("iri", with_graph)
+        translator = Translator(dataset)
+        df = translator._pattern(translator._rewrite_exists(pattern), graph=graph_arg)
+        bounded = _pattern_is_constrained(pattern)
+        cap = self.store.DRIVER_COMMIT_ROWS
+        if bounded and cap >= 0 and not (ins_tmpl and _has_bnode(ins_tmpl)):
+            # request-sized bindings: collect them once (one bounded job
+            # that also proves the size) and instantiate on the driver
+            solutions = df.limit(cap + 1).collect()
+            if len(solutions) <= cap:
                 if del_tmpl:
-                    if _has_bnode(del_tmpl):
-                        # §3.1.3: DELETE templates must not contain bnodes
-                        raise RdfParseError(
-                            "DELETE template must not contain blank nodes"
-                        )
-                    do_delete(self._instantiate(df, del_tmpl), bounded=bounded)
+                    pending.delete_rows(_instantiate_rows(solutions, del_tmpl))
                 if ins_tmpl:
-                    do_insert(
-                        self._instantiate(
-                            df, ins_tmpl, bnode_suffix=_op_suffix(op_index)
-                        ),
-                        bounded=bounded,
-                    )
-        self.last_commit_broadcast = {"adds": adds_bounded, "deletes": dels_bounded}
-        version = self.store.commit(
-            self.spark,
-            adds=pending_adds,
-            deletes=pending_dels,
-            txn_id=txn_id,
-            broadcast_adds=adds_bounded,
-            broadcast_deletes=dels_bounded,
-            # hints are upper bounds (anti-joins only shrink the sets):
-            # safe for the small-commit gate, None when pattern-derived
-            n_adds_hint=adds_hint if pending_adds is not None else None,
-            n_deletes_hint=dels_hint if pending_dels is not None else None,
-        )
-        return {"version": version}
+                    pending.insert_rows(_instantiate_rows(solutions, ins_tmpl))
+                return
+        # materialize the bindings once: both templates instantiate from
+        # it, and later ops' anti-joins would otherwise re-evaluate the
+        # whole pattern lineage
+        if del_tmpl and ins_tmpl:
+            df = stable_checkpoint(df, eager=True)
+        if del_tmpl:
+            pending.delete_df(self._instantiate(df, del_tmpl), bounded=bounded)
+        if ins_tmpl:
+            pending.insert_df(
+                self._instantiate(df, ins_tmpl, bnode_suffix=bnode_suffix),
+                bounded=bounded,
+            )
 
     _LOAD_SUFFIXES = {
         ".nt": "application/n-triples",
@@ -579,14 +687,15 @@ class UpdateEngine:
         ".xml": "application/rdf+xml",
     }
 
-    def _load_document(
+    def _load_rows(
         self,
         iri: str,
         into: str | None,
         txn_id: str | None = None,
         load_index: int = 0,
-    ) -> DataFrame:
-        """LOAD <iri> [INTO GRAPH <g>]: fetch + parse an RDF document.
+    ) -> list[tuple]:
+        """LOAD <iri> [INTO GRAPH <g>]: fetch + parse an RDF document into
+        quad rows.
 
         file:// and http(s):// IRIs; syntax chosen by file extension
         (NQuads default, matching the package's Kafka-payload default).
@@ -628,20 +737,12 @@ class UpdateEngine:
         seed = f"{iri}|{txn_id if txn_id is not None else uuid.uuid4()}|{load_index}"
         suffix = hashlib.md5(seed.encode("utf-8")).hexdigest()[:12]
         ops = parse_payload(payload, ct, bnode_suffix=f"load{suffix}")
-        rows = [
+        return [
             (into if into is not None else g, s, p, ok, ov, dt, lang)
             for _op, g, s, p, ok, ov, dt, lang in ops
         ]
-        # single slice: request-sized local rows on one executor thread
-        # (the small-commit coalesce(1) write walks Python partitions
-        # serially, so defaultParallelism near-empty slices cost seconds)
-        df = self.spark.createDataFrame(
-            self.spark.sparkContext.parallelize(rows, 1), QUAD_SCHEMA
-        )
-        df._const_quad_count = len(rows)
-        return df
 
-    def _const_quads(self, quads: list, bnode_suffix: str | None = None) -> DataFrame:
+    def _const_rows(self, quads: list, bnode_suffix: str | None = None) -> list[tuple]:
         """Constant quads from INSERT DATA / DELETE DATA templates.
 
         ``bnode_suffix`` (INSERT DATA only) makes bnode labels fresh per
@@ -664,14 +765,7 @@ class UpdateEngine:
                 rows.append((graph, fresh(s), p[1], "literal", o[1], o[2], o[3]))
             else:
                 rows.append((graph, fresh(s), p[1], o[0], fresh(o), None, None))
-        # single slice: request-sized local rows on one executor thread
-        # (the small-commit coalesce(1) write walks Python partitions
-        # serially, so defaultParallelism near-empty slices cost seconds)
-        df = self.spark.createDataFrame(
-            self.spark.sparkContext.parallelize(rows, 1), QUAD_SCHEMA
-        )
-        df._const_quad_count = len(rows)
-        return df
+        return rows
 
     def _instantiate(
         self, bindings: DataFrame, template: list, bnode_suffix: str | None = None
@@ -684,9 +778,15 @@ class UpdateEngine:
         so the same solution keeps ONE bnode across all template quads
         while different solutions get distinct ones.  (Two identical
         solution rows collapse to one bnode — a documented simplification
-        that keeps labels deterministic for crash-replay.)"""
-        from functools import reduce
-
+        that keeps labels deterministic for crash-replay.)  A template
+        quad with an unbound variable is skipped (§3.1.3), also one whose
+        variable the pattern never binds."""
+        template = [
+            q for q in template
+            if all(t is None or t[0] != "var" or t[1] in bindings.columns for t in q)
+        ]
+        if not template:
+            return quad_frame(bindings.sparkSession, [])
         # variable-free WHERE yields a zero-column bindings frame; xxhash64
         # with no args is an analysis error — every solution is then the
         # same (empty) solution, so a constant hash is exactly right
@@ -741,35 +841,8 @@ class UpdateEngine:
                     F.when(obj["lang"] == "", None).otherwise(obj["lang"]).alias("object_lang"),
                 )
             )
-        return reduce(lambda a, b: a.unionByName(b), parts).dropDuplicates()
-
-    # ------------------------------------------------------------ GSP
-    def gsp_get(self, graph: str | None = None) -> DataFrame:
-        """GET a graph (None = default graph)."""
-        g = DEFAULT_GRAPH if graph is None else graph
-        return self.store.read(self.spark).filter(F.col("graph") == g)
-
-    def gsp_put(self, quads: DataFrame, graph: str | None = None, txn_id=None) -> int:
-        """PUT: replace the graph's contents."""
-        g = DEFAULT_GRAPH if graph is None else graph
-        current = self.store.read(self.spark).filter(F.col("graph") == g)
-        incoming = quads.select(*QUAD_COLS).withColumn("graph", F.lit(g))
-        # the replaced graph is store-sized; never broadcast it
-        return self.store.commit(
-            self.spark, adds=incoming, deletes=current, txn_id=txn_id,
-            broadcast_deletes=False,
-        )
-
-    def gsp_post(self, quads: DataFrame, graph: str | None = None, txn_id=None) -> int:
-        """POST: merge (append with set semantics)."""
-        g = DEFAULT_GRAPH if graph is None else graph
-        incoming = quads.select(*QUAD_COLS).withColumn("graph", F.lit(g))
-        return self.store.commit(self.spark, adds=incoming, txn_id=txn_id)
-
-    def gsp_delete(self, graph: str | None = None, txn_id=None) -> int:
-        """DELETE: drop the graph's contents."""
-        g = DEFAULT_GRAPH if graph is None else graph
-        current = self.store.read(self.spark).filter(F.col("graph") == g)
-        return self.store.commit(
-            self.spark, deletes=current, txn_id=txn_id, broadcast_deletes=False
+        return (
+            reduce(DataFrame.unionByName, parts)
+            .na.drop(subset=QUAD_COLS[:5])
+            .dropDuplicates()
         )

@@ -1,3 +1,3 @@
-from .quadstore import QuadStore
+from .quadstore import QuadStore, quad_frame
 
-__all__ = ["QuadStore"]
+__all__ = ["QuadStore", "quad_frame"]

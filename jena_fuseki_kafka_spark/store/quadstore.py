@@ -20,6 +20,8 @@ projector per dataset — FKRegistry.java:45-99):
      quads (read, anti-join, write survivor file)
   3. atomically swap the manifest (os.replace) — readers referencing the
      old manifest keep a consistent snapshot
+Request-sized row commits on a small store run these steps on the driver
+with pyarrow; everything else runs them as Spark jobs (``QuadStore.commit``).
 
 Idempotent re-apply (at-least-once safety, SURVEY.md §7.4): commits carry a
 ``txn_id``; re-committing an already-recorded txn_id is a no-op, which makes
@@ -46,6 +48,7 @@ import os
 import threading
 import uuid
 
+from collections.abc import Sequence
 from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
@@ -114,6 +117,24 @@ def _quad_eq_cond(left: DataFrame):
     )
 
 
+def _arrow_table(rows: Sequence[tuple]):
+    """Row tuples in QUAD_COLS order -> a pyarrow table of string columns."""
+    import pyarrow as pa
+
+    return pa.table(
+        {c: [r[i] for r in rows] for i, c in enumerate(QUAD_COLS)},
+        schema=pa.schema([pa.field(c, pa.string()) for c in QUAD_COLS]),
+    )
+
+
+def quad_frame(spark: SparkSession, rows: Sequence[tuple]) -> DataFrame:
+    """Request-sized row tuples -> a QUAD_SCHEMA DataFrame.  Handed over as
+    an Arrow table, so the plan is a LocalRelation: reading it back costs
+    no Spark job and no Python worker (a pickled list becomes an RDD whose
+    every read is a job)."""
+    return spark.createDataFrame(_arrow_table(rows), QUAD_SCHEMA)
+
+
 class QuadStore:
     def __init__(self, path: str, n_buckets: int = 16, grace_versions: int = 2):
         self.path = path
@@ -146,26 +167,22 @@ class QuadStore:
             return int(entry.rsplit("=", 1)[1])
         return None  # legacy flat entry: always read
 
-    # commits at or below this row count skip the bucket shuffle: a single
-    # task writes every bucket leaf.  Request-sized HTTP mutations and
-    # small micro-batches stay shuffle-free; ingest-volume batches (the
-    # soak writes ~2.5M quads per batch) keep the n_buckets repartition so
-    # write parallelism and file sizing hold at scale.
+    # the Spark tier writes commits at or below this row count without the
+    # bucket shuffle: a single task writes every bucket leaf.  Ingest-volume
+    # batches (the soak writes ~2.5M quads per batch) keep the n_buckets
+    # repartition so write parallelism and file sizing hold at scale.  It
+    # also bounds the driver tier: the bucket leaves a driver-tier commit
+    # reads must hold at most this many rows.
     SMALL_COMMIT_ROWS = 200_000
 
-    # commits at or below THIS row count (with every affected bucket leaf
-    # under SMALL_COMMIT_ROWS total) run entirely on the DRIVER: payload
-    # rows are collected (request payloads are LocalRelation-backed, so
-    # the collect launches no job), set-semantics dedup and the delete
-    # rewrite are computed in Python over pyarrow-read leaves, and the new
-    # leaf is written with pyarrow — ZERO Spark jobs per commit (r16;
-    # guide §5's "the driver should do almost no data work" cuts the
-    # other way for control-plane-sized mutations: three Spark job
-    # launches to insert one quad IS the data work).  Buckets stay
-    # bit-compatible via the pure-Python xxh64 twin (store/xxh64.py,
-    # parity-pinned by test).  Production sizing: request/interactive
-    # mutations are ≤ thousands of rows; anything bigger arrives via the
-    # ingest stream, which keeps the distributed writer.
+    # row commits with at most this many add rows and this many exact
+    # delete rows run on the DRIVER (the leaves they read permitting, see
+    # SMALL_COMMIT_ROWS): set-semantics dedup and the delete rewrite are
+    # computed in Python over pyarrow-read leaves and the new leaves are
+    # written with pyarrow — no Spark job.  Buckets stay bit-compatible
+    # via the pure-Python xxh64 twin (store/xxh64.py, parity-pinned by
+    # test).  Request mutations are at most thousands of rows; anything
+    # bigger arrives via the ingest stream, which keeps the Spark tier.
     DRIVER_COMMIT_ROWS = 20_000
 
     def _write_partitioned(self, df: DataFrame, small: bool = False) -> list[str]:
@@ -264,37 +281,40 @@ class QuadStore:
     def commit(
         self,
         spark: SparkSession,
-        adds: DataFrame | None = None,
-        deletes: DataFrame | None = None,
+        adds: DataFrame | Sequence[tuple] | None = None,
+        deletes: DataFrame | Sequence[tuple] | None = None,
         txn_id: str | None = None,
         assume_unique: bool = False,
         broadcast_deletes: bool = True,
         broadcast_adds: bool = True,
-        n_adds_hint: int | None = None,
-        n_deletes_hint: int | None = None,
     ) -> int:
-        """Atomically apply net adds and deletes; returns new version.
+        """Atomically apply deletes, then adds; returns the new version.
 
-        ``adds``/``deletes`` are DataFrames with QUAD_COLS columns.  The
-        caller is responsible for net-effect ordering (ingest.projector
-        computes last-op-wins before calling commit).  ``assume_unique``
-        skips the within-batch dropDuplicates shuffle when the caller
-        already reduced to unique quads (the projector's net-effect
-        aggregate guarantees it).  ``broadcast_deletes``/``broadcast_adds``
-        control the join strategy for the rewrite-on-delete anti-join and
-        the set-semantics dedup: True (the default) is right for
-        request/batch-sized inputs; callers whose delete or add set may be
-        store-sized (CLEAR ALL, unconstrained DELETE WHERE, whole-graph
-        COPY) must pass False so the join shuffles instead of broadcasting
-        a store-sized side into every executor (and the driver).
+        Each side is either a DataFrame with QUAD_COLS columns or a
+        sequence of row tuples in QUAD_COLS order.  A delete tuple holding
+        only ``(graph,)`` deletes every quad of that graph.  The caller is
+        responsible for net-effect ordering (ingest.projector computes
+        last-op-wins before calling commit).
 
-        ``n_adds_hint``/``n_deletes_hint`` are row counts the caller
-        already knows (e.g. an HTTP handler that parsed the payload on the
-        driver).  When the hint is request-sized AND the store itself is
-        small, commit skips the per-side bucket-stats Spark action and
-        scans every bucket instead — one Spark job per commit instead of
-        two or three.  Pruning matters exactly when the store is large, so
-        the fast path is gated on store size and changes nothing at scale.
+        Two tiers:
+
+        * driver — both sides are rows, neither holds more than
+          ``DRIVER_COMMIT_ROWS`` rows, and the bucket leaves the commit
+          must read hold at most ``SMALL_COMMIT_ROWS`` rows.  Applied with
+          pyarrow on the driver; no Spark job (see ``_driver_commit``).
+        * Spark — everything else.  Rows are turned into DataFrames here,
+          once; a graph-scoped delete becomes a filtered read of the store.
+
+        Spark-tier knobs: ``assume_unique`` skips the within-batch
+        dropDuplicates shuffle when the caller already reduced a DataFrame
+        to unique quads (the projector's net-effect aggregate guarantees
+        it).  ``broadcast_deletes``/``broadcast_adds`` choose the join
+        strategy for the rewrite-on-delete anti-join and the set-semantics
+        dedup: True (the default) is right for request/batch-sized inputs;
+        callers whose delete or add set may be store-sized (CLEAR ALL,
+        unconstrained DELETE WHERE, whole-graph COPY) must pass False so
+        the join shuffles instead of broadcasting a store-sized side into
+        every executor (and the driver).
 
         Thread-safe: holds the per-store write lock for the whole
         read-manifest -> write-files -> swap-manifest sequence, so HTTP
@@ -304,62 +324,70 @@ class QuadStore:
         with self._write_lock:
             return self._commit_locked(
                 spark, adds, deletes, txn_id, assume_unique,
-                broadcast_deletes, broadcast_adds, n_adds_hint, n_deletes_hint,
+                broadcast_deletes, broadcast_adds,
             )
-
-    def _small_store(self, files: list[str]) -> bool:
-        """True when the whole store is small enough that bucket pruning
-        cannot pay for its stats collection (parquet-footer row counts —
-        no Spark job)."""
-        if len(files) > 64:
-            return False
-        try:
-            return sum(self._entry_row_count(f) for f in files) <= self.SMALL_COMMIT_ROWS
-        except OSError:
-            return False
 
     def _commit_locked(
         self,
         spark: SparkSession,
-        adds: DataFrame | None,
-        deletes: DataFrame | None,
+        adds: DataFrame | Sequence[tuple] | None,
+        deletes: DataFrame | Sequence[tuple] | None,
         txn_id: str | None,
         assume_unique: bool,
-        broadcast_deletes: bool = True,
-        broadcast_adds: bool = True,
-        n_adds_hint: int | None = None,
-        n_deletes_hint: int | None = None,
+        broadcast_deletes: bool,
+        broadcast_adds: bool,
     ) -> int:
         manifest = self._read_manifest()
         if txn_id is not None and txn_id in manifest["txns"]:
             return manifest["version"]  # idempotent re-apply
+        rows_only = not isinstance(adds, DataFrame) and not isinstance(deletes, DataFrame)
+        if not isinstance(adds, DataFrame):
+            adds = list(dict.fromkeys(map(tuple, adds or ())))
+        if not isinstance(deletes, DataFrame):
+            deletes = [tuple(d) for d in deletes or ()]
+        if rows_only:
+            version = self._driver_commit(manifest, adds, deletes, txn_id)
+            if version is not None:
+                return version
+        if isinstance(adds, list):
+            adds, assume_unique = (quad_frame(spark, adds) if adds else None), True
+        if isinstance(deletes, list):
+            deletes, scoped = self._delete_frame(spark, deletes)
+            broadcast_deletes = broadcast_deletes and not scoped
+        return self._spark_commit(
+            spark, manifest, adds, deletes, txn_id, assume_unique,
+            broadcast_deletes, broadcast_adds,
+        )
 
+    def _delete_frame(
+        self, spark: SparkSession, deletes: list[tuple]
+    ) -> tuple[DataFrame | None, bool]:
+        """Delete rows -> (DataFrame, whether it holds a graph-scoped
+        delete).  A graph's quads are store-sized, so the caller must not
+        broadcast a frame that holds them."""
+        graphs = [d[0] for d in deletes if len(d) == 1]
+        exact = [d for d in deletes if len(d) != 1]
+        parts = [quad_frame(spark, exact)] if exact else []
+        if graphs:
+            parts.append(self.read(spark).filter(F.col("graph").isin(graphs)))
+        if not parts:
+            return None, False
+        return reduce(DataFrame.unionByName, parts), bool(graphs)
+
+    def _spark_commit(
+        self,
+        spark: SparkSession,
+        manifest: dict,
+        adds: DataFrame | None,
+        deletes: DataFrame | None,
+        txn_id: str | None,
+        assume_unique: bool,
+        broadcast_deletes: bool,
+        broadcast_adds: bool,
+    ) -> int:
         current_files = list(manifest["files"])
         new_files: list[str] = []
         drop_files: list[str] = []
-
-        # fast path only when EVERY present side comes with a hint: a
-        # hintless side must keep its stats action, not inherit the skip
-        hinted_small = (
-            (n_adds_hint is not None or n_deletes_hint is not None)
-            and (adds is None or n_adds_hint is not None)
-            and (deletes is None or n_deletes_hint is not None)
-            and (n_adds_hint or 0) <= self.SMALL_COMMIT_ROWS
-            and (n_deletes_hint or 0) <= self.SMALL_COMMIT_ROWS
-            and self._small_store(current_files)
-        )
-
-        if (
-            hinted_small
-            and (n_adds_hint or 0) <= self.DRIVER_COMMIT_ROWS
-            and (n_deletes_hint or 0) <= self.DRIVER_COMMIT_ROWS
-        ):
-            version = self._driver_commit(
-                manifest, adds, deletes, txn_id, assume_unique
-            )
-            if version is not None:
-                return version
-            # fall through to the Spark path on any ineligibility
 
         del_buckets: set[int] = set()
         if deletes is not None:
@@ -367,26 +395,15 @@ class QuadStore:
             # deduping the delete side is pure wasted shuffle.  One
             # aggregation answers both "any deletes?" and "which buckets?"
             deletes = deletes.select(*QUAD_COLS)
-            if hinted_small:
-                # hinted fast path: treat every bucket as affected — the
-                # rewrite reads the (small) whole store, no stats action
-                del_buckets = (
-                    {self._bucket_of(f) for f in current_files} if n_deletes_hint else set()
-                )
-            else:
-                del_buckets = {
-                    r["b"]
-                    for r in deletes.groupBy(self._bucket_col().alias("b")).count().collect()
-                }
+            del_buckets = {
+                r["b"]
+                for r in deletes.groupBy(self._bucket_col().alias("b")).count().collect()
+            }
 
         if del_buckets and current_files:
             # Rewrite-on-delete, restricted to the buckets the delete keys
             # hash to: unaffected bucket leaves are carried over untouched.
-            affected = [
-                f
-                for f in current_files
-                if self._bucket_of(f) is None or self._bucket_of(f) in del_buckets
-            ]
+            affected = self._leaves_in(current_files, del_buckets)
             untouched = [f for f in current_files if f not in affected]
             if affected:
                 paths = [os.path.join(self.files_dir, f) for f in affected]
@@ -403,28 +420,15 @@ class QuadStore:
                 drop_files = affected
                 current_files = untouched + survivor_entries
 
-        n_adds = 0
         if adds is not None:
             adds = adds.select(*QUAD_COLS)
             if not assume_unique:
                 adds = adds.dropDuplicates(QUAD_COLS)
-            if hinted_small and n_adds_hint is not None:
-                # hinted fast path: the caller counted the rows on the
-                # driver; scan every (small) bucket for the set-semantics
-                # dedup instead of collecting per-bucket stats first
-                n_adds = n_adds_hint
-                scan_files = list(current_files)
-            else:
-                # one aggregation answers "which buckets?" (snapshot dedup
-                # only needs those) AND "how many rows?" (sizes the write)
-                add_stats = adds.groupBy(self._bucket_col().alias("b")).count().collect()
-                add_buckets = {r["b"] for r in add_stats}
-                n_adds = sum(r["count"] for r in add_stats)
-                scan_files = [
-                    f
-                    for f in current_files
-                    if self._bucket_of(f) is None or self._bucket_of(f) in add_buckets
-                ]
+            # one aggregation answers "which buckets?" (snapshot dedup only
+            # needs those) AND "how many rows?" (sizes the write)
+            add_stats = adds.groupBy(self._bucket_col().alias("b")).count().collect()
+            n_adds = sum(r["count"] for r in add_stats)
+            scan_files = self._leaves_in(current_files, {r["b"] for r in add_stats})
             if scan_files:
                 paths = [os.path.join(self.files_dir, f) for f in scan_files]
                 current = spark.read.schema(QUAD_SCHEMA).parquet(*paths)
@@ -440,156 +444,151 @@ class QuadStore:
                 self._write_partitioned(adds, small=n_adds <= self.SMALL_COMMIT_ROWS)
             )
 
+        return self._swap(manifest, current_files + new_files, drop_files, txn_id)
+
+    def _swap(
+        self, manifest: dict, files: list[str], drop_files: list[str], txn_id: str | None
+    ) -> int:
+        """Publish ``files`` as the next version (the commit point)."""
         manifest["version"] += 1
-        manifest["files"] = current_files + new_files
+        manifest["files"] = files
         if txn_id is not None:
             manifest["txns"] = (manifest["txns"] + [txn_id])[-1000:]
         self._retire(manifest, drop_files)
         self._write_manifest(manifest)
         return manifest["version"]
 
-    # -- driver-side small-commit fast path -------------------------------
+    def _leaves_in(self, files: list[str], buckets: set[int]) -> list[str]:
+        """The leaves of ``files`` that may hold rows of ``buckets``."""
+        return [
+            f for f in files if self._bucket_of(f) is None or self._bucket_of(f) in buckets
+        ]
+
+    # -- driver tier ------------------------------------------------------
     def _driver_commit(
         self,
         manifest: dict,
-        adds: DataFrame | None,
-        deletes: DataFrame | None,
+        adds: list[tuple],
+        deletes: list[tuple],
         txn_id: str | None,
-        assume_unique: bool,
     ) -> int | None:
-        """Apply a request-sized commit entirely on the driver: collect the
-        payload rows (LocalRelation-backed for every hinted caller, so no
-        job launches), read the affected bucket leaves with pyarrow,
-        compute the delete rewrite and the set-semantics dedup as plain
-        Python set operations (tuple equality is null-safe, matching the
-        Spark path's eqNullSafe joins), and write the new leaf with
-        pyarrow in the exact layout the Spark writer produces
+        """Apply a request-sized row commit on the driver: read the leaves
+        it touches with pyarrow, compute the delete rewrite and the
+        set-semantics dedup as Python set operations (tuple equality is
+        null-safe, matching the Spark tier's eqNullSafe joins), and write
+        new leaves with pyarrow in the layout the Spark writer produces
         (files/<uuid>/bucket=N/, bucket directory-encoded, QUAD_COLS
-        inside).  Returns the new version, or None to fall back to the
-        distributed writer (oversized leaf reads / missing pyarrow).
+        inside).  Returns the new version, or None when the commit is over
+        the tier's size gates.
 
-        Commit semantics are byte-for-byte those of the Spark path:
-        deletes first (rewrite affected buckets, carry the rest), then
-        adds deduped against the post-delete snapshot, one manifest swap.
-        Bucket assignment uses the pure-Python xxh64 twin — bit-parity
-        with Spark's xxhash64 is pinned by test, so bucket pruning keeps
-        finding every row either writer placed."""
-        try:
-            import pyarrow as pa
-            import pyarrow.parquet as pq
-        except ImportError:  # pragma: no cover - pyarrow ships with pyspark
-            return None
+        Same semantics as the Spark tier: deletes first, then adds deduped
+        against the post-delete snapshot, one manifest swap.  Exact deletes
+        and adds read only the buckets their subjects hash to (the
+        pure-Python xxh64 twin of Spark's xxhash64, parity-pinned by
+        test); a graph-scoped delete reads every leaf.  Only leaves that
+        actually hold a deleted row are rewritten."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
         from .xxh64 import spark_bucket
 
+        graphs = {d[0] for d in deletes if len(d) == 1}
+        del_set = {d for d in deletes if len(d) != 1}
+        if max(len(adds), len(del_set)) > self.DRIVER_COMMIT_ROWS:
+            return None
+
         scol = QUAD_COLS.index("subject")
-        add_rows = (
-            [tuple(r) for r in adds.select(*QUAD_COLS).collect()]
-            if adds is not None
-            else []
-        )
-        del_rows = (
-            [tuple(r) for r in deletes.select(*QUAD_COLS).collect()]
-            if deletes is not None
-            else []
-        )
-        if not assume_unique:
-            add_rows = list(dict.fromkeys(add_rows))
+        files = list(manifest["files"])
 
-        current_files = list(manifest["files"])
-        del_buckets = {spark_bucket(r[scol], self.n_buckets) for r in del_rows}
-        add_buckets = {spark_bucket(r[scol], self.n_buckets) for r in add_rows}
+        def buckets_of(rows) -> set[int]:
+            return {spark_bucket(r[scol], self.n_buckets) for r in rows}
 
-        def _affected(files: list[str], buckets: set[int]) -> list[str]:
-            return [
-                f
-                for f in files
-                if self._bucket_of(f) is None or self._bucket_of(f) in buckets
-            ]
-
-        need = set()
-        if del_rows:
-            need |= set(_affected(current_files, del_buckets))
-        if add_rows:
-            need |= set(_affected(current_files, add_buckets))
+        exact_leaves = self._leaves_in(files, buckets_of(del_set)) if del_set else []
+        # graphs are not bucketed: a graph-scoped delete reads every leaf
+        del_leaves = files if graphs else exact_leaves
+        add_leaves = self._leaves_in(files, buckets_of(adds)) if adds else []
+        need = set(del_leaves) | set(add_leaves)
         try:
             if sum(self._entry_row_count(f) for f in need) > self.SMALL_COMMIT_ROWS:
                 return None
         except OSError:
             return None
 
-        # one pyarrow read per needed leaf -> rows as tuples, bucket known
-        leaf_rows: dict[str, list[tuple]] = {}
-        for entry in need:
-            leaf = os.path.join(self.files_dir, entry)
-            rows: list[tuple] = []
-            for fname in sorted(os.listdir(leaf)):
-                if fname.endswith(".parquet"):
-                    t = pq.read_table(
-                        os.path.join(leaf, fname), columns=list(QUAD_COLS)
-                    )
-                    cols = [t.column(c).to_pylist() for c in QUAD_COLS]
-                    rows.extend(zip(*cols) if cols and t.num_rows else [])
-            leaf_rows[entry] = rows
+        tables = {entry: self._read_leaf(entry) for entry in need}
+        leaf_rows: dict[str, list[tuple]] = {}  # converted on first use
 
-        def _bucket_of_row(entry: str, row: tuple) -> int:
+        def rows_of(entry: str) -> list[tuple]:
+            if entry not in leaf_rows:
+                t = tables[entry]
+                leaf_rows[entry] = list(zip(*(t.column(c).to_pylist() for c in QUAD_COLS)))
+            return leaf_rows[entry]
+
+        graph_set = pa.array(sorted(graphs), pa.string())
+
+        def holds_graph(entry: str) -> bool:
+            return bool(graphs) and pc.any(
+                pc.is_in(tables[entry].column("graph"), value_set=graph_set)
+            ).as_py() is True
+
+        def bucket(entry: str, row: tuple) -> int:
             b = self._bucket_of(entry)
             return b if b is not None else spark_bucket(row[scol], self.n_buckets)
 
-        schema = pa.schema([pa.field(c, pa.string()) for c in QUAD_COLS])
+        drop: list[str] = []
+        survivors: dict[int, list[tuple]] = {}
+        for entry in del_leaves:
+            if entry not in exact_leaves and not holds_graph(entry):
+                continue
+            rows = rows_of(entry)
+            kept = [r for r in rows if r[0] not in graphs and r not in del_set]
+            if len(kept) == len(rows):
+                continue
+            drop.append(entry)
+            leaf_rows[entry] = kept  # post-delete content, for the dedup
+            for r in kept:
+                survivors.setdefault(bucket(entry, r), []).append(r)
+        current = [f for f in files if f not in drop] + self._write_leaves(survivors)
 
-        def _write_leaf(rows_by_bucket: dict[int, list[tuple]]) -> list[str]:
-            name = uuid.uuid4().hex
-            entries = []
-            for b in sorted(rows_by_bucket):
-                rows = rows_by_bucket[b]
-                if not rows:
-                    continue
-                leaf = os.path.join(self.files_dir, name, f"bucket={b}")
-                os.makedirs(leaf, exist_ok=True)
-                table = pa.table(
-                    {c: [r[i] for r in rows] for i, c in enumerate(QUAD_COLS)},
-                    schema=schema,
-                )
-                pq.write_table(table, os.path.join(leaf, "part-00000.parquet"))
-                entries.append(f"{name}/bucket={b}")
-            return entries
+        existing = {r for entry in add_leaves for r in rows_of(entry)}
+        fresh: dict[int, list[tuple]] = {}
+        for r in adds:
+            if r not in existing:
+                fresh.setdefault(spark_bucket(r[scol], self.n_buckets), []).append(r)
+        return self._swap(manifest, current + self._write_leaves(fresh), drop, txn_id)
 
-        drop_files: list[str] = []
-        if del_rows:
-            affected = _affected(current_files, del_buckets)
-            del_set = set(del_rows)
-            survivors: dict[int, list[tuple]] = {}
-            for entry in affected:
-                for row in leaf_rows[entry]:
-                    if row not in del_set:
-                        survivors.setdefault(_bucket_of_row(entry, row), []).append(row)
-            survivor_entries = _write_leaf(survivors)
-            drop_files = affected
-            untouched = [f for f in current_files if f not in set(affected)]
-            current_files = untouched + survivor_entries
-            # keep the in-memory view consistent for the dedup below
-            for entry in survivor_entries:
-                b = self._bucket_of(entry)
-                leaf_rows[entry] = survivors.get(b, [])
+    def _read_leaf(self, entry: str):
+        """One bucket leaf as a pyarrow table of QUAD_COLS."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
 
-        new_files: list[str] = []
-        if add_rows:
-            existing: set[tuple] = set()
-            for entry in _affected(current_files, add_buckets):
-                existing.update(leaf_rows.get(entry, ()))
-            fresh: dict[int, list[tuple]] = {}
-            for row in add_rows:
-                if row not in existing:
-                    fresh.setdefault(spark_bucket(row[scol], self.n_buckets), []).append(row)
-            new_files = _write_leaf(fresh)
+        leaf = os.path.join(self.files_dir, entry)
+        parts = [
+            pq.read_table(os.path.join(leaf, f), columns=list(QUAD_COLS))
+            for f in sorted(os.listdir(leaf))
+            if f.endswith(".parquet")
+        ]
+        return pa.concat_tables(parts) if parts else _arrow_table([])
 
-        manifest["version"] += 1
-        manifest["files"] = current_files + new_files
-        if txn_id is not None:
-            manifest["txns"] = (manifest["txns"] + [txn_id])[-1000:]
-        self._retire(manifest, drop_files)
-        self._write_manifest(manifest)
-        return manifest["version"]
+    def _write_leaves(self, rows_by_bucket: dict[int, list[tuple]]) -> list[str]:
+        """Write one pyarrow leaf per non-empty bucket under a fresh uuid
+        dir; return the manifest entries."""
+        import pyarrow.parquet as pq
+
+        name = uuid.uuid4().hex
+        entries = []
+        for b, rows in sorted(rows_by_bucket.items()):
+            if not rows:
+                continue
+            leaf = os.path.join(self.files_dir, name, f"bucket={b}")
+            os.makedirs(leaf, exist_ok=True)
+            # no ARROW:schema footer entry (~0.6 KB a leaf): every reader
+            # goes by the parquet schema
+            pq.write_table(
+                _arrow_table(rows), os.path.join(leaf, "part-00000.parquet"),
+                store_schema=False,
+            )
+            entries.append(f"{name}/bucket={b}")
+        return entries
 
     # -- maintenance ------------------------------------------------------
     def compact(self, spark: SparkSession, min_files_per_bucket: int = 2) -> int:
@@ -624,11 +623,7 @@ class QuadStore:
         merged = spark.read.schema(QUAD_SCHEMA).parquet(*paths)
         new_entries = self._write_partitioned(merged)
         untouched = [f for f in manifest["files"] if f not in set(merge)]
-        manifest["version"] += 1
-        manifest["files"] = untouched + new_entries
-        self._retire(manifest, merge)
-        self._write_manifest(manifest)
-        return manifest["version"]
+        return self._swap(manifest, untouched + new_entries, merge, None)
 
     def _retire(self, manifest: dict, drop_files: list[str]) -> None:
         """Tombstone newly dropped leaves at the (already incremented)

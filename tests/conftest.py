@@ -18,3 +18,25 @@ def spark():
 @pytest.fixture()
 def sf_dir():
     return os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
+
+
+@pytest.fixture()
+def count_jobs(spark):
+    """count_jobs(fn) -> (number of Spark jobs fn launched, fn's result).
+    The jobs are tagged with a fresh job group and counted by job id once
+    the listener bus has caught up, so none is missed."""
+    import uuid
+
+    sc = spark.sparkContext
+
+    def run(fn):
+        group = "count-jobs-" + uuid.uuid4().hex
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group)), out
+
+    return run

@@ -319,6 +319,38 @@ class TestUpdateAndPatch:
         assert n >= 2
 
 
+class TestWriteFailures:
+    """A write that fails inside the commit answers 500 with the error's
+    message; the connection is never dropped without a response."""
+
+    @pytest.fixture()
+    def failing_commit(self, monkeypatch):
+        def boom(self, *a, **k):
+            raise RuntimeError("commit failed: disk full")
+
+        monkeypatch.setattr(QuadStore, "commit", boom)
+
+    @staticmethod
+    def assert_500(resp):
+        code, _, body = resp
+        assert code == 500 and "disk full" in body
+
+    def test_update_commit_failure_is_500(self, server, failing_commit):
+        self.assert_500(req(f"{server}/update", "POST",
+                            b'INSERT DATA { <http://example.org/f> <http://example.org/p> "1" }',
+                            "application/sparql-update"))
+
+    def test_gsp_write_commit_failure_is_500(self, server, failing_commit):
+        body = b'<http://example.org/f> <http://example.org/p> "1" .'
+        for method in ("PUT", "POST"):
+            self.assert_500(req(f"{server}/data?graph={quote(EX + 'fail', safe='')}",
+                                method, body, "application/n-triples"))
+
+    def test_patch_commit_failure_is_500(self, server, failing_commit):
+        patch = b'TX .\nA <http://example.org/f> <http://example.org/p> "1" .\nTC .\n'
+        self.assert_500(req(f"{server}/patch", "PATCH", patch, "application/rdf-patch"))
+
+
 class TestServiceFederation:
     """SERVICE <endpoint> { ... }: ship a sub-pattern to a remote SPARQL
     endpoint (here: a second SparqlHttpServer) and join the bindings."""

@@ -160,6 +160,34 @@ class TestConnectedComponents:
         }
         assert got == expect and calls == [1]  # distributed: no 2nd call
 
+    @pytest.mark.parametrize("schema", ["doc_a long, doc_b long", "doc_a string, doc_b string"])
+    def test_driver_and_distributed_agree_on_null_ids_at_bound(self, spark, monkeypatch, schema):
+        # the size-adaptive pair at CC_DRIVER_MAX_EDGES - 1 / = / + 1 (the
+        # bound shrunk to this graph's size) with int or string ids, some
+        # null: a pair with a null id links nothing on either path
+        from jena_fuseki_kafka_spark.queries import dedup
+
+        cast = int if schema.startswith("doc_a long") else str
+        raw = [(1, 2), (2, 3), (5, None), (None, 7), (None, None), (8, 9), (9, 1)]
+        pairs = spark.createDataFrame(
+            [tuple(None if x is None else cast(x) for x in p) for p in raw], schema
+        )
+        edges = 2 * sum(1 for a, b in raw if a is not None and b is not None)
+        one = cast(1)
+        expect = {cast(v): one for v in (1, 2, 3, 8, 9)}
+        dist = {r.v: r.comp for r in dedup.connected_components(pairs, driver_max_edges=0).collect()}
+        assert dist == expect
+        calls = []
+        real = dedup._driver_components
+        monkeypatch.setattr(
+            dedup, "_driver_components", lambda e, rows: calls.append(1) or real(e, rows)
+        )
+        for bound, driver in [(edges - 1, False), (edges, True), (edges + 1, True)]:
+            monkeypatch.setattr(dedup, "CC_DRIVER_MAX_EDGES", bound)
+            calls.clear()
+            got = {r.v: r.comp for r in dedup.connected_components(pairs).collect()}
+            assert got == expect and bool(calls) == driver, (bound, calls)
+
     def test_zero_round_budget_raises_diagnostic_not_nameerror(self, spark):
         # ADVICE r9: with max_rounds <= 0 the loop body never runs; the
         # guard must still raise the intended RuntimeError, not NameError

@@ -459,56 +459,47 @@ class TestVacuumGrace:
         assert store.count(spark) == 12
 
 
-class TestHintedSmallCommit:
-    """The n_adds_hint/n_deletes_hint fast path (no per-side bucket-stats
-    Spark action) must preserve set semantics and delete correctness
-    exactly — it only changes which files are scanned, never the result."""
+class TestRowCommit:
+    """Row-tuple commits (the HTTP write path): set semantics and delete
+    correctness hold, a delete rewrites only the leaves holding a deleted
+    row, and a DataFrame on either side routes the commit to the Spark
+    tier."""
 
-    def test_hinted_add_dedups_against_store(self, spark, tmp_path):
+    def test_row_add_dedups_against_store(self, spark, tmp_path):
         store = QuadStore(str(tmp_path / "h"), n_buckets=4)
         rows1 = [("", f"s{i}", "p", "iri", "o", None, None) for i in range(10)]
         rows2 = [("", f"s{i}", "p", "iri", "o", None, None) for i in range(5, 15)]
-        store.commit(
-            spark,
-            adds=spark.createDataFrame(spark.sparkContext.parallelize(rows1, 1), QUAD_SCHEMA),
-            txn_id="h1", assume_unique=True, n_adds_hint=len(rows1),
-        )
-        store.commit(
-            spark,
-            adds=spark.createDataFrame(spark.sparkContext.parallelize(rows2, 1), QUAD_SCHEMA),
-            txn_id="h2", assume_unique=True, n_adds_hint=len(rows2),
-        )
+        store.commit(spark, adds=rows1, txn_id="h1")
+        store.commit(spark, adds=rows2, txn_id="h2")
         assert store.count(spark) == 15  # overlap deduplicated
 
-    def test_hinted_delete_rewrites_all_buckets(self, spark, tmp_path):
+    def test_row_delete_rewrites_only_matching_leaves(self, spark, tmp_path):
         store = QuadStore(str(tmp_path / "h2"), n_buckets=4)
         rows = [("", f"s{i}", "p", "iri", "o", None, None) for i in range(20)]
         store.commit(spark, adds=spark.createDataFrame(rows, QUAD_SCHEMA), txn_id="h1")
         dels = [("", f"s{i}", "p", "iri", "o", None, None) for i in range(0, 20, 2)]
-        store.commit(
-            spark,
-            deletes=spark.createDataFrame(spark.sparkContext.parallelize(dels, 1), QUAD_SCHEMA),
-            txn_id="h2", n_deletes_hint=len(dels),
-        )
+        store.commit(spark, deletes=dels, txn_id="h2")
         assert store.count(spark) == 10
         left = {r.subject for r in store.read(spark).collect()}
         assert left == {f"s{i}" for i in range(1, 20, 2)}
+        # a graph-scoped delete drops only the leaf holding the graph's
+        # one quad (it held nothing else, so no survivor leaf is written)
+        store.commit(spark, adds=[("g", "s1", "p", "iri", "o", None, None)], txn_id="h3")
+        before = set(store._read_manifest()["files"])
+        store.commit(spark, deletes=[("g",)], txn_id="h4")
+        after = set(store._read_manifest()["files"])
+        assert after < before and len(before - after) == 1
+        assert store.count(spark) == 10
 
-    def test_hintless_side_keeps_stats_path(self, spark, tmp_path):
-        # a present side WITHOUT a hint must not inherit the skip: the
-        # mixed call still deletes correctly
+    def test_mixed_rows_and_dataframe_sides(self, spark, tmp_path):
+        # a DataFrame side takes the commit to the Spark tier; the rows
+        # side must come along with it
         store = QuadStore(str(tmp_path / "h3"), n_buckets=4)
         rows = [("", f"s{i}", "p", "iri", "o", None, None) for i in range(8)]
         store.commit(spark, adds=spark.createDataFrame(rows, QUAD_SCHEMA), txn_id="h1")
-        adds = [("", "new", "p", "iri", "o", None, None)]
+        adds = [("", "new", "p", "iri", "o", None, None)] * 2
         dels_df = store.read(spark).filter("subject = 's0'")
-        store.commit(
-            spark,
-            adds=spark.createDataFrame(adds, QUAD_SCHEMA),
-            deletes=dels_df,
-            txn_id="h2",
-            n_adds_hint=1,  # deletes side has no hint -> full stats path
-        )
+        store.commit(spark, adds=adds, deletes=dels_df, txn_id="h2")
         assert store.count(spark) == 8  # 8 - 1 + 1
 
 

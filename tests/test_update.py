@@ -5,9 +5,7 @@ config-connector.ttl:14-17).
 
 import pytest
 
-from pyspark.sql import functions as F
-
-from jena_fuseki_kafka_spark.model import DEFAULT_GRAPH, QUAD_SCHEMA, RdfParseError
+from jena_fuseki_kafka_spark.model import DEFAULT_GRAPH, RdfParseError
 from jena_fuseki_kafka_spark.sparql import SparqlEngine
 from jena_fuseki_kafka_spark.sparql.update import UpdateEngine
 from jena_fuseki_kafka_spark.store import QuadStore
@@ -171,6 +169,24 @@ class TestUpdate:
         assert store.version == v0 + 1
         assert all_quads(spark, store) == {(DEFAULT_GRAPH, EX + "b", EX + "p", "2")}
 
+    @pytest.mark.parametrize("where", [
+        '?s ex:p "a" OPTIONAL { ?s ex:missing ?x }',  # constrained: driver-side rows
+        "?s ?p ?o OPTIONAL { ?s ex:missing ?x }",  # unconstrained: DataFrame pipeline
+    ])
+    def test_unbound_template_variables_skip_quads(self, spark, store, upd, where):
+        # SPARQL 1.1 Update §3.1.3: a template quad with an unbound variable
+        # (OPTIONAL miss ?x, or ?y the pattern never binds) is not inserted,
+        # on either instantiation path
+        upd.update('PREFIX ex: <http://e/> INSERT DATA { ex:s1 ex:p "a" }')
+        upd.update(
+            "PREFIX ex: <http://e/> "
+            'INSERT { ?s ex:got ?x . ?s ex:never ?y . ?s ex:seen "1" } WHERE { ' + where + " }"
+        )
+        assert all_quads(spark, store) == {
+            (DEFAULT_GRAPH, EX + "s1", EX + "p", "a"),
+            (DEFAULT_GRAPH, EX + "s1", EX + "seen", "1"),
+        }
+
     def test_update_then_query(self, spark, store, upd):
         upd.update('PREFIX ex: <http://e/> INSERT DATA { ex:s ex:name "Zed" }')
         eng = SparqlEngine.from_store(spark, store)
@@ -178,36 +194,44 @@ class TestUpdate:
 
 
 class TestGraphStoreProtocol:
-    def quads_df(self, spark, rows):
-        return spark.createDataFrame(rows, QUAD_SCHEMA)
+    """GSP semantics live in the server's operations; these drive them
+    directly, without HTTP."""
 
-    def test_put_replaces(self, spark, store, upd):
+    @pytest.fixture()
+    def srv(self, spark, store):
+        from jena_fuseki_kafka_spark.server import SparqlHttpServer
+
+        return SparqlHttpServer(spark, store)
+
+    @staticmethod
+    def graph_lines(srv, store, graph):
+        _, chunks = srv.gsp_read(store, graph, "application/n-quads")
+        return [ln for ln in "".join(chunks).splitlines() if ln.strip()]
+
+    def test_put_replaces(self, spark, store, upd, srv):
         upd.update('PREFIX ex: <http://e/> INSERT DATA { GRAPH ex:g { ex:old ex:p "x" } }')
-        incoming = self.quads_df(
-            spark, [("ignored", EX + "new", EX + "p", "literal", "y", None, None)]
-        )
-        upd.gsp_put(incoming, graph=EX + "g")
-        g = upd.gsp_get(EX + "g").collect()
-        assert len(g) == 1 and g[0].subject == EX + "new"
+        srv.gsp_write(store, b'<http://e/new> <http://e/p> "y" .\n', "application/n-triples",
+                      EX + "g", replace=True)
+        g = self.graph_lines(srv, store, EX + "g")
+        assert len(g) == 1 and g[0].startswith(f"<{EX}new>")
 
-    def test_post_merges(self, spark, store, upd):
+    def test_post_merges(self, spark, store, upd, srv):
         upd.update('PREFIX ex: <http://e/> INSERT DATA { GRAPH ex:g { ex:a ex:p "x" } }')
-        incoming = self.quads_df(spark, [("", EX + "b", EX + "p", "literal", "y", None, None)])
-        upd.gsp_post(incoming, graph=EX + "g")
-        assert upd.gsp_get(EX + "g").count() == 2
+        srv.gsp_write(store, b'<http://e/b> <http://e/p> "y" .\n', "application/n-triples",
+                      EX + "g", replace=False)
+        assert len(self.graph_lines(srv, store, EX + "g")) == 2
 
-    def test_delete_graph(self, spark, store, upd):
+    def test_delete_graph(self, spark, store, upd, srv):
         upd.update(
             'PREFIX ex: <http://e/> INSERT DATA { ex:d ex:p "keep" . GRAPH ex:g { ex:a ex:p "x" } }'
         )
-        upd.gsp_delete(EX + "g")
-        assert upd.gsp_get(EX + "g").count() == 0
-        assert upd.gsp_get().count() == 1  # default graph untouched
+        srv.gsp_delete(store, EX + "g")
+        assert self.graph_lines(srv, store, EX + "g") == []
+        assert len(self.graph_lines(srv, store, "default")) == 1  # default graph untouched
 
-    def test_get_default_graph(self, spark, store, upd):
+    def test_get_default_graph(self, spark, store, upd, srv):
         upd.update('PREFIX ex: <http://e/> INSERT DATA { ex:d ex:p "v" }')
-        df = upd.gsp_get()
-        assert df.filter(F.col("subject") == EX + "d").count() == 1
+        assert any(ln.startswith(f"<{EX}d>") for ln in self.graph_lines(srv, store, "default"))
 
 
 class TestGraphManagement:
@@ -607,15 +631,15 @@ class TestBroadcastGate:
         assert "ResolvedHint" not in unhinted._jdf.queryExecution().analyzed().toString()
 
     def test_gsp_put_and_delete_do_not_break(self, spark, store, upd):
-        from jena_fuseki_kafka_spark.model import QUAD_SCHEMA as QS
+        from jena_fuseki_kafka_spark.server import SparqlHttpServer
 
         self.seed(upd)
-        df = spark.createDataFrame(
-            [("", "http://e/n1", "http://e/p", "iri", "http://e/o", None, None)], QS
-        )
-        upd.gsp_put(df, graph=None)
-        assert (DEFAULT_GRAPH, "http://e/n1", "http://e/p", "http://e/o") in all_quads(
-            spark, store
-        )
-        upd.gsp_delete(graph=None)
+        srv = SparqlHttpServer(spark, store)
+        srv.gsp_write(store, b"<http://e/n1> <http://e/p> <http://e/o> .\n",
+                      "application/n-triples", None, replace=True)
+        assert all_quads(spark, store) == {
+            (DEFAULT_GRAPH, "http://e/n1", "http://e/p", "http://e/o"),
+            ("http://e/g", "http://e/s3", "http://e/p", "c"),
+        }
+        srv.gsp_delete(store, None)
         assert store.count(spark) == 1  # only the named-graph quad survives

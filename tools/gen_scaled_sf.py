@@ -10,12 +10,14 @@ structure scales LINEARLY instead of creating k-fold exact-duplicate
 clusters (which would send the dedup pair joins quadratic in k and
 measure a blowup no real corpus has):
 
-- documents: per copy i>0, every whitespace token gets the suffix str(i)
+- documents: per copy i>0, every whitespace token gets the suffix
+  "_" + str(i) (the separator keeps "a1" + "2" apart from "a" + "12")
   — an injective per-token rename, so within-copy Jaccard/shingle
   structure is isomorphic to the base corpus while cross-copy documents
   share zero shingles (no cross-copy verified pairs).  n_chars is
   recomputed (it must equal length(text); d04 buckets on it).
 - embeddings: per copy i, dimensions are cyclically rotated by (i*7)%64
+  (distinct for every copy only while k <= 64, so k is capped there)
   — rotation preserves every within-copy dot product/cosine exactly,
   while cross-copy cosines stay near-orthogonal-random.  vec_id offset
   is a multiple of CENTROID_MOD*S10_BATCH_MOD*PQ_CODE_MOD (61*5*37) so
@@ -50,7 +52,7 @@ ORDER_OFFSET = 10_000_000
 
 
 def _suffix_words(text: str, i: int) -> str:
-    suf = str(i)
+    suf = "_" + str(i)
     return " ".join(w + suf for w in text.split(" "))
 
 
@@ -75,6 +77,10 @@ def scale_documents(base: pa.Table, k: int) -> pa.Table:
 
 
 def scale_embeddings(base: pa.Table, k: int) -> pa.Table:
+    # 7 is coprime to 64: copies 0..63 get 64 distinct rotations, copy 64
+    # would repeat copy 0's
+    if k > 64:
+        raise ValueError(f"k={k}: the (i*7)%64 embedding rotation repeats beyond k=64")
     copies = [base]
     vecs = base.column("embedding").to_pylist()
     for i in range(1, k):
