@@ -41,14 +41,6 @@ from ..model import QUAD_COLS
 from ..store import QuadStore
 from .payloads import PARSED_SCHEMA, parse_events_pdf
 
-# Largest micro-batch (rows of net quads) the commit dedup join may
-# broadcast.  Typical trigger-bounded batches are far below this; a replay
-# burst or backfill past it falls back to a shuffled join — slower, but
-# never an unbounded build side on the driver/executors (~4M quad rows is
-# on the order of the broadcast sizes Spark itself tolerates; a hint
-# bypasses its size check, so the bound has to live with the hint).
-BROADCAST_BATCH_MAX_ROWS = 4_000_000
-
 DLQ_REASON = "Dead-Letter-Reason"
 DLQ_EXC_CLASS = "Dead-Letter-Exception-Class"
 DLQ_ROOT_CAUSE = "Dead-Letter-Root-Cause"
@@ -174,13 +166,6 @@ def apply_event_batch(
             # net-effect already reduced to unique quads — skip the
             # within-batch dropDuplicates shuffle in the store
             assume_unique=True,
-            # the dedup semi-join broadcasts the batch side only while the
-            # batch is genuinely bounded; a replay burst or backfill batch
-            # past the cap shuffles instead of collecting a multi-GB build
-            # side onto the driver and every executor (n_adds/n_deletes are
-            # already known here — the net-effect aggregate counted them)
-            broadcast_adds=n_adds <= BROADCAST_BATCH_MAX_ROWS,
-            broadcast_deletes=n_deletes <= BROADCAST_BATCH_MAX_ROWS,
         )
         return {
             "version": version,

@@ -12,9 +12,8 @@ store-sized graph export with ``df.toLocalIterator()`` and chunked
 transfer encoding instead of ``collect()``-ing it onto the driver.
 Subject/graph grouping is over *consecutive* rows — callers sort the
 DataFrame by (graph, subject) for compact output; unsorted input still
-serializes valid (just less compact) RDF.  The ``quads_to_*`` /
-``select_to_*`` string forms are joins of the iterators, kept for
-query-sized results and tests.
+serializes valid (just less compact) RDF.  The ``quads_to_*`` string
+forms are joins of the iterators, kept for tests.
 """
 
 from __future__ import annotations
@@ -241,19 +240,9 @@ def quads_to_rdfxml(rows) -> str:
 
 
 # ------------------------------------------------------------ negotiation
-# Accept-header negotiation for graph payloads: media type -> (serializer,
-# response Content-Type).  N-Quads is the default, as on the parse side.
-GRAPH_SERIALIZERS = {
-    "application/n-quads": (quads_to_nquads, "application/n-quads"),
-    "application/n-triples": (quads_to_nquads, "application/n-quads"),
-    "text/turtle": (quads_to_turtle, "text/turtle"),
-    "application/turtle": (quads_to_turtle, "text/turtle"),
-    "application/trig": (quads_to_trig, "application/trig"),
-    "application/ld+json": (quads_to_jsonld, "application/ld+json"),
-    "application/rdf+xml": (quads_to_rdfxml, "application/rdf+xml"),
-}
-
-# Streaming variants, plus whether the syntax can express named graphs.
+# Accept-header negotiation for graph payloads: media type -> (chunk
+# iterator, response Content-Type, whether the syntax can express named
+# graphs).  N-Quads is the default, as on the parse side.
 # Triple-only formats (Turtle, RDF/XML, N-Triples) silently flatten a
 # multi-graph dataset — the HTTP layer refuses those for whole-dataset
 # reads (406) rather than lose graph membership without any signal.
@@ -306,14 +295,10 @@ def _negotiate(accept: str | None, registry: dict, default_mt: str) -> str:
     return default_mt
 
 
-def negotiate_graph_serializer(accept: str | None):
-    """Accept header -> (serializer, content_type); highest q-weighted
-    supported media type wins, wildcards / nothing usable -> N-Quads."""
-    return GRAPH_SERIALIZERS[_negotiate(accept, GRAPH_SERIALIZERS, "application/n-quads")]
-
-
 def negotiate_graph_streamer(accept: str | None):
-    """Accept header -> (chunk_iterator_fn, content_type, quad_capable)."""
+    """Accept header -> (chunk_iterator_fn, content_type, quad_capable);
+    highest q-weighted supported media type wins, wildcards / nothing
+    usable -> N-Quads."""
     return GRAPH_STREAMERS[_negotiate(accept, GRAPH_STREAMERS, "application/n-quads")]
 
 
@@ -390,11 +375,6 @@ def iter_select_json(df, bounded: bool = False):
     yield "\n]}}\n"
 
 
-def select_to_json(df) -> dict:
-    """Materialized dict form (query-sized results and tests)."""
-    return _json.loads("".join(iter_select_json(df)))
-
-
 def ask_to_json(value: bool) -> dict:
     return {"head": {}, "boolean": bool(value)}
 
@@ -446,10 +426,6 @@ def iter_select_xml(df, bounded: bool = False):
     yield "  </results>\n</sparql>\n"
 
 
-def select_to_xml(df) -> str:
-    return "".join(iter_select_xml(df))
-
-
 def ask_to_xml(value: bool) -> str:
     return (
         '<?xml version="1.0"?>\n'
@@ -485,10 +461,6 @@ def iter_select_csv(df, bounded: bool = False):
         yield ",".join(fields) + "\r\n"
 
 
-def select_to_csv(df) -> str:
-    return "".join(iter_select_csv(df))
-
-
 def iter_select_tsv(df, bounded: bool = False):
     """SPARQL 1.1 TSV results: header keeps '?', terms in SPARQL syntax
     (IRIs <>, literals quoted with lang/datatype tags)."""
@@ -507,10 +479,6 @@ def iter_select_tsv(df, bounded: bool = False):
         yield "\t".join(fields) + "\n"
 
 
-def select_to_tsv(df) -> str:
-    return "".join(iter_select_tsv(df))
-
-
 def ask_to_csv(value: bool) -> str:
     # Fuseki's CSV/TSV boolean form: one header-less line
     return ("true" if value else "false") + "\r\n"
@@ -519,17 +487,6 @@ def ask_to_csv(value: bool) -> str:
 def ask_to_tsv(value: bool) -> str:
     return ("true" if value else "false") + "\n"
 
-
-RESULTS_SERIALIZERS = {
-    # content-type -> (select_fn(df) -> str, ask_fn(bool) -> str)
-    "application/sparql-results+json": (
-        lambda df: "".join(iter_select_json(df)),
-        lambda b: _json.dumps(ask_to_json(b)),
-    ),
-    "application/sparql-results+xml": (select_to_xml, ask_to_xml),
-    "text/csv": (select_to_csv, ask_to_csv),
-    "text/tab-separated-values": (select_to_tsv, ask_to_tsv),
-}
 
 RESULTS_STREAMERS = {
     # content-type -> (iter_select_fn(df) -> chunks, ask_fn(bool) -> str)
@@ -545,14 +502,8 @@ RESULTS_STREAMERS = {
 _RESULTS_DEFAULT = "application/sparql-results+json"
 
 
-def negotiate_results_serializer(accept: str | None):
-    """Accept header -> ((select_fn, ask_fn), content-type); highest
-    q-weighted supported media type wins, wildcards / nothing -> JSON."""
-    mt = _negotiate(accept, RESULTS_SERIALIZERS, _RESULTS_DEFAULT)
-    return RESULTS_SERIALIZERS[mt], mt
-
-
 def negotiate_results_streamer(accept: str | None):
-    """Accept header -> ((iter_select_fn, ask_fn), content-type)."""
+    """Accept header -> ((iter_select_fn, ask_fn), content-type); highest
+    q-weighted supported media type wins, wildcards / nothing -> JSON."""
     mt = _negotiate(accept, RESULTS_STREAMERS, _RESULTS_DEFAULT)
     return RESULTS_STREAMERS[mt], mt

@@ -260,6 +260,7 @@ def _make_handler(server: SparqlHttpServer):
             self.send_header("Content-Type", content_type)
             self.send_header("Content-Length", str(len(data)))
             self.end_headers()
+            self._started = True
             self.wfile.write(data)
 
         def _send_stream(self, code: int, content_type: str, chunks):
@@ -270,6 +271,7 @@ def _make_handler(server: SparqlHttpServer):
             self.send_header("Content-Type", content_type)
             self.send_header("Transfer-Encoding", "chunked")
             self.end_headers()
+            self._started = True
 
             def emit(data: bytes):
                 self.wfile.write(f"{len(data):X}\r\n".encode("ascii"))
@@ -300,6 +302,27 @@ def _make_handler(server: SparqlHttpServer):
             _log.exception("%s %s failed", self.command, self.path)
             return self._error(500, str(e))
 
+        def _respond(self, action):
+            """Run ``action``, which writes the whole response, and give
+            its failure a status: RdfParseError 400, NotAcceptable 406,
+            anything else 500.  Once the headers are out the status cannot
+            change: the connection closes with the body unterminated (a
+            streamed body lacks its last chunk), so the client sees a
+            truncated transfer, never a complete-looking result."""
+            self._started = False
+            try:
+                action()
+            except Exception as e:
+                if self._started:
+                    _log.exception("%s %s failed mid-response", self.command, self.path)
+                    self.close_connection = True
+                elif isinstance(e, RdfParseError):
+                    self._error(400, str(e))
+                elif isinstance(e, NotAcceptable):
+                    self._error(406, str(e))
+                else:
+                    self._server_error(e)
+
         def _route(self):
             parsed = urlparse(self.path)
             parts = [p for p in parsed.path.split("/") if p]
@@ -329,15 +352,9 @@ def _make_handler(server: SparqlHttpServer):
                     return self._error(400, "missing query parameter")
                 return self._run_query(store, q, self._dataset_params(qs))
             if op == "data":
-                try:
-                    ct, chunks = server.gsp_read(
-                        store, self._graph_param(qs), self.headers.get("Accept")
-                    )
-                    return self._send_stream(200, ct, chunks)
-                except NotAcceptable as e:
-                    return self._error(406, str(e))
-                except Exception as e:  # pragma: no cover - defensive
-                    return self._server_error(e)
+                return self._respond(lambda: self._send_stream(200, *server.gsp_read(
+                    store, self._graph_param(qs), self.headers.get("Accept")
+                )))
             return self._error(404, "unknown endpoint")
 
         def do_POST(self):
@@ -367,13 +384,9 @@ def _make_handler(server: SparqlHttpServer):
                     ds = self._update_dataset_params(qs)
                 if not u:
                     return self._error(400, "missing update")
-                try:
-                    res = server.run_update(store, u, dataset=ds)
-                    return self._send(200, "application/json", json.dumps(res))
-                except RdfParseError as e:
-                    return self._error(400, str(e))
-                except Exception as e:
-                    return self._server_error(e)
+                return self._respond(lambda: self._send(
+                    200, "application/json", json.dumps(server.run_update(store, u, dataset=ds))
+                ))
             if op == "data":
                 return self._gsp_write(store, body, ct, qs, replace=False)
             if op == "patch":
@@ -392,11 +405,12 @@ def _make_handler(server: SparqlHttpServer):
             store, op, qs = self._route()
             if store is None or op != "data":
                 return self._error(404, "unknown endpoint")
-            try:
+
+            def delete():
                 server.gsp_delete(store, self._graph_param(qs))
-                return self._send(204, "text/plain", "")
-            except Exception as e:
-                return self._server_error(e)
+                self._send(204, "text/plain", "")
+
+            return self._respond(delete)
 
         def do_PATCH(self):
             store, op, _ = self._route()
@@ -425,32 +439,22 @@ def _make_handler(server: SparqlHttpServer):
             return (d, n) if (d or n) else None
 
         def _run_query(self, store, q: str, dataset: tuple | None = None):
-            try:
-                content_type, chunks = server.run_query(
-                    store, q, self.headers.get("Accept"), dataset=dataset
-                )
-                return self._send_stream(200, content_type, chunks)
-            except RdfParseError as e:
-                return self._error(400, str(e))
+            return self._respond(lambda: self._send_stream(200, *server.run_query(
+                store, q, self.headers.get("Accept"), dataset=dataset
+            )))
 
         def _gsp_write(self, store, body, ct, qs, replace: bool):
-            try:
+            def write():
                 n = server.gsp_write(store, body, ct or None, self._graph_param(qs), replace)
-                return self._send(200, "application/json", json.dumps({"quads": n}))
-            except RdfParseError as e:
-                return self._error(400, str(e))
-            except Exception as e:
-                return self._server_error(e)
+                self._send(200, "application/json", json.dumps({"quads": n}))
+
+            return self._respond(write)
 
         def _patch(self, store, body, ct):
-            try:
+            def patch():
                 na, nd = server.apply_patch(store, body, ct or None)
-                return self._send(
-                    200, "application/json", json.dumps({"adds": na, "deletes": nd})
-                )
-            except RdfParseError as e:
-                return self._error(400, str(e))
-            except Exception as e:
-                return self._server_error(e)
+                self._send(200, "application/json", json.dumps({"adds": na, "deletes": nd}))
+
+            return self._respond(patch)
 
     return Handler

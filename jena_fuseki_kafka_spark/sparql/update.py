@@ -254,91 +254,6 @@ def _quad_pattern_quads(pattern):
     return None
 
 
-def _filter_expr_bounds(expr) -> bool:
-    """Does a FILTER expression bound the binding set to request size?
-
-    Only constant equality / IN over a variable genuinely pins a variable
-    to a request-enumerable set:  ``FILTER(?o = "x")``, ``FILTER(?p IN
-    (<a>, <b>))``.  Anything else — inequality, regex, arithmetic,
-    ``?o != "x"`` — still admits a store-sized result and must NOT grant
-    the broadcast hint.  AND bounds if either side bounds (conjunction
-    narrows); OR bounds only if both sides bound (union of bounded sets).
-    """
-    from .ast import Iri, Lit, Op, Var
-
-    if isinstance(expr, Op):
-        if expr.op == "&&":
-            return any(_filter_expr_bounds(a) for a in expr.args)
-        if expr.op == "||":
-            return all(_filter_expr_bounds(a) for a in expr.args)
-        if expr.op in ("=", "in") and len(expr.args) >= 2:
-            lhs, rest = expr.args[0], expr.args[1:]
-            def is_const(e):
-                vals = e if isinstance(e, (list, tuple)) else [e]
-                return all(isinstance(v, (Lit, Iri)) for v in vals)
-            if isinstance(lhs, Var) and all(is_const(r) for r in rest):
-                return True
-            if expr.op == "=" and isinstance(expr.args[1], Var) and is_const(lhs):
-                return True
-    return False
-
-
-def _pattern_is_constrained(pattern) -> bool:
-    """Heuristic: is a Modify/DELETE WHERE pattern's binding set bounded by
-    the request (constants narrow it) rather than store-sized?
-
-    ``DELETE WHERE { ?s ?p ?o }`` (and the GRAPH ?g / FILTER variants)
-    binds every quad in the store — broadcasting quads built from those
-    bindings is a driver/executor OOM at scale, so the caller must route
-    them through a shuffle join instead.  A constant term in a triple
-    pattern, a constant-equality/IN FILTER, VALUES, or a sub-select
-    narrows the result enough to call it request-sized.  FILTER and MINUS
-    recurse into the pattern they wrap (a filter expression alone does not
-    guarantee a request-sized binding set — ``FILTER(?o != "x")`` is
-    store-sized), and a constant GRAPH term with an unconstrained body is
-    a whole-graph delete (same as DROP / GSP DELETE, which always ride the
-    shuffle path).  Unknown node types default to unconstrained (the safe
-    join strategy).
-    """
-    from .ast import (
-        BGP, Extend, Filter, GraphPattern, Join, LeftJoin, Minus, SubSelect,
-        Union, ValuesPattern,
-    )
-
-    if isinstance(pattern, BGP):
-        return any(
-            t is not None and t[0] != "var"
-            for (s, p, o, g) in pattern.triples
-            for t in (s, p, o, g)
-        )
-    if isinstance(pattern, GraphPattern):
-        # a constant graph alone bounds nothing: GRAPH <g> { ?s ?p ?o } is
-        # the whole named graph — store-sized, exactly like DROP GRAPH
-        return _pattern_is_constrained(pattern.pattern)
-    if isinstance(pattern, Join):
-        # a join narrows to the more selective side
-        return _pattern_is_constrained(pattern.left) or _pattern_is_constrained(
-            pattern.right
-        )
-    if isinstance(pattern, LeftJoin):
-        return _pattern_is_constrained(pattern.left)  # OPTIONAL never narrows
-    if isinstance(pattern, Union):
-        return _pattern_is_constrained(pattern.left) and _pattern_is_constrained(
-            pattern.right
-        )
-    if isinstance(pattern, Filter):
-        return _filter_expr_bounds(pattern.expr) or _pattern_is_constrained(
-            pattern.pattern
-        )
-    if isinstance(pattern, Minus):
-        return _pattern_is_constrained(pattern.left)  # MINUS never narrows to bounded
-    if isinstance(pattern, Extend):
-        return _pattern_is_constrained(pattern.pattern)  # BIND never narrows
-    if isinstance(pattern, (ValuesPattern, SubSelect)):
-        return True
-    return False
-
-
 class _Pending:
     """A request's pending net effect.  Every operation evaluates against
     ``view()`` = base MINUS pending deletes UNION pending adds (SPARQL 1.1
@@ -348,15 +263,14 @@ class _Pending:
     deleted, quads inserted: the order the store commit applies them — and
     switches to DataFrames, for the rest of the request, at the first
     operation whose quads are not collected on the driver (ADD/COPY/MOVE,
-    CLEAR NAMED/ALL, an unconstrained or overflowing WHERE, a bnode INSERT
-    template).  Both forms are kept net (inserting a quad removes it from
-    the pending deletes and vice versa), so no quad is ever in both and the
-    commit's delete-then-add order is safe.
+    CLEAR NAMED/ALL, a WHERE whose bindings overflow the probe, a bnode
+    INSERT template).  Both forms are kept net (inserting a quad removes it
+    from the pending deletes and vice versa), so no quad is ever in both
+    and the commit's delete-then-add order is safe.
 
-    The DataFrame form tracks the broadcast gate: True while every
-    contribution is request-sized (constants, loaded documents,
-    constrained patterns); store-sized sets must ride shuffle joins, never
-    a broadcast."""
+    Joins against the driver-resident rows broadcast them; joins between
+    DataFrames carry no hint, so Spark sizes them, and the store sizes its
+    commit joins from the rows it counts."""
 
     def __init__(self, spark: SparkSession, store: QuadStore):
         self.spark = spark
@@ -368,8 +282,6 @@ class _Pending:
         self.frames = False
         self.del_df: DataFrame | None = None
         self.add_df: DataFrame | None = None
-        self.adds_bounded = True
-        self.dels_bounded = True
 
     def base(self) -> DataFrame:
         if self._base is None:
@@ -380,7 +292,7 @@ class _Pending:
         v = self.base()
         if self.frames:
             if self.del_df is not None:
-                v = _anti_join_quads(v, self.del_df, broadcast_right=self.dels_bounded)
+                v = _anti_join_quads(v, self.del_df)
             if self.add_df is not None:
                 v = v.unionByName(self.add_df).dropDuplicates(QUAD_COLS)
             return v
@@ -411,9 +323,7 @@ class _Pending:
 
     def clear_graph(self, graph: str) -> None:
         if self.frames:
-            return self.delete_df(
-                self.view().filter(F.col("graph") == graph), bounded=False
-            )
+            return self.delete_df(self.view().filter(F.col("graph") == graph))
         self.graphs.add(graph)
         self.adds = {r: None for r in self.adds if r[0] != graph}
 
@@ -424,47 +334,37 @@ class _Pending:
         parts = []
         if self.graphs:
             parts.append(self.base().filter(F.col("graph").isin(sorted(self.graphs))))
-            self.dels_bounded = False
         if self.dels:
             parts.append(quad_frame(self.spark, list(self.dels)))
         self.del_df = reduce(DataFrame.unionByName, parts) if parts else None
         self.add_df = quad_frame(self.spark, list(self.adds)) if self.adds else None
         self.frames = True
 
-    def insert_df(self, df: DataFrame, bounded: bool = True) -> None:
+    def insert_df(self, df: DataFrame) -> None:
         self._to_frames()
         df = df.select(*QUAD_COLS)
         if self.del_df is not None:
-            self.del_df = _anti_join_quads(self.del_df, df, broadcast_right=bounded)
-        self.adds_bounded = self.adds_bounded and bounded
+            self.del_df = _anti_join_quads(self.del_df, df)
         self.add_df = (
             df if self.add_df is None
             else self.add_df.unionByName(df).dropDuplicates(QUAD_COLS)
         )
 
-    def delete_df(self, df: DataFrame, bounded: bool = True) -> None:
+    def delete_df(self, df: DataFrame) -> None:
         self._to_frames()
         df = df.select(*QUAD_COLS)
         if self.add_df is not None:
-            self.add_df = _anti_join_quads(self.add_df, df, broadcast_right=bounded)
-        self.dels_bounded = self.dels_bounded and bounded
+            self.add_df = _anti_join_quads(self.add_df, df)
         self.del_df = (
             df if self.del_df is None
             else self.del_df.unionByName(df).dropDuplicates(QUAD_COLS)
         )
 
     # -- commit -----------------------------------------------------------
-    def broadcast(self) -> dict[str, bool]:
-        if self.frames:
-            return {"adds": self.adds_bounded, "deletes": self.dels_bounded}
-        # the store never broadcasts a graph-scoped delete
-        return {"adds": True, "deletes": not self.graphs}
-
     def commit(self, txn_id: str | None) -> int:
         if self.frames:
             return self.store.commit(
-                self.spark, adds=self.add_df, deletes=self.del_df, txn_id=txn_id,
-                broadcast_adds=self.adds_bounded, broadcast_deletes=self.dels_bounded,
+                self.spark, adds=self.add_df, deletes=self.del_df, txn_id=txn_id
             )
         deletes = [(g,) for g in sorted(self.graphs)] + list(self.dels)
         return self.store.commit(
@@ -512,9 +412,6 @@ class UpdateEngine:
     def __init__(self, spark: SparkSession, store: QuadStore):
         self.spark = spark
         self.store = store
-        # strategy chosen for the most recent update()'s final commit —
-        # exposed for tests/observability of the broadcast gate
-        self.last_commit_broadcast: dict[str, bool] = {"adds": True, "deletes": True}
 
     # ------------------------------------------------------------ update
     def update(
@@ -525,8 +422,8 @@ class UpdateEngine:
     ) -> dict:
         """Apply a SPARQL Update request atomically (one store commit),
         sequentially within the request (see ``_Pending``).  INSERT DATA,
-        DELETE DATA, LOAD, CLEAR GRAPH/DEFAULT and a constrained WHERE
-        whose bindings fit ``DRIVER_COMMIT_ROWS`` stay rows, so on a small
+        DELETE DATA, LOAD, CLEAR GRAPH/DEFAULT and a WHERE whose bindings
+        fit ``DRIVER_COMMIT_ROWS`` stay rows, so on a small
         store the request commits without a Spark job beyond the WHERE
         evaluation.
 
@@ -571,9 +468,9 @@ class UpdateEngine:
                 target = op[1]
                 if target == "named":
                     cond = F.col("graph") != DEFAULT_GRAPH
-                    pending.delete_df(pending.view().filter(cond), bounded=False)
+                    pending.delete_df(pending.view().filter(cond))
                 elif target == "all":
-                    pending.delete_df(pending.view(), bounded=False)
+                    pending.delete_df(pending.view())
                 else:
                     pending.clear_graph(DEFAULT_GRAPH if target == "default" else target)
             elif kind == "load":
@@ -604,13 +501,12 @@ class UpdateEngine:
                     .withColumn("graph", F.lit(dst_g))
                 )
                 if kind in ("copy", "move"):
-                    pending.delete_df(view.filter(F.col("graph") == dst_g), bounded=False)
+                    pending.delete_df(view.filter(F.col("graph") == dst_g))
                 if kind == "move":
-                    pending.delete_df(view.filter(F.col("graph") == src_g), bounded=False)
-                pending.insert_df(moved, bounded=False)
+                    pending.delete_df(view.filter(F.col("graph") == src_g))
+                pending.insert_df(moved)
             elif kind == "modify":
                 self._modify(pending, op, protocol_dataset, _op_suffix(op_index))
-        self.last_commit_broadcast = pending.broadcast()
         return {"version": pending.commit(txn_id)}
 
     def _modify(self, pending: _Pending, op: tuple, protocol_dataset, bnode_suffix: str):
@@ -651,11 +547,10 @@ class UpdateEngine:
             graph_arg = ("iri", with_graph)
         translator = Translator(dataset)
         df = translator._pattern(translator._rewrite_exists(pattern), graph=graph_arg)
-        bounded = _pattern_is_constrained(pattern)
         cap = self.store.DRIVER_COMMIT_ROWS
-        if bounded and cap >= 0 and not (ins_tmpl and _has_bnode(ins_tmpl)):
-            # request-sized bindings: collect them once (one bounded job
-            # that also proves the size) and instantiate on the driver
+        if cap >= 0 and not (ins_tmpl and _has_bnode(ins_tmpl)):
+            # probe the binding set with one bounded collect: when it fits,
+            # the bindings are request-sized and instantiate on the driver
             solutions = df.limit(cap + 1).collect()
             if len(solutions) <= cap:
                 if del_tmpl:
@@ -669,12 +564,9 @@ class UpdateEngine:
         if del_tmpl and ins_tmpl:
             df = stable_checkpoint(df, eager=True)
         if del_tmpl:
-            pending.delete_df(self._instantiate(df, del_tmpl), bounded=bounded)
+            pending.delete_df(self._instantiate(df, del_tmpl))
         if ins_tmpl:
-            pending.insert_df(
-                self._instantiate(df, ins_tmpl, bnode_suffix=bnode_suffix),
-                bounded=bounded,
-            )
+            pending.insert_df(self._instantiate(df, ins_tmpl, bnode_suffix=bnode_suffix))
 
     _LOAD_SUFFIXES = {
         ".nt": "application/n-triples",

@@ -10,7 +10,8 @@ manifest.
 Layout:
     <path>/files/<uuid>/bucket=N/   immutable data leaves, partitioned by a
                                     stable subject-hash bucket
-    <path>/_manifest.json           {"version": N, "files": ["<uuid>/bucket=N", ...]}
+    <path>/_manifest.json           {"version": N, "files": ["<uuid>/bucket=N", ...],
+                                     "txns": [...], "tombstones": [[leaf, version], ...]}
     <path>/_manifest.json.tmp       write-then-os.replace for atomicity
 
 Commit protocol (single writer per store, like the reference's one
@@ -151,7 +152,9 @@ class QuadStore:
         # in-flight commit must not clobber the committed manifest
         with self._write_lock:
             if not os.path.exists(self._manifest_path()):
-                self._write_manifest({"version": 0, "files": [], "txns": []})
+                self._write_manifest(
+                    {"version": 0, "files": [], "txns": [], "tombstones": []}
+                )
 
     # -- bucket layout ------------------------------------------------------
     # manifest entries are leaf directories "<uuid>/bucket=N": data is
@@ -162,10 +165,8 @@ class QuadStore:
         return F.pmod(F.xxhash64(F.col("subject")), F.lit(self.n_buckets))
 
     @staticmethod
-    def _bucket_of(entry: str) -> int | None:
-        if "/bucket=" in entry:
-            return int(entry.rsplit("=", 1)[1])
-        return None  # legacy flat entry: always read
+    def _bucket_of(entry: str) -> int:
+        return int(entry.rsplit("=", 1)[1])
 
     # the Spark tier writes commits at or below this row count without the
     # bucket shuffle: a single task writes every bucket leaf.  Ingest-volume
@@ -184,6 +185,15 @@ class QuadStore:
     # test).  Request mutations are at most thousands of rows; anything
     # bigger arrives via the ingest stream, which keeps the Spark tier.
     DRIVER_COMMIT_ROWS = 20_000
+
+    # the Spark tier broadcasts a commit join's small side (the deletes in
+    # the rewrite anti-join, the adds in the set-semantics dedup) only when
+    # that side holds at most this many rows, counted by the per-bucket
+    # aggregate the commit runs anyway.  Past it the join carries no hint
+    # and Spark sizes it (a shuffle for a store-sized side): a hint
+    # bypasses Spark's own size check, so the bound has to live with it.
+    # ~4M quad rows is on the order of the broadcasts Spark tolerates.
+    BROADCAST_MAX_ROWS = 4_000_000
 
     def _write_partitioned(self, df: DataFrame, small: bool = False) -> list[str]:
         """Write df bucket-partitioned under a fresh uuid dir; return the
@@ -217,9 +227,7 @@ class QuadStore:
 
     def _read_manifest(self) -> dict:
         with open(self._manifest_path()) as f:
-            manifest = json.load(f)
-        manifest.setdefault("tombstones", [])  # pre-grace manifests
-        return manifest
+            return json.load(f)
 
     def _write_manifest(self, manifest: dict) -> None:
         # unique tmp name: concurrent writers (or a crashed leftover) must
@@ -247,32 +255,24 @@ class QuadStore:
         ``bucket = <const>`` then constant-folds every other branch to an
         empty relation and Catalyst prunes their files from the plan —
         point lookups (constant-subject SPARQL patterns, DESCRIBE) read
-        1/n_buckets of the store.  Falls back to the flat scan when any
-        legacy un-bucketed leaf is present."""
+        1/n_buckets of the store."""
         manifest = self._read_manifest()
         if not manifest["files"]:
             df = spark.createDataFrame([], QUAD_SCHEMA)
             return df.withColumn("bucket", F.lit(None).cast("int")) if with_bucket else df
-        if with_bucket:
-            by_bucket: dict[int | None, list[str]] = {}
-            for f in manifest["files"]:
-                by_bucket.setdefault(self._bucket_of(f), []).append(f)
-            if None not in by_bucket:
-                parts = [
-                    spark.read.schema(QUAD_SCHEMA)
-                    .parquet(*[os.path.join(self.files_dir, f) for f in fs])
-                    .withColumn("bucket", F.lit(b))
-                    for b, fs in sorted(by_bucket.items())
-                ]
-                df = parts[0]
-                for p in parts[1:]:
-                    df = df.unionByName(p)
-                return df
-        paths = [os.path.join(self.files_dir, f) for f in manifest["files"]]
-        df = spark.read.schema(QUAD_SCHEMA).parquet(*paths)
-        if with_bucket:
-            df = df.withColumn("bucket", self._bucket_col().cast("int"))
-        return df
+        if not with_bucket:
+            paths = [os.path.join(self.files_dir, f) for f in manifest["files"]]
+            return spark.read.schema(QUAD_SCHEMA).parquet(*paths)
+        by_bucket: dict[int, list[str]] = {}
+        for f in manifest["files"]:
+            by_bucket.setdefault(self._bucket_of(f), []).append(f)
+        parts = [
+            spark.read.schema(QUAD_SCHEMA)
+            .parquet(*[os.path.join(self.files_dir, f) for f in fs])
+            .withColumn("bucket", F.lit(b))
+            for b, fs in sorted(by_bucket.items())
+        ]
+        return reduce(DataFrame.unionByName, parts)
 
     def count(self, spark: SparkSession) -> int:
         return self.read(spark).count()
@@ -285,8 +285,6 @@ class QuadStore:
         deletes: DataFrame | Sequence[tuple] | None = None,
         txn_id: str | None = None,
         assume_unique: bool = False,
-        broadcast_deletes: bool = True,
-        broadcast_adds: bool = True,
     ) -> int:
         """Atomically apply deletes, then adds; returns the new version.
 
@@ -304,17 +302,14 @@ class QuadStore:
           pyarrow on the driver; no Spark job (see ``_driver_commit``).
         * Spark — everything else.  Rows are turned into DataFrames here,
           once; a graph-scoped delete becomes a filtered read of the store.
+          Each side's rows are counted per bucket before its join, and the
+          join broadcasts that side only while the count is at most
+          ``BROADCAST_MAX_ROWS`` (see ``_spark_commit``).
 
-        Spark-tier knobs: ``assume_unique`` skips the within-batch
+        ``assume_unique`` skips the Spark tier's within-batch
         dropDuplicates shuffle when the caller already reduced a DataFrame
         to unique quads (the projector's net-effect aggregate guarantees
-        it).  ``broadcast_deletes``/``broadcast_adds`` choose the join
-        strategy for the rewrite-on-delete anti-join and the set-semantics
-        dedup: True (the default) is right for request/batch-sized inputs;
-        callers whose delete or add set may be store-sized (CLEAR ALL,
-        unconstrained DELETE WHERE, whole-graph COPY) must pass False so
-        the join shuffles instead of broadcasting a store-sized side into
-        every executor (and the driver).
+        it).
 
         Thread-safe: holds the per-store write lock for the whole
         read-manifest -> write-files -> swap-manifest sequence, so HTTP
@@ -322,10 +317,7 @@ class QuadStore:
         losing each other's commits.
         """
         with self._write_lock:
-            return self._commit_locked(
-                spark, adds, deletes, txn_id, assume_unique,
-                broadcast_deletes, broadcast_adds,
-            )
+            return self._commit_locked(spark, adds, deletes, txn_id, assume_unique)
 
     def _commit_locked(
         self,
@@ -334,8 +326,6 @@ class QuadStore:
         deletes: DataFrame | Sequence[tuple] | None,
         txn_id: str | None,
         assume_unique: bool,
-        broadcast_deletes: bool,
-        broadcast_adds: bool,
     ) -> int:
         manifest = self._read_manifest()
         if txn_id is not None and txn_id in manifest["txns"]:
@@ -352,27 +342,18 @@ class QuadStore:
         if isinstance(adds, list):
             adds, assume_unique = (quad_frame(spark, adds) if adds else None), True
         if isinstance(deletes, list):
-            deletes, scoped = self._delete_frame(spark, deletes)
-            broadcast_deletes = broadcast_deletes and not scoped
-        return self._spark_commit(
-            spark, manifest, adds, deletes, txn_id, assume_unique,
-            broadcast_deletes, broadcast_adds,
-        )
+            deletes = self._delete_frame(spark, deletes)
+        return self._spark_commit(spark, manifest, adds, deletes, txn_id, assume_unique)
 
-    def _delete_frame(
-        self, spark: SparkSession, deletes: list[tuple]
-    ) -> tuple[DataFrame | None, bool]:
-        """Delete rows -> (DataFrame, whether it holds a graph-scoped
-        delete).  A graph's quads are store-sized, so the caller must not
-        broadcast a frame that holds them."""
+    def _delete_frame(self, spark: SparkSession, deletes: list[tuple]) -> DataFrame | None:
+        """Delete rows -> a DataFrame; a graph-scoped delete becomes a
+        filtered read of the store."""
         graphs = [d[0] for d in deletes if len(d) == 1]
         exact = [d for d in deletes if len(d) != 1]
         parts = [quad_frame(spark, exact)] if exact else []
         if graphs:
             parts.append(self.read(spark).filter(F.col("graph").isin(graphs)))
-        if not parts:
-            return None, False
-        return reduce(DataFrame.unionByName, parts), bool(graphs)
+        return reduce(DataFrame.unionByName, parts) if parts else None
 
     def _spark_commit(
         self,
@@ -382,23 +363,21 @@ class QuadStore:
         deletes: DataFrame | None,
         txn_id: str | None,
         assume_unique: bool,
-        broadcast_deletes: bool,
-        broadcast_adds: bool,
     ) -> int:
+        """The Spark tier; its joins are sized by ``BROADCAST_MAX_ROWS``."""
         current_files = list(manifest["files"])
         new_files: list[str] = []
         drop_files: list[str] = []
 
-        del_buckets: set[int] = set()
+        del_stats = []
         if deletes is not None:
             # no dropDuplicates: the anti-join is duplicate-insensitive, so
             # deduping the delete side is pure wasted shuffle.  One
-            # aggregation answers both "any deletes?" and "which buckets?"
+            # aggregation answers "any deletes?", "which buckets?" and "how
+            # many rows?" (sizes the join)
             deletes = deletes.select(*QUAD_COLS)
-            del_buckets = {
-                r["b"]
-                for r in deletes.groupBy(self._bucket_col().alias("b")).count().collect()
-            }
+            del_stats = deletes.groupBy(self._bucket_col().alias("b")).count().collect()
+        del_buckets = {r["b"] for r in del_stats}
 
         if del_buckets and current_files:
             # Rewrite-on-delete, restricted to the buckets the delete keys
@@ -408,8 +387,10 @@ class QuadStore:
             if affected:
                 paths = [os.path.join(self.files_dir, f) for f in affected]
                 current = spark.read.schema(QUAD_SCHEMA).parquet(*paths)
+                n_deletes = sum(r["count"] for r in del_stats)
                 survivors = _anti_join_quads(
-                    current, deletes, broadcast_right=broadcast_deletes
+                    current, deletes,
+                    broadcast_right=n_deletes <= self.BROADCAST_MAX_ROWS,
                 )
                 # survivors <= the affected leaves' rows, known from
                 # parquet footers — small rewrites skip the bucket shuffle
@@ -425,7 +406,8 @@ class QuadStore:
             if not assume_unique:
                 adds = adds.dropDuplicates(QUAD_COLS)
             # one aggregation answers "which buckets?" (snapshot dedup only
-            # needs those) AND "how many rows?" (sizes the write)
+            # needs those) AND "how many rows?" (sizes the joins and the
+            # write)
             add_stats = adds.groupBy(self._bucket_col().alias("b")).count().collect()
             n_adds = sum(r["count"] for r in add_stats)
             scan_files = self._leaves_in(current_files, {r["b"] for r in add_stats})
@@ -436,10 +418,11 @@ class QuadStore:
                 # The store side is the big one — find the duplicates by
                 # broadcasting the (micro-batch-sized) adds and scanning the
                 # store WITHOUT a shuffle, then anti-join adds against that
-                # small duplicate set.  The store is read, never shuffled;
-                # at bucketed layout this becomes a bucket-pruned scan.
-                dups = _semi_join_quads(current, adds, broadcast_right=broadcast_adds)
-                adds = _anti_join_quads(adds, dups, broadcast_right=broadcast_adds)
+                # duplicate set, which is no bigger than the adds.  At
+                # bucketed layout the store read is a bucket-pruned scan.
+                broadcast = n_adds <= self.BROADCAST_MAX_ROWS
+                dups = _semi_join_quads(current, adds, broadcast_right=broadcast)
+                adds = _anti_join_quads(adds, dups, broadcast_right=broadcast)
             new_files.extend(
                 self._write_partitioned(adds, small=n_adds <= self.SMALL_COMMIT_ROWS)
             )
@@ -459,10 +442,8 @@ class QuadStore:
         return manifest["version"]
 
     def _leaves_in(self, files: list[str], buckets: set[int]) -> list[str]:
-        """The leaves of ``files`` that may hold rows of ``buckets``."""
-        return [
-            f for f in files if self._bucket_of(f) is None or self._bucket_of(f) in buckets
-        ]
+        """The leaves of ``files`` that hold rows of ``buckets``."""
+        return [f for f in files if self._bucket_of(f) in buckets]
 
     # -- driver tier ------------------------------------------------------
     def _driver_commit(
@@ -530,10 +511,6 @@ class QuadStore:
                 pc.is_in(tables[entry].column("graph"), value_set=graph_set)
             ).as_py() is True
 
-        def bucket(entry: str, row: tuple) -> int:
-            b = self._bucket_of(entry)
-            return b if b is not None else spark_bucket(row[scol], self.n_buckets)
-
         drop: list[str] = []
         survivors: dict[int, list[tuple]] = {}
         for entry in del_leaves:
@@ -545,8 +522,7 @@ class QuadStore:
                 continue
             drop.append(entry)
             leaf_rows[entry] = kept  # post-delete content, for the dedup
-            for r in kept:
-                survivors.setdefault(bucket(entry, r), []).append(r)
+            survivors.setdefault(self._bucket_of(entry), []).extend(kept)
         current = [f for f in files if f not in drop] + self._write_leaves(survivors)
 
         existing = {r for entry in add_leaves for r in rows_of(entry)}
@@ -598,8 +574,7 @@ class QuadStore:
         long-running connector accumulates O(commits) files and scan/task
         overhead grows unboundedly — the classic streaming-ingest failure
         mode at scale.  Compaction reads each bucket whose leaf count is
-        >= ``min_files_per_bucket`` (plus any legacy un-bucketed leaves),
-        rewrites it as a single leaf, and atomically swaps the manifest —
+        >= ``min_files_per_bucket``, rewrites it as a single leaf, and atomically swaps the manifest —
         the same MVCC swap as a commit, so concurrent readers keep their
         snapshot and the single writer can run this between batches (the
         reference's TDB2 has the analogous offline ``compact`` operation).
@@ -610,14 +585,11 @@ class QuadStore:
 
     def _compact_locked(self, spark: SparkSession, min_files_per_bucket: int) -> int:
         manifest = self._read_manifest()
-        by_bucket: dict[int | None, list[str]] = {}
+        by_bucket: dict[int, list[str]] = {}
         for f in manifest["files"]:
             by_bucket.setdefault(self._bucket_of(f), []).append(f)
-        merge: list[str] = []
-        for b, fs in by_bucket.items():
-            if b is None or len(fs) >= min_files_per_bucket:
-                merge.extend(fs)
-        if len(merge) <= 1 and None not in by_bucket:
+        merge = [f for fs in by_bucket.values() if len(fs) >= min_files_per_bucket for f in fs]
+        if len(merge) <= 1:
             return manifest["version"]
         paths = [os.path.join(self.files_dir, f) for f in merge]
         merged = spark.read.schema(QUAD_SCHEMA).parquet(*paths)

@@ -351,6 +351,45 @@ class TestWriteFailures:
         self.assert_500(req(f"{server}/patch", "PATCH", patch, "application/rdf-patch"))
 
 
+class TestQueryFailures:
+    """A query that fails before its response starts answers 500 with the
+    message.  One that fails after the chunked headers went out cannot
+    change its status: the body is left without its terminating chunk and
+    the connection closes, with no second status line written into it."""
+
+    def test_query_failure_is_500(self, server):
+        q = "SELECT ?s WHERE { SERVICE <http://127.0.0.1:9/nope> { ?s ?p ?o } }"
+        code, _, body = req(f"{server}/query", "POST", q.encode(), "application/sparql-query")
+        assert code == 500 and "SERVICE" in body
+
+    def test_failure_after_headers_leaves_body_unterminated(self, server, monkeypatch):
+        import socket
+        from urllib.parse import urlparse
+
+        first = "<http://example.org/a> <http://example.org/p> \"1\" .\n" * 2000
+
+        def chunks():
+            yield first  # over the 64 KiB write buffer: reaches the wire
+            raise RuntimeError("executor lost")
+
+        monkeypatch.setattr(
+            SparqlHttpServer, "run_query",
+            lambda self, *a, **k: ("application/n-quads", chunks()),
+        )
+        url = urlparse(server)
+        with socket.create_connection((url.hostname, url.port), timeout=60) as sock:
+            sock.sendall(b"GET /ds/query?query=x HTTP/1.1\r\nHost: t\r\n\r\n")
+            raw = b""
+            while data := sock.recv(65536):
+                raw += data
+        head, _, body = raw.partition(b"\r\n\r\n")
+        assert head.startswith(b"HTTP/1.1 200") and b"chunked" in head
+        assert body.startswith(f"{len(first):X}\r\n".encode())
+        assert first.encode() in body
+        assert b"HTTP/1." not in body and b"executor lost" not in body
+        assert not body.endswith(b"0\r\n\r\n")
+
+
 class TestServiceFederation:
     """SERVICE <endpoint> { ... }: ship a sub-pattern to a remote SPARQL
     endpoint (here: a second SparqlHttpServer) and join the bindings."""

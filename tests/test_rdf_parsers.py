@@ -426,32 +426,27 @@ class TestSerializerRoundTrips:
 
     def test_negotiation(self):
         from jena_fuseki_kafka_spark.rdf.serialize import (
-            negotiate_graph_serializer,
-            quads_to_jsonld,
-            quads_to_nquads,
-            quads_to_turtle,
+            iter_jsonld,
+            iter_nquads,
+            iter_turtle,
+            negotiate_graph_streamer,
         )
 
-        assert negotiate_graph_serializer(None)[0] is quads_to_nquads
-        assert negotiate_graph_serializer("*/*")[0] is quads_to_nquads
-        assert negotiate_graph_serializer("text/turtle")[0] is quads_to_turtle
+        def pick(accept):
+            return negotiate_graph_streamer(accept)[0]
+
+        assert pick(None) is iter_nquads
+        assert pick("*/*") is iter_nquads
+        assert pick("text/turtle") is iter_turtle
         # q-values rank (RFC 9110 12.5.1): implicit q=1.0 beats q=0.9
         # regardless of listing order
-        assert negotiate_graph_serializer(
-            "application/ld+json;q=0.9, text/turtle"
-        )[0] is quads_to_turtle
-        assert negotiate_graph_serializer(
-            "text/turtle;q=0.1, application/ld+json;q=0.9"
-        )[0] is quads_to_jsonld
+        assert pick("application/ld+json;q=0.9, text/turtle") is iter_turtle
+        assert pick("text/turtle;q=0.1, application/ld+json;q=0.9") is iter_jsonld
         # ties break by listing order
-        assert negotiate_graph_serializer(
-            "application/ld+json;q=0.5, text/turtle;q=0.5"
-        )[0] is quads_to_jsonld
+        assert pick("application/ld+json;q=0.5, text/turtle;q=0.5") is iter_jsonld
         # q=0 means "never" — fall through to the next acceptable type
-        assert negotiate_graph_serializer(
-            "text/turtle;q=0, application/ld+json"
-        )[0] is quads_to_jsonld
-        assert negotiate_graph_serializer("application/weird")[0] is quads_to_nquads
+        assert pick("text/turtle;q=0, application/ld+json") is iter_jsonld
+        assert pick("application/weird") is iter_nquads
 
 
 class TestContentTypeDispatch:

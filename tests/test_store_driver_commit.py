@@ -78,16 +78,26 @@ G = "http://e/g"
 SMALL, DRIVER = 40, 8
 
 
-@pytest.mark.parametrize("force_spark", [False, True])
-def test_commit_sequence_snapshot_parity(spark, tmp_path, count_jobs, force_spark):
+@pytest.mark.parametrize(
+    "force_spark, broadcast_max_rows",
+    [(False, None), (True, None), (True, 0)],
+    ids=["False", "True", "True-shuffle"],
+)
+def test_commit_sequence_snapshot_parity(
+    spark, tmp_path, count_jobs, force_spark, broadcast_max_rows
+):
     """The same commit sequence through the rows entry's driver tier
-    (default) and through the Spark tier (DRIVER_COMMIT_ROWS forced to -1)
-    must produce the same snapshots — closed forms here, identical for
-    both parametrizations — and every commit must run in the tier the
-    size gates pick (driver tier = no Spark job)."""
+    (default), through the Spark tier (DRIVER_COMMIT_ROWS forced to -1)
+    and through the Spark tier with every commit join shuffled
+    (BROADCAST_MAX_ROWS forced to 0) must produce the same snapshots —
+    closed forms here, identical for every parametrization — and every
+    commit must run in the tier the size gates pick (driver tier = no
+    Spark job)."""
     store = QuadStore(str(tmp_path / "seq"), n_buckets=4)
     if force_spark:
         store.DRIVER_COMMIT_ROWS = -1  # instance override: never driver-commit
+    if broadcast_max_rows is not None:
+        store.BROADCAST_MAX_ROWS = broadcast_max_rows
 
     def commit(target=store, driver=not force_spark, **kw):
         jobs, version = count_jobs(lambda: target.commit(spark, **kw))
@@ -129,6 +139,8 @@ def test_commit_sequence_snapshot_parity(spark, tmp_path, count_jobs, force_spar
     # deletes then probe DRIVER_COMMIT_ROWS on the delete side.
     for d_req, d_store in [(-1, 0), (0, 0), (1, 0), (0, -1), (0, 1)]:
         gated = QuadStore(str(tmp_path / f"gate{d_req}{d_store}"), n_buckets=4)
+        if broadcast_max_rows is not None:
+            gated.BROADCAST_MAX_ROWS = broadcast_max_rows
         pre = _quads("p", SMALL + d_store - 4) + _quads("q", 4, graph=G)
         gated.commit(spark, adds=pre, txn_id="pre")
         gated.SMALL_COMMIT_ROWS = SMALL

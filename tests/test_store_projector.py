@@ -113,37 +113,39 @@ class TestProjector:
     def test_oversized_batch_commits_without_forced_broadcast(
         self, spark, tmp_path, monkeypatch
     ):
-        # the commit dedup join broadcasts the batch side only while it is
-        # genuinely bounded; past the cap a replay burst must shuffle
-        # instead of collecting a multi-GB build side (VERDICT r6 item 1
-        # family, applied to the ingest path).  Shrink the cap so a tiny
-        # batch crosses it and assert identical results on both paths.
-        from jena_fuseki_kafka_spark.ingest import projector
+        # the commit dedup join broadcasts the batch side only while the
+        # store's count of it is at most BROADCAST_MAX_ROWS; past the cap a
+        # replay burst must shuffle instead of collecting a multi-GB build
+        # side.  Shrink the cap so a tiny batch crosses it and assert
+        # identical results on both paths.
+        from jena_fuseki_kafka_spark.store import quadstore
 
-        store = QuadStore(str(tmp_path / "q"))
+        # one bucket: every add shares the seed's leaf, so the dedup runs
+        store = QuadStore(str(tmp_path / "q"), n_buckets=1)
         seed = events_df(spark, [ev('<http://e/s0> <http://e/p> "v" .', 0)])
         apply_event_batch(spark, store, seed, txn_id="seed")
 
-        captured = {}
-        orig_commit = store.commit
+        captured = []
+        orig_semi = quadstore._semi_join_quads
 
-        def spying_commit(spark_, **kw):
-            captured["broadcast_adds"] = kw.get("broadcast_adds")
-            return orig_commit(spark_, **kw)
+        def spying_semi(left, right, broadcast_right=False):
+            captured.append(broadcast_right)
+            return orig_semi(left, right, broadcast_right)
 
-        store.commit = spying_commit
-        monkeypatch.setattr(projector, "BROADCAST_BATCH_MAX_ROWS", 2)
+        monkeypatch.setattr(quadstore, "_semi_join_quads", spying_semi)
+        store.BROADCAST_MAX_ROWS = 2
         nq = "\n".join(f'<http://e/s{i}> <http://e/p> "v" .' for i in range(1, 6))
         df = events_df(spark, [ev(nq, 1)])
         res = apply_event_batch(spark, store, df, txn_id="big")
-        assert captured["broadcast_adds"] is False, "5-row batch over a 2-row cap"
+        assert captured and not any(captured), "5-row batch over a 2-row cap"
         assert res["n_adds"] == 5
         assert store.count(spark) == 6
 
         # under the cap the bounded fast path stays on
+        captured.clear()
         df2 = events_df(spark, [ev('<http://e/s9> <http://e/p> "v" .', 2)])
         apply_event_batch(spark, store, df2, txn_id="small")
-        assert captured["broadcast_adds"] is True
+        assert captured and all(captured)
         assert store.count(spark) == 7
 
     def test_replayed_txn_reports_zero_applied_delta(self, spark, tmp_path):
@@ -212,6 +214,26 @@ class TestProjector:
             txn_id="b2",
         )
         assert store.count(spark) == 0
+
+    # Spark jobs one ingest batch costs (below), measured before the store
+    # took over sizing its commit joins: the counts it sizes them from
+    # come from aggregates the commit already runs, so the figure stays
+    INGEST_BATCH_JOBS = 18
+
+    def test_ingest_batch_job_count(self, spark, tmp_path, count_jobs):
+        store = QuadStore(str(tmp_path / "q"), n_buckets=4)
+        seed = "\n".join(f'<http://e/s{i}> <http://e/p> "v" .' for i in range(8))
+        apply_event_batch(spark, store, events_df(spark, [ev(seed, 0)]), txn_id="seed")
+        batch = events_df(spark, [
+            ev("\n".join(f'<http://e/n{i}> <http://e/p> "v" .' for i in range(6)), 1),
+            ev('D <http://e/s0> <http://e/p> "v" .\nD <http://e/s5> <http://e/p> "v" .\n'
+               'A <http://e/s0> <http://e/q> "w" .', 2, "application/rdf-patch"),
+            ev("<http://e/broken", 3),
+        ])
+        jobs, res = count_jobs(lambda: apply_event_batch(spark, store, batch, txn_id="b"))
+        assert (res["n_adds"], res["n_deletes"], res["n_dlq"]) == (7, 2, 1)
+        assert store.count(spark) == 8 - 2 + 7
+        assert jobs == self.INGEST_BATCH_JOBS
 
     def test_jsonld_and_rdfxml_events_ingest_cleanly(self, spark, tmp_path):
         # the reference accepts any registered Jena syntax (FKLib.java:55-69);

@@ -510,10 +510,18 @@ class TestLoadOverHttp:
 
 
 class TestBroadcastGate:
-    """The pending-delete/add broadcast gate: store-sized sets (CLEAR/DROP,
-    whole-graph ADD/COPY/MOVE, unconstrained DELETE WHERE, GSP PUT/DELETE)
-    must ride shuffle joins — a forced broadcast of a store-sized side is
-    a driver/executor OOM at 100 TB."""
+    """The store's commit-join broadcast gate.  The Spark-tier commit counts
+    each side's rows (the per-bucket aggregate it runs anyway) and
+    broadcasts a side only while it holds at most ``BROADCAST_MAX_ROWS``
+    rows; past the cap the join carries no hint and Spark sizes it — a
+    forced broadcast of a store-sized side is a driver/executor OOM at
+    scale, whatever the request's syntax suggests.
+
+    ``joins`` forces the Spark tier (``DRIVER_COMMIT_ROWS = -1``) and
+    shrinks the cap per instance, then records ``broadcast_right`` as it
+    reaches the store's join helpers.  Each test puts the cap at its
+    set's row count (broadcast) or one below it (shuffle), so the gate is
+    pinned at its boundary."""
 
     def seed(self, upd):
         upd.update(
@@ -521,101 +529,124 @@ class TestBroadcastGate:
             ' GRAPH ex:g { ex:s3 ex:p "c" } }'
         )
 
-    # ---- gate decisions -------------------------------------------------
-    def test_request_sized_deletes_broadcast(self, upd):
-        self.seed(upd)
-        upd.update('PREFIX ex: <http://e/> DELETE DATA { ex:s1 ex:p "a" }')
-        assert upd.last_commit_broadcast == {"adds": True, "deletes": True}
+    def joins(self, monkeypatch, store, upd, text, cap, driver_rows=-1):
+        """Apply ``text`` with the Spark tier's broadcast cap at ``cap``;
+        return the set of ``broadcast_right`` values the commit's joins got."""
+        from jena_fuseki_kafka_spark.store import quadstore
 
-    def test_clear_all_never_broadcasts_deletes(self, spark, store, upd):
+        seen = []
+        for name in ("_anti_join_quads", "_semi_join_quads"):
+            def spy(left, right, broadcast_right=False, _join=getattr(quadstore, name)):
+                seen.append(broadcast_right)
+                return _join(left, right, broadcast_right)
+
+            monkeypatch.setattr(quadstore, name, spy)
+        store.DRIVER_COMMIT_ROWS = driver_rows
+        store.BROADCAST_MAX_ROWS = cap
+        upd.update(text)
+        assert seen, "the commit built no join"
+        return set(seen)
+
+    # ---- gate decisions -------------------------------------------------
+    def test_request_sized_deletes_broadcast(self, monkeypatch, store, upd):
         self.seed(upd)
-        upd.update("CLEAR ALL")
-        assert upd.last_commit_broadcast["deletes"] is False
+        flags = self.joins(
+            monkeypatch, store, upd, 'PREFIX ex: <http://e/> DELETE DATA { ex:s1 ex:p "a" }', 1
+        )
+        assert flags == {True}
+
+    def test_clear_all_never_broadcasts_deletes(self, monkeypatch, spark, store, upd):
+        self.seed(upd)
+        assert self.joins(monkeypatch, store, upd, "CLEAR ALL", 2) == {False}
         assert store.count(spark) == 0
 
-    def test_drop_graph_never_broadcasts_deletes(self, spark, store, upd):
+    def test_drop_graph_never_broadcasts_deletes(self, monkeypatch, spark, store, upd):
         self.seed(upd)
-        upd.update("PREFIX ex: <http://e/> DROP GRAPH ex:g")
-        assert upd.last_commit_broadcast["deletes"] is False
+        text = "PREFIX ex: <http://e/> DROP GRAPH ex:g"
+        assert self.joins(monkeypatch, store, upd, text, 0) == {False}
         assert store.count(spark) == 2
 
-    def test_unconstrained_delete_where_never_broadcasts(self, spark, store, upd):
+    def test_unconstrained_delete_where_never_broadcasts(self, monkeypatch, spark, store, upd):
         self.seed(upd)
-        upd.update("DELETE WHERE { ?s ?p ?o }")
-        assert upd.last_commit_broadcast["deletes"] is False
+        assert self.joins(monkeypatch, store, upd, "DELETE WHERE { ?s ?p ?o }", 1) == {False}
         # only the default graph is unqualified-pattern-visible
         assert all_quads(spark, store) == {("http://e/g", "http://e/s3", "http://e/p", "c")}
 
-    def test_constrained_delete_where_broadcasts(self, spark, store, upd):
+    def test_constrained_delete_where_broadcasts(self, monkeypatch, spark, store, upd):
         self.seed(upd)
-        upd.update("PREFIX ex: <http://e/> DELETE WHERE { ?s ex:p ?o }")
-        assert upd.last_commit_broadcast["deletes"] is True
+        text = "PREFIX ex: <http://e/> DELETE WHERE { ?s ex:p ?o }"
+        assert self.joins(monkeypatch, store, upd, text, 2) == {True}
 
-    def test_nonselective_filter_never_broadcasts(self, spark, store, upd):
-        # FILTER(?o != "x") still admits a store-sized delete set — a bare
-        # FILTER node must NOT grant the broadcast hint
+    def test_constrained_delete_where_over_cap_shuffles(self, monkeypatch, spark, store, upd):
+        # a constant in the pattern does not make the binding set small:
+        # the bounded probe overflows DRIVER_COMMIT_ROWS, and the delete
+        # set's count is over the cap, so the commit must not broadcast it
         self.seed(upd)
-        upd.update('DELETE { ?s ?p ?o } WHERE { ?s ?p ?o FILTER(?o != "a") }')
-        assert upd.last_commit_broadcast["deletes"] is False
+        text = "PREFIX ex: <http://e/> DELETE WHERE { ?s ex:p ?o }"
+        assert self.joins(monkeypatch, store, upd, text, 1, driver_rows=1) == {False}
+        assert all_quads(spark, store) == {("http://e/g", "http://e/s3", "http://e/p", "c")}
+
+    def test_nonselective_filter_never_broadcasts(self, monkeypatch, spark, store, upd):
+        self.seed(upd)
+        text = 'DELETE { ?s ?p ?o } WHERE { ?s ?p ?o FILTER(?o != "a") }'
+        assert self.joins(monkeypatch, store, upd, text, 0) == {False}
         assert (DEFAULT_GRAPH, EX + "s1", EX + "p", "a") in all_quads(spark, store)
 
-    def test_constant_equality_filter_broadcasts(self, spark, store, upd):
-        # FILTER(?o = "a") pins ?o to one request constant — request-sized
+    def test_constant_equality_filter_broadcasts(self, monkeypatch, spark, store, upd):
         self.seed(upd)
-        upd.update('DELETE { ?s ?p ?o } WHERE { ?s ?p ?o FILTER(?o = "a") }')
-        assert upd.last_commit_broadcast["deletes"] is True
+        text = 'DELETE { ?s ?p ?o } WHERE { ?s ?p ?o FILTER(?o = "a") }'
+        assert self.joins(monkeypatch, store, upd, text, 1) == {True}
         got = all_quads(spark, store)
         assert (DEFAULT_GRAPH, EX + "s1", EX + "p", "a") not in got
         assert (DEFAULT_GRAPH, EX + "s2", EX + "p", "b") in got
 
-    def test_constant_in_filter_broadcasts(self, spark, store, upd):
+    def test_constant_in_filter_broadcasts(self, monkeypatch, spark, store, upd):
         self.seed(upd)
-        upd.update('DELETE { ?s ?p ?o } WHERE { ?s ?p ?o FILTER(?o IN ("a", "b")) }')
-        assert upd.last_commit_broadcast["deletes"] is True
+        text = 'DELETE { ?s ?p ?o } WHERE { ?s ?p ?o FILTER(?o IN ("a", "b")) }'
+        assert self.joins(monkeypatch, store, upd, text, 2) == {True}
         assert not any(q[3] in ("a", "b") and q[0] == DEFAULT_GRAPH
                        for q in all_quads(spark, store))
 
-    def test_constant_graph_unconstrained_body_never_broadcasts(self, spark, store, upd):
-        # GRAPH <g> { ?s ?p ?o } is the whole named graph — store-sized,
-        # same class as DROP GRAPH / GSP DELETE which already ride shuffle
+    def test_constant_graph_unconstrained_body_never_broadcasts(
+        self, monkeypatch, spark, store, upd
+    ):
         self.seed(upd)
-        upd.update(
+        text = (
             "PREFIX ex: <http://e/> DELETE { GRAPH ex:g { ?s ?p ?o } } "
             "WHERE { GRAPH ex:g { ?s ?p ?o } }"
         )
-        assert upd.last_commit_broadcast["deletes"] is False
+        assert self.joins(monkeypatch, store, upd, text, 0) == {False}
         assert not any(q[0] == EX + "g" for q in all_quads(spark, store))
 
-    def test_constant_graph_constrained_body_broadcasts(self, spark, store, upd):
+    def test_constant_graph_constrained_body_broadcasts(self, monkeypatch, spark, store, upd):
         self.seed(upd)
-        upd.update(
+        text = (
             "PREFIX ex: <http://e/> DELETE { GRAPH ex:g { ?s ex:p ?o } } "
             "WHERE { GRAPH ex:g { ?s ex:p ?o } }"
         )
-        assert upd.last_commit_broadcast["deletes"] is True
+        assert self.joins(monkeypatch, store, upd, text, 1) == {True}
 
-    def test_minus_recurses_into_left(self, spark, store, upd):
-        # MINUS does not narrow: { ?s ?p ?o MINUS {...} } is store-sized
+    def test_minus_recurses_into_left(self, monkeypatch, spark, store, upd):
         self.seed(upd)
-        upd.update(
+        text = (
             "PREFIX ex: <http://e/> DELETE { ?s ?p ?o } "
-            'WHERE { ?s ?p ?o MINUS { ?s ex:q ?o } }'
+            "WHERE { ?s ?p ?o MINUS { ?s ex:q ?o } }"
         )
-        assert upd.last_commit_broadcast["deletes"] is False
+        assert self.joins(monkeypatch, store, upd, text, 1) == {False}
 
-    def test_copy_marks_adds_and_deletes_unbounded(self, spark, store, upd):
+    def test_copy_marks_adds_and_deletes_unbounded(self, monkeypatch, spark, store, upd):
+        # the destination is empty, so only the dedup joins of the two
+        # copied quads run
         self.seed(upd)
-        upd.update("PREFIX ex: <http://e/> COPY DEFAULT TO ex:dst")
-        assert upd.last_commit_broadcast == {"adds": False, "deletes": False}
+        text = "PREFIX ex: <http://e/> COPY DEFAULT TO ex:dst"
+        assert self.joins(monkeypatch, store, upd, text, 1) == {False}
         got = all_quads(spark, store)
         assert ("http://e/dst", "http://e/s1", "http://e/p", "a") in got
 
-    def test_mixed_ops_any_unbounded_wins(self, spark, store, upd):
+    def test_mixed_ops_any_unbounded_wins(self, monkeypatch, spark, store, upd):
         self.seed(upd)
-        upd.update(
-            'PREFIX ex: <http://e/> INSERT DATA { ex:x ex:p "y" } ; CLEAR DEFAULT'
-        )
-        assert upd.last_commit_broadcast["deletes"] is False
+        text = 'PREFIX ex: <http://e/> INSERT DATA { ex:x ex:p "y" } ; CLEAR DEFAULT'
+        assert self.joins(monkeypatch, store, upd, text, 1) == {False}
 
     # ---- the hint actually reaches (or stays out of) the join plan ------
     def test_anti_join_without_flag_has_no_broadcast_hint(self, spark, store, upd):

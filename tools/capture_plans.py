@@ -4,7 +4,11 @@
 Optimization-round evidence tool: writes one file per query to
 plans/<tag>/<query>_<suffix>.txt so plan claims (Exchange counts, join
 strategies, PushedFilters, BatchEvalPython presence) are checkable
-without running Spark.
+without running Spark.  A query that builds stable_checkpoint'd
+sub-relations also gets plans/<tag>/<query>_subtrees_<suffix>.txt: the
+PRE-truncation plan of each subtree, captured in the same build through
+``checkpointing.PLAN_OBSERVER`` (the final plan shows a checkpoint only
+as an opaque ``Scan ExistingRDD`` leaf, e.g. d06/s06's edge-list sort).
 
 Usage: python tools/capture_plans.py <tag> <suffix> [query ...]
   tag     plans/<tag>/ output directory (e.g. r15)
@@ -29,6 +33,7 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from jena_fuseki_kafka_spark import checkpointing  # noqa: E402
 from jena_fuseki_kafka_spark.queries import QUERIES  # noqa: E402
 from jena_fuseki_kafka_spark.session import build_session  # noqa: E402
 
@@ -54,7 +59,10 @@ def main() -> int:
     spark.sparkContext.setLogLevel("ERROR")
     mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
     failed = []
+    subtrees: list[str] = []
+    checkpointing.PLAN_OBSERVER = subtrees.append
     for name in names:
+        subtrees.clear()
         try:
             df = QUERIES[name](spark, sf_dir)
             text = df._jdf.queryExecution().explainString(mode)
@@ -66,6 +74,14 @@ def main() -> int:
         with open(path, "w") as f:
             f.write(text)
         print(f"{name}: {path}")
+        if subtrees:
+            path = os.path.join(out_dir, f"{name}_subtrees_{suffix}.txt")
+            with open(path, "w") as f:
+                f.write("\n\n".join(
+                    f"-- stable_checkpoint subtree plan {i} --\n{plan}"
+                    for i, plan in enumerate(subtrees, 1)
+                ))
+            print(f"{name}: {path} ({len(subtrees)} checkpointed subtrees)")
     spark.stop()
     return 1 if failed else 0
 
