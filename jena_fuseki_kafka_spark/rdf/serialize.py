@@ -8,8 +8,10 @@ round-trips through this package's own parser for the same syntax.
 
 Serializers are CHUNK ITERATORS (``iter_*``): they consume an iterator
 of rows and yield text chunks, so the HTTP layer can stream a
-store-sized graph export with ``df.toLocalIterator()`` and chunked
-transfer encoding instead of ``collect()``-ing it onto the driver.
+store-sized result with chunked transfer encoding instead of
+``collect()``-ing it onto the driver.  The HTTP layer feeds them rows it
+reads back from the result's parquet files (``server._ResultBody``):
+quad rows are read as ``r.subject``, SELECT rows as ``row[var]["kind"]``.
 Subject/graph grouping is over *consecutive* rows — callers sort the
 DataFrame by (graph, subject) for compact output; unsorted input still
 serializes valid (just less compact) RDF.  The ``quads_to_*`` string
@@ -345,26 +347,13 @@ def _binding_json(term) -> dict:
     return b
 
 
-def _select_rows(df, bounded: bool = False):
-    """Row iterator for a SELECT result: ``toLocalIterator`` fetches one
-    partition at a time, so driver memory is bounded by a partition, not
-    the result.  ``bounded=True`` (the caller proved the result row count
-    is small from the QUERY SHAPE — an ungrouped aggregate projection or
-    a small LIMIT, see server._bounded_result) switches to ``collect()``:
-    one job instead of toLocalIterator's socket-server + per-partition
-    job machinery, measured ~0.2s faster per request on count-shaped
-    queries, with driver memory still bounded — by the query, not by
-    trust."""
-    return iter(df.collect()) if bounded else df.toLocalIterator()
-
-
-def iter_select_json(df, bounded: bool = False):
-    """SELECT result DataFrame (one term-struct column per var) ->
-    SPARQL 1.1 Query Results JSON, one binding-object chunk per row."""
-    vars_ = list(df.columns)
+def iter_select_json(vars_, rows):
+    """SELECT result (the variable names, and rows holding one term
+    struct per var) -> SPARQL 1.1 Query Results JSON, one binding-object
+    chunk per row."""
     yield '{"head": {"vars": ' + _json.dumps(vars_) + '}, "results": {"bindings": ['
     first = True
-    for row in _select_rows(df, bounded):
+    for row in rows:
         b = {}
         for v in vars_:
             term = row[v]
@@ -386,10 +375,9 @@ def _xml_escape(s: str) -> str:
     )
 
 
-def iter_select_xml(df, bounded: bool = False):
+def iter_select_xml(vars_, rows):
     """SELECT result -> SPARQL Query Results XML (W3C REC, Fuseki's
     application/sparql-results+xml), one <result> chunk per row."""
-    vars_ = list(df.columns)
     yield "\n".join(
         [
             '<?xml version="1.0"?>',
@@ -401,7 +389,7 @@ def iter_select_xml(df, bounded: bool = False):
             "",
         ]
     )
-    for row in _select_rows(df, bounded):
+    for row in rows:
         out = ["    <result>"]
         for v in vars_:
             term = row[v]
@@ -442,12 +430,11 @@ def _csv_field(s: str) -> str:
     return s
 
 
-def iter_select_csv(df, bounded: bool = False):
+def iter_select_csv(vars_, rows):
     """SPARQL 1.1 CSV results: header without '?', plain lexical forms
     (IRIs bare, bnodes _:label), RFC4180 quoting, CRLF rows."""
-    vars_ = list(df.columns)
     yield ",".join(_csv_field(v) for v in vars_) + "\r\n"
-    for row in _select_rows(df, bounded):
+    for row in rows:
         fields = []
         for v in vars_:
             term = row[v]
@@ -461,12 +448,11 @@ def iter_select_csv(df, bounded: bool = False):
         yield ",".join(fields) + "\r\n"
 
 
-def iter_select_tsv(df, bounded: bool = False):
+def iter_select_tsv(vars_, rows):
     """SPARQL 1.1 TSV results: header keeps '?', terms in SPARQL syntax
     (IRIs <>, literals quoted with lang/datatype tags)."""
-    vars_ = list(df.columns)
     yield "\t".join(f"?{v}" for v in vars_) + "\n"
-    for row in _select_rows(df, bounded):
+    for row in rows:
         fields = []
         for v in vars_:
             term = row[v]
@@ -489,7 +475,7 @@ def ask_to_tsv(value: bool) -> str:
 
 
 RESULTS_STREAMERS = {
-    # content-type -> (iter_select_fn(df) -> chunks, ask_fn(bool) -> str)
+    # content-type -> (iter_select_fn(vars, rows) -> chunks, ask_fn(bool) -> str)
     "application/sparql-results+json": (
         iter_select_json,
         lambda b: _json.dumps(ask_to_json(b)),

@@ -21,17 +21,24 @@ operations over the engine:
 
 Single-process by design: this is the driver-side control surface (like
 Fuseki's HTTP layer in front of the store), not a data-plane service.
-Reads execute as Spark jobs on the cluster.  Writes hand the parsed rows
-to ``QuadStore.commit``, which applies request-sized writes to a small
-store on the driver without a Spark job and everything else as Spark jobs.
+A read runs as one Spark job on the cluster that writes its result under
+the store's ``_results`` directory before the status line is sent; the
+body is then streamed from those files and they are removed.  Writes
+hand the parsed rows to ``QuadStore.commit``, which applies
+request-sized writes to a small store on the driver without a Spark job
+and everything else as Spark jobs.
 """
 
 from __future__ import annotations
 
 import json
 import logging
+import os
+import shutil
 import threading
 import uuid
+import weakref
+from functools import partial
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from urllib.parse import parse_qs, urlparse
 
@@ -46,8 +53,7 @@ from .rdf.serialize import (
     negotiate_results_streamer,
 )
 from .sparql import SparqlEngine
-from .sparql.ast import Call, ConstructQuery, DescribeQuery, SelectQuery
-from .sparql.translate import AGG_NAMES
+from .sparql.ast import ConstructQuery, DescribeQuery
 from .sparql.update import UpdateEngine
 from .store import QuadStore
 
@@ -55,30 +61,81 @@ _JSON = "application/sparql-results+json"
 
 _log = logging.getLogger(__name__)
 
-# SELECTs whose row count is provably small FROM THE QUERY SHAPE are
-# collect()-ed instead of streamed through toLocalIterator: one job
-# instead of the iterator's socket-server + per-partition job machinery
-# (measured ~0.2s/request on count-shaped queries).  "Provably small" =
-# an explicit LIMIT at or under this bound, or an ungrouped all-aggregate
-# projection (exactly one row).  Everything else keeps the streaming
-# path — driver memory stays bounded by construction, never by trust.
-BOUNDED_COLLECT_ROWS = 10_000
+# rows per Arrow batch read back from a result's parquet files: the
+# driver holds one batch of the result at a time
+RESULT_BATCH_ROWS = 8192
 
 
-def _bounded_result(ast) -> bool:
-    if not isinstance(ast, SelectQuery):
-        return False
-    if ast.limit is not None and ast.limit <= BOUNDED_COLLECT_ROWS:
-        return True
-    if ast.projection and not ast.group_by:
-        # every projected expression an aggregate -> global aggregate,
-        # exactly one row (plain vars / computed exprs fail the test)
-        return all(
-            isinstance(e, Call) and e.name in AGG_NAMES
-            for _, e in ast.projection
-        )
-    return False
+class _ResultRow(dict):
+    """One result row: ``row[name]`` (SELECT serializers) and
+    ``row.name`` (quad serializers) both read a column."""
 
+    __slots__ = ()
+
+    def __getattr__(self, name):
+        try:
+            return self[name]
+        except KeyError:
+            raise AttributeError(name) from None
+
+
+def _part_order(name: str):
+    # part-<partition>-<uuid>-c<file>.<codec>.parquet
+    return int(name.split("-", 2)[1]), name
+
+
+def _read_rows(directory: str, columns: list[str]):
+    """Rows of the parquet part files under ``directory``, partition by
+    partition, so a sorted DataFrame reads back in its order."""
+    import pyarrow.parquet as pq
+
+    parts = sorted(
+        (f for f in os.listdir(directory) if f.startswith("part-") and f.endswith(".parquet")),
+        key=_part_order,
+    )
+    for f in parts:
+        with pq.ParquetFile(os.path.join(directory, f)) as pf:
+            for batch in pf.iter_batches(batch_size=RESULT_BATCH_ROWS):
+                for values in zip(*(c.to_pylist() for c in batch.columns)):
+                    yield _ResultRow(zip(columns, values))
+
+
+class _ResultBody:
+    """The chunk iterator of one HTTP read.  Constructing it runs the
+    read's one Spark job: ``df`` is written once as parquet under
+    ``<store.path>/_results/<uuid>``, every partition in parallel, before
+    the caller sends a status line.  Column names are positional
+    (``_0.._n``) on disk, since Spark's case-insensitive writer refuses
+    SPARQL's distinct ``?s`` and ``?S``.  Iterating runs ``serialize``
+    over the rows read back from those files, so the body depends on
+    neither the store's files nor Spark once headers are out.  The
+    directory is removed when the body ends, fails or is closed, and
+    failing all three when the iterator is collected."""
+
+    def __init__(self, store: QuadStore, df, serialize):
+        directory = os.path.join(store.path, "_results", uuid.uuid4().hex)
+        columns = df.columns
+        self._remove = weakref.finalize(self, shutil.rmtree, directory, True)
+        try:
+            df.toDF(*(f"_{i}" for i in range(len(columns)))).write.parquet(directory)
+        except BaseException:
+            self._remove()
+            raise
+        self._chunks = serialize(_read_rows(directory, columns))
+
+    def __iter__(self):
+        return self
+
+    def __next__(self) -> str:
+        try:
+            return next(self._chunks)
+        except BaseException:
+            self.close()
+            raise
+
+    def close(self) -> None:
+        self._chunks.close()
+        self._remove()
 
 
 class NotAcceptable(Exception):
@@ -152,10 +209,13 @@ class SparqlHttpServer:
         accept: str | None = None,
         dataset: tuple | None = None,
     ):
-        """Returns (content_type, chunk_iterator).  Results stream off the
-        executors via ``toLocalIterator`` — driver memory is bounded by one
-        partition, and the HTTP layer writes chunked, so a store-sized
-        CONSTRUCT or SELECT never materializes on the driver.
+        """Returns (content_type, chunk_iterator).  The result is computed
+        here, before the caller sends a status: one Spark job writes it
+        under the store's ``_results`` directory (``_ResultBody``), so an
+        execution failure raises from this call, and the iterator then
+        streams it off disk one Arrow batch at a time.  The HTTP layer
+        writes chunked, so a store-sized CONSTRUCT or SELECT never
+        materializes on the driver.
 
         ``dataset`` carries the SPARQL 1.1 Protocol ``default-graph-uri`` /
         ``named-graph-uri`` parameters, which override FROM clauses."""
@@ -167,14 +227,14 @@ class SparqlHttpServer:
         if isinstance(ast, (ConstructQuery, DescribeQuery)):
             stream, content_type, _ = negotiate_graph_streamer(accept)
             if stream is not iter_nquads:
-                # subject-grouped syntaxes: distributed sort, then stream
-                # consecutive runs (compact blocks, O(partition) memory)
+                # subject-grouped syntaxes: distributed sort, written and
+                # read back in partition order, then consecutive runs
                 result = result.orderBy("graph", "subject")
-            return content_type, stream(result.toLocalIterator())
+            return content_type, _ResultBody(store, result, stream)
         (select_stream, ask_fn), content_type = negotiate_results_streamer(accept)
         if isinstance(result, bool):
             return content_type, iter((ask_fn(result),))
-        return content_type, select_stream(result, bounded=_bounded_result(ast))
+        return content_type, _ResultBody(store, result, partial(select_stream, result.columns))
 
     def run_update(
         self, store: QuadStore, text: str, dataset: tuple | None = None
@@ -184,7 +244,8 @@ class SparqlHttpServer:
         )
 
     def gsp_read(self, store: QuadStore, graph: str | None, accept: str | None = None):
-        """Returns (content_type, chunk_iterator).  A whole-dataset read in
+        """Returns (content_type, chunk_iterator), computed before the
+        caller sends a status, as in ``run_query``.  A whole-dataset read in
         a triple-only syntax (Turtle, RDF/XML) would silently flatten named
         graphs into one graph — dataset negotiation skips triple-only
         preferences (a wildcard picks TriG, like Fuseki) and refuses with
@@ -210,7 +271,7 @@ class SparqlHttpServer:
             df = df.filter(F.col("graph") == graph)
         if stream is not iter_nquads:
             df = df.orderBy("graph", "subject")
-        return content_type, stream(df.toLocalIterator())
+        return content_type, _ResultBody(store, df, stream)
 
     def gsp_write(self, store: QuadStore, body: bytes, content_type: str | None, graph: str | None, replace: bool):
         # fresh bnode scope per request: two uploads both saying _:b1
@@ -266,32 +327,39 @@ def _make_handler(server: SparqlHttpServer):
         def _send_stream(self, code: int, content_type: str, chunks):
             """Stream an iterator of text chunks as a chunked response.
             Chunks coalesce to ~64 KiB wire writes; at no point does the
-            full payload exist in driver memory."""
-            self.send_response(code)
-            self.send_header("Content-Type", content_type)
-            self.send_header("Transfer-Encoding", "chunked")
-            self.end_headers()
-            self._started = True
+            full payload exist in driver memory.  The iterator is closed
+            however the body ends (complete, failed, or the client gone),
+            which releases what it holds (a read's result files)."""
+            try:
+                self.send_response(code)
+                self.send_header("Content-Type", content_type)
+                self.send_header("Transfer-Encoding", "chunked")
+                self.end_headers()
+                self._started = True
 
-            def emit(data: bytes):
-                self.wfile.write(f"{len(data):X}\r\n".encode("ascii"))
-                self.wfile.write(data)
-                self.wfile.write(b"\r\n")
+                def emit(data: bytes):
+                    self.wfile.write(f"{len(data):X}\r\n".encode("ascii"))
+                    self.wfile.write(data)
+                    self.wfile.write(b"\r\n")
 
-            buf: list[bytes] = []
-            size = 0
-            for chunk in chunks:
-                data = chunk.encode("utf-8")
-                if not data:
-                    continue
-                buf.append(data)
-                size += len(data)
-                if size >= 65536:
+                buf: list[bytes] = []
+                size = 0
+                for chunk in chunks:
+                    data = chunk.encode("utf-8")
+                    if not data:
+                        continue
+                    buf.append(data)
+                    size += len(data)
+                    if size >= 65536:
+                        emit(b"".join(buf))
+                        buf, size = [], 0
+                if buf:
                     emit(b"".join(buf))
-                    buf, size = [], 0
-            if buf:
-                emit(b"".join(buf))
-            self.wfile.write(b"0\r\n\r\n")
+                self.wfile.write(b"0\r\n\r\n")
+            finally:
+                close = getattr(chunks, "close", None)
+                if close is not None:
+                    close()
 
         def _error(self, code: int, msg: str):
             self._send(code, "text/plain", msg + "\n")

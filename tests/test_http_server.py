@@ -5,6 +5,7 @@ with the acceptance count query its e2e tests poll
 """
 
 import json
+import os
 import urllib.request
 from urllib.parse import quote
 
@@ -36,6 +37,37 @@ def server(spark, tmp_path_factory):
     port = srv.start()
     yield f"http://127.0.0.1:{port}/ds"
     srv.stop()
+
+
+def seed_rows(n, graph="", value=lambda i: f"v{i}"):
+    """n quads <EX>s{i} <EX>p "value(i)" in ``graph``: enough subjects to
+    fill every bucket of a 16-bucket store."""
+    return [(graph, f"{EX}s{i}", f"{EX}p", "literal", value(i), None, None) for i in range(n)]
+
+
+@pytest.fixture()
+def own_server(spark, tmp_path):
+    """A server over a fresh store of 200 quads, for tests that break the
+    store or inspect its ``_results`` directory: (url, store)."""
+    store = QuadStore(str(tmp_path / "quads"))
+    store.commit(spark, adds=seed_rows(200), txn_id="seed")
+    srv = SparqlHttpServer(spark, store, dataset="ds")
+    port = srv.start()
+    yield f"http://127.0.0.1:{port}/ds", store
+    srv.stop()
+
+
+def corrupt_one_leaf(store):
+    leaf = os.path.join(store.files_dir, store._read_manifest()["files"][-1])
+    part = next(f for f in os.listdir(leaf) if f.endswith(".parquet"))
+    with open(os.path.join(leaf, part), "wb") as f:
+        f.write(b"not a parquet file" * 64)
+
+
+def spilled(store) -> list:
+    """Result directories left under the store's ``_results``."""
+    d = os.path.join(store.path, "_results")
+    return os.listdir(d) if os.path.isdir(d) else []
 
 
 class TestGraphStoreProtocol:
@@ -353,14 +385,23 @@ class TestWriteFailures:
 
 class TestQueryFailures:
     """A query that fails before its response starts answers 500 with the
-    message.  One that fails after the chunked headers went out cannot
-    change its status: the body is left without its terminating chunk and
-    the connection closes, with no second status line written into it."""
+    message; every Spark job of a read runs before then.  A failure after
+    the chunked headers went out (in a serializer) cannot change its
+    status: the body is left without its terminating chunk and the
+    connection closes, with no second status line written into it."""
 
     def test_query_failure_is_500(self, server):
         q = "SELECT ?s WHERE { SERVICE <http://127.0.0.1:9/nope> { ?s ?p ?o } }"
         code, _, body = req(f"{server}/query", "POST", q.encode(), "application/sparql-query")
         assert code == 500 and "SERVICE" in body
+
+    def test_execution_failure_is_500(self, own_server):
+        url, store = own_server
+        corrupt_one_leaf(store)
+        q = f"SELECT ?s ?o WHERE {{ ?s <{EX}p> ?o }}"
+        code, _, body = req(f"{url}/query", "POST", q.encode(), "application/sparql-query")
+        assert code == 500 and "parquet" in body.lower(), (code, body[:500])
+        assert spilled(store) == []  # the failed write left no result files
 
     def test_failure_after_headers_leaves_body_unterminated(self, server, monkeypatch):
         import socket
@@ -527,9 +568,10 @@ class TestMultiDataset:
 
 class TestStreamingServe:
     """Store-sized exports must stream: the serve path never collect()s a
-    result onto the driver (it iterates partitions via toLocalIterator and
-    writes chunked), and triple-only formats refuse whole-dataset reads
-    rather than silently flattening named graphs."""
+    result onto the driver (one Spark job writes it to parquet, the body
+    is read back one Arrow batch at a time and written chunked), and
+    triple-only formats refuse whole-dataset reads rather than silently
+    flattening named graphs."""
 
     G = quote(EX + "streamgraph", safe="")
 
@@ -616,32 +658,6 @@ class TestStreamingServe:
         assert code == 200 and ct.startswith("application/sparql-results+xml")
 
 
-# ---------------------------------------------------- bounded-collect path
-def test_bounded_result_classifier():
-    """The collect-vs-stream decision is made from the QUERY SHAPE alone:
-    only provably-small results (ungrouped all-aggregate projection, or an
-    explicit LIMIT at or under the bound) may take the collect path."""
-    from jena_fuseki_kafka_spark.server import BOUNDED_COLLECT_ROWS, _bounded_result
-    from jena_fuseki_kafka_spark.sparql.parser import parse_sparql
-
-    bounded = [
-        "SELECT (COUNT(*) AS ?n) WHERE { ?s ?p ?o }",
-        "SELECT (COUNT(*) AS ?n) (MAX(?o) AS ?m) WHERE { ?s ?p ?o }",
-        "SELECT ?s WHERE { ?s ?p ?o } LIMIT 10",
-        f"SELECT ?s WHERE {{ ?s ?p ?o }} LIMIT {BOUNDED_COLLECT_ROWS}",
-    ]
-    unbounded = [
-        "SELECT ?s WHERE { ?s ?p ?o }",
-        "SELECT ?s (COUNT(*) AS ?n) WHERE { ?s ?p ?o } GROUP BY ?s",
-        f"SELECT ?s WHERE {{ ?s ?p ?o }} LIMIT {BOUNDED_COLLECT_ROWS + 1}",
-        "ASK { ?s ?p ?o }",
-    ]
-    for q in bounded:
-        assert _bounded_result(parse_sparql(q)), q
-    for q in unbounded:
-        assert not _bounded_result(parse_sparql(q)), q
-
-
 def test_bounded_and_streamed_serializations_identical(server):
     """The bounded collect path must serialize byte-identically to the
     toLocalIterator streaming path for the same result."""
@@ -661,3 +677,129 @@ def test_bounded_and_streamed_serializations_identical(server):
     collected = json.loads(body)  # LIMIT 10: bounded collect path
     assert streamed["results"]["bindings"] == collected["results"]["bindings"]
     assert len(streamed["results"]["bindings"]) == 2
+
+
+class TestResultSpill:
+    """Every HTTP read writes its result once under ``<store>/_results``
+    with one Spark job, before the status line, and streams the body from
+    those files: the directory is gone however the body ends, the body no
+    longer depends on the store's files or the client's pace, and the
+    rows come back with their variable names and in their order."""
+
+    Q = f"SELECT ?s ?o WHERE {{ ?s <{EX}p> ?o }}"
+
+    def test_removed_after_complete_body(self, own_server):
+        url, store = own_server
+        code, _, body = req(f"{url}/query", "POST", self.Q.encode(), "application/sparql-query")
+        assert code == 200 and len(json.loads(body)["results"]["bindings"]) == 200
+        code, _, body = req(f"{url}/data", accept="application/trig")
+        assert code == 200 and body.count(f"<{EX}p>") == 200
+        assert spilled(store) == []
+
+    def test_removed_after_client_disconnect(self, spark, own_server, caplog):
+        import socket
+        import time
+        from urllib.parse import urlparse
+
+        url, store = own_server
+        # ~8 MB of JSON: far more than the socket buffers take, so the
+        # server is still writing when the client goes away
+        store.commit(spark, adds=seed_rows(2000, value=lambda i: f"{i:04d}" * 1000),
+                     txn_id="big")
+        u = urlparse(url)
+        with socket.socket() as sock:
+            sock.setsockopt(socket.SOL_SOCKET, socket.SO_RCVBUF, 4096)
+            sock.settimeout(60)
+            sock.connect((u.hostname, u.port))
+            sock.sendall(f"GET /ds/query?query={quote(self.Q, safe='')} HTTP/1.1\r\n"
+                         "Host: t\r\n\r\n".encode())
+            assert sock.recv(4096).startswith(b"HTTP/1.1 200")
+        deadline = time.monotonic() + 60
+        while spilled(store) and time.monotonic() < deadline:
+            time.sleep(0.1)
+        assert spilled(store) == []
+        assert any("failed mid-response" in r.getMessage() for r in caplog.records)
+
+    def test_case_distinct_variables(self, own_server):
+        # ?S is unbound: the result has columns s and S, which the
+        # parquet writer would refuse under their own names
+        url, _ = own_server
+        q = f"SELECT ?s ?S WHERE {{ ?s <{EX}p> ?o }}"
+        code, _, body = req(f"{url}/query", "POST", q.encode(), "application/sparql-query")
+        assert code == 200, body[:500]
+        res = json.loads(body)
+        assert res["head"]["vars"] == ["s", "S"]
+        b = res["results"]["bindings"]
+        assert {x["s"]["value"] for x in b} == {f"{EX}s{i}" for i in range(200)}
+        assert not any("S" in x for x in b)
+
+    def test_order_by_spread_over_files_arrives_in_order(self, spark, own_server):
+        import glob
+
+        _, store = own_server
+        srv = SparqlHttpServer(spark, store)
+        q = f"SELECT ?s ?o WHERE {{ ?s <{EX}p> ?o }} ORDER BY DESC(?o)"
+        # keep the sort's range partitions apart: one file per partition
+        key = "spark.sql.adaptive.coalescePartitions.enabled"
+        prev = spark.conf.get(key)
+        spark.conf.set(key, "false")
+        try:
+            _, chunks = srv.run_query(store, q)
+        finally:
+            spark.conf.set(key, prev)
+        parts = glob.glob(os.path.join(store.path, "_results", "*", "part-*.parquet"))
+        assert len(parts) >= 2, parts
+        got = [b["o"]["value"] for b in json.loads("".join(chunks))["results"]["bindings"]]
+        assert got == sorted((f"v{i}" for i in range(200)), reverse=True)
+        assert spilled(store) == []
+
+    def test_read_outlives_store_commits(self, spark, tmp_path):
+        """A read's body is served from its own files: commits that retire
+        and then delete every leaf the query saw, while the client is
+        still reading, do not change or cut it."""
+        store = QuadStore(str(tmp_path / "quads"))
+        store.commit(spark, adds=seed_rows(200), txn_id="seed")
+        seen = list(store._read_manifest()["files"])
+        assert len(seen) == store.n_buckets
+        by_bucket = {}
+        for r in store.read(spark, with_bucket=True).collect():
+            by_bucket.setdefault(r.bucket, []).append(tuple(r[c] for c in r.__fields__[:-1]))
+        assert all(len(rows) > store.grace_versions for rows in by_bucket.values())
+
+        srv = SparqlHttpServer(spark, store)
+        _, chunks = srv.run_query(store, self.Q)
+        head = next(chunks) + next(chunks)  # the header and the first row
+        for k in range(store.grace_versions + 1):
+            store.commit(spark, deletes=[rows[k] for rows in by_bucket.values()],
+                         txn_id=f"del-{k}")
+        assert not any(os.path.exists(os.path.join(store.files_dir, f)) for f in seen)
+        got = json.loads(head + "".join(chunks))["results"]["bindings"]
+        assert sorted(b["o"]["value"] for b in got) == sorted(f"v{i}" for i in range(200))
+
+
+class TestReadJobCounts:
+    """An HTTP read costs one Spark job for its result, however many
+    partitions that result has (the store's SPARQL view has one per
+    bucket)."""
+
+    G = f"{EX}jobs"
+
+    @pytest.fixture()
+    def loaded(self, spark, tmp_path):
+        store = QuadStore(str(tmp_path / "quads"))
+        store.commit(spark, adds=seed_rows(200) + seed_rows(20, graph=self.G), txn_id="seed")
+        assert len(store._read_manifest()["files"]) == store.n_buckets
+        return SparqlHttpServer(spark, store), store
+
+    def test_unconstrained_select_is_one_job(self, loaded, count_jobs):
+        srv, store = loaded
+        q = f"SELECT ?s ?o WHERE {{ ?s <{EX}p> ?o }}"
+        jobs, body = count_jobs(lambda: "".join(srv.run_query(store, q)[1]))
+        assert len(json.loads(body)["results"]["bindings"]) == 200
+        assert jobs == 1
+
+    def test_gsp_get_of_one_graph_is_one_job(self, loaded, count_jobs):
+        srv, store = loaded
+        jobs, body = count_jobs(lambda: "".join(srv.gsp_read(store, self.G)[1]))
+        assert body.count("\n") == 20
+        assert jobs == 1
