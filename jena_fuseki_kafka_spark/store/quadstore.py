@@ -78,6 +78,12 @@ def _write_lock_for(path: str) -> threading.RLock:
         return _STORE_LOCKS.setdefault(key, threading.RLock())
 
 
+# Row counts of data leaves, keyed by leaf directory path (process-wide).
+# Leaves are immutable and uuid-named, so a count never goes stale: each
+# footer is read once, and leaves the driver tier writes are never read.
+_LEAF_ROWS: dict[str, int] = {}
+
+
 def _anti_join_quads(left: DataFrame, right: DataFrame, broadcast_right: bool = False) -> DataFrame:
     """left ANTI JOIN right on all quad columns, null-safe.
 
@@ -173,7 +179,8 @@ class QuadStore:
     # batches (the soak writes ~2.5M quads per batch) keep the n_buckets
     # repartition so write parallelism and file sizing hold at scale.  It
     # also bounds the driver tier: the bucket leaves a driver-tier commit
-    # reads must hold at most this many rows.
+    # reads must hold at most this many rows; and a snapshot of at most
+    # this many rows is read as one partition (``read``).
     SMALL_COMMIT_ROWS = 200_000
 
     # row commits with at most this many add rows and this many exact
@@ -210,15 +217,21 @@ class QuadStore:
         return entries
 
     def _entry_row_count(self, entry: str) -> int:
-        """Row count of a manifest leaf from parquet footer metadata — no
-        Spark job, just footer reads (used to size delete rewrites)."""
+        """Row count of a manifest leaf from its parquet footers — no Spark
+        job, and footer I/O only the first time a leaf is seen (memoized
+        in ``_LEAF_ROWS``).  Sizes delete rewrites, the driver tier and
+        the read layout."""
         import pyarrow.parquet as pq
 
         leaf = os.path.join(self.files_dir, entry)
-        total = 0
-        for f in os.listdir(leaf):
-            if f.endswith(".parquet"):
-                total += pq.read_metadata(os.path.join(leaf, f)).num_rows
+        total = _LEAF_ROWS.get(leaf)
+        if total is None:
+            total = sum(
+                pq.read_metadata(os.path.join(leaf, f)).num_rows
+                for f in os.listdir(leaf)
+                if f.endswith(".parquet")
+            )
+            _LEAF_ROWS[leaf] = total
         return total
 
     # -- manifest ---------------------------------------------------------
@@ -255,24 +268,35 @@ class QuadStore:
         ``bucket = <const>`` then constant-folds every other branch to an
         empty relation and Catalyst prunes their files from the plan —
         point lookups (constant-subject SPARQL patterns, DESCRIBE) read
-        1/n_buckets of the store."""
+        1/n_buckets of the store.
+
+        A snapshot of at most ``SMALL_COMMIT_ROWS`` rows (counted from the
+        leaves' footers) is read as ONE partition (``coalesce(1)``, which
+        filters push through, so bucket pruning still applies).  A single
+        partition satisfies every clustered and ordered distribution, so
+        aggregates and global sorts over a small store plan no exchange
+        and a bounded ``limit`` finishes in one pass: one Spark job where
+        the file-split layout needs a shuffle stage or a second scan."""
         manifest = self._read_manifest()
         if not manifest["files"]:
             df = spark.createDataFrame([], QUAD_SCHEMA)
             return df.withColumn("bucket", F.lit(None).cast("int")) if with_bucket else df
         if not with_bucket:
             paths = [os.path.join(self.files_dir, f) for f in manifest["files"]]
-            return spark.read.schema(QUAD_SCHEMA).parquet(*paths)
-        by_bucket: dict[int, list[str]] = {}
-        for f in manifest["files"]:
-            by_bucket.setdefault(self._bucket_of(f), []).append(f)
-        parts = [
-            spark.read.schema(QUAD_SCHEMA)
-            .parquet(*[os.path.join(self.files_dir, f) for f in fs])
-            .withColumn("bucket", F.lit(b))
-            for b, fs in sorted(by_bucket.items())
-        ]
-        return reduce(DataFrame.unionByName, parts)
+            df = spark.read.schema(QUAD_SCHEMA).parquet(*paths)
+        else:
+            by_bucket: dict[int, list[str]] = {}
+            for f in manifest["files"]:
+                by_bucket.setdefault(self._bucket_of(f), []).append(f)
+            parts = [
+                spark.read.schema(QUAD_SCHEMA)
+                .parquet(*[os.path.join(self.files_dir, f) for f in fs])
+                .withColumn("bucket", F.lit(b))
+                for b, fs in sorted(by_bucket.items())
+            ]
+            df = reduce(DataFrame.unionByName, parts)
+        rows = sum(self._entry_row_count(f) for f in manifest["files"])
+        return df.coalesce(1) if rows <= self.SMALL_COMMIT_ROWS else df
 
     def count(self, spark: SparkSession) -> int:
         return self.read(spark).count()
@@ -563,6 +587,7 @@ class QuadStore:
                 _arrow_table(rows), os.path.join(leaf, "part-00000.parquet"),
                 store_schema=False,
             )
+            _LEAF_ROWS[leaf] = len(rows)
             entries.append(f"{name}/bucket={b}")
         return entries
 
@@ -629,4 +654,6 @@ class QuadStore:
     def _delete_leaf(self, f: str) -> None:
         import shutil
 
-        shutil.rmtree(os.path.join(self.files_dir, f), ignore_errors=True)
+        leaf = os.path.join(self.files_dir, f)
+        _LEAF_ROWS.pop(leaf, None)
+        shutil.rmtree(leaf, ignore_errors=True)

@@ -737,6 +737,9 @@ class TestResultSpill:
         import glob
 
         _, store = own_server
+        # the multi-partition read: a one-partition snapshot sorts
+        # without a range exchange and writes a single part file
+        store.SMALL_COMMIT_ROWS = 0
         srv = SparqlHttpServer(spark, store)
         q = f"SELECT ?s ?o WHERE {{ ?s <{EX}p> ?o }} ORDER BY DESC(?o)"
         # keep the sort's range partitions apart: one file per partition
@@ -780,7 +783,9 @@ class TestResultSpill:
 class TestReadJobCounts:
     """An HTTP read costs one Spark job for its result, however many
     partitions that result has (the store's SPARQL view has one per
-    bucket)."""
+    bucket).  On a small store the snapshot is read as one partition, so
+    an aggregate needs no shuffle stage and a point DELETE/INSERT WHERE's
+    bounded binding probe no second scan: one job each too."""
 
     G = f"{EX}jobs"
 
@@ -803,3 +808,30 @@ class TestReadJobCounts:
         jobs, body = count_jobs(lambda: "".join(srv.gsp_read(store, self.G)[1]))
         assert body.count("\n") == 20
         assert jobs == 1
+
+    def test_count_by_graph_is_one_job(self, loaded, count_jobs):
+        srv, store = loaded
+        q = f"SELECT (COUNT(*) AS ?n) WHERE {{ GRAPH <{self.G}> {{ ?s ?p ?o }} }}"
+        jobs, body = count_jobs(lambda: "".join(srv.run_query(store, q)[1]))
+        assert json.loads(body)["results"]["bindings"][0]["n"]["value"] == "20"
+        assert jobs == 1
+
+    def test_group_by_aggregate_is_one_job(self, loaded, count_jobs):
+        srv, store = loaded
+        q = f"SELECT ?o (COUNT(?s) AS ?n) WHERE {{ ?s <{EX}p> ?o }} GROUP BY ?o"
+        jobs, body = count_jobs(lambda: "".join(srv.run_query(store, q)[1]))
+        b = json.loads(body)["results"]["bindings"]
+        assert len(b) == 200 and {x["n"]["value"] for x in b} == {"1"}
+        assert jobs == 1
+
+    def test_point_delete_insert_where_is_one_job(self, spark, loaded, count_jobs):
+        srv, store = loaded
+        s = f"{EX}s7"
+        jobs, _ = count_jobs(lambda: srv.run_update(
+            store,
+            f'DELETE {{ <{s}> <{EX}p> ?o }} INSERT {{ <{s}> <{EX}p> "m" }} '
+            f"WHERE {{ <{s}> <{EX}p> ?o }}",
+        ))
+        assert jobs == 1
+        got = {(r.graph, r.object_value) for r in store.read(spark).collect() if r.subject == s}
+        assert got == {("", "m"), (self.G, "v7")}

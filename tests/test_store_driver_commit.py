@@ -202,8 +202,8 @@ def test_cross_writer_interop(spark, tmp_path):
 
 def test_driver_path_actually_engages(spark, tmp_path, count_jobs):
     """On a small store the HTTP mutations commit without any Spark job,
-    and a point DELETE/INSERT WHERE costs at most the bounded collect of
-    its bindings.  Pinned by job count, so a regression cannot silently
+    and a point DELETE/INSERT WHERE costs one job: the bounded collect of
+    its bindings over the one-partition snapshot.  Pinned by job count, so a regression cannot silently
     re-route HTTP writes through Spark jobs."""
     store = QuadStore(str(tmp_path / "e"))
     pre = _quads("pre", 200) + _quads("pg", 20, graph=G)
@@ -237,7 +237,7 @@ def test_driver_path_actually_engages(spark, tmp_path, count_jobs):
         'DELETE { <http://e/pre2> <http://e/p> ?o } INSERT { <http://e/pre2> <http://e/p> "m" } '
         "WHERE { <http://e/pre2> <http://e/p> ?o }",
     ))
-    assert jobs <= 2, f"point DELETE/INSERT WHERE launched {jobs} Spark jobs"
+    assert jobs == 1, f"point DELETE/INSERT WHERE launched {jobs} Spark jobs"
     expect = set(_quads("pre", 5)) - {_quads("pre", 3)[2]}
     expect.add(("", "http://e/pre2", "http://e/p", "literal", "m", None, None))
     assert _snapshot(spark, store) == sorted(expect)
