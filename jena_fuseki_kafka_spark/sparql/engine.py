@@ -10,35 +10,33 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from ..model import QUAD_COLS
-from ..store import QuadStore
+from ..model import DEFAULT_GRAPH, QUAD_COLS
+from ..store import QuadStore, Snapshot
 from .ast import AskQuery, ConstructQuery, SelectQuery
 from .parser import parse_sparql
 from .translate import Translator
 
 
 class SparqlEngine:
-    def __init__(
-        self,
-        quads: DataFrame,
-        max_path_iterations: int = 256,
-        n_buckets: int | None = None,
-    ):
+    def __init__(self, quads: DataFrame | Snapshot, max_path_iterations: int = 256):
+        """``quads`` is any DataFrame in QUAD_SCHEMA, or a store
+        ``Snapshot``.  Over a snapshot a constant-subject pattern scans
+        only the leaves of its subject's bucket, and on a small snapshot
+        the query runs as one task (see ``Translator``)."""
+        self.snapshot = quads if isinstance(quads, Snapshot) else None
+        if self.snapshot is not None:
+            quads = self.snapshot.scan()
         missing = [c for c in QUAD_COLS if c not in quads.columns]
         if missing:
             raise ValueError(f"quads DataFrame missing columns: {missing}")
         self.quads = quads
         self.max_path_iterations = max_path_iterations
-        self.n_buckets = n_buckets
 
     @classmethod
     def from_store(cls, spark, store: QuadStore, **kw) -> "SparqlEngine":
-        """Engine over the store snapshot WITH the bucket column: constant-
-        subject patterns prune to the one bucket they hash to (point
-        lookups read 1/n_buckets of the store)."""
-        return cls(
-            store.read(spark, with_bucket=True), n_buckets=store.n_buckets, **kw
-        )
+        """Engine over the store's current snapshot: every pattern of a
+        query scans that one version's leaves."""
+        return cls(store.snapshot(spark), **kw)
 
     def query(self, text: str, dataset: tuple | None = None):
         """Run a SPARQL query.
@@ -62,39 +60,22 @@ class SparqlEngine:
         variables named like the quad columns."""
         ast = parse_sparql(text)
         ds = dataset if dataset is not None else getattr(ast, "dataset", None)
-        translator = Translator(
-            self._scope_dataset(ds), self.max_path_iterations, self.n_buckets
-        )
-        df = translator.translate(ast)
+        df = self._translator(ds).translate(ast)
         if isinstance(ast, AskQuery):
             return ast, df.count() > 0
         return ast, df
 
-    def _scope_dataset(self, ds: tuple | None) -> DataFrame:
-        """Build the query dataset per SPARQL 1.1 §13.2: default graph :=
-        merge of the FROM graphs (set-union; empty when none named),
-        named graphs := exactly the FROM NAMED set.  One narrow filter +
-        relabel per part — the graph filters push to the parquet scan, so
-        a FROM over one named graph reads only that graph at scale."""
-        if ds is None:
-            return self.quads
-        from ..model import DEFAULT_GRAPH
-
-        default_iris, named_iris = ds
-        parts = []
-        if default_iris:
-            merged = self.quads.filter(F.col("graph").isin(list(default_iris))).withColumn(
-                "graph", F.lit(DEFAULT_GRAPH)
-            )
-            if len(default_iris) > 1:  # single graph: already a set, skip the shuffle
-                merged = merged.dropDuplicates(QUAD_COLS)
-            parts.append(merged)
-        if named_iris:
-            parts.append(self.quads.filter(F.col("graph").isin(list(named_iris))))
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
+    def _translator(self, ds: tuple | None) -> Translator:
+        """A translator over the query dataset ``ds``; a subject-pruned
+        scan is scoped exactly like the full one."""
+        if self.snapshot is None:
+            return Translator(_scope_dataset(self.quads, ds), self.max_path_iterations)
+        return Translator(
+            _scope_dataset(self.quads, ds),
+            self.max_path_iterations,
+            subject_scan=lambda iri: _scope_dataset(self.snapshot.scan(iri), ds),
+            one_task=self.snapshot.small,
+        )
 
     def select_values(self, text: str, dataset: tuple | None = None) -> DataFrame:
         """SELECT with result columns flattened to their lexical values
@@ -103,7 +84,30 @@ class SparqlEngine:
         if not isinstance(ast, SelectQuery):
             raise ValueError("select_values requires a SELECT query")
         ds = dataset if dataset is not None else ast.dataset
-        df = Translator(
-            self._scope_dataset(ds), self.max_path_iterations, self.n_buckets
-        ).translate(ast)
+        df = self._translator(ds).translate(ast)
         return df.select(*[F.col(c)["value"].alias(c) for c in df.columns])
+
+
+def _scope_dataset(quads: DataFrame, ds: tuple | None) -> DataFrame:
+    """Build the query dataset per SPARQL 1.1 §13.2: default graph :=
+    merge of the FROM graphs (set-union; empty when none named), named
+    graphs := exactly the FROM NAMED set.  One narrow filter + relabel per
+    part — the graph filters push to the parquet scan, so a FROM over one
+    named graph reads only that graph at scale."""
+    if ds is None:
+        return quads
+    default_iris, named_iris = ds
+    parts = []
+    if default_iris:
+        merged = quads.filter(F.col("graph").isin(list(default_iris))).withColumn(
+            "graph", F.lit(DEFAULT_GRAPH)
+        )
+        if len(default_iris) > 1:  # single graph: already a set, skip the shuffle
+            merged = merged.dropDuplicates(QUAD_COLS)
+        parts.append(merged)
+    if named_iris:
+        parts.append(quads.filter(F.col("graph").isin(list(named_iris))))
+    out = parts[0]
+    for p in parts[1:]:
+        out = out.unionByName(p)
+    return out

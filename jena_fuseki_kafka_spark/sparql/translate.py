@@ -182,15 +182,17 @@ class Translator:
         self,
         quads: DataFrame,
         max_path_iterations: int = 256,
-        n_buckets: int | None = None,
+        subject_scan=None,
+        one_task: bool = False,
     ):
+        """``subject_scan(iri)``, when given, returns the quads a pattern
+        with that constant subject reads instead of ``quads`` (a store
+        snapshot's scan of the subject's bucket).  ``one_task`` says the
+        quads are one small partition: see ``_combine``."""
         self.quads = quads
         self.max_path_iterations = max_path_iterations
-        # when the quad table carries the store's subject-hash ``bucket``
-        # column, constant-subject patterns filter on it — Catalyst
-        # constant-folds the per-bucket union and scans 1/n_buckets of
-        # the store (see QuadStore.read(with_bucket=True))
-        self.n_buckets = n_buckets if (n_buckets and "bucket" in quads.columns) else None
+        self.subject_scan = subject_scan
+        self.one_task = one_task
         self._anon_var = 0
         # Per-TRANSLATION memo tables for property-path machinery (r16):
         # a query like r05 evaluates p+, p* and p? of the SAME base path
@@ -250,29 +252,31 @@ class Translator:
                 if v not in sol.columns:
                     continue
                 vals = sol.select(F.col(v)["value"].alias("node")).distinct()
-                nodes = vals if nodes is None else nodes.unionByName(vals).distinct()
+                nodes = vals if nodes is None else self._combine(nodes, vals).distinct()
         if nodes is None:
             return self.quads.limit(0)
         nodes = ckpt(nodes)
-        result = self.quads.join(
-            nodes, self.quads["subject"] == nodes["node"], "left_semi"
+        result = self._combine(
+            self.quads, nodes, "left_semi", self.quads["subject"] == nodes["node"]
         )
         seen = nodes  # described nodes are already expanded by `result`
         frontier_src = result
         for _ in range(self.max_path_iterations):
             fresh = ckpt(
-                frontier_src.filter(F.col("object_kind") == "bnode")
-                .select(F.col("object_value").alias("node"))
-                .distinct()
-                .join(seen, on="node", how="left_anti")
+                self._combine(
+                    frontier_src.filter(F.col("object_kind") == "bnode")
+                    .select(F.col("object_value").alias("node"))
+                    .distinct(),
+                    seen, "left_anti", ["node"],
+                )
             )
             if not fresh.take(1):
                 break
-            seen = ckpt(seen.unionByName(fresh))
-            add = self.quads.join(
-                fresh, self.quads["subject"] == fresh["node"], "left_semi"
+            seen = ckpt(self._combine(seen, fresh))
+            add = self._combine(
+                self.quads, fresh, "left_semi", self.quads["subject"] == fresh["node"]
             )
-            result = result.unionByName(add)
+            result = self._combine(result, add)
             frontier_src = add
         return result
 
@@ -306,9 +310,7 @@ class Translator:
         if isinstance(node, LeftJoin):
             return self._left_join(node, graph)
         if isinstance(node, Union):
-            left = self._pattern(node.left, graph)
-            right = self._pattern(node.right, graph)
-            return left.unionByName(right, allowMissingColumns=True)
+            return self._combine(self._pattern(node.left, graph), self._pattern(node.right, graph))
         if isinstance(node, Minus):
             return self._minus(node, graph)
         if isinstance(node, Filter):
@@ -335,6 +337,35 @@ class Translator:
             return self._service(node)
         raise TypeError(f"unsupported pattern node {type(node)}")
 
+    def _combine(
+        self, left: DataFrame, right: DataFrame, how: str = "union", on=None, keyed: bool = True
+    ) -> DataFrame:
+        """Every join and union of two frames the translator builds.
+
+        ``how`` is "union" (by name, missing columns unbound), "cross" or
+        a join type; ``on`` is the join's column names or condition, and
+        ``keyed`` whether that condition holds an equi-key.
+
+        With ``one_task`` (the quads are one small partition) both inputs
+        and the result are coalesced to one partition and a keyed join is
+        hinted ``merge``: a sort-merge join of two one-partition inputs
+        needs no exchange, where Spark's own choice for small inputs
+        broadcasts a side as a job of its own — so the whole query runs
+        as one task of one job.  ``merge`` rather than ``shuffle_hash``:
+        it spills, where a hash build side taken from a join's output has
+        no bound.  Joins without an equi-key keep Spark's choice."""
+        if self.one_task:
+            left, right = left.coalesce(1), right.coalesce(1)
+            if keyed and how not in ("union", "cross"):
+                right = right.hint("merge")
+        if how == "union":
+            out = left.unionByName(right, allowMissingColumns=True)
+        elif how == "cross":
+            out = left.crossJoin(right)
+        else:
+            out = left.join(right, on, how)
+        return out.coalesce(1) if self.one_task else out
+
     def _values_join(
         self, left: DataFrame, values: ValuesPattern, cb_left: set | None = None
     ) -> DataFrame:
@@ -347,11 +378,13 @@ class Translator:
         Columns bound on both sides (no UNDEF in the table, certainly
         bound in the pattern) join as plain equi-keys — broadcast hash
         join; only mixed columns fall back to an OR-condition over the
-        broadcast table, so the big side still never shuffles."""
+        broadcast table, so the big side still never shuffles.  A
+        one-task query joins the table like any other input."""
         vdf = self._values(values)
+        r = vdf if self.one_task else F.broadcast(vdf)
         common = [c for c in left.columns if c in vdf.columns]
         if not common:
-            return left.crossJoin(F.broadcast(vdf))
+            return self._combine(left, r, "cross")
         has_undef = {
             c: any(row[values.variables.index(c)] is None for row in values.rows)
             for c in common
@@ -361,33 +394,9 @@ class Translator:
         }
         eq_cols = [c for c in common if not has_undef[c] and not left_maybe_null[c]]
         mixed = [c for c in common if has_undef[c] or left_maybe_null[c]]
-        r = F.broadcast(vdf)
         if not mixed:
-            return left.join(r, on=eq_cols, how="inner")
-        renamed = r
-        for c in mixed:
-            renamed = renamed.withColumnRenamed(c, f"__val_{c}")
-        cond = None
-        for c in eq_cols:
-            e = left[c] == renamed[c]
-            cond = e if cond is None else cond & e
-        for c in mixed:
-            e = (
-                renamed[f"__val_{c}"].isNull()
-                | left[c].isNull()
-                | (left[c] == renamed[f"__val_{c}"])
-            )
-            cond = e if cond is None else cond & e
-        joined = left.join(renamed, cond, "inner")
-        out_cols = []
-        seen = set()
-        for c in left.columns:
-            out_cols.append(F.coalesce(left[c], renamed[f"__val_{c}"]).alias(c) if c in mixed else left[c])
-            seen.add(c)
-        for c in vdf.columns:
-            if c not in seen:  # VALUES-only vars carry through
-                out_cols.append(renamed[c])
-        return joined.select(*out_cols)
+            return self._combine(left, r, "inner", eq_cols)
+        return self._compat_join(left, r, common, mixed, "inner")
 
     @staticmethod
     def _mixed_cols(common: list, cb_left, cb_right) -> list:
@@ -406,53 +415,42 @@ class Translator:
     ) -> DataFrame:
         common = [c for c in left.columns if c in right.columns]
         if not common:
-            return left.crossJoin(right)
+            return self._combine(left, right, "cross")
         mixed = self._mixed_cols(common, cb_left, cb_right)
         if not mixed:
-            return left.join(right, on=common, how="inner")
+            return self._combine(left, right, "inner", common)
         return self._compat_join(left, right, common, mixed, "inner")
 
+    @staticmethod
+    def _compat_on(left: DataFrame, right: DataFrame, common: list, mixed: list):
+        """``(r, cond, merged)`` for joining ``left`` with ``right`` under
+        SPARQL compatible-mapping semantics: ``r`` is ``right`` with its
+        shared vars renamed ``__r_<var>``, ``cond`` the join condition
+        (None without shared vars) and ``merged`` the merged solution's
+        columns.  A shared var in ``mixed`` may be unbound (null) on
+        either side; unbound is compatible with any binding and the merged
+        solution takes the bound side's value (COALESCE).  Certainly-bound
+        shared vars stay plain equality conditions, which Catalyst extracts
+        as join keys — the null-or-equal clauses ride along as residual
+        join filters, so the physical join remains keyed whenever at least
+        one shared var is certainly bound on both sides."""
+        r = right.withColumnsRenamed({c: f"__r_{c}" for c in common})
+        conds = []
+        for c in common:
+            e = left[c] == r[f"__r_{c}"]
+            conds.append(left[c].isNull() | r[f"__r_{c}"].isNull() | e if c in mixed else e)
+        merged = [
+            F.coalesce(left[c], r[f"__r_{c}"]).alias(c) if c in mixed else left[c]
+            for c in left.columns
+        ] + [r[c] for c in right.columns if c not in left.columns]
+        return r, reduce(lambda a, b: a & b, conds) if conds else None, merged
+
     def _compat_join(
-        self,
-        left: DataFrame,
-        right: DataFrame,
-        common: list,
-        mixed: list,
-        how: str,
+        self, left: DataFrame, right: DataFrame, common: list, mixed: list, how: str
     ) -> DataFrame:
-        """Join under SPARQL compatible-mapping semantics: a shared var in
-        ``mixed`` may be unbound (null) on either side; unbound is
-        compatible with any binding and the merged solution takes the
-        bound side's value (COALESCE).  Certainly-bound shared vars stay
-        plain equality conditions, which Catalyst extracts as hash-join
-        keys — the null-or-equal clauses ride along as residual join
-        filters, so the physical join remains keyed whenever at least one
-        shared var is certainly bound on both sides."""
-        r = right
-        for c in common:
-            r = r.withColumnRenamed(c, f"__r_{c}")
-        cond = None
-        for c in common:
-            if c in mixed:
-                e = (
-                    left[c].isNull()
-                    | r[f"__r_{c}"].isNull()
-                    | (left[c] == r[f"__r_{c}"])
-                )
-            else:
-                e = left[c] == r[f"__r_{c}"]
-            cond = e if cond is None else cond & e
-        joined = left.join(r, cond, how)
-        out = []
-        for c in left.columns:
-            if c in mixed:
-                out.append(F.coalesce(left[c], r[f"__r_{c}"]).alias(c))
-            else:
-                out.append(left[c])
-        for c in right.columns:
-            if c not in left.columns:
-                out.append(r[c])
-        return joined.select(*out)
+        r, cond, merged = self._compat_on(left, right, common, mixed)
+        keyed = len(mixed) < len(common)
+        return self._combine(left, r, how, cond, keyed=keyed).select(*merged)
 
     def _left_join(self, node: LeftJoin, graph) -> DataFrame:
         left = self._pattern(node.left, graph)
@@ -463,44 +461,21 @@ class Translator:
         )
         if node.expr is None:
             if not common:
-                return left.crossJoin(right)  # degenerate OPTIONAL without shared vars
+                # degenerate OPTIONAL without shared vars
+                return self._combine(left, right, "cross")
             if not mixed:
-                return left.join(right, on=common, how="left")
+                return self._combine(left, right, "left", common)
             return self._compat_join(left, right, common, mixed, "left")
         # LeftJoin with condition: matched = compatible-inner + filter;
         # unmatched = left rows with no surviving match (null-safe anti
         # join — left rows may themselves carry unbound vars); union with
         # null-extended right vars
-        r = right
-        for c in common:
-            r = r.withColumnRenamed(c, f"__r_{c}")
-        if common:
-            cond = None
-            for c in common:
-                if c in mixed:
-                    e = (
-                        left[c].isNull()
-                        | r[f"__r_{c}"].isNull()
-                        | (left[c] == r[f"__r_{c}"])
-                    )
-                else:
-                    e = left[c] == r[f"__r_{c}"]
-                cond = e if cond is None else cond & e
-            joined = left.join(r, cond, "inner")
-        else:
-            joined = left.crossJoin(r)
+        r, cond, merged = self._compat_on(left, right, common, mixed)
+        how = "inner" if common else "cross"
+        joined = self._combine(left, r, how, cond, keyed=len(mixed) < len(common))
         # merged solution (coalesced) for the filter + output, plus the
         # ORIGINAL left values so the anti join can identify which left
         # rows survived
-        merged = []
-        for c in left.columns:
-            if c in mixed:
-                merged.append(F.coalesce(left[c], r[f"__r_{c}"]).alias(c))
-            else:
-                merged.append(left[c])
-        for c in right.columns:
-            if c not in left.columns:
-                merged.append(r[c])
         orig = [left[c].alias(f"__lv_{c}") for c in mixed]
         matched = joined.select(*merged, *orig)
         matched = matched.filter(self._expr_bool(node.expr, matched, graph))
@@ -514,9 +489,9 @@ class Translator:
         for c in left.columns:
             e = left[c].eqNullSafe(msel[f"__a_{c}"])
             anti_cond = e if anti_cond is None else anti_cond & e
-        unmatched = left.join(msel, anti_cond, "left_anti")
+        unmatched = self._combine(left, msel, "left_anti", anti_cond)
         matched = matched.drop(*[f"__lv_{c}" for c in mixed])
-        return matched.unionByName(unmatched, allowMissingColumns=True)
+        return self._combine(matched, unmatched)
 
     def _minus(self, node: Minus, graph) -> DataFrame:
         left = self._pattern(node.left, graph)
@@ -528,29 +503,18 @@ class Translator:
             common, _certainly_bound(node.left), _certainly_bound(node.right)
         )
         if not mixed:
-            return left.join(right.select(*common).distinct(), on=common, how="left_anti")
+            return self._combine(left, right.select(*common).distinct(), "left_anti", common)
         # spec MINUS (§18.5): remove a left solution iff some right
         # solution is compatible with it AND their domains overlap —
         # unbound (null) cells are compatible but contribute no overlap
-        r = right.select(*common).distinct()
-        for c in common:
-            r = r.withColumnRenamed(c, f"__r_{c}")
-        compat = None
-        overlap = None
-        for c in common:
-            if c in mixed:
-                e = (
-                    left[c].isNull()
-                    | r[f"__r_{c}"].isNull()
-                    | (left[c] == r[f"__r_{c}"])
-                )
-                o = left[c].isNotNull() & r[f"__r_{c}"].isNotNull()
-            else:
-                e = left[c] == r[f"__r_{c}"]
-                o = F.lit(True)
-            compat = e if compat is None else compat & e
-            overlap = o if overlap is None else overlap | o
-        return left.join(r, compat & overlap, "left_anti")
+        r, compat, _ = self._compat_on(left, right.select(*common).distinct(), common, mixed)
+        overlap = reduce(lambda a, b: a | b, [
+            left[c].isNotNull() & r[f"__r_{c}"].isNotNull() if c in mixed else F.lit(True)
+            for c in common
+        ])
+        return self._combine(
+            left, r, "left_anti", compat & overlap, keyed=len(mixed) < len(common)
+        )
 
     def _graph_pattern(self, node: GraphPattern) -> DataFrame:
         g = node.graph
@@ -727,13 +691,8 @@ class Translator:
             return self._path_pattern(s, p, o, graph)
 
         q = self.quads
-        # bucket pruning: a constant subject hashes to exactly one store
-        # bucket; the filter folds the per-bucket union down to one scan
-        if self.n_buckets and s[0] == "iri":
-            q = q.filter(
-                F.col("bucket")
-                == F.pmod(F.xxhash64(F.lit(s[1])), F.lit(self.n_buckets))
-            )
+        if self.subject_scan is not None and s[0] == "iri":
+            q = self.subject_scan(s[1])
         # graph scoping: None -> default graph; ("iri", v) -> that graph;
         # ("var", n) -> any named graph, bound
         gvar = None
@@ -831,8 +790,7 @@ class Translator:
             drop = [t[1] for t in mid_terms[1:-1] if t[0] == "var" and t[1].startswith("__path")]
             return df.drop(*drop)
         if op == "alt":
-            parts = [self._triple_pattern(s, elt, o, graph) for elt in path[2:]]
-            return reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), parts)
+            return reduce(self._combine, [self._triple_pattern(s, elt, o, graph) for elt in path[2:]])
         if op in ("plus", "star", "opt"):
             return self._closure_pattern(s, path[2], o, graph, op)
         if op == "neg":
@@ -856,7 +814,7 @@ class Translator:
             df = self._triple_pattern(o, pvar, s, graph)
             df = df.filter(~F.col(pvar[1])["value"].isin(inv))
             parts.append(self._drop_or_unit(df, pvar[1]))
-        return reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), parts)
+        return reduce(self._combine, parts)
 
     @staticmethod
     def _drop_or_unit(df: DataFrame, col: str) -> DataFrame:
@@ -915,7 +873,7 @@ class Translator:
                     F.coalesce(F.col("object_lang"), F.lit("")),
                 ).alias("node")
             )
-            self._nodes_cache[key] = subj_nodes.unionByName(obj_nodes).distinct()
+            self._nodes_cache[key] = self._combine(subj_nodes, obj_nodes).distinct()
         return self._nodes_cache[key]
 
     def _zero_length_pairs(self, graph) -> DataFrame:
@@ -972,17 +930,16 @@ class Translator:
             # while covering the same pair set.
 
             def _extend(right: DataFrame) -> DataFrame:
-                return (
-                    frontier.alias("f")
-                    .join(right.alias("c"), F.col("f.dst") == F.col("c.src"))
-                    .select(F.col("f.src").alias("src"), F.col("c.dst").alias("dst"))
-                )
+                return self._combine(
+                    frontier.alias("f"), right.alias("c"), "inner",
+                    F.col("f.dst") == F.col("c.src"),
+                ).select(F.col("f.src").alias("src"), F.col("c.dst").alias("dst"))
 
             grown = _extend(frontier)
             if prev_closure is not None:
-                grown = grown.unionByName(_extend(prev_closure))
+                grown = self._combine(grown, _extend(prev_closure))
             new = self._ckpt_fresh(
-                grown.distinct().join(closure, on=["src", "dst"], how="left_anti"),
+                self._combine(grown.distinct(), closure, "left_anti", ["src", "dst"]),
                 eager=False,
             )
             # the lazy checkpoint materializes on THIS count's job; the
@@ -990,7 +947,7 @@ class Translator:
             if new.count() == 0:
                 break  # natural fixpoint
             prev_closure = closure
-            closure = closure.unionByName(new)
+            closure = self._combine(closure, new)
             frontier = new
             iteration += 1
             if iteration >= self.max_path_iterations:
@@ -1016,17 +973,13 @@ class Translator:
         zero-length bindings (before r16 the full fixpoint ran and its
         result was discarded for op == "opt")."""
         if op == "opt":
-            result = (
-                self._path_edges(base, graph)
-                .unionByName(self._zero_length_pairs(graph))
-                .distinct()
-            )
+            result = self._combine(
+                self._path_edges(base, graph), self._zero_length_pairs(graph)
+            ).distinct()
         elif op == "star":
-            result = (
-                self._path_closure(base, graph)
-                .unionByName(self._zero_length_pairs(graph))
-                .distinct()
-            )
+            result = self._combine(
+                self._path_closure(base, graph), self._zero_length_pairs(graph)
+            ).distinct()
         else:
             result = self._path_closure(base, graph)
 
@@ -1893,25 +1846,12 @@ class Translator:
                 common, _certainly_bound(inner), _certainly_bound(exists.pattern)
             )
             if not mixed:
-                return left.join(right.select(*common).distinct(), on=common, how=how)
+                return self._combine(left, right.select(*common).distinct(), how, common)
             # ARQ substitution semantics: an outer var left unbound is NOT
             # substituted into the EXISTS pattern — it stays free, so any
             # binding matches (same null-is-compatible rule as joins)
-            r = right.select(*common).distinct()
-            for c in common:
-                r = r.withColumnRenamed(c, f"__r_{c}")
-            cond = None
-            for c in common:
-                if c in mixed:
-                    e = (
-                        left[c].isNull()
-                        | r[f"__r_{c}"].isNull()
-                        | (left[c] == r[f"__r_{c}"])
-                    )
-                else:
-                    e = left[c] == r[f"__r_{c}"]
-                cond = e if cond is None else cond & e
-            return left.join(r, cond, how)
+            r, cond, _ = self._compat_on(left, right.select(*common).distinct(), common, mixed)
+            return self._combine(left, r, how, cond, keyed=len(mixed) < len(common))
         return None
 
     def _has_aggregate(self, expr) -> bool:
@@ -2312,7 +2252,7 @@ class Translator:
                     & F.col("object_kind").isNotNull()
                 )
             )
-        out = reduce(lambda a, b: a.unionByName(b), parts).dropDuplicates()
+        out = reduce(self._combine, parts).dropDuplicates()
         if q.limit is not None:
             out = out.limit(q.limit)
         return out

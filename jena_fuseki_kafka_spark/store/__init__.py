@@ -1,3 +1,3 @@
-from .quadstore import QuadStore, quad_frame
+from .quadstore import QuadStore, Snapshot, quad_frame
 
-__all__ = ["QuadStore", "quad_frame"]
+__all__ = ["QuadStore", "Snapshot", "quad_frame"]

@@ -38,8 +38,9 @@ Scale notes (100 TB): data leaves are partitioned by a stable hash bucket
 of subject and the manifest is bucket-granular, so the delete rewrite reads
 and rewrites ONLY the buckets the delete keys hash to — unaffected leaves
 carry over untouched.  On a real cluster you would add graph/predicate
-partition columns + file-level min/max pruning.  Reads are plain ``spark.read.parquet`` over the manifest's file
-list — column pruning and predicate pushdown apply as usual.
+partition columns + file-level min/max pruning.  Reads are plain
+``spark.read.parquet`` over leaves the manifest lists (``Snapshot``) —
+column pruning and predicate pushdown apply as usual.
 """
 
 from __future__ import annotations
@@ -258,45 +259,16 @@ class QuadStore:
         return txn_id in self._read_manifest()["txns"]
 
     # -- read -------------------------------------------------------------
-    def read(self, spark: SparkSession, with_bucket: bool = False) -> DataFrame:
-        """Current committed snapshot as a DataFrame (MVCC: uses the file
-        list frozen at manifest-read time).
+    def snapshot(self, spark: SparkSession) -> "Snapshot":
+        """The current committed version's leaf list (MVCC: frozen at
+        manifest-read time).  A query takes one and scans every pattern
+        from it, so its patterns all see the same commit."""
+        return Snapshot(spark, self, self._read_manifest()["files"])
 
-        ``with_bucket=True`` adds the subject-hash ``bucket`` column by
-        building the plan as one scan per bucket (each tagged with its
-        constant bucket id) unioned together.  A downstream filter
-        ``bucket = <const>`` then constant-folds every other branch to an
-        empty relation and Catalyst prunes their files from the plan —
-        point lookups (constant-subject SPARQL patterns, DESCRIBE) read
-        1/n_buckets of the store.
-
-        A snapshot of at most ``SMALL_COMMIT_ROWS`` rows (counted from the
-        leaves' footers) is read as ONE partition (``coalesce(1)``, which
-        filters push through, so bucket pruning still applies).  A single
-        partition satisfies every clustered and ordered distribution, so
-        aggregates and global sorts over a small store plan no exchange
-        and a bounded ``limit`` finishes in one pass: one Spark job where
-        the file-split layout needs a shuffle stage or a second scan."""
-        manifest = self._read_manifest()
-        if not manifest["files"]:
-            df = spark.createDataFrame([], QUAD_SCHEMA)
-            return df.withColumn("bucket", F.lit(None).cast("int")) if with_bucket else df
-        if not with_bucket:
-            paths = [os.path.join(self.files_dir, f) for f in manifest["files"]]
-            df = spark.read.schema(QUAD_SCHEMA).parquet(*paths)
-        else:
-            by_bucket: dict[int, list[str]] = {}
-            for f in manifest["files"]:
-                by_bucket.setdefault(self._bucket_of(f), []).append(f)
-            parts = [
-                spark.read.schema(QUAD_SCHEMA)
-                .parquet(*[os.path.join(self.files_dir, f) for f in fs])
-                .withColumn("bucket", F.lit(b))
-                for b, fs in sorted(by_bucket.items())
-            ]
-            df = reduce(DataFrame.unionByName, parts)
-        rows = sum(self._entry_row_count(f) for f in manifest["files"])
-        return df.coalesce(1) if rows <= self.SMALL_COMMIT_ROWS else df
+    def read(self, spark: SparkSession) -> DataFrame:
+        """Current committed snapshot as a DataFrame: one scan of every
+        leaf (see ``Snapshot.scan``)."""
+        return self.snapshot(spark).scan()
 
     def count(self, spark: SparkSession) -> int:
         return self.read(spark).count()
@@ -657,3 +629,41 @@ class QuadStore:
         leaf = os.path.join(self.files_dir, f)
         _LEAF_ROWS.pop(leaf, None)
         shutil.rmtree(leaf, ignore_errors=True)
+
+
+class Snapshot:
+    """One committed version's leaf list, read from the manifest once.
+
+    ``small`` holds when the version has at most the store's
+    ``SMALL_COMMIT_ROWS`` rows, summed from leaf footers (memoized, so an
+    unchanged snapshot opens none).  Every scan of a small snapshot is ONE
+    partition (``coalesce(1)``): a single partition satisfies every
+    clustered and ordered distribution, so aggregates and global sorts
+    over it plan no exchange and a bounded ``limit`` finishes in one pass
+    — one Spark job where the file-split layout needs a shuffle stage or
+    a second scan."""
+
+    def __init__(self, spark: SparkSession, store: QuadStore, files: list[str]):
+        self.spark = spark
+        self.store = store
+        self.files = files
+        rows = sum(store._entry_row_count(f) for f in self.files)
+        self.small = rows <= store.SMALL_COMMIT_ROWS
+
+    def scan(self, subject: str | None = None) -> DataFrame:
+        """One ``FileScan`` of every leaf or, given a constant IRI
+        ``subject``, of only the leaves of the bucket it hashes to —
+        chosen here on the driver with the xxh64 twin of Spark's
+        ``xxhash64``, so the plan never holds the other buckets' files.
+        No leaf to scan gives a typed empty frame."""
+        from .xxh64 import spark_bucket
+
+        files = self.files
+        if subject is not None:
+            files = self.store._leaves_in(files, {spark_bucket(subject, self.store.n_buckets)})
+        if files:
+            paths = [os.path.join(self.store.files_dir, f) for f in files]
+            df = self.spark.read.schema(QUAD_SCHEMA).parquet(*paths)
+        else:
+            df = quad_frame(self.spark, ())
+        return df.coalesce(1) if self.small else df

@@ -13,6 +13,7 @@ import pytest
 
 from jena_fuseki_kafka_spark.server import SparqlHttpServer
 from jena_fuseki_kafka_spark.store import QuadStore
+from jena_fuseki_kafka_spark.store.xxh64 import spark_bucket
 
 EX = "http://example.org/"
 
@@ -765,8 +766,8 @@ class TestResultSpill:
         seen = list(store._read_manifest()["files"])
         assert len(seen) == store.n_buckets
         by_bucket = {}
-        for r in store.read(spark, with_bucket=True).collect():
-            by_bucket.setdefault(r.bucket, []).append(tuple(r[c] for c in r.__fields__[:-1]))
+        for r in store.read(spark).collect():
+            by_bucket.setdefault(spark_bucket(r.subject, store.n_buckets), []).append(tuple(r))
         assert all(len(rows) > store.grace_versions for rows in by_bucket.values())
 
         srv = SparqlHttpServer(spark, store)
@@ -780,21 +781,94 @@ class TestResultSpill:
         assert sorted(b["o"]["value"] for b in got) == sorted(f"v{i}" for i in range(200))
 
 
+XSD = "http://www.w3.org/2001/XMLSchema#"
+
+
+def typed_rows(n, graph):
+    """n subjects <EX>t{i} with a type, an integer val and, every third
+    one, an opt: the shape of the benchmark's BGP + FILTER + OPTIONAL."""
+    rows = []
+    for i in range(n):
+        s = f"{EX}t{i}"
+        rows += [(graph, s, f"{EX}type", "iri", f"{EX}C{i % 2}", None, None),
+                 (graph, s, f"{EX}val", "literal", str(i * 7 % 50), f"{XSD}integer", None)]
+        if i % 3 == 0:
+            rows.append((graph, s, f"{EX}opt", "literal", f"opt{i}", None, None))
+    return rows
+
+
 class TestReadJobCounts:
     """An HTTP read costs one Spark job for its result, however many
-    partitions that result has (the store's SPARQL view has one per
-    bucket).  On a small store the snapshot is read as one partition, so
-    an aggregate needs no shuffle stage and a point DELETE/INSERT WHERE's
-    bounded binding probe no second scan: one job each too."""
+    partitions that result has.  On a small store every scan is one
+    partition, so an aggregate needs no shuffle stage and a point
+    DELETE/INSERT WHERE's bounded binding probe no second scan, and the
+    joins and unions of a query run in the same single task instead of
+    broadcasting a side each: one job each too."""
 
     G = f"{EX}jobs"
+    T = f"{EX}typed"
+    BGP = (f"SELECT ?s ?v ?o WHERE {{ GRAPH <{T}> {{ ?s <{EX}type> <{EX}C0> . "
+           f"?s <{EX}val> ?v . FILTER(?v < 30) OPTIONAL {{ ?s <{EX}opt> ?o }} }} }}")
 
     @pytest.fixture()
     def loaded(self, spark, tmp_path):
         store = QuadStore(str(tmp_path / "quads"))
-        store.commit(spark, adds=seed_rows(200) + seed_rows(20, graph=self.G), txn_id="seed")
+        store.commit(spark, adds=seed_rows(200) + seed_rows(20, graph=self.G)
+                     + typed_rows(60, self.T), txn_id="seed")
         assert len(store._read_manifest()["files"]) == store.n_buckets
         return SparqlHttpServer(spark, store), store
+
+    def test_bgp_filter_optional_is_one_job(self, loaded, count_jobs):
+        srv, store = loaded
+        jobs, body = count_jobs(lambda: "".join(srv.run_query(store, self.BGP)[1]))
+        got = {(b["s"]["value"], b["v"]["value"], b.get("o", {}).get("value"))
+               for b in json.loads(body)["results"]["bindings"]}
+        assert got == {(f"{EX}t{i}", str(i * 7 % 50), f"opt{i}" if i % 3 == 0 else None)
+                       for i in range(60) if i % 2 == 0 and i * 7 % 50 < 30}
+        assert jobs == 1
+
+    def test_union_and_minus_are_one_job(self, loaded, count_jobs):
+        srv, store = loaded
+        union = (f"SELECT ?s ?x WHERE {{ GRAPH <{self.T}> {{ {{ ?s <{EX}type> ?x }} "
+                 f"UNION {{ ?s <{EX}opt> ?x }} }} }}")
+        minus = (f"SELECT ?s WHERE {{ GRAPH <{self.T}> {{ ?s <{EX}type> ?c "
+                 f"MINUS {{ ?s <{EX}opt> ?o }} }} }}")
+        for q, n in ((union, 60 + 20), (minus, 40)):
+            jobs, body = count_jobs(lambda: "".join(srv.run_query(store, q)[1]))
+            assert len(json.loads(body)["results"]["bindings"]) == n, q
+            assert jobs == 1, q
+
+    def test_bgp_plan_over_the_bound_keeps_its_exchanges(self, spark, loaded):
+        from jena_fuseki_kafka_spark.sparql import SparqlEngine
+
+        _, store = loaded
+        plans = {}
+        for bound in (store.SMALL_COMMIT_ROWS, 0):
+            store.SMALL_COMMIT_ROWS = bound
+            df = SparqlEngine.from_store(spark, store).query(self.BGP)
+            plans[bound] = df._jdf.queryExecution().executedPlan().toString()
+        small, split = plans.values()
+        assert small.count("FileScan") <= 3 and "Exchange" not in small, small
+        assert "Exchange" in split and "Coalesce" not in split, split
+
+    def test_reads_past_32_leaves_list_no_files(self, spark, loaded, count_jobs):
+        """Spark lists more than 32 paths with a job of its own; the
+        manifest already names every leaf, so no read may pay for one."""
+        srv, store = loaded
+        for k in range(40):
+            store.commit(spark, adds=seed_rows(1, graph=self.G, value=lambda i: f"x{k}")
+                         + [(self.G, f"{EX}n{k}", f"{EX}p", "literal", "n", None, None)],
+                         txn_id=f"small-{k}")
+        assert len(store._read_manifest()["files"]) > 32
+        jobs, body = count_jobs(lambda: "".join(srv.gsp_read(store, self.G)[1]))
+        assert body.count("\n") == 20 + 40 + 40
+        assert jobs == 1
+        s = f"{EX}s7"
+        jobs, _ = count_jobs(lambda: srv.run_update(
+            store, f'DELETE {{ <{s}> <{EX}p> ?o }} INSERT {{ <{s}> <{EX}p> "m" }} '
+            f"WHERE {{ <{s}> <{EX}p> ?o }}",
+        ))
+        assert jobs == 1
 
     def test_unconstrained_select_is_one_job(self, loaded, count_jobs):
         srv, store = loaded

@@ -1052,7 +1052,7 @@ class TestMiscBuiltins:
 
 class TestBucketPruning:
     """Constant-subject patterns must scan only the one store bucket the
-    subject hashes to (QuadStore.read(with_bucket=True) union-fold)."""
+    subject hashes to (the snapshot picks that bucket's leaves)."""
 
     def _store(self, spark, tmp_path):
         from jena_fuseki_kafka_spark.model import QUAD_SCHEMA
@@ -1073,7 +1073,13 @@ class TestBucketPruning:
         eng = SparqlEngine.from_store(spark, store)
         df = eng.query("SELECT ?o WHERE { <http://e/s7> <http://e/p> ?o }")
         plan = df._jdf.queryExecution().executedPlan().toString()
-        assert plan.count("Scan parquet") == 1, plan  # 7 of 8 branches folded
+        assert plan.count("Scan parquet") == 1, plan
+        from jena_fuseki_kafka_spark.store.xxh64 import spark_bucket
+
+        bucket = spark_bucket("http://e/s7", store.n_buckets)
+        leaves = {f for f in store._read_manifest()["files"] if store._bucket_of(f) == bucket}
+        scanned = {f.split("/files/")[1].rsplit("/", 1)[0] for f in df.inputFiles()}
+        assert scanned and scanned <= leaves, (scanned, leaves)
         vals = [r["o"]["value"] for r in df.collect()]
         assert vals == ["http://e/o7"]
 

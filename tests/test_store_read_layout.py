@@ -1,12 +1,14 @@
 """The store's read layout: a snapshot of at most ``SMALL_COMMIT_ROWS``
-rows is read as one partition, a bigger one as the files split.
+rows is read as one partition and its queries run as one task, a bigger
+one as the files split.
 
 The one-partition layout exists to save Spark jobs (no shuffle stage for
-an aggregate, no second scan for a bounded probe), so it must never change
-an answer: both layouts are run side by side at the bound, shrunk per
-instance the way the commit-tier tests shrink it.  Constant-subject bucket
-pruning must survive the coalesce, and the row count that picks the layout
-must come from leaf footers read once per leaf.
+an aggregate, no second scan for a bounded probe, no broadcast for a
+join), so it must never change an answer: both layouts are run side by
+side at the bound, shrunk per instance the way the commit-tier tests
+shrink it.  A constant subject scans only its bucket's leaves on either
+layout, every pattern of a query scans one snapshot, and the row count
+that picks the layout must come from leaf footers read once per leaf.
 """
 
 from __future__ import annotations
@@ -66,8 +68,7 @@ def layouts(spark, tmp_path):
         stores[name] = store
     assert stores["one"].read(spark).rdd.getNumPartitions() == 1
     assert stores["split"].read(spark).rdd.getNumPartitions() > 1
-    assert stores["one"].read(spark, with_bucket=True).rdd.getNumPartitions() == 1
-    assert stores["split"].read(spark, with_bucket=True).rdd.getNumPartitions() > 1
+    assert stores["one"].snapshot(spark).small and not stores["split"].snapshot(spark).small
     return SparqlHttpServer(spark, stores["one"]), stores
 
 
@@ -96,6 +97,36 @@ QUERIES = {
     ),
     "order_by_desc": (
         f"SELECT ?s ?v WHERE {{ GRAPH ?g {{ ?s <{E}val> ?v }} }} ORDER BY DESC(?v)", True,
+    ),
+    "union": (
+        f"SELECT ?s ?x WHERE {{ GRAPH <{graph(0)}> {{ {{ ?s <{E}type> ?x }} "
+        f"UNION {{ ?s <{E}opt> ?x }} }} }}", False,
+    ),
+    "minus": (
+        f"SELECT ?s WHERE {{ GRAPH ?g {{ ?s <{E}type> <{E}C2> "
+        f"MINUS {{ ?s <{E}opt> ?o }} }} }}", False,
+    ),
+    # ?o is unbound where the OPTIONAL found nothing, so the second
+    # OPTIONAL joins on a maybe-unbound var: the compatible-mapping join
+    "optional_filter_unbound": (
+        f"SELECT ?s ?o ?n WHERE {{ GRAPH ?g {{ ?s <{E}type> ?c "
+        f"OPTIONAL {{ ?s <{E}opt> ?o }} OPTIONAL {{ ?s <{E}name> ?n . ?s <{E}opt> ?o "
+        f'FILTER(?n != "name3") }} }} FILTER(!BOUND(?o) || ?c = <{E}C0>) }}', False,
+    ),
+    "values_undef": (
+        f"SELECT ?s ?c ?v WHERE {{ GRAPH ?g {{ ?s <{E}type> ?c . ?s <{E}val> ?v }} "
+        f'VALUES (?c ?v) {{ (<{E}C1> UNDEF) (UNDEF "74"^^<{XSD_INT}>) }} }}', False,
+    ),
+    "path_plus": (
+        f"SELECT ?o FROM <{graph(0)}> FROM <{graph(1)}> FROM <{graph(2)}> "
+        f"WHERE {{ <{E}s0> <{E}link>+ ?o }}", False,
+    ),
+    "from_and_from_named": (
+        f"SELECT ?g ?s ?v FROM <{graph(0)}> FROM NAMED <{graph(2)}> WHERE {{ "
+        f"{{ ?s <{E}val> ?v }} UNION {{ GRAPH ?g {{ ?s <{E}val> ?v }} }} }}", False,
+    ),
+    "graph_var": (
+        f"SELECT ?g ?v WHERE {{ GRAPH ?g {{ <{E}s5> <{E}val> ?v }} }}", False,
     ),
 }
 
@@ -151,6 +182,54 @@ def test_constant_subject_prunes_to_its_bucket_on_one_partition(spark, layouts):
     assert len(df.collect()) == 4  # s7: type, val, name, link (7 % 3 != 0: no opt)
 
 
+def rows(df) -> list[str]:
+    return sorted(json.dumps(r.asDict(recursive=True), sort_keys=True) for r in df.collect())
+
+
+@pytest.mark.parametrize("layout", ["one", "split"])
+def test_pruned_subject_query_equals_full_scan(spark, layouts, layout):
+    """A constant IRI subject scans its bucket's leaves only; the answer
+    equals the engine's over one full scan, also under FROM / FROM NAMED
+    and the protocol's dataset, and a bnode subject (a variable) prunes
+    nothing."""
+    store = layouts[1][layout]
+    s = f"{E}s7"  # in graph(1)
+    cases = [
+        (f"SELECT ?g ?p ?o WHERE {{ GRAPH ?g {{ <{s}> ?p ?o }} }}", None),
+        (f"SELECT ?p ?o FROM <{graph(1)}> WHERE {{ <{s}> ?p ?o }}", None),
+        (f"SELECT ?p ?o FROM <{graph(2)}> WHERE {{ <{s}> ?p ?o }}", None),
+        (f"SELECT ?g ?p ?o FROM NAMED <{graph(1)}> WHERE {{ GRAPH ?g {{ <{s}> ?p ?o }} }}", None),
+        (f"SELECT ?p ?o WHERE {{ <{s}> ?p ?o }}", ([graph(1)], [])),
+        (f"SELECT ?g ?p ?o WHERE {{ GRAPH ?g {{ <{s}> ?p ?o }} }}", ([], [graph(2)])),
+        (f"SELECT ?v ?n WHERE {{ GRAPH ?g {{ <{s}> <{E}link> ?t }} GRAPH ?h {{ ?t <{E}val> ?v }} "
+         f"OPTIONAL {{ GRAPH ?k {{ ?t <{E}name> ?n }} }} }}", None),
+        (f"SELECT (COUNT(*) AS ?n) WHERE {{ GRAPH ?g {{ _:b <{E}val> ?o }} }}", None),
+    ]
+    answers = []
+    for q, ds in cases:
+        pruned = rows(SparqlEngine.from_store(spark, store).query(q, dataset=ds))
+        assert pruned == rows(SparqlEngine(store.read(spark)).query(q, dataset=ds)), q
+        answers.append(len(pruned))
+    assert answers == [4, 4, 0, 4, 4, 0, 1, 1], answers
+
+
+@pytest.mark.parametrize("layout", ["one", "split"])
+def test_query_answers_from_the_snapshot_it_was_built_on(spark, layouts, layout):
+    """Build the queries, then commit a delete in every bucket, then
+    execute: the answers are the earlier snapshot's."""
+    store = layouts[1][layout]
+    scan = f"SELECT ?s ?v WHERE {{ GRAPH ?g {{ ?s <{E}val> ?v . ?s <{E}type> ?c }} }}"
+    point = f"SELECT ?v WHERE {{ GRAPH ?g {{ <{E}s7> <{E}val> ?v }} }}"
+    before = [rows(SparqlEngine(store.read(spark)).query(q)) for q in (scan, point)]
+    built = [SparqlEngine.from_store(spark, store).query(q) for q in (scan, point)]
+    vals = [tuple(r) for r in store.read(spark).collect() if r.predicate == f"{E}val"]
+    assert {spark_bucket(r[1], store.n_buckets) for r in vals} == set(range(store.n_buckets))
+    store.commit(spark, deletes=vals, txn_id="del-vals")
+    assert rows(SparqlEngine.from_store(spark, store).query(scan)) == []
+    assert [rows(df) for df in built] == before
+    assert len(before[0]) == N_SUBJECTS and len(before[1]) == 1
+
+
 def test_unchanged_snapshot_reads_no_footer(spark, tmp_path, monkeypatch):
     import pyarrow.parquet as pq
 
@@ -163,5 +242,5 @@ def test_unchanged_snapshot_reads_no_footer(spark, tmp_path, monkeypatch):
     assert len(opened) >= len(store._read_manifest()["files"])  # first sight of each leaf
     opened.clear()
     store.read(spark)
-    store.read(spark, with_bucket=True)
+    store.snapshot(spark).scan(f"{E}s7")
     assert opened == []
