@@ -109,6 +109,8 @@ class Engine:
                 "paused": stream._paused,
                 "metrics": dict(stream.metrics),
                 "exception": (q.exception() if q is not None else None),
+                # layout only (see QuadStore.stats): no connector property
+                "store": stream.store.stats(),
                 # never the raw properties: jaas strings / store passwords
                 # must not leave the process via a status endpoint
                 "kafka_properties": stream.conn.redacted_properties(),

@@ -165,8 +165,6 @@ class SparqlHttpServer:
         self.stores = {name.strip("/"): s for name, s in stores.items()}
         self._httpd: ThreadingHTTPServer | None = None
         self._thread: threading.Thread | None = None
-        self._txn_counter = 0
-        self._lock = threading.Lock()
 
     @classmethod
     def from_engine(cls, engine) -> "SparqlHttpServer":
@@ -196,11 +194,6 @@ class SparqlHttpServer:
             self._httpd.server_close()
             self._httpd = None
 
-    def _next_txn(self, kind: str) -> str:
-        with self._lock:
-            self._txn_counter += 1
-            return f"http-{kind}-{self._txn_counter}"
-
     # ------------------------------------------------------------ operations
     def run_query(
         self,
@@ -218,30 +211,37 @@ class SparqlHttpServer:
         materializes on the driver.
 
         ``dataset`` carries the SPARQL 1.1 Protocol ``default-graph-uri`` /
-        ``named-graph-uri`` parameters, which override FROM clauses."""
+        ``named-graph-uri`` parameters, which override FROM clauses.
+
+        The store snapshot the query reads stays pinned until its one job
+        has run, however many commits land meanwhile."""
         engine = SparqlEngine.from_store(self.spark, store)
-        ast, result = engine.query_typed(text, dataset=dataset)
-        # branch on the parsed query form, NOT result column names: a
-        # SELECT projecting variables named like the quad columns must
-        # still serialize as SPARQL results
-        if isinstance(ast, (ConstructQuery, DescribeQuery)):
-            stream, content_type, _ = negotiate_graph_streamer(accept)
-            if stream is not iter_nquads:
-                # subject-grouped syntaxes: distributed sort, written and
-                # read back in partition order, then consecutive runs
-                result = result.orderBy("graph", "subject")
-            return content_type, _ResultBody(store, result, stream)
-        (select_stream, ask_fn), content_type = negotiate_results_streamer(accept)
-        if isinstance(result, bool):
-            return content_type, iter((ask_fn(result),))
-        return content_type, _ResultBody(store, result, partial(select_stream, result.columns))
+        try:
+            ast, result = engine.query_typed(text, dataset=dataset)
+            # branch on the parsed query form, NOT result column names: a
+            # SELECT projecting variables named like the quad columns must
+            # still serialize as SPARQL results
+            if isinstance(ast, (ConstructQuery, DescribeQuery)):
+                stream, content_type, _ = negotiate_graph_streamer(accept)
+                if stream is not iter_nquads:
+                    # subject-grouped syntaxes: distributed sort, written and
+                    # read back in partition order, then consecutive runs
+                    result = result.orderBy("graph", "subject")
+                return content_type, _ResultBody(store, result, stream)
+            (select_stream, ask_fn), content_type = negotiate_results_streamer(accept)
+            if isinstance(result, bool):
+                return content_type, iter((ask_fn(result),))
+            return content_type, _ResultBody(store, result, partial(select_stream, result.columns))
+        finally:
+            engine.snapshot.release()
 
     def run_update(
         self, store: QuadStore, text: str, dataset: tuple | None = None
     ) -> dict:
-        return UpdateEngine(self.spark, store).update(
-            text, txn_id=self._next_txn("update"), protocol_dataset=dataset
-        )
+        # no txn id: HTTP has no replay contract, and an id would have to
+        # stay unique across server restarts to keep the write and its
+        # bnode labels fresh
+        return UpdateEngine(self.spark, store).update(text, protocol_dataset=dataset)
 
     def gsp_read(self, store: QuadStore, graph: str | None, accept: str | None = None):
         """Returns (content_type, chunk_iterator), computed before the
@@ -264,14 +264,18 @@ class SparqlHttpServer:
             stream, content_type = negotiated
         else:
             stream, content_type, _ = negotiate_graph_streamer(accept)
-        df = store.read(self.spark)
-        if graph == "default":
-            df = df.filter(F.col("graph") == DEFAULT_GRAPH)
-        elif graph:
-            df = df.filter(F.col("graph") == graph)
-        if stream is not iter_nquads:
-            df = df.orderBy("graph", "subject")
-        return content_type, _ResultBody(store, df, stream)
+        snapshot = store.snapshot(self.spark)
+        try:
+            df = snapshot.scan()
+            if graph == "default":
+                df = df.filter(F.col("graph") == DEFAULT_GRAPH)
+            elif graph:
+                df = df.filter(F.col("graph") == graph)
+            if stream is not iter_nquads:
+                df = df.orderBy("graph", "subject")
+            return content_type, _ResultBody(store, df, stream)
+        finally:
+            snapshot.release()
 
     def gsp_write(self, store: QuadStore, body: bytes, content_type: str | None, graph: str | None, replace: bool):
         # fresh bnode scope per request: two uploads both saying _:b1
@@ -286,21 +290,18 @@ class SparqlHttpServer:
             rows.append((g,) + tuple(op[2:]))
         rows = list(dict.fromkeys(rows))
         # PUT replaces the target graph: a graph-scoped delete, then the adds
-        store.commit(
-            self.spark, adds=rows, deletes=[(target,)] if replace else None,
-            txn_id=self._next_txn("gsp"),
-        )
+        store.commit(self.spark, adds=rows, deletes=[(target,)] if replace else None)
         return len(rows)
 
     def gsp_delete(self, store: QuadStore, graph: str | None):
         target = DEFAULT_GRAPH if graph in (None, "default") else graph
-        store.commit(self.spark, deletes=[(target,)], txn_id=self._next_txn("gsp-del"))
+        store.commit(self.spark, deletes=[(target,)])
 
     def apply_patch(self, store: QuadStore, body: bytes, content_type: str | None):
         ops = parse_payload(body, content_type or "application/rdf-patch")
         adds = list(dict.fromkeys(op[1:] for op in ops if op[0] == "A"))
         dels = [op[1:] for op in ops if op[0] == "D"]
-        store.commit(self.spark, adds=adds, deletes=dels, txn_id=self._next_txn("patch"))
+        store.commit(self.spark, adds=adds, deletes=dels)
         return len(adds), len(dels)
 
 

@@ -35,7 +35,8 @@ class SparqlEngine:
     @classmethod
     def from_store(cls, spark, store: QuadStore, **kw) -> "SparqlEngine":
         """Engine over the store's current snapshot: every pattern of a
-        query scans that one version's leaves."""
+        query scans that one version's leaves, which stay on disk while
+        the engine lives (or until ``engine.snapshot.release()``)."""
         return cls(store.snapshot(spark), **kw)
 
     def query(self, text: str, dataset: tuple | None = None):

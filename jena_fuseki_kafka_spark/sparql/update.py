@@ -270,11 +270,15 @@ class _Pending:
 
     Joins against the driver-resident rows broadcast them; joins between
     DataFrames carry no hint, so Spark sizes them, and the store sizes its
-    commit joins from the rows it counts."""
+    commit joins from the rows it counts.
+
+    The base is read from one store snapshot, pinned until ``release()``:
+    the commit may still scan it."""
 
     def __init__(self, spark: SparkSession, store: QuadStore):
         self.spark = spark
         self.store = store
+        self._snapshot = None
         self._base: DataFrame | None = None
         self.graphs: set[str] = set()
         self.dels: dict[tuple, None] = {}
@@ -285,8 +289,13 @@ class _Pending:
 
     def base(self) -> DataFrame:
         if self._base is None:
-            self._base = self.store.read(self.spark)
+            self._snapshot = self.store.snapshot(self.spark)
+            self._base = self._snapshot.scan()
         return self._base
+
+    def release(self) -> None:
+        if self._snapshot is not None:
+            self._snapshot.release()
 
     def view(self) -> DataFrame:
         v = self.base()
@@ -441,6 +450,14 @@ class UpdateEngine:
                         "Protocol §2.2.3)"
                     )
         pending = _Pending(self.spark, self.store)
+        try:
+            return {"version": self._apply(pending, ops, txn_id, protocol_dataset)}
+        finally:
+            pending.release()
+
+    def _apply(self, pending: _Pending, ops: list[tuple], txn_id, protocol_dataset) -> int:
+        """Evaluate ``ops`` in order against ``pending`` and commit their
+        net effect; returns the new version."""
         load_index = 0  # per-request LOAD sequence number (bnode freshness)
 
         import hashlib
@@ -507,7 +524,7 @@ class UpdateEngine:
                 pending.insert_df(moved)
             elif kind == "modify":
                 self._modify(pending, op, protocol_dataset, _op_suffix(op_index))
-        return {"version": pending.commit(txn_id)}
+        return pending.commit(txn_id)
 
     def _modify(self, pending: _Pending, op: tuple, protocol_dataset, bnode_suffix: str):
         """DELETE/INSERT ... WHERE: evaluate the pattern once against the

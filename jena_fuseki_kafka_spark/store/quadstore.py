@@ -18,11 +18,19 @@ Commit protocol (single writer per store, like the reference's one
 projector per dataset — FKRegistry.java:45-99):
   1. write new parquet files for the net adds
   2. if there are deletes: rewrite only the files that contain matching
-     quads (read, anti-join, write survivor file)
+     quads (read, anti-join, write survivor file).  A driver-tier commit
+     instead writes each bucket it changes as ONE leaf (its rows after
+     the deletes, plus its fresh adds) and retires all of that bucket's
+     earlier leaves, so HTTP writes never pile leaves up
   3. atomically swap the manifest (os.replace) — readers referencing the
      old manifest keep a consistent snapshot
 Request-sized row commits on a small store run these steps on the driver
 with pyarrow; everything else runs them as Spark jobs (``QuadStore.commit``).
+
+Reader protection: a leaf dropped by a commit is tombstoned, and deleted
+only once no in-process ``Snapshot`` still lists it (a pin, held until the
+reader's Spark job has run) AND ``grace_versions`` newer versions exist
+(for readers outside this process, which the pins cannot see).
 
 Idempotent re-apply (at-least-once safety, SURVEY.md §7.4): commits carry a
 ``txn_id``; re-committing an already-recorded txn_id is a no-op, which makes
@@ -45,11 +53,14 @@ column pruning and predicate pushdown apply as usual.
 
 from __future__ import annotations
 
+import itertools
 import json
 import os
 import threading
 import uuid
+import weakref
 
+from collections import Counter
 from collections.abc import Sequence
 from functools import reduce
 
@@ -77,6 +88,22 @@ def _write_lock_for(path: str) -> threading.RLock:
     key = os.path.realpath(path)
     with _STORE_LOCKS_GUARD:
         return _STORE_LOCKS.setdefault(key, threading.RLock())
+
+
+# Leaves that live snapshots may still read, keyed by store realpath like
+# _STORE_LOCKS: {store: {pin token: the snapshot's leaf list}}.  A snapshot
+# reads the manifest and registers its leaves under _PINS_LOCK, and
+# ``QuadStore._swap`` holds the same lock around its retire decision and
+# manifest write, so a leaf is either pinned before a commit decides its
+# fate or is no longer listed by the manifest the snapshot reads.
+_PINS: dict[str, dict[int, list[str]]] = {}
+_PINS_LOCK = threading.Lock()
+_PIN_TOKENS = itertools.count()
+
+
+def _unpin(key: str, token: int) -> None:
+    with _PINS_LOCK:
+        _PINS[key].pop(token, None)
 
 
 # Row counts of data leaves, keyed by leaf directory path (process-wide).
@@ -148,11 +175,13 @@ class QuadStore:
         self.path = path
         self.files_dir = os.path.join(path, "files")
         self.n_buckets = n_buckets
-        # MVCC read grace: files dropped by a commit/compaction stay on disk
-        # until `grace_versions` further versions have committed, so a reader
-        # that captured an earlier manifest snapshot can finish its scan
-        # without FileNotFound (Delta/Iceberg vacuum-retention, in miniature)
+        # MVCC read grace for readers OUTSIDE this process: files dropped by
+        # a commit/compaction stay on disk until `grace_versions` further
+        # versions have committed (Delta/Iceberg vacuum-retention, in
+        # miniature).  In-process readers are protected by their snapshot's
+        # pin however many versions commit meanwhile (``_retire``).
         self.grace_versions = grace_versions
+        self._key = os.path.realpath(path)
         self._write_lock = _write_lock_for(path)
         os.makedirs(self.files_dir, exist_ok=True)
         # initialize-once under the lock: a second instance racing an
@@ -258,20 +287,40 @@ class QuadStore:
     def seen_txn(self, txn_id: str) -> bool:
         return txn_id in self._read_manifest()["txns"]
 
+    def stats(self) -> dict:
+        """What the store holds now: its version, live leaves, the most
+        leaves any one bucket has, tombstoned leaves not yet deleted, and
+        the snapshots in this process that pin leaves."""
+        manifest = self._read_manifest()
+        per_bucket = Counter(self._bucket_of(f) for f in manifest["files"])
+        with _PINS_LOCK:
+            pinned = len(_PINS.get(self._key, ()))
+        return {
+            "version": manifest["version"],
+            "leaves": len(manifest["files"]),
+            "max_leaves_per_bucket": max(per_bucket.values(), default=0),
+            "tombstones": len(manifest["tombstones"]),
+            "pinned_snapshots": pinned,
+        }
+
     # -- read -------------------------------------------------------------
     def snapshot(self, spark: SparkSession) -> "Snapshot":
         """The current committed version's leaf list (MVCC: frozen at
-        manifest-read time).  A query takes one and scans every pattern
-        from it, so its patterns all see the same commit."""
-        return Snapshot(spark, self, self._read_manifest()["files"])
+        manifest-read time), pinned until ``Snapshot.release`` or until the
+        snapshot is garbage-collected.  A query takes one and scans every
+        pattern from it, so its patterns all see the same commit."""
+        return Snapshot(spark, self)
 
     def read(self, spark: SparkSession) -> DataFrame:
         """Current committed snapshot as a DataFrame: one scan of every
-        leaf (see ``Snapshot.scan``)."""
+        leaf (see ``Snapshot.scan``).  The snapshot is not kept, so its pin
+        ends here: a caller that runs the frame after later commits is
+        protected by ``grace_versions`` only."""
         return self.snapshot(spark).scan()
 
     def count(self, spark: SparkSession) -> int:
-        return self.read(spark).count()
+        snapshot = self.snapshot(spark)  # pinned while the count runs
+        return snapshot.scan().count()
 
     # -- write ------------------------------------------------------------
     def commit(
@@ -433,8 +482,9 @@ class QuadStore:
         manifest["files"] = files
         if txn_id is not None:
             manifest["txns"] = (manifest["txns"] + [txn_id])[-1000:]
-        self._retire(manifest, drop_files)
-        self._write_manifest(manifest)
+        with _PINS_LOCK:
+            self._retire(manifest, drop_files)
+            self._write_manifest(manifest)
         return manifest["version"]
 
     def _leaves_in(self, files: list[str], buckets: set[int]) -> list[str]:
@@ -449,117 +499,105 @@ class QuadStore:
         deletes: list[tuple],
         txn_id: str | None,
     ) -> int | None:
-        """Apply a request-sized row commit on the driver: read the leaves
-        it touches with pyarrow, compute the delete rewrite and the
-        set-semantics dedup as Python set operations (tuple equality is
-        null-safe, matching the Spark tier's eqNullSafe joins), and write
-        new leaves with pyarrow in the layout the Spark writer produces
-        (files/<uuid>/bucket=N/, bucket directory-encoded, QUAD_COLS
-        inside).  Returns the new version, or None when the commit is over
-        the tier's size gates.
+        """Apply a request-sized row commit on the driver: read every leaf
+        of the buckets it touches with pyarrow and write each bucket it
+        CHANGES back as one leaf — the bucket's rows after the deletes,
+        then the adds not already present (set semantics; tuple equality
+        is null-safe, matching the Spark tier's eqNullSafe joins) — in the
+        layout the Spark writer produces (files/<uuid>/bucket=N/, bucket
+        directory-encoded, QUAD_COLS inside).  The changed buckets'
+        earlier leaves are retired; every other leaf carries over as it
+        is.  Returns the new version, or None when the commit is over the
+        tier's size gates.
 
-        Same semantics as the Spark tier: deletes first, then adds deduped
-        against the post-delete snapshot, one manifest swap.  Exact deletes
-        and adds read only the buckets their subjects hash to (the
-        pure-Python xxh64 twin of Spark's xxhash64, parity-pinned by
-        test); a graph-scoped delete reads every leaf.  Only leaves that
-        actually hold a deleted row are rewritten."""
+        Exact deletes and adds read only the buckets their subjects hash
+        to (the pure-Python xxh64 twin of Spark's xxhash64, parity-pinned
+        by test); a graph-scoped delete reads every bucket, and a bucket
+        it only filters stays in Arrow."""
         import pyarrow as pa
         import pyarrow.compute as pc
 
         from .xxh64 import spark_bucket
 
-        graphs = {d[0] for d in deletes if len(d) == 1}
+        graphs = pa.array(sorted({d[0] for d in deletes if len(d) == 1}), pa.string())
         del_set = {d for d in deletes if len(d) != 1}
         if max(len(adds), len(del_set)) > self.DRIVER_COMMIT_ROWS:
             return None
 
         scol = QUAD_COLS.index("subject")
-        files = list(manifest["files"])
-
-        def buckets_of(rows) -> set[int]:
-            return {spark_bucket(r[scol], self.n_buckets) for r in rows}
-
-        exact_leaves = self._leaves_in(files, buckets_of(del_set)) if del_set else []
-        # graphs are not bucketed: a graph-scoped delete reads every leaf
-        del_leaves = files if graphs else exact_leaves
-        add_leaves = self._leaves_in(files, buckets_of(adds)) if adds else []
-        need = set(del_leaves) | set(add_leaves)
+        subjects: dict[int, set[str]] = {}  # per touched bucket
+        adds_by: dict[int, list[tuple]] = {}
+        for r in [*del_set, *adds]:
+            subjects.setdefault(spark_bucket(r[scol], self.n_buckets), set()).add(r[scol])
+        for r in adds:
+            adds_by.setdefault(spark_bucket(r[scol], self.n_buckets), []).append(r)
+        leaves: dict[int, list[str]] = {b: [] for b in subjects}
+        for f in manifest["files"]:
+            if len(graphs) or self._bucket_of(f) in subjects:
+                leaves.setdefault(self._bucket_of(f), []).append(f)
         try:
-            if sum(self._entry_row_count(f) for f in need) > self.SMALL_COMMIT_ROWS:
-                return None
+            n_read = sum(self._entry_row_count(f) for fs in leaves.values() for f in fs)
         except OSError:
             return None
+        if n_read > self.SMALL_COMMIT_ROWS:
+            return None
 
-        tables = {entry: self._read_leaf(entry) for entry in need}
-        leaf_rows: dict[str, list[tuple]] = {}  # converted on first use
+        merged = {}
+        for b, entries in leaves.items():
+            new = old = self._read_leaves(entries)
+            if len(graphs):
+                new = old.filter(pc.invert(pc.is_in(old["graph"], value_set=graphs)))
+            changed = new.num_rows < old.num_rows
+            if b in subjects:
+                # only rows sharing a subject with an add or a delete can
+                # equal one: just those leave Arrow
+                near = pc.is_in(new["subject"], value_set=pa.array(sorted(subjects[b]), pa.string()))
+                t = new.filter(near)
+                rows = list(zip(*(t.column(c).to_pylist() for c in QUAD_COLS)))
+                kept = [r for r in rows if r not in del_set]
+                have = set(kept)
+                fresh = [r for r in adds_by.get(b, ()) if r not in have]
+                if len(kept) < len(rows) or fresh:
+                    far = new.filter(pc.invert(near))
+                    new, changed = pa.concat_tables([far, _arrow_table(kept + fresh)]), True
+            if changed:
+                merged[b] = new
+        drop = [f for b in merged for f in leaves[b]]
+        carried = [f for f in manifest["files"] if self._bucket_of(f) not in merged]
+        return self._swap(manifest, carried + self._write_leaves(merged), drop, txn_id)
 
-        def rows_of(entry: str) -> list[tuple]:
-            if entry not in leaf_rows:
-                t = tables[entry]
-                leaf_rows[entry] = list(zip(*(t.column(c).to_pylist() for c in QUAD_COLS)))
-            return leaf_rows[entry]
-
-        graph_set = pa.array(sorted(graphs), pa.string())
-
-        def holds_graph(entry: str) -> bool:
-            return bool(graphs) and pc.any(
-                pc.is_in(tables[entry].column("graph"), value_set=graph_set)
-            ).as_py() is True
-
-        drop: list[str] = []
-        survivors: dict[int, list[tuple]] = {}
-        for entry in del_leaves:
-            if entry not in exact_leaves and not holds_graph(entry):
-                continue
-            rows = rows_of(entry)
-            kept = [r for r in rows if r[0] not in graphs and r not in del_set]
-            if len(kept) == len(rows):
-                continue
-            drop.append(entry)
-            leaf_rows[entry] = kept  # post-delete content, for the dedup
-            survivors.setdefault(self._bucket_of(entry), []).extend(kept)
-        current = [f for f in files if f not in drop] + self._write_leaves(survivors)
-
-        existing = {r for entry in add_leaves for r in rows_of(entry)}
-        fresh: dict[int, list[tuple]] = {}
-        for r in adds:
-            if r not in existing:
-                fresh.setdefault(spark_bucket(r[scol], self.n_buckets), []).append(r)
-        return self._swap(manifest, current + self._write_leaves(fresh), drop, txn_id)
-
-    def _read_leaf(self, entry: str):
-        """One bucket leaf as a pyarrow table of QUAD_COLS."""
+    def _read_leaves(self, entries: list[str]):
+        """Bucket leaves as one pyarrow table of QUAD_COLS in one schema,
+        whatever the writer's nullability flags and metadata."""
         import pyarrow as pa
         import pyarrow.parquet as pq
 
-        leaf = os.path.join(self.files_dir, entry)
-        parts = [
-            pq.read_table(os.path.join(leaf, f), columns=list(QUAD_COLS))
-            for f in sorted(os.listdir(leaf))
-            if f.endswith(".parquet")
-        ]
-        return pa.concat_tables(parts) if parts else _arrow_table([])
+        parts = [_arrow_table([])]
+        for leaf in (os.path.join(self.files_dir, e) for e in entries):
+            for f in sorted(os.listdir(leaf)):
+                if f.endswith(".parquet"):
+                    with pq.ParquetFile(os.path.join(leaf, f)) as pf:
+                        parts.append(pf.read(columns=list(QUAD_COLS)).cast(parts[0].schema))
+        return pa.concat_tables(parts)
 
-    def _write_leaves(self, rows_by_bucket: dict[int, list[tuple]]) -> list[str]:
-        """Write one pyarrow leaf per non-empty bucket under a fresh uuid
-        dir; return the manifest entries."""
+    def _write_leaves(self, tables_by_bucket: dict) -> list[str]:
+        """Write one pyarrow leaf per non-empty bucket table under a fresh
+        uuid dir; return the manifest entries."""
         import pyarrow.parquet as pq
 
         name = uuid.uuid4().hex
         entries = []
-        for b, rows in sorted(rows_by_bucket.items()):
-            if not rows:
+        for b, table in sorted(tables_by_bucket.items()):
+            if not table.num_rows:
                 continue
             leaf = os.path.join(self.files_dir, name, f"bucket={b}")
             os.makedirs(leaf, exist_ok=True)
             # no ARROW:schema footer entry (~0.6 KB a leaf): every reader
             # goes by the parquet schema
             pq.write_table(
-                _arrow_table(rows), os.path.join(leaf, "part-00000.parquet"),
-                store_schema=False,
+                table, os.path.join(leaf, "part-00000.parquet"), store_schema=False
             )
-            _LEAF_ROWS[leaf] = len(rows)
+            _LEAF_ROWS[leaf] = table.num_rows
             entries.append(f"{name}/bucket={b}")
         return entries
 
@@ -594,18 +632,20 @@ class QuadStore:
         untouched = [f for f in manifest["files"] if f not in set(merge)]
         return self._swap(manifest, untouched + new_entries, merge, None)
 
-    def _retire(self, manifest: dict, drop_files: list[str]) -> None:
+    def _retire(self, manifest: dict, drop_files: list[str], grace: int | None = None) -> None:
         """Tombstone newly dropped leaves at the (already incremented)
-        manifest version and physically delete only tombstones older than
-        ``grace_versions`` — readers of recent snapshots keep their files.
-        Runs before the manifest swap; a crash in between just leaves
-        tombstones pointing at already-deleted paths, which re-delete as
-        no-ops next time."""
+        manifest version and physically delete the tombstones that are
+        ``grace`` (default ``grace_versions``) versions old and that no
+        live in-process snapshot lists.  Runs under ``_PINS_LOCK``, before
+        the manifest swap; a crash in between just leaves tombstones
+        pointing at already-deleted paths, which re-delete as no-ops next
+        time."""
         version = manifest["version"]
-        tombstones = manifest["tombstones"] + [[f, version] for f in drop_files]
+        grace = self.grace_versions if grace is None else grace
+        pinned = {f for files in _PINS.get(self._key, {}).values() for f in files}
         keep: list[list] = []
-        for f, dropped_at in tombstones:
-            if version - dropped_at >= self.grace_versions:
+        for f, dropped_at in manifest["tombstones"] + [[f, version] for f in drop_files]:
+            if version - dropped_at >= grace and f not in pinned:
                 self._delete_leaf(f)
             else:
                 keep.append([f, dropped_at])
@@ -613,15 +653,15 @@ class QuadStore:
 
     def vacuum(self) -> int:
         """Delete every tombstoned leaf regardless of age (admin op, like
-        Delta VACUUM with retention 0).  Returns the number removed."""
+        Delta VACUUM with retention 0), except those a live in-process
+        snapshot still reads.  Returns the number removed."""
         with self._write_lock:
             manifest = self._read_manifest()
             n = len(manifest["tombstones"])
-            for f, _dropped_at in manifest["tombstones"]:
-                self._delete_leaf(f)
-            manifest["tombstones"] = []
-            self._write_manifest(manifest)
-            return n
+            with _PINS_LOCK:
+                self._retire(manifest, [], grace=0)
+                self._write_manifest(manifest)
+            return n - len(manifest["tombstones"])
 
     def _delete_leaf(self, f: str) -> None:
         import shutil
@@ -632,7 +672,9 @@ class QuadStore:
 
 
 class Snapshot:
-    """One committed version's leaf list, read from the manifest once.
+    """One committed version's leaf list, read from the manifest once and
+    pinned: no commit in this process deletes a leaf it lists until
+    ``release()`` is called or the snapshot is garbage-collected.
 
     ``small`` holds when the version has at most the store's
     ``SMALL_COMMIT_ROWS`` rows, summed from leaf footers (memoized, so an
@@ -643,10 +685,15 @@ class Snapshot:
     — one Spark job where the file-split layout needs a shuffle stage or
     a second scan."""
 
-    def __init__(self, spark: SparkSession, store: QuadStore, files: list[str]):
+    def __init__(self, spark: SparkSession, store: QuadStore):
         self.spark = spark
         self.store = store
-        self.files = files
+        token = next(_PIN_TOKENS)
+        with _PINS_LOCK:
+            self.files = store._read_manifest()["files"]
+            _PINS.setdefault(store._key, {})[token] = self.files
+        # idempotent: the first call (or collection) unpins
+        self.release = weakref.finalize(self, _unpin, store._key, token)
         rows = sum(store._entry_row_count(f) for f in self.files)
         self.small = rows <= store.SMALL_COMMIT_ROWS
 

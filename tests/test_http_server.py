@@ -12,7 +12,7 @@ from urllib.parse import quote
 import pytest
 
 from jena_fuseki_kafka_spark.server import SparqlHttpServer
-from jena_fuseki_kafka_spark.store import QuadStore
+from jena_fuseki_kafka_spark.store import QuadStore, quad_frame
 from jena_fuseki_kafka_spark.store.xxh64 import spark_bucket
 
 EX = "http://example.org/"
@@ -350,6 +350,25 @@ class TestUpdateAndPatch:
         assert code == 200
         n = int(json.loads(body)["results"]["bindings"][0]["C"]["value"])
         assert n >= 2
+
+
+class TestServerRestart:
+    def test_writes_after_restart_land_with_fresh_bnodes(self, spark, tmp_path):
+        """HTTP writes carry no transaction id, so a new server over the
+        same store neither skips its writes as replays of the old
+        server's nor mints the blank-node labels the old one did."""
+        path = str(tmp_path / "quads")
+        update = f"INSERT DATA {{ <{EX}a> <{EX}p> _:b }}"
+        for k in range(2):
+            store = QuadStore(path)
+            srv = SparqlHttpServer(spark, store)
+            srv.run_update(store, update)
+            srv.apply_patch(store, f'TX .\nA <{EX}s{k}> <{EX}p> "{k}" .\nTC .\n'.encode(),
+                            "application/rdf-patch")
+        rows = store.read(spark).collect()
+        assert {r.subject for r in rows if r.predicate == f"{EX}p"} >= {f"{EX}s0", f"{EX}s1"}
+        labels = [r.object_value for r in rows if r.subject == f"{EX}a"]
+        assert len(labels) == 2 and len(set(labels)) == 2, labels
 
 
 class TestWriteFailures:
@@ -853,12 +872,15 @@ class TestReadJobCounts:
 
     def test_reads_past_32_leaves_list_no_files(self, spark, loaded, count_jobs):
         """Spark lists more than 32 paths with a job of its own; the
-        manifest already names every leaf, so no read may pay for one."""
+        manifest already names every leaf, so no read may pay for one.
+        The leaves come from Spark-tier DataFrame commits, which append a
+        leaf per touched bucket (the shape ingest writes; a driver-tier
+        commit merges each bucket it changes into one leaf)."""
         srv, store = loaded
         for k in range(40):
-            store.commit(spark, adds=seed_rows(1, graph=self.G, value=lambda i: f"x{k}")
-                         + [(self.G, f"{EX}n{k}", f"{EX}p", "literal", "n", None, None)],
-                         txn_id=f"small-{k}")
+            rows = (seed_rows(1, graph=self.G, value=lambda i: f"x{k}")
+                    + [(self.G, f"{EX}n{k}", f"{EX}p", "literal", "n", None, None)])
+            store.commit(spark, adds=quad_frame(spark, rows), txn_id=f"small-{k}")
         assert len(store._read_manifest()["files"]) > 32
         jobs, body = count_jobs(lambda: "".join(srv.gsp_read(store, self.G)[1]))
         assert body.count("\n") == 20 + 40 + 40

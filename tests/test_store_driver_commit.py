@@ -19,6 +19,7 @@ no Spark job — is pinned by counting jobs.
 from __future__ import annotations
 
 import hashlib
+import json
 
 import pytest
 from pyspark.sql import functions as F
@@ -71,6 +72,13 @@ def _snapshot(spark, store):
     return sorted(tuple(r) for r in store.read(spark).collect())
 
 
+def _leaves_by_bucket(store) -> dict[int, list[str]]:
+    out: dict[int, list[str]] = {}
+    for f in store._read_manifest()["files"]:
+        out.setdefault(store._bucket_of(f), []).append(f)
+    return out
+
+
 XSD_STRING = "http://www.w3.org/2001/XMLSchema#string"
 G = "http://e/g"
 # the gate-boundary probes shrink both size gates (instance overrides) so
@@ -92,7 +100,8 @@ def test_commit_sequence_snapshot_parity(
     (BROADCAST_MAX_ROWS forced to 0) must produce the same snapshots —
     closed forms here, identical for every parametrization — and every
     commit must run in the tier the size gates pick (driver tier = no
-    Spark job)."""
+    Spark job).  After a driver-tier commit every bucket it changed holds
+    exactly one leaf, and the leaves of every other bucket carry over."""
     store = QuadStore(str(tmp_path / "seq"), n_buckets=4)
     if force_spark:
         store.DRIVER_COMMIT_ROWS = -1  # instance override: never driver-commit
@@ -100,8 +109,15 @@ def test_commit_sequence_snapshot_parity(
         store.BROADCAST_MAX_ROWS = broadcast_max_rows
 
     def commit(target=store, driver=not force_spark, **kw):
+        before = _leaves_by_bucket(target)
         jobs, version = count_jobs(lambda: target.commit(spark, **kw))
         assert (jobs == 0) == driver, (kw.get("txn_id"), jobs)
+        if driver:
+            after = _leaves_by_bucket(target)
+            for b in set(before) | set(after):
+                if after.get(b) != before.get(b):
+                    assert len(after.get(b, ())) <= 1, (kw.get("txn_id"), b, after[b])
+                    assert not set(after.get(b, ())) & set(before.get(b, ()))
         return version
 
     nulls = _quads("l", 3, lang="en") + _quads("n", 3, dt=XSD_STRING)
@@ -241,3 +257,55 @@ def test_driver_path_actually_engages(spark, tmp_path, count_jobs):
     expect = set(_quads("pre", 5)) - {_quads("pre", 3)[2]}
     expect.add(("", "http://e/pre2", "http://e/p", "literal", "m", None, None))
     assert _snapshot(spark, store) == sorted(expect)
+
+
+def test_thousand_small_commits_keep_one_leaf_per_bucket(spark, tmp_path, count_jobs):
+    """1,000 two-quad driver-tier commits (inserts, deletes and PATCH-style
+    add+delete pairs) on a Spark-written preload leave every bucket with
+    at most one leaf and the snapshot at its closed form, and the point,
+    COUNT and BGP reads stay at one Spark job each."""
+    store = QuadStore(str(tmp_path / "k"))
+    pre = _quads("pre", 400) + [
+        ("", f"http://e/pre{i}", "http://e/type", "iri", "http://e/C", None, None)
+        for i in range(350, 400)
+    ]
+    store.commit(spark, adds=spark.createDataFrame(pre, QUAD_SCHEMA), assume_unique=True)
+    model = set(pre)
+
+    def pair(k):
+        return [("", f"http://e/w{k}", f"http://e/{p}", "literal", f"{p}{k}", None, None)
+                for p in "ab"]
+
+    def play():
+        nonlocal model
+        for k in range(1000):
+            if k % 3 == 0:  # insert two quads
+                adds, dels = pair(k), []
+            elif k % 3 == 1:  # delete the two the previous commit inserted
+                adds, dels = [], pair(k - 1)
+            else:  # PATCH-style: one add, one delete of a preload quad
+                adds, dels = pair(k)[:1], [pre[k // 3]]
+            store.commit(spark, adds=adds, deletes=dels)
+            model = (model - set(dels)) | set(adds)
+
+    jobs, _ = count_jobs(play)
+    assert jobs == 0
+    stats = store.stats()
+    assert stats["version"] == 1001
+    assert stats["max_leaves_per_bucket"] <= 1 and stats["leaves"] <= store.n_buckets
+    assert stats["tombstones"] <= 2 * store.grace_versions
+    assert _snapshot(spark, store) == sorted(model)
+
+    srv = SparqlHttpServer(spark, store)
+    reads = {
+        "point": ('SELECT ?o WHERE { <http://e/pre399> <http://e/p> ?o }', [{"o": "v399"}]),
+        "count": ("SELECT (COUNT(*) AS ?n) WHERE { ?s ?p ?o }", [{"n": str(len(model))}]),
+        "bgp": ("SELECT ?s ?v WHERE { ?s <http://e/type> <http://e/C> . ?s <http://e/p> ?v }",
+                [{"s": f"http://e/pre{i}", "v": f"v{i}"} for i in range(350, 400)]),
+    }
+    for name, (q, want) in reads.items():
+        jobs, body = count_jobs(lambda: "".join(srv.run_query(store, q)[1]))
+        got = [{k: v["value"] for k, v in b.items()} for b in json.loads(body)["results"]["bindings"]]
+        assert sorted(got, key=str) == sorted(want, key=str), name
+        assert jobs == 1, name
+    assert store.stats()["pinned_snapshots"] == 0

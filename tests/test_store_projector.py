@@ -6,6 +6,7 @@ routing with Dead-Letter-* headers (:345-374), good-prefix guarantee
 
 import datetime
 import os
+from pathlib import Path
 
 import pytest
 
@@ -483,9 +484,9 @@ class TestVacuumGrace:
 
 class TestRowCommit:
     """Row-tuple commits (the HTTP write path): set semantics and delete
-    correctness hold, a delete rewrites only the leaves holding a deleted
-    row, and a DataFrame on either side routes the commit to the Spark
-    tier."""
+    correctness hold, a commit rewrites only the buckets it changes, each
+    as one leaf, and a DataFrame on either side routes the commit to the
+    Spark tier."""
 
     def test_row_add_dedups_against_store(self, spark, tmp_path):
         store = QuadStore(str(tmp_path / "h"), n_buckets=4)
@@ -496,22 +497,48 @@ class TestRowCommit:
         assert store.count(spark) == 15  # overlap deduplicated
 
     def test_row_delete_rewrites_only_matching_leaves(self, spark, tmp_path):
+        from jena_fuseki_kafka_spark.store.xxh64 import spark_bucket
+
         store = QuadStore(str(tmp_path / "h2"), n_buckets=4)
         rows = [("", f"s{i}", "p", "iri", "o", None, None) for i in range(20)]
         store.commit(spark, adds=spark.createDataFrame(rows, QUAD_SCHEMA), txn_id="h1")
-        dels = [("", f"s{i}", "p", "iri", "o", None, None) for i in range(0, 20, 2)]
+
+        def leaf_bytes():
+            out = {}
+            for f in store._read_manifest()["files"]:
+                leaf = os.path.join(store.files_dir, f)
+                out[f] = {p.name: p.read_bytes() for p in Path(leaf).iterdir()}
+            return out
+
+        def changed_buckets(before, after):
+            # every other leaf carries over byte-identical; each changed
+            # bucket ends with exactly one (new) leaf
+            assert all(after[f] == before[f] for f in set(before) & set(after))
+            buckets = sorted(store._bucket_of(f) for f in set(after) - set(before))
+            assert all(store._bucket_of(f) in buckets for f in set(before) - set(after))
+            assert store.stats()["max_leaves_per_bucket"] == 1
+            return buckets
+
+        by_bucket = {}
+        for r in rows:
+            by_bucket.setdefault(spark_bucket(r[1], 4), []).append(r)
+        assert len(by_bucket) == 4
+        # delete from two of the four buckets: only those two change
+        b1, b2 = sorted(b for b, rs in by_bucket.items() if len(rs) > 2)[:2]
+        dels = by_bucket[b1][:2] + by_bucket[b2][:1]
+        before = leaf_bytes()
         store.commit(spark, deletes=dels, txn_id="h2")
-        assert store.count(spark) == 10
+        assert changed_buckets(before, leaf_bytes()) == [b1, b2]
+        assert store.count(spark) == 17
         left = {r.subject for r in store.read(spark).collect()}
-        assert left == {f"s{i}" for i in range(1, 20, 2)}
-        # a graph-scoped delete drops only the leaf holding the graph's
-        # one quad (it held nothing else, so no survivor leaf is written)
+        assert left == {r[1] for r in rows} - {d[1] for d in dels}
+        # an add lands in its bucket's one leaf; a graph-scoped delete then
+        # rewrites only the bucket that holds the graph's one quad
         store.commit(spark, adds=[("g", "s1", "p", "iri", "o", None, None)], txn_id="h3")
-        before = set(store._read_manifest()["files"])
+        before = leaf_bytes()
         store.commit(spark, deletes=[("g",)], txn_id="h4")
-        after = set(store._read_manifest()["files"])
-        assert after < before and len(before - after) == 1
-        assert store.count(spark) == 10
+        assert changed_buckets(before, leaf_bytes()) == [spark_bucket("s1", 4)]
+        assert store.count(spark) == 17
 
     def test_mixed_rows_and_dataframe_sides(self, spark, tmp_path):
         # a DataFrame side takes the commit to the Spark tier; the rows

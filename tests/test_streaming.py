@@ -483,8 +483,13 @@ class TestSecuredKafkaLifecycle:
         blob = json.dumps(st, default=str)
         for marker in self.SECRET_MARKERS:
             assert marker not in blob
-        # non-secret config still visible for operators
+        # non-secret config still visible for operators, and the store's
+        # layout (no properties in it)
         assert st["sec-ok"]["kafka_properties"]["security.protocol"] == "SASL_SSL"
+        assert st["sec-ok"]["store"] == eng.streams["sec-ok"].store.stats()
+        assert set(st["sec-ok"]["store"]) == {
+            "version", "leaves", "max_leaves_per_bucket", "tombstones", "pinned_snapshots",
+        }
         for s in eng.streams.values():
             s.query = None
 
