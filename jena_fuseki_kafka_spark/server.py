@@ -19,12 +19,19 @@ operations over the engine:
   PATCH     /{ds}/patch   RDF Patch body applied transactionally
   POST      /{ds}/patch   (same, for clients that can't send PATCH)
 
+and two of Fuseki's admin endpoints for the whole server:
+
+  GET       /$/ping       200 with the current time (liveness)
+  GET       /$/stats      JSON: each dataset's ``QuadStore.stats()``
+
 Single-process by design: this is the driver-side control surface (like
 Fuseki's HTTP layer in front of the store), not a data-plane service.
-A read runs as one Spark job on the cluster that writes its result under
-the store's ``_results`` directory before the status line is sent; the
-body is then streamed from those files and they are removed.  Writes
-hand the parsed rows to ``QuadStore.commit``, which applies
+A query runs as one Spark job on the cluster that writes its result
+under the store's ``_results`` directory before the status line is
+sent; the body is then streamed from those files and they are removed.
+A GSP read of a small store (``Snapshot.small``) runs no Spark job: the
+driver reads the graph's rows with pyarrow before the status line.
+Writes hand the parsed rows to ``QuadStore.commit``, which applies
 request-sized writes to a small store on the driver without a Spark job
 and everything else as Spark jobs.
 """
@@ -38,13 +45,14 @@ import shutil
 import threading
 import uuid
 import weakref
+from datetime import datetime, timezone
 from functools import partial
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from urllib.parse import parse_qs, urlparse
 
 from pyspark.sql import SparkSession, functions as F
 
-from .model import DEFAULT_GRAPH, RdfParseError
+from .model import DEFAULT_GRAPH, QUAD_COLS, RdfParseError
 from .rdf.content_types import parse_payload
 from .rdf.serialize import (
     iter_nquads,
@@ -84,6 +92,13 @@ def _part_order(name: str):
     return int(name.split("-", 2)[1]), name
 
 
+def _rows(batches, columns: list[str]):
+    """Result rows of Arrow record batches, named by ``columns``."""
+    for batch in batches:
+        for values in zip(*(c.to_pylist() for c in batch.columns)):
+            yield _ResultRow(zip(columns, values))
+
+
 def _read_rows(directory: str, columns: list[str]):
     """Rows of the parquet part files under ``directory``, partition by
     partition, so a sorted DataFrame reads back in its order."""
@@ -95,9 +110,7 @@ def _read_rows(directory: str, columns: list[str]):
     )
     for f in parts:
         with pq.ParquetFile(os.path.join(directory, f)) as pf:
-            for batch in pf.iter_batches(batch_size=RESULT_BATCH_ROWS):
-                for values in zip(*(c.to_pylist() for c in batch.columns)):
-                    yield _ResultRow(zip(columns, values))
+            yield from _rows(pf.iter_batches(batch_size=RESULT_BATCH_ROWS), columns)
 
 
 class _ResultBody:
@@ -195,6 +208,12 @@ class SparqlHttpServer:
             self._httpd = None
 
     # ------------------------------------------------------------ operations
+    def stats(self) -> dict:
+        """The ``/$/stats`` document: each dataset's store layout
+        (``QuadStore.stats``), keyed by its service path as Fuseki keys
+        it.  Nothing from a connector's configuration is in it."""
+        return {"datasets": {f"/{name}": s.stats() for name, s in self.stores.items()}}
+
     def run_query(
         self,
         store: QuadStore,
@@ -245,13 +264,25 @@ class SparqlHttpServer:
 
     def gsp_read(self, store: QuadStore, graph: str | None, accept: str | None = None):
         """Returns (content_type, chunk_iterator), computed before the
-        caller sends a status, as in ``run_query``.  A whole-dataset read in
-        a triple-only syntax (Turtle, RDF/XML) would silently flatten named
-        graphs into one graph — dataset negotiation skips triple-only
-        preferences (a wildcard picks TriG, like Fuseki) and refuses with
-        406 only when the client insists on exclusively lossy formats (the
-        graph= / default cases are fine: the client named the one graph it
-        wants)."""
+        caller sends a status, as in ``run_query``.  ``graph`` is an IRI,
+        ``"default"``, or None for the whole dataset.
+
+        A small snapshot (``Snapshot.small``) is read on the driver with
+        one ``pyarrow.dataset`` read filtered on the graph, with no Spark
+        job and no ``_results`` spill; the read is done and the snapshot
+        released before this returns, so a failure still answers 500.  A
+        larger one is read by one Spark job, like a query's result.  The
+        subject-grouped syntaxes get their rows sorted by (graph, subject)
+        on either path.
+
+        A whole-dataset read in a triple-only syntax (Turtle, RDF/XML)
+        would silently flatten named graphs into one graph — dataset
+        negotiation skips triple-only preferences (a wildcard picks TriG,
+        like Fuseki) and refuses with 406 only when the client insists on
+        exclusively lossy formats (the graph= / default cases are fine:
+        the client named the one graph it wants)."""
+        import pyarrow.dataset as ds
+
         if graph is None:
             negotiated = negotiate_dataset_streamer(accept)
             if negotiated is None:
@@ -264,13 +295,17 @@ class SparqlHttpServer:
             stream, content_type = negotiated
         else:
             stream, content_type, _ = negotiate_graph_streamer(accept)
+        target = DEFAULT_GRAPH if graph == "default" else graph
         snapshot = store.snapshot(self.spark)
         try:
+            if snapshot.small:
+                table = snapshot.arrow(None if target is None else ds.field("graph") == target)
+                if stream is not iter_nquads:
+                    table = table.sort_by([("graph", "ascending"), ("subject", "ascending")])
+                return content_type, stream(_rows(table.to_batches(RESULT_BATCH_ROWS), QUAD_COLS))
             df = snapshot.scan()
-            if graph == "default":
-                df = df.filter(F.col("graph") == DEFAULT_GRAPH)
-            elif graph:
-                df = df.filter(F.col("graph") == graph)
+            if target is not None:
+                df = df.filter(F.col("graph") == target)
             if stream is not iter_nquads:
                 df = df.orderBy("graph", "subject")
             return content_type, _ResultBody(store, df, stream)
@@ -412,6 +447,13 @@ def _make_handler(server: SparqlHttpServer):
 
         # ---------------------------------------------------- methods
         def do_GET(self):
+            path = urlparse(self.path).path
+            if path == "/$/ping":
+                return self._send(200, "text/plain", datetime.now(timezone.utc).isoformat() + "\n")
+            if path == "/$/stats":
+                return self._respond(lambda: self._send(
+                    200, "application/json", json.dumps(server.stats())
+                ))
             store, op, qs = self._route()
             if store is None:
                 return self._error(404, "unknown dataset")

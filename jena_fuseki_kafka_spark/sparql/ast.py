@@ -123,6 +123,8 @@ class SelectQuery:
     limit: int | None = None
     offset: int | None = None
     dataset: tuple | None = None
+    # {column name: SPARQL name} of variables the parser renamed apart
+    var_names: dict = field(default_factory=dict)
 
 @dataclass
 class AskQuery:

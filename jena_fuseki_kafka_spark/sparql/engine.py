@@ -64,7 +64,7 @@ class SparqlEngine:
         df = self._translator(ds).translate(ast)
         if isinstance(ast, AskQuery):
             return ast, df.count() > 0
-        return ast, df
+        return ast, _sparql_names(df, ast)
 
     def _translator(self, ds: tuple | None) -> Translator:
         """A translator over the query dataset ``ds``; a subject-pruned
@@ -86,7 +86,15 @@ class SparqlEngine:
             raise ValueError("select_values requires a SELECT query")
         ds = dataset if dataset is not None else ast.dataset
         df = self._translator(ds).translate(ast)
-        return df.select(*[F.col(c)["value"].alias(c) for c in df.columns])
+        return _sparql_names(df.select(*[F.col(c)["value"].alias(c) for c in df.columns]), ast)
+
+
+def _sparql_names(df: DataFrame, ast) -> DataFrame:
+    """``df`` with the columns of variables the parser renamed apart under
+    their SPARQL names again.  ``toDF`` renames by position, so ``s`` and
+    ``S`` can then sit side by side in the result."""
+    names = getattr(ast, "var_names", None)
+    return df.toDF(*(names.get(c, c) for c in df.columns)) if names else df
 
 
 def _scope_dataset(quads: DataFrame, ds: tuple | None) -> DataFrame:

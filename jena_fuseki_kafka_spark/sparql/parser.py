@@ -133,9 +133,36 @@ def _tokenize(text: str) -> list[str]:
     return toks
 
 
+def _rename_case_variants(toks: list[str]) -> dict[str, str]:
+    """Give each variable whose name case-folds onto an earlier one's
+    (``?S`` after ``?s``) a name of its own, in place: SPARQL variable
+    names are case-sensitive but Spark resolves column names without
+    case.  Returns {new name: SPARQL name} for the renamed ones, which
+    the engine puts back on the result's columns."""
+    is_var = lambda t: t[0] in "?$" and len(t) > 1  # noqa: E731
+    taken = {t[1:].lower() for t in toks if is_var(t)}
+    owner: dict[str, str] = {}  # folded name -> the variable that has it
+    alias: dict[str, str] = {}
+    for i, t in enumerate(toks):
+        if not is_var(t):
+            continue
+        name = t[1:]
+        if name not in alias:
+            alias[name] = name
+            if owner.setdefault(name.lower(), name) != name:
+                n = 1
+                while f"{name}_{n}".lower() in taken:
+                    n += 1
+                alias[name] = f"{name}_{n}"
+                taken.add(alias[name].lower())
+        toks[i] = t[0] + alias[name]
+    return {a: name for name, a in alias.items() if a != name}
+
+
 class SparqlParser:
     def __init__(self, text: str):
         self.toks = _tokenize(text)
+        self.var_names = _rename_case_variants(self.toks)
         self.i = 0
         self.prefixes: dict[str, str] = {}
         self.base = ""
@@ -197,6 +224,8 @@ class SparqlParser:
             raise RdfParseError(
                 f"sparql: unexpected trailing input {self.toks[self.i]!r}"
             )
+        if isinstance(q, SelectQuery):
+            q.var_names = self.var_names
         return q
 
     # ------------------------------------------------------------ forms

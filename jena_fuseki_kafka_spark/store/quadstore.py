@@ -510,43 +510,56 @@ class QuadStore:
         is.  Returns the new version, or None when the commit is over the
         tier's size gates.
 
-        Exact deletes and adds read only the buckets their subjects hash
+        Exact deletes and adds touch only the buckets their subjects hash
         to (the pure-Python xxh64 twin of Spark's xxhash64, parity-pinned
-        by test); a graph-scoped delete reads every bucket, and a bucket
-        it only filters stays in Arrow."""
+        by test).  Graphs are not bucketed, so a graph-scoped delete
+        first finds the buckets that hold the graph's rows, with one read
+        of every leaf filtered on the graph; only those buckets are read
+        in full.  A bucket it only filters stays in Arrow.  All touched
+        buckets are read in one read, then split by bucket."""
         import pyarrow as pa
         import pyarrow.compute as pc
+        import pyarrow.dataset as ds
 
         from .xxh64 import spark_bucket
 
-        graphs = pa.array(sorted({d[0] for d in deletes if len(d) == 1}), pa.string())
+        graphs = sorted({d[0] for d in deletes if len(d) == 1})
         del_set = {d for d in deletes if len(d) != 1}
         if max(len(adds), len(del_set)) > self.DRIVER_COMMIT_ROWS:
             return None
 
         scol = QUAD_COLS.index("subject")
-        subjects: dict[int, set[str]] = {}  # per touched bucket
+        subjects: dict[int, set[str]] = {}  # per bucket an add or delete names
         adds_by: dict[int, list[tuple]] = {}
         for r in [*del_set, *adds]:
             subjects.setdefault(spark_bucket(r[scol], self.n_buckets), set()).add(r[scol])
         for r in adds:
             adds_by.setdefault(spark_bucket(r[scol], self.n_buckets), []).append(r)
-        leaves: dict[int, list[str]] = {b: [] for b in subjects}
-        for f in manifest["files"]:
-            if len(graphs) or self._bucket_of(f) in subjects:
-                leaves.setdefault(self._bucket_of(f), []).append(f)
+        files = manifest["files"]
         try:
-            n_read = sum(self._entry_row_count(f) for fs in leaves.values() for f in fs)
+            # the graph lookup scans every leaf, so it is gated like a read
+            # of all of them
+            scanned = files if graphs else self._leaves_in(files, set(subjects))
+            n_read = sum(self._entry_row_count(f) for f in scanned)
         except OSError:
             return None
         if n_read > self.SMALL_COMMIT_ROWS:
             return None
 
+        touched = set(subjects)
+        if graphs:
+            in_graphs = ds.field("graph").isin(graphs)
+            held = self._read_leaves(files, in_graphs, ["bucket"]).column("bucket")
+            touched.update(pc.unique(held).to_pylist())
+        leaves = {b: self._leaves_in(files, {b}) for b in touched}
+        table = self._read_leaves(
+            [f for fs in leaves.values() for f in fs], columns=[*QUAD_COLS, "bucket"]
+        )
         merged = {}
-        for b, entries in leaves.items():
-            new = old = self._read_leaves(entries)
-            if len(graphs):
-                new = old.filter(pc.invert(pc.is_in(old["graph"], value_set=graphs)))
+        for b in leaves:
+            new = old = table.filter(pc.equal(table["bucket"], b)).drop_columns("bucket")
+            if graphs:
+                new = old.filter(pc.invert(pc.is_in(old["graph"], value_set=pa.array(graphs))))
             changed = new.num_rows < old.num_rows
             if b in subjects:
                 # only rows sharing a subject with an add or a delete can
@@ -563,22 +576,35 @@ class QuadStore:
             if changed:
                 merged[b] = new
         drop = [f for b in merged for f in leaves[b]]
-        carried = [f for f in manifest["files"] if self._bucket_of(f) not in merged]
+        carried = [f for f in files if self._bucket_of(f) not in merged]
         return self._swap(manifest, carried + self._write_leaves(merged), drop, txn_id)
 
-    def _read_leaves(self, entries: list[str]):
-        """Bucket leaves as one pyarrow table of QUAD_COLS in one schema,
-        whatever the writer's nullability flags and metadata."""
+    def _read_leaves(self, entries: list[str], filter=None, columns=QUAD_COLS):
+        """Leaves as one pyarrow table of ``columns``, in one schema
+        whatever the writer's nullability flags and metadata: a single
+        ``pyarrow.dataset`` read of every leaf's part files, with
+        ``filter`` (a ``pyarrow.dataset`` expression) pushed into the
+        scan.  ``bucket`` is a column too, taken from each leaf's
+        ``bucket=N`` directory.  The driver's one reader of the store:
+        the driver commit tier and ``Snapshot.arrow`` both use it."""
         import pyarrow as pa
-        import pyarrow.parquet as pq
+        import pyarrow.dataset as ds
 
-        parts = [_arrow_table([])]
-        for leaf in (os.path.join(self.files_dir, e) for e in entries):
-            for f in sorted(os.listdir(leaf)):
-                if f.endswith(".parquet"):
-                    with pq.ParquetFile(os.path.join(leaf, f)) as pf:
-                        parts.append(pf.read(columns=list(QUAD_COLS)).cast(parts[0].schema))
-        return pa.concat_tables(parts)
+        parts = [
+            os.path.join(leaf, f)
+            for leaf in (os.path.join(self.files_dir, e) for e in entries)
+            for f in os.listdir(leaf)
+            if f.endswith(".parquet")
+        ]
+        bucket = pa.field("bucket", pa.int32())
+        dataset = ds.dataset(
+            parts,
+            schema=_arrow_table(()).schema.append(bucket),
+            format="parquet",
+            partitioning=ds.partitioning(pa.schema([bucket]), flavor="hive"),
+            partition_base_dir=self.files_dir,
+        )
+        return dataset.to_table(columns=list(columns), filter=filter)
 
     def _write_leaves(self, tables_by_bucket: dict) -> list[str]:
         """Write one pyarrow leaf per non-empty bucket table under a fresh
@@ -714,3 +740,10 @@ class Snapshot:
         else:
             df = quad_frame(self.spark, ())
         return df.coalesce(1) if self.small else df
+
+    def arrow(self, filter=None):
+        """Every row (matching ``filter``, a ``pyarrow.dataset``
+        expression) as one pyarrow table, read on the driver with one
+        ``pyarrow.dataset`` read: no Spark job.  Meant for ``small``
+        snapshots, as the table holds its rows in driver memory."""
+        return self.store._read_leaves(self.files, filter)

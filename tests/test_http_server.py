@@ -7,6 +7,7 @@ with the acceptance count query its e2e tests poll
 import json
 import os
 import urllib.request
+from collections import Counter
 from urllib.parse import quote
 
 import pytest
@@ -16,6 +17,7 @@ from jena_fuseki_kafka_spark.store import QuadStore, quad_frame
 from jena_fuseki_kafka_spark.store.xxh64 import spark_bucket
 
 EX = "http://example.org/"
+_JSON = "application/sparql-results+json"
 
 
 def req(url, method="GET", data=None, content_type=None, accept=None):
@@ -65,6 +67,32 @@ def corrupt_one_leaf(store):
         f.write(b"not a parquet file" * 64)
 
 
+def raw_get(url: str, target: str) -> tuple[bytes, bytes]:
+    """GET ``target`` over a bare socket, reading until the server closes:
+    (status line and headers, body as sent on the wire)."""
+    import socket
+    from urllib.parse import urlparse
+
+    u = urlparse(url)
+    with socket.create_connection((u.hostname, u.port), timeout=60) as sock:
+        sock.sendall(f"GET {target} HTTP/1.1\r\nHost: t\r\n\r\n".encode())
+        raw = b""
+        while data := sock.recv(65536):
+            raw += data
+    head, _, body = raw.partition(b"\r\n\r\n")
+    return head, body
+
+
+def assert_cut_after_headers(head: bytes, body: bytes, first: str, error: str):
+    """A 200 whose chunked body carries ``first`` and then stops: no
+    terminating chunk, no second status line, no error text."""
+    assert head.startswith(b"HTTP/1.1 200") and b"chunked" in head
+    assert body.startswith(f"{len(first.encode()):X}\r\n".encode())
+    assert first.encode() in body
+    assert b"HTTP/1." not in body and error.encode() not in body
+    assert not body.endswith(b"0\r\n\r\n")
+
+
 def spilled(store) -> list:
     """Result directories left under the store's ``_results``."""
     d = os.path.join(store.path, "_results")
@@ -103,6 +131,25 @@ class TestGraphStoreProtocol:
         assert code == 204
         _, _, body = req(f"{server}/data?graph={quote(g, safe='')}")
         assert body.strip() == ""
+
+
+class TestGraphStoreProtocolOverTheBound(TestGraphStoreProtocol):
+    """The same GSP round trips over a store whose reads take the Spark
+    path (``SMALL_COMMIT_ROWS`` 0) instead of the driver's Arrow read."""
+
+    G = quote(EX + "cngraph", safe="")
+
+    @pytest.fixture(scope="class")
+    def server(self, spark, tmp_path_factory):
+        store = QuadStore(str(tmp_path_factory.mktemp("http-spark") / "quads"))
+        store.SMALL_COMMIT_ROWS = 0
+        srv = SparqlHttpServer(spark, store, dataset="ds")
+        port = srv.start()
+        yield f"http://127.0.0.1:{port}/ds"
+        srv.stop()
+
+    def test_gsp_get_honors_accept(self, server):
+        TestContentNegotiation.test_gsp_get_honors_accept(self, server)
 
 
 class TestContentNegotiation:
@@ -423,10 +470,14 @@ class TestQueryFailures:
         assert code == 500 and "parquet" in body.lower(), (code, body[:500])
         assert spilled(store) == []  # the failed write left no result files
 
-    def test_failure_after_headers_leaves_body_unterminated(self, server, monkeypatch):
-        import socket
-        from urllib.parse import urlparse
+    def test_gsp_read_failure_on_a_small_store_is_500(self, own_server):
+        # the driver's Arrow read runs before the status line too
+        url, store = own_server
+        corrupt_one_leaf(store)
+        code, _, body = req(f"{url}/data?default")
+        assert code == 500 and "parquet" in body.lower(), (code, body[:500])
 
+    def test_failure_after_headers_leaves_body_unterminated(self, server, monkeypatch):
         first = "<http://example.org/a> <http://example.org/p> \"1\" .\n" * 2000
 
         def chunks():
@@ -437,18 +488,76 @@ class TestQueryFailures:
             SparqlHttpServer, "run_query",
             lambda self, *a, **k: ("application/n-quads", chunks()),
         )
-        url = urlparse(server)
-        with socket.create_connection((url.hostname, url.port), timeout=60) as sock:
-            sock.sendall(b"GET /ds/query?query=x HTTP/1.1\r\nHost: t\r\n\r\n")
-            raw = b""
-            while data := sock.recv(65536):
-                raw += data
-        head, _, body = raw.partition(b"\r\n\r\n")
-        assert head.startswith(b"HTTP/1.1 200") and b"chunked" in head
-        assert body.startswith(f"{len(first):X}\r\n".encode())
-        assert first.encode() in body
-        assert b"HTTP/1." not in body and b"executor lost" not in body
-        assert not body.endswith(b"0\r\n\r\n")
+        head, body = raw_get(server, "/ds/query?query=x")
+        assert_cut_after_headers(head, body, first, "executor lost")
+
+
+class TestSerializerFailures:
+    """A serializer that raises after the 200 went out, on each read path
+    that feeds one: the body stops without its terminating chunk (so no
+    client takes it for a complete result), and a spilled result is
+    still removed."""
+
+    @staticmethod
+    def cut(serializer, sent: list):
+        """``serializer`` cut short: its first chunk, repeated past the
+        64 KiB write buffer so it reaches the wire, and then a failure.
+        What it sent is appended to ``sent``."""
+        def serialize(*args):
+            chunk = next(serializer(*args))
+            sent.append(chunk * (65536 // len(chunk) + 1))
+            yield sent[0]
+            raise RuntimeError("serializer failed")
+        return serialize
+
+    @pytest.mark.parametrize("bound", [None, 0], ids=["driver", "spark"])
+    def test_gsp_read(self, spark, own_server, monkeypatch, bound):
+        from jena_fuseki_kafka_spark.rdf import serialize
+
+        url, store = own_server
+        if bound is not None:
+            store.SMALL_COMMIT_ROWS = bound
+        assert store.snapshot(spark).small == (bound is None)
+        sent = []
+        monkeypatch.setitem(serialize.GRAPH_STREAMERS, "application/n-quads",
+                            (self.cut(serialize.iter_nquads, sent), "application/n-quads", True))
+        head, body = raw_get(url, "/ds/data?default")
+        assert_cut_after_headers(head, body, sent[0], "serializer failed")
+        assert spilled(store) == []
+
+    def test_run_query(self, own_server, monkeypatch):
+        import jena_fuseki_kafka_spark.server as server_mod
+        from jena_fuseki_kafka_spark.rdf.serialize import ask_to_json, iter_select_json
+
+        url, store = own_server
+        sent = []
+        streamers = ((self.cut(iter_select_json, sent), ask_to_json), _JSON)
+        monkeypatch.setattr(server_mod, "negotiate_results_streamer", lambda accept: streamers)
+        q = quote(f"SELECT ?s ?o WHERE {{ ?s <{EX}p> ?o }}", safe="")
+        head, body = raw_get(url, f"/ds/query?query={q}")
+        assert_cut_after_headers(head, body, sent[0], "serializer failed")
+        assert spilled(store) == []
+
+
+class TestAdminEndpoints:
+    """Fuseki's ``/$/ping`` and ``/$/stats`` on the same server."""
+
+    def test_ping_answers_a_timestamp(self, server):
+        from datetime import datetime
+
+        code, ct, body = req(server.rsplit("/", 1)[0] + "/$/ping")
+        assert code == 200 and ct.startswith("text/plain")
+        assert datetime.fromisoformat(body.strip()).tzinfo is not None
+
+    def test_stats_has_each_store(self, server):
+        code, ct, body = req(server.rsplit("/", 1)[0] + "/$/stats")
+        assert code == 200 and ct.startswith("application/json")
+        datasets = json.loads(body)["datasets"]
+        assert list(datasets) == ["/ds"]
+        assert set(datasets["/ds"]) == {
+            "version", "leaves", "max_leaves_per_bucket", "tombstones", "pinned_snapshots",
+        }
+        assert datasets["/ds"]["version"] >= 0
 
 
 class TestServiceFederation:
@@ -753,6 +862,25 @@ class TestResultSpill:
         assert {x["s"]["value"] for x in b} == {f"{EX}s{i}" for i in range(200)}
         assert not any("S" in x for x in b)
 
+    def test_case_variant_variables_both_bound(self, own_server):
+        url, _ = own_server
+        q = f"SELECT ?s ?S WHERE {{ ?s <{EX}p> ?S }}"
+        code, _, body = req(f"{url}/query", "POST", q.encode(), "application/sparql-query")
+        assert code == 200, body[:500]
+        res = json.loads(body)
+        assert res["head"]["vars"] == ["s", "S"]
+        got = {(b["s"]["value"], b["S"]["value"]) for b in res["results"]["bindings"]}
+        assert got == {(f"{EX}s{i}", f"v{i}") for i in range(200)}
+
+    def test_bind_to_a_case_variant_keeps_the_original(self, own_server):
+        url, _ = own_server
+        q = f"SELECT ?s ?S WHERE {{ ?s <{EX}p> ?o BIND(?o AS ?S) }}"
+        code, _, body = req(f"{url}/query", "POST", q.encode(), "application/sparql-query")
+        assert code == 200, body[:500]
+        got = {(b["s"]["value"], b["S"]["value"])
+               for b in json.loads(body)["results"]["bindings"]}
+        assert got == {(f"{EX}s{i}", f"v{i}") for i in range(200)}
+
     def test_order_by_spread_over_files_arrives_in_order(self, spark, own_server):
         import glob
 
@@ -882,9 +1010,11 @@ class TestReadJobCounts:
                     + [(self.G, f"{EX}n{k}", f"{EX}p", "literal", "n", None, None)])
             store.commit(spark, adds=quad_frame(spark, rows), txn_id=f"small-{k}")
         assert len(store._read_manifest()["files"]) > 32
+        store.SMALL_COMMIT_ROWS = 0  # the GSP read's Spark path
         jobs, body = count_jobs(lambda: "".join(srv.gsp_read(store, self.G)[1]))
         assert body.count("\n") == 20 + 40 + 40
         assert jobs == 1
+        del store.SMALL_COMMIT_ROWS
         s = f"{EX}s7"
         jobs, _ = count_jobs(lambda: srv.run_update(
             store, f'DELETE {{ <{s}> <{EX}p> ?o }} INSERT {{ <{s}> <{EX}p> "m" }} '
@@ -901,9 +1031,17 @@ class TestReadJobCounts:
 
     def test_gsp_get_of_one_graph_is_one_job(self, loaded, count_jobs):
         srv, store = loaded
+        store.SMALL_COMMIT_ROWS = 0  # over the bound: the Spark path
         jobs, body = count_jobs(lambda: "".join(srv.gsp_read(store, self.G)[1]))
         assert body.count("\n") == 20
         assert jobs == 1
+
+    def test_gsp_get_of_one_graph_on_a_small_store_runs_no_job(self, loaded, count_jobs):
+        srv, store = loaded
+        jobs, body = count_jobs(lambda: "".join(srv.gsp_read(store, self.G)[1]))
+        assert body.count("\n") == 20
+        assert jobs == 0
+        assert spilled(store) == []
 
     def test_count_by_graph_is_one_job(self, loaded, count_jobs):
         srv, store = loaded
@@ -931,3 +1069,75 @@ class TestReadJobCounts:
         assert jobs == 1
         got = {(r.graph, r.object_value) for r in store.read(spark).collect() if r.subject == s}
         assert got == {("", "m"), (self.G, "v7")}
+
+
+class TestGspReadPaths:
+    """``gsp_read`` at the size bound (the driver's Arrow read, no job)
+    and one row under it (one Spark job) answers the same, for every
+    negotiated syntax and every selector.  The store mixes bnode
+    subjects and objects, language-tagged and typed literals, an escaped
+    string, and a Spark-written leaf whose columns are marked not null
+    next to driver-written ones."""
+
+    G = f"{EX}diff"
+    SYNTAXES = ("application/n-quads", "text/turtle", "application/trig",
+                "application/ld+json", "application/rdf+xml")
+
+    @pytest.fixture(scope="class")
+    def store(self, spark, tmp_path_factory):
+        import pyarrow.parquet as pq
+
+        store = QuadStore(str(tmp_path_factory.mktemp("gsp-paths") / "quads"))
+        spark_rows = [(g, f"{EX}d{i}", f"{EX}p", "literal", str(i), f"{XSD}integer", None)
+                      for i in range(40) for g in ("", self.G)]
+        store.commit(spark, adds=quad_frame(spark, spark_rows), txn_id="spark-tier")
+        leaf = os.path.join(store.files_dir, store._read_manifest()["files"][0])
+        part = next(f for f in os.listdir(leaf) if f.endswith(".parquet"))
+        assert not pq.read_schema(os.path.join(leaf, part)).field("subject").nullable
+        driver_rows = []
+        for g in ("", self.G, f"{EX}other"):
+            driver_rows += [
+                (g, "_:b1", f"{EX}name", "literal", "chat", None, "fr"),
+                (g, "_:b1", f"{EX}name", "literal", "cat", None, "en-GB"),
+                (g, "_:b1", f"{EX}knows", "bnode", "_:b2", None, None),
+                (g, "_:b2", f"{EX}when", "literal", "2024-01-01", f"{XSD}date", None),
+                (g, f"{EX}d3", f"{EX}note", "literal", 'say "hi"\nbye', None, None),
+                (g, f"{EX}d3", f"{EX}link", "iri", f"{EX}d4", None, None),
+            ]
+        store.commit(spark, adds=driver_rows)
+        return store
+
+    @pytest.mark.parametrize("selector", ["graph", "default", "dataset", "absent"])
+    def test_driver_and_spark_reads_agree(self, spark, store, count_jobs, selector):
+        from jena_fuseki_kafka_spark.rdf.content_types import parse_payload
+        from jena_fuseki_kafka_spark.server import NotAcceptable
+
+        graph = {"graph": self.G, "default": "default", "dataset": None,
+                 "absent": f"{EX}absent"}[selector]
+        srv = SparqlHttpServer(spark, store)
+        rows = store.count(spark)
+
+        def read(accept, bound):
+            store.SMALL_COMMIT_ROWS = bound
+            try:
+                ct, chunks = srv.gsp_read(store, graph, accept)
+                return ct, "".join(chunks)
+            finally:
+                del store.SMALL_COMMIT_ROWS
+
+        for accept in self.SYNTAXES:
+            if graph is None and accept in ("text/turtle", "application/rdf+xml"):
+                for bound in (rows, rows - 1):
+                    with pytest.raises(NotAcceptable):
+                        read(accept, bound)
+                continue
+            got = []
+            for bound in (rows, rows - 1):
+                jobs, (ct, body) = count_jobs(lambda: read(accept, bound))
+                assert (jobs == 0) == (bound == rows), (accept, bound, jobs)
+                if accept == "application/n-quads":
+                    got.append(Counter(body.splitlines()))
+                else:
+                    got.append(sorted(parse_payload(body, ct), key=repr))
+            assert got[0] == got[1], (selector, accept)
+            assert (len(got[0]) == 0) == (selector == "absent"), (selector, accept)

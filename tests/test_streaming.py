@@ -493,6 +493,37 @@ class TestSecuredKafkaLifecycle:
         for s in eng.streams.values():
             s.query = None
 
+    def test_no_http_endpoint_returns_a_secret(self, spark, tmp_path):
+        # the admin endpoints describe the engine's datasets; none of
+        # them, nor a dataset endpoint, may echo a connector property
+        import json
+        import urllib.error
+        import urllib.request
+
+        from jena_fuseki_kafka_spark.server import SparqlHttpServer
+
+        eng = Engine(spark)
+        conn = make_conn(tmp_path, name="sec-http", kafka_properties=self._secured_props(tmp_path))
+        eng.add_connector(conn, source=file_stream(spark, str(tmp_path)))
+        srv = SparqlHttpServer.from_engine(eng)
+        base = f"http://127.0.0.1:{srv.start()}"
+        try:
+            seen = []
+            for path in ("/$/ping", "/$/stats", "/ds/data", "/ds/query?query=ASK%7B%7D",
+                         "/ds/status", "/$/nope", "/sec-http/data"):
+                try:
+                    with urllib.request.urlopen(base + path) as resp:
+                        seen.append((resp.status, str(resp.headers), resp.read().decode()))
+                except urllib.error.HTTPError as e:
+                    seen.append((e.code, str(e.headers), e.read().decode()))
+        finally:
+            srv.stop()
+        assert [code for code, _, _ in seen[:4]] == [200, 200, 200, 200]
+        assert "/ds" in json.loads(seen[1][2])["datasets"]
+        blob = repr(seen)
+        for marker in self.SECRET_MARKERS:
+            assert marker not in blob
+
 
 class TestEngineToHttp:
     def test_ingest_then_serve_over_http(self, spark, tmp_path):
