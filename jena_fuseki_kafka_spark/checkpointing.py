@@ -6,7 +6,7 @@ legs) truncate lineage so plans do not grow per iteration and shared
 work is not recomputed.  ``localCheckpoint`` is the default: it writes
 to executor-local block storage — no distributed filesystem round-trip,
 which is the right trade on a static cluster and the only option in a
-checkpoint-dir-less test session.  Its documented weakness (PLANS.md,
+checkpoint-dir-less test session.  Its documented weakness (history/PLANS.md,
 VERDICT r13/r14 "keep on the radar"): blocks are NON-replicated, so an
 executor lost mid-query fails the query instead of recomputing — under
 dynamic allocation or spot/preemptible executors that is a real

@@ -316,227 +316,4 @@ from . import skew  # noqa: E402,F401
 from . import multimodal_surface  # noqa: E402,F401
 from . import update_gate  # noqa: E402,F401
 
-# Gates whose implementation is changed by the round named in the ROUND
-# marker (r16): the rotation contract — "queries whose implementation
-# changed this round go first" — is linted mechanically by
-# tests/test_registry_contract.py::test_touched_gates_inside_check_window,
-# which asserts this list is a subset of the 50-slot window below.  The
-# r15 slip this guards against: t11/q26/q28/m07 changed in r15 but sat in
-# the tail under a stale "code untouched" comment, so their driver
-# verdicts described the old code (VERDICT r15 item 1).  Maintained by
-# hand as changes land; adding a name here without rotating it into the
-# window turns the suite red.
-ROUND_TOUCHED = [
-    # r15-touched, missed the r15 window — re-verify THIS round
-    "t11_bigram_lm_perplexity",
-    "q26_cohort_retention",
-    "q28_set_operations",
-    "m07_image_phash_neardup",
-    # r16 optimization touches
-    "r04_sparql_engine_group_by",
-    "r05_property_path_closure",
-    "r06_optional_bind_coalesce",
-    "r07_not_exists_antijoin",
-    "r09_values_inline_data",
-    "r12_group_concat",
-    "r13_subselect",
-    "r14_degree_histogram",
-    "r15_optional_unbound_compat",
-    "r16_from_named_dataset",
-    "r17_minus_compat",
-    "r18_negated_property_set",
-    "d02_minhash_lsh",
-    "d06_dedup_clusters",
-    "d10_incremental_corpus_dedup",
-    "s09_semdedup_prune",
-    "u01_update_sequence",
-    # r16 session 2: s06 consumes _near_dup(ordered=False) (its body
-    # changed, not just a shared helper); t11/t12/s02 moved their model
-    # tables to const_array (t11 already listed above via the r15 miss)
-    "s06_embedding_dup_clusters",
-    "t12_classifier_quality_filter",
-    "s02_ann_lsh_bucketed",
-    # r16 session 3: connected_components gained the bounded-size driver
-    # union-find fast path — its three consumers are touched gates.
-    # d06/s06 already listed above; p04 sits in the window's mandatory
-    # r13-remainder block.
-    "p04_leakage_safe_split",
-]
-
-# Explicit registration order.  The correctness driver checks the first 50
-# registered queries per round, so ordering is part of the verification
-# contract: queries without a prior driver verdict, and queries whose
-# implementation changed this round, go first; queries already driver-green
-# in a previous round rotate to the tail.  Anything registered but unlisted
-# is by definition brand-new (no verdict at all), so it sorts BEFORE the
-# listed names — inside the check window, never silently dropped past it.
-_CHECK_PRIORITY = [
-    # ---- r16 window (first 50; unlisted queries sort ahead of all of
-    # these and take slots off the end of the window).
-    # Window math (r16, second optimization round): 26 mandatory (the
-    # r13-green remainder — age 3 at this check if skipped) + 4 r15-
-    # touched re-verifications (t11/q26/q28/m07 changed in r15 but
-    # missed the r15 window — VERDICT r15 item 1a) + 20 r16-touched
-    # slots (ROUND_TOUCHED above: the SPARQL aggregate/closure paths,
-    # the d-family materialization points, s06/s09, u01, and the
-    # const_array model-table gates t12/s02) = 50 exactly.  The
-    # s03/s03b blast-radius spares of the first window cut were
-    # displaced by the actually-touched t12/s02 (both spares are
-    # r15-window-green and their code paths default to the old
-    # behavior; age 1, safe until r18).
-    # ---- r13-green remainder: age 3 at the r16 check if skipped —
-    # MUST lead (staleness rule; rotation_planner's mandatory set) ----
-    "s01_ann_bruteforce_topk",
-    "m01_image_features",
-    "st01_streaming_tumbling_window",
-    "st02_streaming_dedup_count",
-    "m02_audio_features",
-    "m05_scene_changes",
-    "m06_audio_vad_segments",
-    "p04_leakage_safe_split",
-    "p05_sequence_packing",
-    "p07_packing_efficiency_census",
-    "q01_pricing_summary",
-    "q08_union_all_parts_suppliers",
-    "q09_distinct_projection",
-    "q10_aggregate_functions",
-    "q12_subquery_above_avg",
-    "q13_values_inline_join",
-    "q14_window_top_order_per_cust",
-    "q17_string_functions",
-    "q19_disjunctive_predicate_join",
-    "q24_exact_percentiles",
-    "q31_grouping_sets",
-    "q36_per_group_outlier_filter",
-    "q38_approx_percentile",
-    "t07_repetition_ratio",
-    "t08_pii_scrub",
-    "t10_char_entropy",
-    # ---- r15-touched re-verifications (VERDICT r15 item 1a) ----
-    "t11_bigram_lm_perplexity",
-    "q26_cohort_retention",
-    "q28_set_operations",
-    "m07_image_phash_neardup",
-    # ---- r16-touched (ROUND_TOUCHED; this round's optimization
-    # commits: the SPARQL aggregate/closure paths, the d-family
-    # materialization points, s09, and the QuadStore commit path) ----
-    "r04_sparql_engine_group_by",
-    "r05_property_path_closure",
-    "r06_optional_bind_coalesce",
-    "r07_not_exists_antijoin",
-    "r09_values_inline_data",
-    "r12_group_concat",
-    "r13_subselect",
-    "r14_degree_histogram",
-    "r15_optional_unbound_compat",
-    "r16_from_named_dataset",
-    "r17_minus_compat",
-    "r18_negated_property_set",
-    "d02_minhash_lsh",
-    "d06_dedup_clusters",
-    "d10_incremental_corpus_dedup",
-    "s09_semdedup_prune",
-    "u01_update_sequence",
-    # ---- r16 session-2 touches: s06's body consumes the new
-    # ordered=False pair relation; t12/s02 moved their literal model
-    # tables to const_array.  These displaced the s03/s03b spares
-    # (r15-window-green, code paths behaviorally untouched — the
-    # ordered parameter defaults to the old behavior for them; age 1,
-    # safe until r18), because actually-touched gates outrank
-    # blast-radius spares for window slots. ----
-    "s06_embedding_dup_clusters",
-    "t12_classifier_quality_filter",
-    "s02_ann_lsh_bucketed",
-    # ---- window boundary here (50 above) ----
-    # r15-green, untouched this round (age 1 — safe until r18) ----
-    "s03_embedding_near_dup",
-    "s03b_embedding_near_dup_lowt",
-    "d04_ngram_jaccard_blocked",
-    "d07_minhash_estimator_fidelity",
-    "p01_stratified_sample",
-    "p03_mixture_rebalance",
-    "p06_time_embargo_split",
-    "p08_epoch_mixture_plan",
-    "q05_order_priority_count",
-    "q06_customers_without_orders",
-    "q07_optional_left_join",
-    "q11_order_offset_pagination",
-    "q15_rollup_revenue",
-    "q20_tumbling_window_hourly",
-    "q25_cube_aggregation",
-    "r01_sparql_acceptance_count",
-    "r03_graph_quantification",
-    "r08_construct_quads",
-    "r10_ask",
-    "r11_describe_subject",
-    "s04_ann_ivf",
-    "s05_ann_recall_gate",
-    "s07_int8_quantization",
-    "s08_prefix_dim_rerank",
-    "s10_incremental_ann_admission",
-    "s11_pq_adc_topk",
-    "st03_streaming_session_window",
-    "st05_streaming_static_enrichment",
-    "st06_streaming_late_data_drop",
-    "st09_streaming_bounded_dedup",
-    "st10_streaming_file_sink_exactly_once",
-    "st11_foreachbatch_merge_exactly_once",
-    "t01_language_id",
-    # r14-green, untouched since (age 2 — r17's mandatory floor) ----
-    "d01_exact_dedup",
-    "d03_simhash",
-    "d05_decontamination",
-    "d08_substring_span_dedup",
-    "d09_duplication_fraction",
-    "d11_fuzzy_decontamination",
-    "m03_video_frame_sample",
-    "m04_frame_dedup",
-    "m08_image_resize_facets",
-    "p02_curation_pipeline",
-    "q02_top_revenue_orders",
-    "q03_local_supplier_volume",
-    "q04_forecast_revenue",
-    "q16_conditional_agg_case",
-    "q18_multi_join_part_supplier_stats",
-    "q21_sessionization",
-    "q22_json_props_extract",
-    "q23_funnel_signup_to_purchase",
-    "q27_sliding_window",
-    "q29_asof_join",
-    "q30_interval_join",
-    "q32_approx_distinct",
-    "q33_semi_anti_join",
-    "q34_lead_lag_ntile",
-    "q35_salted_skew_agg",
-    "q37_running_frames",
-    "q39_correlated_scalar_subquery",
-    "q40_salted_fact_dim_join",
-    "q41_pivot_wide_metrics",
-    "q42_changelog_latest_compaction",
-    "q43_scd2_validity_intervals",
-    "q44_incremental_agg_merge",
-    "r02_bgp_join_filter",
-    "st04_streaming_first_seen",
-    "st07_stream_stream_join",
-    "st08_stream_stream_outer_join",
-    "t02_quality_score",
-    "t03_token_count",
-    "t04_fingerprint",
-    "t05_feature_hash_embedding",
-    "t06_topk_bigrams_per_lang",
-    "t09_url_domain_stats",
-]
-
-
-def _apply_check_priority() -> None:
-    ordered = [n for n in QUERIES if n not in _CHECK_PRIORITY]
-    ordered += [n for n in _CHECK_PRIORITY if n in QUERIES]
-    for mapping in (QUERIES, ORACLES):
-        snapshot = dict(mapping)
-        mapping.clear()
-        mapping.update({n: snapshot[n] for n in ordered if n in snapshot})
-
-
-_apply_check_priority()
-
 __all__ = ["QUERIES", "ORACLES", "query", "load"]

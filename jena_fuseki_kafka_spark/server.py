@@ -26,9 +26,14 @@ and two of Fuseki's admin endpoints for the whole server:
 
 Single-process by design: this is the driver-side control surface (like
 Fuseki's HTTP layer in front of the store), not a data-plane service.
-A query runs as one Spark job on the cluster that writes its result
-under the store's ``_results`` directory before the status line is
-sent; the body is then streamed from those files and they are removed.
+A query runs as Spark jobs on the cluster that write its result under
+the store's ``_results`` directory before the status line is sent; the
+body is then streamed from those files and they are removed.  On a small
+store that is one job.  Over ``SMALL_COMMIT_ROWS`` each shuffle stage of
+the plan is its own job, and a read in a subject-grouped syntax (Turtle,
+TriG, JSON-LD, RDF/XML) first sorts with ``orderBy("graph", "subject")``,
+which adds two: the range-partition sample and the sort's shuffle.  So a
+GSP GET in Turtle costs 3 jobs there, and a CONSTRUCT in Turtle 4.
 A GSP read of a small store (``Snapshot.small``) runs no Spark job: the
 driver reads the graph's rows with pyarrow before the status line.
 Writes hand the parsed rows to ``QuadStore.commit``, which applies
@@ -115,14 +120,15 @@ def _read_rows(directory: str, columns: list[str]):
 
 class _ResultBody:
     """The chunk iterator of one HTTP read.  Constructing it runs the
-    read's one Spark job: ``df`` is written once as parquet under
-    ``<store.path>/_results/<uuid>``, every partition in parallel, before
-    the caller sends a status line.  Column names are positional
-    (``_0.._n``) on disk, since Spark's case-insensitive writer refuses
-    SPARQL's distinct ``?s`` and ``?S``.  Iterating runs ``serialize``
-    over the rows read back from those files, so the body depends on
-    neither the store's files nor Spark once headers are out.  The
-    directory is removed when the body ends, fails or is closed, and
+    read's Spark jobs (one, plus one per shuffle stage and one for a
+    distributed ``orderBy``'s range sample): ``df`` is written once as
+    parquet under ``<store.path>/_results/<uuid>``, every partition in
+    parallel, before the caller sends a status line.  Column names are
+    positional (``_0.._n``) on disk, since Spark's case-insensitive
+    writer refuses SPARQL's distinct ``?s`` and ``?S``.  Iterating runs
+    ``serialize`` over the rows read back from those files, so the body
+    depends on neither the store's files nor Spark once headers are out.
+    The directory is removed when the body ends, fails or is closed, and
     failing all three when the iterator is collected."""
 
     def __init__(self, store: QuadStore, df, serialize):
@@ -222,18 +228,18 @@ class SparqlHttpServer:
         dataset: tuple | None = None,
     ):
         """Returns (content_type, chunk_iterator).  The result is computed
-        here, before the caller sends a status: one Spark job writes it
-        under the store's ``_results`` directory (``_ResultBody``), so an
-        execution failure raises from this call, and the iterator then
-        streams it off disk one Arrow batch at a time.  The HTTP layer
-        writes chunked, so a store-sized CONSTRUCT or SELECT never
-        materializes on the driver.
+        here, before the caller sends a status: its Spark jobs (one on a
+        small store; see the module docstring) write it under the store's
+        ``_results`` directory (``_ResultBody``), so an execution failure
+        raises from this call, and the iterator then streams it off disk
+        one Arrow batch at a time.  The HTTP layer writes chunked, so a
+        store-sized CONSTRUCT or SELECT never materializes on the driver.
 
         ``dataset`` carries the SPARQL 1.1 Protocol ``default-graph-uri`` /
         ``named-graph-uri`` parameters, which override FROM clauses.
 
-        The store snapshot the query reads stays pinned until its one job
-        has run, however many commits land meanwhile."""
+        The store snapshot the query reads stays pinned until its jobs
+        have run, however many commits land meanwhile."""
         engine = SparqlEngine.from_store(self.spark, store)
         try:
             ast, result = engine.query_typed(text, dataset=dataset)
@@ -271,9 +277,10 @@ class SparqlHttpServer:
         one ``pyarrow.dataset`` read filtered on the graph, with no Spark
         job and no ``_results`` spill; the read is done and the snapshot
         released before this returns, so a failure still answers 500.  A
-        larger one is read by one Spark job, like a query's result.  The
-        subject-grouped syntaxes get their rows sorted by (graph, subject)
-        on either path.
+        larger one is read by Spark, like a query's result: one job for
+        N-Quads.  The subject-grouped syntaxes get their rows sorted by
+        (graph, subject) on either path; on the Spark path that sort is a
+        distributed ``orderBy``, so the read costs 3 jobs.
 
         A whole-dataset read in a triple-only syntax (Turtle, RDF/XML)
         would silently flatten named graphs into one graph — dataset
@@ -346,6 +353,9 @@ def _make_handler(server: SparqlHttpServer):
         # (every response sends Content-Length or Transfer-Encoding, as the
         # protocol requires for persistent connections)
         protocol_version = "HTTP/1.1"
+        # headers and body (or each chunk) go out as separate writes; with
+        # Nagle on, each response would wait for the client's delayed ACK
+        disable_nagle_algorithm = True
 
         def log_message(self, fmt, *args):  # quiet
             pass

@@ -37,6 +37,7 @@ from ..model import DEFAULT_GRAPH, QUAD_COLS, RdfParseError
 from ..store import QuadStore, quad_frame
 from ..store.quadstore import _anti_join_quads
 from .ast import BGP
+from .engine import _scope_dataset
 from .parser import SparqlParser
 from .translate import Translator
 
@@ -548,18 +549,10 @@ class UpdateEngine:
         dataset = pending.view()
         graph_arg = None
         if using or using_named:
-            # USING builds the pattern's dataset: default graph := union of
-            # USING graphs (relabeled), named graphs := the USING NAMED set.
-            # WITH is ignored for the pattern.
-            parts = []
-            if using:
-                parts.append(
-                    dataset.filter(F.col("graph").isin(*using))
-                    .withColumn("graph", F.lit(DEFAULT_GRAPH))
-                )
-            if using_named:
-                parts.append(dataset.filter(F.col("graph").isin(*using_named)))
-            dataset = reduce(DataFrame.unionByName, parts)
+            # USING builds the pattern's dataset as FROM does a query's:
+            # default graph := merge of the USING graphs, named graphs :=
+            # the USING NAMED set.  WITH is ignored for the pattern.
+            dataset = _scope_dataset(dataset, (using, using_named))
         elif with_graph is not None:
             graph_arg = ("iri", with_graph)
         translator = Translator(dataset)

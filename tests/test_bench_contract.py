@@ -66,7 +66,7 @@ def test_line_is_superset_of_r15_line():
     import os
 
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    with open(os.path.join(repo, "BENCH_r15.json")) as f:
+    with open(os.path.join(repo, "history", "BENCH_r15.json")) as f:
         r15_rows = set(_json.load(f)["parsed"]["queries"])
     visible = {
         n for n in bench.HEADLINE + ["http_four_ops_roundtrip"]

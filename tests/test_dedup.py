@@ -12,7 +12,7 @@ import duckdb
 
 from pyspark.sql import functions as F
 
-from jena_fuseki_kafka_spark.queries import ORACLES, QUERIES, _CHECK_PRIORITY
+from jena_fuseki_kafka_spark.queries import ORACLES, QUERIES
 from jena_fuseki_kafka_spark.queries.dedup import D04_MAX_BLOCK_DOCS
 
 
@@ -70,7 +70,6 @@ def test_d04_over_cap_pairs_stay_within_one_block(spark, sf_dir):
 def test_d04_stays_oracle_gated():
     assert "d04_ngram_jaccard_blocked" in QUERIES
     assert "d04_ngram_jaccard_blocked" in ORACLES
-    assert "d04_ngram_jaccard_blocked" in _CHECK_PRIORITY
 
 
 class TestD08SubstringSpans:

@@ -549,6 +549,28 @@ class TestAdminEndpoints:
         assert code == 200 and ct.startswith("text/plain")
         assert datetime.fromisoformat(body.strip()).tzinfo is not None
 
+    def test_accepted_connections_set_tcp_nodelay(self, spark, tmp_path):
+        """Headers and body go out as separate writes; with Nagle on, each
+        response would wait for the client's delayed ACK (~40 ms)."""
+        import queue
+        import socket
+
+        srv = SparqlHttpServer(spark, QuadStore(str(tmp_path / "quads")))
+        port = srv.start()
+        httpd, nodelay = srv._httpd, queue.Queue()
+        finish = httpd.finish_request
+
+        def finish_and_probe(request, client_address):
+            finish(request, client_address)
+            nodelay.put(request.getsockopt(socket.IPPROTO_TCP, socket.TCP_NODELAY))
+
+        httpd.finish_request = finish_and_probe
+        try:
+            assert req(f"http://127.0.0.1:{port}/$/ping")[0] == 200
+            assert nodelay.get(timeout=30)
+        finally:
+            srv.stop()
+
     def test_stats_has_each_store(self, server):
         code, ct, body = req(server.rsplit("/", 1)[0] + "/$/stats")
         assert code == 200 and ct.startswith("application/json")

@@ -73,7 +73,7 @@ BNLJ_ALLOWED = {
 # Queries whose construction executes driver-side iterative jobs (fixpoint
 # loops, staged model fits) — sweeping them here would re-run those jobs on
 # every test session.  Each has an individual plan pin in test_plan_shape.py
-# or an algorithm-level bound documented in PLANS.md.
+# or an algorithm-level bound documented in history/PLANS.md.
 EXPENSIVE_ITERATIVE = {
     "d06_dedup_clusters",
     "s06_embedding_dup_clusters",
@@ -186,9 +186,8 @@ def test_oracle_column_names_match_spark(spark, duck, name):
     """The driver's compare sorts columns BY NAME before hashing, so a
     Spark/oracle alias drift is a guaranteed hash-mismatch even with
     identical values.  ``DESCRIBE <sql>`` binds the oracle without
-    executing it, so this catches alias drift in queries far outside the
-    current rotation window — where it would otherwise sit undetected
-    until the query's check slot comes up rounds later."""
+    executing it, so this catches alias drift in every registered query
+    without running a full oracle sweep."""
     from jena_fuseki_kafka_spark.queries import ORACLES
 
     if name not in ORACLES:

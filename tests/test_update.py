@@ -192,6 +192,20 @@ class TestUpdate:
         eng = SparqlEngine.from_store(spark, store)
         assert eng.query('PREFIX ex: <http://e/> ASK { ?s ex:name "Zed" }') is True
 
+    def test_using_merges_a_triple_in_two_graphs_once(self, spark, store, upd):
+        # the USING default graph is the RDF merge of the named graphs, as
+        # FROM's is: a triple stored in both counts once
+        upd.update(
+            "PREFIX ex: <http://e/> "
+            "INSERT DATA { GRAPH ex:g1 { ex:s ex:p 1 } GRAPH ex:g2 { ex:s ex:p 1 } }"
+        )
+        upd.update(
+            "PREFIX ex: <http://e/> INSERT { ex:r ex:n ?c } USING ex:g1 USING ex:g2 "
+            "WHERE { { SELECT (COUNT(*) AS ?c) WHERE { ?s ?p ?o } } }"
+        )
+        got = all_quads(spark, store)
+        assert {o for _, _, p, o in got if p == EX + "n"} == {"1"}
+
 
 class TestGraphStoreProtocol:
     """GSP semantics live in the server's operations; these drive them

@@ -33,7 +33,7 @@ tools/unicode_parity_probe.py, the measured partition must match
 EXPECTED_FAIL exactly (exit 0 iff it does), so the probe is a tripwire
 in both directions: a clean gate newly failing AND an expected-fail gate
 silently passing both flag.  Shrink the dicts as fixes land; gates whose
-fix must wait for their check-window rotation stay documented here.
+fix has not landed yet stay documented here.
 
 Usage: python tools/degenerate_corpus_probe.py [--corpus empty|edge] [gate ...]
 """
@@ -132,8 +132,7 @@ def _edge_embeddings():
 
 
 # gate -> reason it is EXPECTED to fail on the named corpus today.
-# Measured 2026-08-15 (r10).  Shrink as fixes land; fixes for gates
-# outside the current check window wait for their rotation.
+# Measured 2026-08-15 (r10).  Shrink as fixes land.
 EXPECTED_FAIL_EMPTY: dict[str, str] = {
     # FIXED r15 (was: Spark's Expand-based ROLLUP/CUBE yield 0 rows over
     # an EMPTY relation where ANSI and DuckDB emit the grand-total

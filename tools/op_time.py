@@ -4,7 +4,7 @@
 Times each named query with the noop sink (computes every column, no
 collect/driver transfer) after one warmup, and stamps the host speed with
 the bench's calibration job before and after — the host oscillates on
-minute timescales (PLANS.md r15 ledger), so paired readings must be
+minute timescales (history/PLANS.md, r15 ledger), so paired readings must be
 normalized by calibration to be comparable across runs.
 
 Usage: python tools/op_time.py [--repeats N] [--collect] query [query ...]
