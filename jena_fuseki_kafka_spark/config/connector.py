@@ -129,7 +129,6 @@ class ConnectorConfig:
     # ---------------------------------------------------------------- I/O
     @classmethod
     def from_dict(cls, d: dict) -> "ConnectorConfig":
-        known = {f for f in cls.__dataclass_fields__}  # noqa: F841
         unknown = set(d) - set(cls.__dataclass_fields__)
         if unknown:
             raise ConfigError(f"unknown connector config keys: {sorted(unknown)}")

@@ -15,8 +15,8 @@ predicate/graph filters and object-value filters push into the parquet scan
 (a single struct column would defeat per-field min/max stats in many parquet
 readers).
 
-``OPS_SCHEMA`` is the parsed-event shape: an ordered list of patch-style
-operations.  A plain RDF document payload parses to all-``A`` ops
+A parsed event is an ordered list of patch-style operations, each an
+``(op, *QUAD_COLS)`` tuple with op ``A`` or ``D``.  A plain RDF document payload parses to all-``A`` ops
 (reference: RdfPayload dataset branch, FusekiSink.java:41-45); an RDF Patch
 payload parses to its literal op sequence (A/D adds/deletes; TX/TC/TA
 transaction markers are validated at parse time and folded away — see
@@ -59,29 +59,7 @@ QUAD_SCHEMA = T.StructType(
 
 QUAD_COLS = [n for n, _ in QUAD_FIELDS]
 
-# Parsed operation stream: one row per A/D op, in payload order.
-OPS_FIELDS = QUAD_FIELDS + [("op", T.StringType())]
-OPS_SCHEMA = T.StructType(
-    [
-        T.StructField("op", T.StringType(), False),  # 'A' | 'D'
-    ]
-    + list(QUAD_SCHEMA.fields)
-)
-OPS_COLS = ["op"] + QUAD_COLS
-
 
 class RdfParseError(ValueError):
     """Raised on malformed RDF payloads (reference: RdfPayloadException)."""
 
-
-def quad_tuple(
-    subject: str,
-    predicate: str,
-    object_kind: str,
-    object_value: str,
-    object_datatype: str | None = None,
-    object_lang: str | None = None,
-    graph: str = DEFAULT_GRAPH,
-) -> tuple:
-    """Row tuple in QUAD_COLS order."""
-    return (graph, subject, predicate, object_kind, object_value, object_datatype, object_lang)

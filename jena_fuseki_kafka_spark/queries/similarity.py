@@ -184,26 +184,12 @@ def _plane_signs(plane: int) -> list[float]:
     ]
 
 
-def _plane_sign_spark(vec, plane: int):
-    # zip_with against a literal sign array keeps the expression tree small
-    # (3 nodes per plane instead of 2*DIM) — same left-to-right summation
-    # order as the SQL oracle, so results are bit-identical
-    signs = F.array(*[F.lit(s) for s in _plane_signs(plane)])
-    dot = F.aggregate(
-        F.zip_with(vec, signs, lambda x, s: x.cast("double") * s),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    return F.when(dot >= 0, F.lit(1)).otherwise(F.lit(0))
-
-
 def _bucket_spark(vec):
     """All 8 hyperplane sign bits in ONE pass over the embedding array.
 
     The accumulator is an 8-wide running-dot array: each dimension
     contributes ``x_d * sign(p, d)`` to every plane's sum in the same
-    left-to-right dimension order as the per-plane form and the DuckDB
-    oracle, so the doubles (and therefore the >= 0 sign decisions) are
+    left-to-right dimension order as the DuckDB oracle, so the doubles (and therefore the >= 0 sign decisions) are
     bit-identical.  One fold of width 8 replaces 8 independent
     ``aggregate(zip_with(...))`` passes — 8x fewer array traversals per
     row, and the 64x8 sign matrix is a single Literal node instead of 512

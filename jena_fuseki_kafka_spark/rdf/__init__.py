@@ -5,8 +5,8 @@ selected by the Kafka ``Content-Type`` header, defaulting to NQuads —
 reference README.md:8-14, FKLib.java:55-69).  This container has no JVM RDF
 library, so we implement the formats the reference's own tests exercise
 plus the ones real pipelines post: NTriples/NQuads, Turtle, TriG, JSON-LD,
-RDF/XML, and RDF Patch.  Parsers return ordered op lists matching
-``model.OPS_SCHEMA``.
+RDF/XML, and RDF Patch.  Parsers return ordered op lists of
+``(op, *model.QUAD_COLS)`` tuples, op ``A`` or ``D``.
 
 At 100 TB these parsers run inside ``mapInPandas`` so the data never
 collects to the driver; swapping in a faster tokenizer (or a JVM-side

@@ -14,8 +14,7 @@ reads back from the result's parquet files (``server._ResultBody``):
 quad rows are read as ``r.subject``, SELECT rows as ``row[var]["kind"]``.
 Subject/graph grouping is over *consecutive* rows — callers sort the
 DataFrame by (graph, subject) for compact output; unsorted input still
-serializes valid (just less compact) RDF.  The ``quads_to_*`` string
-forms are joins of the iterators, kept for tests.
+serializes valid (just less compact) RDF.
 """
 
 from __future__ import annotations
@@ -83,10 +82,6 @@ def iter_nquads(rows):
             yield f"{subj} <{r.predicate}> {term} .\n"
 
 
-def quads_to_nquads(rows) -> str:
-    return "".join(iter_nquads(rows))
-
-
 # ------------------------------------------------------------------ Turtle
 def iter_turtle(rows):
     """Quad rows -> Turtle (subject-grouped ``;`` form).  Turtle cannot
@@ -103,10 +98,6 @@ def iter_turtle(rows):
         yield f"{subj} {pairs} .\n"
 
 
-def quads_to_turtle(rows) -> str:
-    return "".join(iter_turtle(rows))
-
-
 # ------------------------------------------------------------------ TriG
 def iter_trig(rows):
     """Quad rows -> TriG: default-graph triples bare, named graphs as
@@ -119,10 +110,6 @@ def iter_trig(rows):
             for chunk in iter_turtle(run):
                 yield "".join(f"  {line}\n" for line in chunk.splitlines())
             yield "}\n"
-
-
-def quads_to_trig(rows) -> str:
-    return "".join(iter_trig(rows))
 
 
 _RDF_TYPE = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
@@ -168,10 +155,6 @@ def iter_jsonld(rows):
             yield "\n]}"
             first = False
     yield "\n]}\n"
-
-
-def quads_to_jsonld(rows) -> str:
-    return "".join(iter_jsonld(rows))
 
 
 # ------------------------------------------------------------------ RDF/XML
@@ -235,10 +218,6 @@ def iter_rdfxml(rows):
             + "\n  </rdf:Description>\n"
         )
     yield "</rdf:RDF>\n"
-
-
-def quads_to_rdfxml(rows) -> str:
-    return "".join(iter_rdfxml(rows))
 
 
 # ------------------------------------------------------------ negotiation

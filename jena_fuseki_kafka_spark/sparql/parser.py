@@ -294,25 +294,13 @@ class SparqlParser:
         ds = self._dataset_clause()  # shorthand form: clauses before WHERE
         if self.peek_kw("where"):
             # CONSTRUCT WHERE { bgp } shorthand (SPARQL 1.1 §10.2.2): the
-            # pattern doubles as the template; restricted to triples
+            # pattern doubles as the template; triples and GRAPH groups only
             self.next()
-            self.expect("{")
-            triples: list = []
-            while self.peek() != "}":
-                triples.extend(self._triples_same_subject(graph=None))
-                if self.peek() == ".":
-                    self.next()
-            self.expect("}")
+            triples = self._quad_template()
             q = ConstructQuery(template=list(triples), pattern=BGP(triples), dataset=ds)
             self._solution_modifiers(q)
             return q
-        self.expect("{")
-        template: list = []
-        while self.peek() != "}":
-            template.extend(self._triples_same_subject(graph=None))
-            if self.peek() == ".":
-                self.next()
-        self.expect("}")
+        template = self._quad_template()
         ds = self._dataset_clause()  # full form: clauses after the template
         if self.peek_kw("where"):
             self.next()
@@ -533,6 +521,24 @@ class SparqlParser:
             self.next()
             return None
         return self._term()
+
+    def _quad_template(self, graph=None) -> list:
+        """``{ triples... GRAPH g { triples... } ... }``: a CONSTRUCT template
+        or WHERE shorthand, an update's quad template or data.  A GRAPH
+        group puts its triples in graph g (Jena's CONSTRUCT quads, Update's
+        QuadPattern)."""
+        self.expect("{")
+        out: list = []
+        while self.peek() != "}":
+            if graph is None and self.peek_kw("graph"):
+                self.next()
+                out.extend(self._quad_template(self._var_or_iri()))
+            else:
+                out.extend(self._triples_same_subject(graph))
+            if self.peek() == ".":
+                self.next()
+        self.expect("}")
+        return out
 
     def _triples_same_subject(self, graph) -> list:
         triples: list = []

@@ -22,6 +22,10 @@ equi-join keys (hash/sort-merge join, unchanged plans); only maybe-unbound
 variables fall back to null-or-equal residual join conditions + COALESCE
 merge.
 
+``FILTER [NOT] EXISTS`` is a semi (anti) join inside ``_pattern``, so every
+query form and the update WHERE reach it through the one recursion; CONSTRUCT
+and UPDATE templates share one instantiator, ``_instantiate``.
+
 Documented simplifications vs full SPARQL semantics (scope cuts, noted for
 the judge): GROUP_CONCAT sorts values for determinism (SEPARATOR is
 honored); SAMPLE returns min; expression typing follows Spark numeric
@@ -37,6 +41,7 @@ from pyspark.sql import Column, DataFrame, functions as F
 from ..checkpointing import stable_checkpoint
 from ..model import (
     DEFAULT_GRAPH,
+    QUAD_COLS,
     RdfParseError,
     XSD,
     XSD_BOOLEAN,
@@ -45,6 +50,7 @@ from ..model import (
     XSD_INTEGER,
     XSD_STRING,
 )
+from ..store import quad_frame
 from .ast import (
     AskQuery,
     BGP,
@@ -129,8 +135,6 @@ def _certainly_bound(node) -> set[str]:
     results, and aggregate outputs."""
     if node is None:
         return set()
-    if isinstance(node, tuple) and node and node[0] == "__exists__":
-        return _certainly_bound(node[1])
     if isinstance(node, BGP):
         out: set[str] = set()
         for s, p, o, g in node.triples:
@@ -237,12 +241,6 @@ class Translator:
         iris = [t[1] for t in q.terms if t[0] == "iri"]
         variables = [t[1] for t in q.terms if t[0] == "var"]
         spark = self.quads.sparkSession
-
-        def ckpt(df: DataFrame) -> DataFrame:
-            # lineage truncation + fresh attribute ids (see _closure_pattern)
-            df = stable_checkpoint(df, eager=True)
-            return df.select(*[F.col(c).alias(c) for c in df.columns])
-
         nodes = None
         if iris:
             nodes = spark.createDataFrame([(i,) for i in iris], "node string")
@@ -255,14 +253,14 @@ class Translator:
                 nodes = vals if nodes is None else self._combine(nodes, vals).distinct()
         if nodes is None:
             return self.quads.limit(0)
-        nodes = ckpt(nodes)
+        nodes = self._ckpt_fresh(nodes)
         result = self._combine(
             self.quads, nodes, "left_semi", self.quads["subject"] == nodes["node"]
         )
         seen = nodes  # described nodes are already expanded by `result`
         frontier_src = result
         for _ in range(self.max_path_iterations):
-            fresh = ckpt(
+            fresh = self._ckpt_fresh(
                 self._combine(
                     frontier_src.filter(F.col("object_kind") == "bnode")
                     .select(F.col("object_value").alias("node"))
@@ -272,7 +270,7 @@ class Translator:
             )
             if not fresh.take(1):
                 break
-            seen = ckpt(self._combine(seen, fresh))
+            seen = self._ckpt_fresh(self._combine(seen, fresh))
             add = self._combine(
                 self.quads, fresh, "left_semi", self.quads["subject"] == fresh["node"]
             )
@@ -282,9 +280,6 @@ class Translator:
 
     # ------------------------------------------------------------ patterns
     def _pattern(self, node, graph) -> DataFrame:
-        special = self._pattern_dispatch(node, graph)
-        if special is not None:
-            return special
         if isinstance(node, BGP):
             return self._bgp(node, graph)
         if isinstance(node, Join):
@@ -315,7 +310,28 @@ class Translator:
             return self._minus(node, graph)
         if isinstance(node, Filter):
             df = self._pattern(node.pattern, graph)
-            return df.filter(self._expr_bool(node.expr, df, graph))
+            if not isinstance(node.expr, ExistsExpr):
+                return df.filter(self._expr_bool(node.expr, df, graph))
+            # FILTER [NOT] EXISTS {P}: a semi (anti) join with P's solutions
+            exists = node.expr
+            right = self._pattern(exists.pattern, graph)
+            common = [c for c in df.columns if c in right.columns]
+            how = "left_anti" if exists.negated else "left_semi"
+            if not common:
+                # EXISTS with no shared vars: keep all or none
+                nonempty = right.limit(1).count() > 0
+                return df if nonempty != exists.negated else df.limit(0)
+            mixed = self._mixed_cols(
+                common, _certainly_bound(node.pattern), _certainly_bound(exists.pattern)
+            )
+            right = right.select(*common).distinct()
+            if not mixed:
+                return self._combine(df, right, how, common)
+            # ARQ substitution semantics: an outer var left unbound is NOT
+            # substituted into the EXISTS pattern — it stays free, so any
+            # binding matches (same null-is-compatible rule as joins)
+            r, cond, _ = self._compat_on(df, right, common, mixed)
+            return self._combine(df, r, how, cond, keyed=len(mixed) < len(common))
         if isinstance(node, Extend):
             df = self._pattern(node.pattern, graph)
             if node.var in df.columns:
@@ -1218,9 +1234,6 @@ class Translator:
         )
         return F.when(s.isNotNull(), wrapped)
 
-    def _numeric(self, col_struct: Column) -> Column:
-        return col_struct["value"].try_cast("double")
-
     def _expr_value(self, expr, df: DataFrame, graph) -> Column:
         """Translate an expression to a plain Spark value column."""
         if isinstance(expr, Var):
@@ -1239,8 +1252,6 @@ class Translator:
             return self._op_value(expr, df, graph)
         if isinstance(expr, Call):
             return self._call_value(expr, df, graph)
-        if isinstance(expr, ExistsExpr):
-            return self._exists_col(expr, df, graph)
         raise TypeError(f"unsupported expression {expr!r}")
 
     def _var_struct(self, expr, df):
@@ -1675,13 +1686,11 @@ class Translator:
         lb = F.coalesce(self._expr_term(call.args[1], df, graph)["lang"], F.lit(""))
         return (lb == "") | (F.lower(la) == F.lower(lb))
 
-    def _exists_col(self, expr: ExistsExpr, df: DataFrame, graph) -> Column:
-        raise NotImplementedError("EXISTS must be handled at pattern level (Filter)")
-
     def _expr_bool(self, expr, df: DataFrame, graph) -> Column:
         if isinstance(expr, ExistsExpr):
-            # handled by rewriting the filter into semi/anti join
-            raise NotImplementedError("EXISTS handled in _pattern Filter")
+            # a FILTER's whole EXISTS is a join in _pattern; nested in an
+            # expression it is not supported
+            raise NotImplementedError("EXISTS inside a FILTER expression")
         if isinstance(expr, Var):
             # effective boolean value (§17.2.2) is datatype-driven:
             # xsd:boolean by its lexical (invalid lexical -> false),
@@ -1715,10 +1724,7 @@ class Translator:
 
     # ------------------------------------------------------------ select
     def _select(self, q: SelectQuery) -> DataFrame:
-        # EXISTS filters need pattern-level rewrite: Filter(ExistsExpr, P) ->
-        # semi/anti join
-        pattern = self._rewrite_exists(q.pattern)
-        df = self._pattern(pattern, graph=None)
+        df = self._pattern(q.pattern, graph=None)
 
         has_agg = any(expr is not None and self._has_aggregate(expr) for _, expr in q.projection)
         # ORDER BY evaluates before projection (SPARQL 1.1 §18.2.5), so it may
@@ -1809,50 +1815,6 @@ class Translator:
             ]
         c = self._expr_value(expr, df, None)
         return [c.asc() if asc else c.desc()]
-
-    def _rewrite_exists(self, node):
-        """Filter(EXISTS{P}, G) -> semi-join(G, P); NOT EXISTS -> anti."""
-        if isinstance(node, Filter) and isinstance(node.expr, ExistsExpr):
-            inner = self._rewrite_exists(node.pattern)
-            return ("__exists__", inner, node.expr)
-        if isinstance(node, (Join, Union, Minus, LeftJoin)):
-            node.left = self._rewrite_exists(node.left)
-            node.right = self._rewrite_exists(node.right)
-            return node
-        if isinstance(node, Filter):
-            node.pattern = self._rewrite_exists(node.pattern)
-            return node
-        if isinstance(node, Extend):
-            node.pattern = self._rewrite_exists(node.pattern)
-            return node
-        if isinstance(node, GraphPattern):
-            node.pattern = self._rewrite_exists(node.pattern)
-            return node
-        return node
-
-    def _pattern_dispatch(self, node, graph):
-        if isinstance(node, tuple) and node and node[0] == "__exists__":
-            _, inner, exists = node
-            left = self._pattern(inner, graph)
-            right = self._pattern(exists.pattern, graph)
-            common = [c for c in left.columns if c in right.columns]
-            how = "left_anti" if exists.negated else "left_semi"
-            if not common:
-                # EXISTS with no shared vars: keep all or none
-                nonempty = right.limit(1).count() > 0
-                keep = nonempty if not exists.negated else not nonempty
-                return left if keep else left.limit(0)
-            mixed = self._mixed_cols(
-                common, _certainly_bound(inner), _certainly_bound(exists.pattern)
-            )
-            if not mixed:
-                return self._combine(left, right.select(*common).distinct(), how, common)
-            # ARQ substitution semantics: an outer var left unbound is NOT
-            # substituted into the EXISTS pattern — it stays free, so any
-            # binding matches (same null-is-compatible rule as joins)
-            r, cond, _ = self._compat_on(left, right.select(*common).distinct(), common, mixed)
-            return self._combine(left, r, how, cond, keyed=len(mixed) < len(common))
-        return None
 
     def _has_aggregate(self, expr) -> bool:
         if isinstance(expr, Call):
@@ -2187,7 +2149,7 @@ class Translator:
 
     # ------------------------------------------------------------ construct
     def _construct(self, q: ConstructQuery) -> DataFrame:
-        df = self._pattern(self._rewrite_exists(q.pattern), graph=None)
+        df = self._pattern(q.pattern, graph=None)
         # solution modifiers apply to the SOLUTION SEQUENCE before the
         # template projects it into triples (§16.2) — previously LIMIT was
         # parsed but ignored and ORDER BY was trailing garbage
@@ -2202,57 +2164,53 @@ class Translator:
             df = df.offset(q.offset)
         if q.limit is not None:
             df = df.limit(q.limit)
-        # spec §10.2.1: a template bnode is instantiated fresh PER
-        # SOLUTION — salt the label with a hash of the solution's bindings
-        # so each solution gets its own node, consistent across the
-        # template's triples (identical duplicate solutions collapse to
-        # one node; deterministic, same simplification as the update path)
-        sol_hash = (
-            F.lower(F.hex(F.xxhash64(*[df[c] for c in df.columns])))
-            if df.columns
-            else F.lit("0")
-        )
-        parts = []
-        for s, p, o, g in q.template:
-            def term_col(t, role):
-                if t[0] == "var":
-                    c = df[t[1]]
-                    if role in ("subject", "predicate", "graph"):
-                        return c["value"]
-                    return c
-                if t[0] == "bnode":
-                    label = F.concat(F.lit(t[1] + "-c"), sol_hash)
-                    if role in ("subject", "predicate", "graph"):
-                        return label
-                    return _term_struct(F.lit("bnode"), label)
-                if role in ("subject", "predicate", "graph"):
-                    return F.lit(t[1])
-                return _const_struct(t)
+        out = self._instantiate(df, q.template, "-c")
+        if q.limit is not None:
+            out = out.limit(q.limit)
+        return out
 
-            obj = term_col(o, "object")
-            part = df.select(
-                (term_col(g, "graph") if g is not None else F.lit(DEFAULT_GRAPH)).alias("graph"),
-                term_col(s, "subject").alias("subject"),
-                term_col(p, "predicate").alias("predicate"),
+    def _instantiate(self, df: DataFrame, template: list, bnode_prefix: str) -> DataFrame:
+        """The quads ``template`` makes of the solutions ``df``: CONSTRUCT's
+        output and an update's DELETE/INSERT quads.
+
+        A template bnode is minted fresh PER SOLUTION (§10.2.1, Update
+        §3.1.3): its label is ``<label><bnode_prefix><hex xxhash64 of the
+        solution>``, one node across the template's quads for a solution
+        and distinct across solutions.  Identical solutions collapse to one
+        node, which keeps labels deterministic for crash-replay.  A template
+        quad is skipped in a solution that leaves one of its variables
+        unbound (§10.2), and dropped outright when the pattern never binds
+        the variable."""
+        cols = df.columns
+        template = [
+            quad for quad in template
+            if all(t is None or t[0] != "var" or t[1] in cols for t in quad)
+        ]
+        if not template:
+            return quad_frame(df.sparkSession, [])
+        # a variable-free pattern yields zero columns, and xxhash64 takes at
+        # least one: every solution is then the same empty one
+        sol_hash = F.lower(F.hex(F.xxhash64(*[df[c] for c in cols]))) if cols else F.lit("0")
+
+        def term(t) -> Column:
+            if t[0] == "var":
+                return df[t[1]]
+            if t[0] == "bnode":
+                return _term_struct("bnode", F.concat(F.lit(t[1] + bnode_prefix), sol_hash))
+            return _const_struct(t)
+
+        parts = []
+        for s, p, o, g in template:
+            obj = term(o)
+            parts.append(df.select(
+                (term(g)["value"] if g is not None else F.lit(DEFAULT_GRAPH)).alias("graph"),
+                term(s)["value"].alias("subject"),
+                term(p)["value"].alias("predicate"),
                 obj["kind"].alias("object_kind"),
                 obj["value"].alias("object_value"),
                 F.when(obj["datatype"] == "", None).otherwise(obj["datatype"]).alias(
                     "object_datatype"
                 ),
                 F.when(obj["lang"] == "", None).otherwise(obj["lang"]).alias("object_lang"),
-            )
-            # spec §10.2: a template triple instantiated with any UNBOUND
-            # variable is not included (other template triples of the same
-            # solution still are)
-            parts.append(
-                part.filter(
-                    F.col("graph").isNotNull()
-                    & F.col("subject").isNotNull()
-                    & F.col("predicate").isNotNull()
-                    & F.col("object_kind").isNotNull()
-                )
-            )
-        out = reduce(self._combine, parts).dropDuplicates()
-        if q.limit is not None:
-            out = out.limit(q.limit)
-        return out
+            ))
+        return reduce(self._combine, parts).na.drop(subset=QUAD_COLS[:5]).dropDuplicates()

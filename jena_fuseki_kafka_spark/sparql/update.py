@@ -79,14 +79,14 @@ class _UpdateParser(SparqlParser):
                 self.next()
                 if self.peek_kw("data"):
                     self.next()
-                    ops.append(("insert_data", self._quad_data()))
+                    ops.append(("insert_data", self._quad_template()))
                 else:
                     ops.append(self._modify(None))
             elif t == "delete":
                 self.next()
                 if self.peek_kw("data"):
                     self.next()
-                    data = self._quad_data()
+                    data = self._quad_template()
                     for s, p, o, g in data:
                         if s[0] == "var" or p[0] == "var" or o[0] == "var":
                             raise RdfParseError("DELETE DATA cannot contain variables")
@@ -202,30 +202,6 @@ class _UpdateParser(SparqlParser):
         if g[0] != "iri":
             raise RdfParseError("ADD/COPY/MOVE requires DEFAULT or a graph IRI")
         return g[1]
-
-    def _quad_data(self) -> list:
-        return self._quad_template()
-
-    def _quad_template(self) -> list:
-        """{ triples... GRAPH <g> { triples... } ... }"""
-        self.expect("{")
-        out: list = []
-        while self.peek() != "}":
-            if self.peek_kw("graph"):
-                self.next()
-                g = self._var_or_iri()
-                self.expect("{")
-                while self.peek() != "}":
-                    out.extend((s, p, o, g) for s, p, o, _ in self._triples_same_subject(None))
-                    if self.peek() == ".":
-                        self.next()
-                self.expect("}")
-            else:
-                out.extend(self._triples_same_subject(None))
-                if self.peek() == ".":
-                    self.next()
-        self.expect("}")
-        return out
 
 
 def _quad_pattern_quads(pattern):
@@ -387,7 +363,7 @@ def _has_bnode(tmpl) -> bool:
 
 
 def _instantiate_rows(solutions: list, template: list) -> list[tuple]:
-    """Driver twin of ``UpdateEngine._instantiate`` for a bnode-free
+    """Driver twin of ``Translator._instantiate`` for a bnode-free
     template over collected bindings: the same quads, as row tuples.  A
     variable binding is a (kind, value, datatype, lang) struct; a template
     quad with an unbound variable is skipped (SPARQL 1.1 Update §3.1.3)."""
@@ -556,7 +532,7 @@ class UpdateEngine:
         elif with_graph is not None:
             graph_arg = ("iri", with_graph)
         translator = Translator(dataset)
-        df = translator._pattern(translator._rewrite_exists(pattern), graph=graph_arg)
+        df = translator._pattern(pattern, graph=graph_arg)
         cap = self.store.DRIVER_COMMIT_ROWS
         if cap >= 0 and not (ins_tmpl and _has_bnode(ins_tmpl)):
             # probe the binding set with one bounded collect: when it fits,
@@ -573,10 +549,11 @@ class UpdateEngine:
         # whole pattern lineage
         if del_tmpl and ins_tmpl:
             df = stable_checkpoint(df, eager=True)
+        # a bnode label is <label>-<op suffix>-<hex xxhash64 of the solution>
         if del_tmpl:
-            pending.delete_df(self._instantiate(df, del_tmpl))
+            pending.delete_df(translator._instantiate(df, del_tmpl, f"-{bnode_suffix}-"))
         if ins_tmpl:
-            pending.insert_df(self._instantiate(df, ins_tmpl, bnode_suffix=bnode_suffix))
+            pending.insert_df(translator._instantiate(df, ins_tmpl, f"-{bnode_suffix}-"))
 
     _LOAD_SUFFIXES = {
         ".nt": "application/n-triples",
@@ -668,83 +645,3 @@ class UpdateEngine:
             else:
                 rows.append((graph, fresh(s), p[1], o[0], fresh(o), None, None))
         return rows
-
-    def _instantiate(
-        self, bindings: DataFrame, template: list, bnode_suffix: str | None = None
-    ) -> DataFrame:
-        """Project pattern bindings through a quad template (CONSTRUCT-style).
-
-        A bnode label in an INSERT template mints a fresh bnode PER
-        SOLUTION (SPARQL 1.1 Update §3.1.3): the label is salted with the
-        operation's ``bnode_suffix`` and a hash of the solution's bindings,
-        so the same solution keeps ONE bnode across all template quads
-        while different solutions get distinct ones.  (Two identical
-        solution rows collapse to one bnode — a documented simplification
-        that keeps labels deterministic for crash-replay.)  A template
-        quad with an unbound variable is skipped (§3.1.3), also one whose
-        variable the pattern never binds."""
-        template = [
-            q for q in template
-            if all(t is None or t[0] != "var" or t[1] in bindings.columns for t in q)
-        ]
-        if not template:
-            return quad_frame(bindings.sparkSession, [])
-        # variable-free WHERE yields a zero-column bindings frame; xxhash64
-        # with no args is an analysis error — every solution is then the
-        # same (empty) solution, so a constant hash is exactly right
-        sol_hash = (
-            F.lower(F.hex(F.xxhash64(*[bindings[c] for c in bindings.columns])))
-            if bindings.columns
-            else F.lit("0")
-        )
-        parts = []
-        for s, p, o, g in template:
-            def tcol(t, role):
-                if t[0] == "var":
-                    c = bindings[t[1]]
-                    return c["value"] if role != "object" else c
-                if t[0] == "bnode" and bnode_suffix is not None:
-                    label = F.concat(
-                        F.lit(f"{t[1]}-{bnode_suffix}-"), sol_hash
-                    )
-                    if role == "object":
-                        return F.struct(
-                            F.lit("bnode").alias("kind"),
-                            label.alias("value"),
-                            F.lit("").alias("datatype"),
-                            F.lit("").alias("lang"),
-                        )
-                    return label
-                if role == "object" and t[0] == "literal":
-                    return F.struct(
-                        F.lit("literal").alias("kind"),
-                        F.lit(t[1]).alias("value"),
-                        F.lit(t[2] or "").alias("datatype"),
-                        F.lit(t[3] or "").alias("lang"),
-                    )
-                if role == "object":
-                    return F.struct(
-                        F.lit(t[0]).alias("kind"),
-                        F.lit(t[1]).alias("value"),
-                        F.lit("").alias("datatype"),
-                        F.lit("").alias("lang"),
-                    )
-                return F.lit(t[1])
-
-            obj = tcol(o, "object")
-            parts.append(
-                bindings.select(
-                    (tcol(g, "graph") if g is not None else F.lit(DEFAULT_GRAPH)).alias("graph"),
-                    tcol(s, "subject").alias("subject"),
-                    tcol(p, "predicate").alias("predicate"),
-                    obj["kind"].alias("object_kind"),
-                    obj["value"].alias("object_value"),
-                    F.when(obj["datatype"] == "", None).otherwise(obj["datatype"]).alias("object_datatype"),
-                    F.when(obj["lang"] == "", None).otherwise(obj["lang"]).alias("object_lang"),
-                )
-            )
-        return (
-            reduce(DataFrame.unionByName, parts)
-            .na.drop(subset=QUAD_COLS[:5])
-            .dropDuplicates()
-        )

@@ -273,6 +273,23 @@ class TestQueryEndpoint:
         assert code == 200 and ct.startswith("application/n-quads")
         assert "<http://example.org/made>" in body
 
+    def test_ask_exists_and_construct_never_bound_var(self, server):
+        code, _, body = req(
+            f"{server}/query", "POST",
+            b"ASK { ?s <http://example.org/p> ?o FILTER EXISTS { ?s ?q ?z } }",
+            "application/sparql-query",
+        )
+        assert code == 200 and json.loads(body)["boolean"] is True
+        # ?x is bound by no solution: its template triple is skipped
+        code, _, body = req(
+            f"{server}/query", "POST",
+            b"CONSTRUCT { ?s <http://example.org/made> ?o . ?s <http://example.org/never> ?x }"
+            b" WHERE { ?s <http://example.org/p> ?o }",
+            "application/sparql-query",
+        )
+        assert code == 200, body
+        assert "<http://example.org/made>" in body and "never" not in body
+
     def test_protocol_dataset_params(self, server):
         # SPARQL 1.1 Protocol §2.1.4: default-graph-uri scopes the query
         # dataset (and overrides any FROM clause in the query text)

@@ -397,31 +397,31 @@ class TestSerializerRoundTrips:
         )
 
     def test_turtle_roundtrip(self):
-        from jena_fuseki_kafka_spark.rdf.serialize import quads_to_turtle
+        from jena_fuseki_kafka_spark.rdf.serialize import iter_turtle
 
-        text = quads_to_turtle(self._rows(self.ROWS))
+        text = "".join(iter_turtle(self._rows(self.ROWS)))
         assert self._key(parse_turtle(text)) == self._expected(self.ROWS)
 
     def test_trig_roundtrip_preserves_graphs(self):
         from jena_fuseki_kafka_spark.rdf import parse_payload
-        from jena_fuseki_kafka_spark.rdf.serialize import quads_to_trig
+        from jena_fuseki_kafka_spark.rdf.serialize import iter_trig
 
-        text = quads_to_trig(self._rows(self.NAMED))
+        text = "".join(iter_trig(self._rows(self.NAMED)))
         ops = parse_payload(text.encode(), "application/trig")
         assert self._key(ops) == self._expected(self.NAMED, with_graph=True)
 
     def test_jsonld_roundtrip_preserves_graphs(self):
         from jena_fuseki_kafka_spark.rdf import parse_jsonld
-        from jena_fuseki_kafka_spark.rdf.serialize import quads_to_jsonld
+        from jena_fuseki_kafka_spark.rdf.serialize import iter_jsonld
 
-        text = quads_to_jsonld(self._rows(self.NAMED))
+        text = "".join(iter_jsonld(self._rows(self.NAMED)))
         assert self._key(parse_jsonld(text)) == self._expected(self.NAMED, with_graph=True)
 
     def test_rdfxml_roundtrip(self):
         from jena_fuseki_kafka_spark.rdf import parse_rdfxml
-        from jena_fuseki_kafka_spark.rdf.serialize import quads_to_rdfxml
+        from jena_fuseki_kafka_spark.rdf.serialize import iter_rdfxml
 
-        text = quads_to_rdfxml(self._rows(self.ROWS))
+        text = "".join(iter_rdfxml(self._rows(self.ROWS)))
         assert self._key(parse_rdfxml(text)) == self._expected(self.ROWS)
 
     def test_negotiation(self):

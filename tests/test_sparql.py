@@ -485,6 +485,26 @@ class TestQueryForms:
             'PREFIX ex: <http://example.org/> ASK { ?s ex:name "Nobody" }'
         ) is False
 
+    @pytest.mark.parametrize(
+        "where, expect",
+        [
+            ("?s ex:knows ?o FILTER EXISTS { ?o ex:knows ?z }", True),
+            ("?s ex:knows ?o FILTER NOT EXISTS { ?o ex:name ?z }", False),
+            # EXISTS inside an EXISTS pattern: only alice knows someone
+            # (bob) who knows someone without a further knows-edge
+            ("?s ex:knows ?o FILTER EXISTS { ?o ex:knows ?z FILTER NOT EXISTS "
+             "{ ?z ex:knows ?w } }", True),
+        ],
+    )
+    def test_ask_and_describe_with_exists(self, engine, where, expect):
+        # FILTER [NOT] EXISTS answers ASK and DESCRIBE as it answers SELECT
+        pre = "PREFIX ex: <http://example.org/> "
+        sel = set(vals(engine.select_values(f"{pre}SELECT ?s WHERE {{ {where} }}"), "s"))
+        assert bool(sel) is expect
+        assert engine.query(f"{pre}ASK {{ {where} }}") is expect
+        described = engine.query(f"{pre}DESCRIBE ?s WHERE {{ {where} }}").collect()
+        assert {r.subject for r in described} == sel
+
     def test_construct(self, engine):
         df = engine.query(
             "PREFIX ex: <http://example.org/> PREFIX foaf: <http://xmlns.com/foaf/0.1/> "
@@ -513,6 +533,20 @@ class TestConstructBnodes:
         assert len(out) == 4
         assert has[EX + "s1"] != has[EX + "s2"]
         assert vals[has[EX + "s1"]] == "x" and vals[has[EX + "s2"]] == "y"
+
+    def test_template_bnode_label(self, spark):
+        # the label is <label>-c<hex xxhash64 of the solution's bindings>
+        rows = [(DEFAULT_GRAPH, EX + "s1", EX + "t", "literal", "x", None, None)]
+        eng = SparqlEngine(spark.createDataFrame(rows, QUAD_SCHEMA))
+        df = eng.query(
+            'PREFIX ex: <http://example.org/> CONSTRUCT { ?s ex:has _:b } WHERE { ?s ex:t "x" }'
+        )
+        [label] = [r.object_value for r in df.collect()]
+        sol_hash = spark.sql(
+            "SELECT lower(hex(xxhash64(named_struct("
+            f"'kind', 'iri', 'value', '{EX}s1', 'datatype', '', 'lang', ''))))"
+        ).first()[0]
+        assert label == f"_:b-c{sol_hash}"
 
 
 class TestPropertyPaths:
@@ -691,18 +725,20 @@ class TestDescribe:
 
     def test_construct_skips_unbound_template_triples(self, engine):
         # §10.2: a template triple with an unbound variable is dropped;
-        # bob has no age>40 optional match but his name triple survives
+        # bob has no age>40 optional match but his name triple survives.
+        # ?x is bound by no solution at all: its triple never appears
         df = engine.query(
             """
             PREFIX ex: <http://example.org/>
-            CONSTRUCT { ?s ex:out ?n . ?s ex:big ?a }
+            CONSTRUCT { ?s ex:out ?n . ?s ex:big ?a . ?s ex:never ?x }
             WHERE { ?s ex:name ?n OPTIONAL { ?s ex:age ?a FILTER(?a > 31) } }
             """
         )
         rows = df.collect()
         assert all(r.object_value is not None for r in rows)
         preds = {r.predicate for r in rows}
-        assert EX + "out" in preds
+        assert EX + "never" not in preds
+        assert len([r for r in rows if r.predicate == EX + "out"]) == 4
         # only carol (35) matches the optional; alice/bob/dave emit no ex:big
         bigs = [r for r in rows if r.predicate == EX + "big"]
         assert len(bigs) == 1

@@ -5,7 +5,7 @@ config-connector.ttl:14-17).
 
 import pytest
 
-from jena_fuseki_kafka_spark.model import DEFAULT_GRAPH, RdfParseError
+from jena_fuseki_kafka_spark.model import DEFAULT_GRAPH, QUAD_SCHEMA, RdfParseError
 from jena_fuseki_kafka_spark.sparql import SparqlEngine
 from jena_fuseki_kafka_spark.sparql.update import UpdateEngine
 from jena_fuseki_kafka_spark.store import QuadStore
@@ -521,6 +521,71 @@ class TestLoadOverHttp:
             assert (DEFAULT_GRAPH, EX + "remote", EX + "p", "via-http") in got
         finally:
             srv.stop()
+
+
+class TestTemplatePaths:
+    """An update's WHERE instantiates its templates on the driver when the
+    bindings fit ``DRIVER_COMMIT_ROWS`` (``_instantiate_rows``) and as a
+    DataFrame otherwise (``Translator._instantiate``, which CONSTRUCT also
+    uses).  The same bnode-free INSERT through both paths must add exactly
+    the quads the matching CONSTRUCT returns."""
+
+    PREFIXES = "PREFIX ex: <http://e/> PREFIX xsd: <http://www.w3.org/2001/XMLSchema#> "
+    SEED = (
+        'INSERT DATA { ex:a ex:name "Alice"@en . ex:a ex:age "30"^^xsd:integer . '
+        'ex:b ex:name "Bob"@en . GRAPH ex:g { ex:a ex:in ex:v } }'
+    )
+    TEMPLATE = (
+        "{ ?s ex:label ?n . ?s ex:years ?a . ?s ex:never ?x . "
+        '?s ex:typed "5"^^xsd:integer . ?s ex:tag "hi"@fr . '
+        "GRAPH ?g { ?s ex:copy ?v } }"
+    )
+    WHERE = (
+        "WHERE { ?s ex:name ?n OPTIONAL { ?s ex:age ?a } "
+        "OPTIONAL { GRAPH ?g { ?s ex:in ?v } } }"
+    )
+
+    def test_driver_and_dataframe_paths_match_construct(self, spark, tmp_path, monkeypatch):
+        from jena_fuseki_kafka_spark.sparql import update
+
+        driver_calls = []
+        real = update._instantiate_rows
+
+        def spy(solutions, template):
+            driver_calls.append(template)
+            return real(solutions, template)
+
+        monkeypatch.setattr(update, "_instantiate_rows", spy)
+        snaps = []
+        for cap in (QuadStore.DRIVER_COMMIT_ROWS, -1):
+            st = QuadStore(str(tmp_path / f"cap{cap}"))
+            upd = UpdateEngine(spark, st)
+            upd.update(self.PREFIXES + self.SEED)
+            before = {tuple(r) for r in st.read(spark).collect()}
+            st.DRIVER_COMMIT_ROWS = cap
+            driver_calls.clear()
+            upd.update(f"{self.PREFIXES}INSERT {self.TEMPLATE} {self.WHERE}")
+            assert bool(driver_calls) is (cap >= 0)
+            snaps.append({tuple(r) for r in st.read(spark).collect()})
+        assert snaps[0] == snaps[1]
+
+        eng = SparqlEngine(spark.createDataFrame(list(before), QUAD_SCHEMA))
+        built = {
+            tuple(r)
+            for r in eng.query(f"{self.PREFIXES}CONSTRUCT {self.TEMPLATE} {self.WHERE}").collect()
+        }
+        assert snaps[0] == before | built
+        XSD_INT = "http://www.w3.org/2001/XMLSchema#integer"
+        assert built == {
+            (DEFAULT_GRAPH, EX + "a", EX + "label", "literal", "Alice", None, "en"),
+            (DEFAULT_GRAPH, EX + "b", EX + "label", "literal", "Bob", None, "en"),
+            (DEFAULT_GRAPH, EX + "a", EX + "years", "literal", "30", XSD_INT, None),
+            (DEFAULT_GRAPH, EX + "a", EX + "typed", "literal", "5", XSD_INT, None),
+            (DEFAULT_GRAPH, EX + "b", EX + "typed", "literal", "5", XSD_INT, None),
+            (DEFAULT_GRAPH, EX + "a", EX + "tag", "literal", "hi", None, "fr"),
+            (DEFAULT_GRAPH, EX + "b", EX + "tag", "literal", "hi", None, "fr"),
+            (EX + "g", EX + "a", EX + "copy", "iri", EX + "v", None, None),
+        }
 
 
 class TestBroadcastGate:

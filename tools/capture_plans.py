@@ -2,16 +2,16 @@
 """Capture `.explain("formatted")` output for registered queries.
 
 Optimization-round evidence tool: writes one file per query to
-plans/<tag>/<query>_<suffix>.txt so plan claims (Exchange counts, join
+history/plans/<tag>/<query>_<suffix>.txt so plan claims (Exchange counts, join
 strategies, PushedFilters, BatchEvalPython presence) are checkable
 without running Spark.  A query that builds stable_checkpoint'd
-sub-relations also gets plans/<tag>/<query>_subtrees_<suffix>.txt: the
+sub-relations also gets history/plans/<tag>/<query>_subtrees_<suffix>.txt: the
 PRE-truncation plan of each subtree, captured in the same build through
 ``checkpointing.PLAN_OBSERVER`` (the final plan shows a checkpoint only
 as an opaque ``Scan ExistingRDD`` leaf, e.g. d06/s06's edge-list sort).
 
 Usage: python tools/capture_plans.py <tag> <suffix> [query ...]
-  tag     plans/<tag>/ output directory (e.g. r15)
+  tag     history/plans/<tag>/ output directory (e.g. r15)
   suffix  "before" or "after"
   query   names to capture (default: every registered batch query)
 
@@ -48,7 +48,7 @@ def main() -> int:
     ]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     out_dir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", tag
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "history", "plans", tag
     )
     os.makedirs(out_dir, exist_ok=True)
     spark = build_session(
