@@ -13,7 +13,7 @@ grammar (EnvVariables.java:39-115):
 Validated invariants (same sources):
 - at least one topic                       (KConnectorDesc.java:108-115)
 - DLQ topic must differ from input topics  (KConnectorDesc.java:116-119)
-- batch sizes / durations positive-or-default
+- batch sizes positive-or-default
   (KConnectorDesc.java:153-192, 325-328)
 """
 
@@ -61,11 +61,9 @@ def interpolate_env(name: str, value):
     raise ConfigError(f"{name}: malformed env: reference {value!r}")
 
 
-# defaults mirror SysJenaKafka.java:43,77,126 and consumer props :114-144
+# defaults mirror SysJenaKafka.java:77,126
 DEFAULT_BATCH_SIZE = 5000
 DEFAULT_BATCH_BYTES = 50 * 1024 * 1024
-DEFAULT_MAX_TXN_DURATION_S = 300
-DEFAULT_POLL_TIMEOUT_S = 10
 
 
 @dataclass
@@ -80,8 +78,6 @@ class ConnectorConfig:
     dlq_topic: str | None = None
     batch_size: int = DEFAULT_BATCH_SIZE
     batch_bytes: int = DEFAULT_BATCH_BYTES
-    max_txn_duration_s: int = DEFAULT_MAX_TXN_DURATION_S
-    default_content_type: str | None = None
     check_topics: bool = False        # A15 strict startup gate (fk:checkTopics)
     kafka_properties: dict[str, str] = field(default_factory=dict)  # fk:config (k v) pairs
 
@@ -121,8 +117,6 @@ class ConnectorConfig:
             self.batch_size = DEFAULT_BATCH_SIZE
         if self.batch_bytes <= 0:
             self.batch_bytes = DEFAULT_BATCH_BYTES
-        if self.max_txn_duration_s <= 0:
-            self.max_txn_duration_s = DEFAULT_MAX_TXN_DURATION_S
         if not self.group_id:
             self.group_id = f"jfk-spark-{self.name}"
 

@@ -36,9 +36,12 @@ which adds two: the range-partition sample and the sort's shuffle.  So a
 GSP GET in Turtle costs 3 jobs there, and a CONSTRUCT in Turtle 4.
 A GSP read of a small store (``Snapshot.small``) runs no Spark job: the
 driver reads the graph's rows with pyarrow before the status line.
-Writes hand the parsed rows to ``QuadStore.commit``, which applies
-request-sized writes to a small store on the driver without a Spark job
-and everything else as Spark jobs.
+Every write is one ordered update transaction through
+``UpdateEngine``: a SPARQL Update as parsed, a GSP PUT as "clear the
+graph, insert the body's quads", a POST as the insert, a GSP DELETE as
+the clear, and a PATCH as its A/D rows in order.  Its one
+``QuadStore.commit`` applies a request-sized write to a small store on
+the driver without a Spark job, and everything else as Spark jobs.
 """
 
 from __future__ import annotations
@@ -67,7 +70,7 @@ from .rdf.serialize import (
 )
 from .sparql import SparqlEngine
 from .sparql.ast import ConstructQuery, DescribeQuery
-from .sparql.update import UpdateEngine
+from .sparql.update import UpdateEngine, document_rows
 from .store import QuadStore
 
 _JSON = "application/sparql-results+json"
@@ -320,31 +323,28 @@ class SparqlHttpServer:
             snapshot.release()
 
     def gsp_write(self, store: QuadStore, body: bytes, content_type: str | None, graph: str | None, replace: bool):
+        """GSP PUT (``replace``: clear the target graph, then insert the
+        body's quads) or POST (insert them), as one update transaction.
+        Returns the number of distinct quads in the body."""
+        target = DEFAULT_GRAPH if graph in (None, "default") else graph
         # fresh bnode scope per request: two uploads both saying _:b1
         # describe different nodes (document-scoped labels, like Jena)
-        ops = parse_payload(body, content_type, bnode_suffix=uuid.uuid4().hex[:12])
-        target = DEFAULT_GRAPH if graph in (None, "default") else graph
-        rows = []
-        for op in ops:
-            if op[0] != "A":
-                raise RdfParseError("GSP write body must not contain deletes")
-            g = op[1] if op[1] != DEFAULT_GRAPH and graph is None else target
-            rows.append((g,) + tuple(op[2:]))
-        rows = list(dict.fromkeys(rows))
-        # PUT replaces the target graph: a graph-scoped delete, then the adds
-        store.commit(self.spark, adds=rows, deletes=[(target,)] if replace else None)
+        into = None if graph is None else target  # no graph=: quads keep theirs
+        rows = document_rows(body, content_type, into, uuid.uuid4().hex[:12])
+        ops = [("clear", target)] if replace else []
+        UpdateEngine(self.spark, store).apply(ops + [("A", *row) for row in rows])
         return len(rows)
 
     def gsp_delete(self, store: QuadStore, graph: str | None):
         target = DEFAULT_GRAPH if graph in (None, "default") else graph
-        store.commit(self.spark, deletes=[(target,)])
+        UpdateEngine(self.spark, store).apply([("clear", target)])
 
     def apply_patch(self, store: QuadStore, body: bytes, content_type: str | None):
+        """Apply an RDF Patch's A/D rows in order, as one update
+        transaction.  Returns (distinct adds, deletes) in the patch."""
         ops = parse_payload(body, content_type or "application/rdf-patch")
-        adds = list(dict.fromkeys(op[1:] for op in ops if op[0] == "A"))
-        dels = [op[1:] for op in ops if op[0] == "D"]
-        store.commit(self.spark, adds=adds, deletes=dels)
-        return len(adds), len(dels)
+        UpdateEngine(self.spark, store).apply(ops)
+        return len({op for op in ops if op[0] == "A"}), sum(op[0] == "D" for op in ops)
 
 
 def _make_handler(server: SparqlHttpServer):

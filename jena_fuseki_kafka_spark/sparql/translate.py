@@ -34,6 +34,7 @@ promotion inside filters.
 
 from __future__ import annotations
 
+import operator
 from functools import reduce
 
 from pyspark.sql import Column, DataFrame, functions as F
@@ -88,6 +89,16 @@ def _bnode_as_var(t):
         label = t[1][2:] if t[1].startswith("_:") else t[1]
         return ("var", f"__bn_{label}")
     return t
+
+
+def _scope_cond(graph) -> Column:
+    """The quads a pattern's graph scope reads: None -> the default graph;
+    ("iri", v) -> that graph; ("var", n) -> any named graph."""
+    if graph is None:
+        return F.col("graph") == DEFAULT_GRAPH
+    if graph[0] == "iri":
+        return F.col("graph") == graph[1]
+    return F.col("graph") != DEFAULT_GRAPH
 
 
 def _term_struct(kind, value, dt=None, lang=None) -> Column:
@@ -709,19 +720,9 @@ class Translator:
         q = self.quads
         if self.subject_scan is not None and s[0] == "iri":
             q = self.subject_scan(s[1])
-        # graph scoping: None -> default graph; ("iri", v) -> that graph;
-        # ("var", n) -> any named graph, bound
-        gvar = None
-        if graph is None:
-            q = q.filter(F.col("graph") == DEFAULT_GRAPH)
-        elif graph[0] == "iri":
-            q = q.filter(F.col("graph") == graph[1])
-        else:
-            q = q.filter(F.col("graph") != DEFAULT_GRAPH)
-            gvar = graph[1]
-
+        gvar = graph[1] if graph is not None and graph[0] == "var" else None
         cols: dict[str, Column] = {}
-        conds: list[Column] = []
+        conds: list[Column] = [_scope_cond(graph)]
 
         def bind_or_filter(term, make_struct, eq_cond):
             if term[0] == "var":
@@ -783,8 +784,8 @@ class Translator:
             else:
                 cols[gvar] = _term_struct(F.lit("iri"), F.col("graph"))
 
-        for c in conds:
-            q = q.filter(c)
+        # one DataFrame per pattern: the scope and every term in one filter
+        q = q.filter(reduce(operator.and_, conds))
         if not cols:
             return q.select(F.lit(1).alias("__unit__")).limit(1)
         return q.select(*[c.alias(name) for name, c in cols.items()])
@@ -841,12 +842,7 @@ class Translator:
         return df.select(F.lit(1).alias("__unit__")).limit(1)
 
     def _scope_quads(self, graph) -> DataFrame:
-        q = self.quads
-        if graph is None:
-            return q.filter(F.col("graph") == DEFAULT_GRAPH)
-        if graph[0] == "iri":
-            return q.filter(F.col("graph") == graph[1])
-        return q.filter(F.col("graph") != DEFAULT_GRAPH)
+        return self.quads.filter(_scope_cond(graph))
 
     def _ckpt_fresh(self, df: DataFrame, eager: bool = True) -> DataFrame:
         """Truncate lineage, then re-alias every column so the checkpointed
@@ -2164,10 +2160,7 @@ class Translator:
             df = df.offset(q.offset)
         if q.limit is not None:
             df = df.limit(q.limit)
-        out = self._instantiate(df, q.template, "-c")
-        if q.limit is not None:
-            out = out.limit(q.limit)
-        return out
+        return self._instantiate(df, q.template, "-c")
 
     def _instantiate(self, df: DataFrame, template: list, bnode_prefix: str) -> DataFrame:
         """The quads ``template`` makes of the solutions ``df``: CONSTRUCT's

@@ -23,17 +23,24 @@ Supported update forms:
   adds), so 'INSERT DATA { q }; DELETE DATA { q }' leaves q absent and a
   DELETE WHERE sees quads inserted earlier in the same request
 
-Graph Store Protocol writes live in ``server.SparqlHttpServer``.
+Every other HTTP write goes through the same path: the server turns a
+Graph Store Protocol PUT / POST / DELETE or an RDF Patch into a short list
+of operations for ``UpdateEngine.apply`` (see there), so a PATCH
+``A q . D q .`` leaves q absent, as the ingest projector's last-op-wins
+does for the same patch from Kafka.
 """
 
 from __future__ import annotations
 
+import hashlib
+import uuid
 from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..checkpointing import stable_checkpoint
 from ..model import DEFAULT_GRAPH, QUAD_COLS, RdfParseError
+from ..rdf.content_types import parse_payload
 from ..store import QuadStore, quad_frame
 from ..store.quadstore import _anti_join_quads
 from .ast import BGP
@@ -148,8 +155,10 @@ class _UpdateParser(SparqlParser):
                     if g[0] != "iri":
                         raise RdfParseError("CLEAR GRAPH requires an IRI")
                     ops.append(("clear", g[1]))
-                elif target in ("default", "named", "all"):
-                    ops.append(("clear", target))
+                elif target == "default":
+                    ops.append(("clear", DEFAULT_GRAPH))
+                elif target in ("named", "all"):
+                    ops.append((f"clear_{target}",))
                 else:
                     raise RdfParseError(f"bad CLEAR target {target!r}")
             elif t == ";":
@@ -394,6 +403,19 @@ def _instantiate_rows(solutions: list, template: list) -> list[tuple]:
     return list(out)
 
 
+def document_rows(payload, content_type: str | None, into: str | None, bnode_suffix: str) -> list[tuple]:
+    """The distinct quad rows of an RDF document: a Graph Store Protocol
+    body or a LOADed file.  With ``into`` None each quad keeps its graph;
+    otherwise every quad goes to ``into``.  A document that deletes (an
+    RDF Patch with D rows) raises RdfParseError: a 400 over HTTP."""
+    rows: dict[tuple, None] = {}
+    for op, g, *quad in parse_payload(payload, content_type, bnode_suffix=bnode_suffix):
+        if op != "A":
+            raise RdfParseError("an RDF document must not contain deletes")
+        rows[(g if into is None else into, *quad)] = None
+    return list(rows)
+
+
 class UpdateEngine:
     def __init__(self, spark: SparkSession, store: QuadStore):
         self.spark = spark
@@ -407,11 +429,7 @@ class UpdateEngine:
         protocol_dataset: tuple | None = None,
     ) -> dict:
         """Apply a SPARQL Update request atomically (one store commit),
-        sequentially within the request (see ``_Pending``).  INSERT DATA,
-        DELETE DATA, LOAD, CLEAR GRAPH/DEFAULT and a WHERE whose bindings
-        fit ``DRIVER_COMMIT_ROWS`` stay rows, so on a small
-        store the request commits without a Spark job beyond the WHERE
-        evaluation.
+        sequentially within the request (see ``apply``).
 
         ``protocol_dataset`` = (using_iris, using_named_iris) carries the
         SPARQL 1.1 Protocol ``using-graph-uri``/``using-named-graph-uri``
@@ -426,82 +444,83 @@ class UpdateEngine:
                         "an update containing USING or WITH (SPARQL 1.1 "
                         "Protocol §2.2.3)"
                     )
+        return {"version": self.apply(ops, txn_id, protocol_dataset)}
+
+    def apply(self, ops: list[tuple], txn_id: str | None = None, protocol_dataset=None) -> int:
+        """Evaluate update operations in order against one ``_Pending``
+        state and commit their net effect in one ``QuadStore.commit``;
+        returns the new version.  The operations are those the parser
+        makes, plus one per RDF Patch row, ``("A", *row)`` / ``("D",
+        *row)``, with which the server writes GSP bodies and patches.
+        INSERT DATA, DELETE DATA, LOAD, CLEAR GRAPH/DEFAULT, patch rows
+        and a WHERE whose bindings fit ``DRIVER_COMMIT_ROWS`` stay rows,
+        so on a small store the request commits without a Spark job
+        beyond the WHERE evaluation."""
         pending = _Pending(self.spark, self.store)
-        try:
-            return {"version": self._apply(pending, ops, txn_id, protocol_dataset)}
-        finally:
-            pending.release()
-
-    def _apply(self, pending: _Pending, ops: list[tuple], txn_id, protocol_dataset) -> int:
-        """Evaluate ``ops`` in order against ``pending`` and commit their
-        net effect; returns the new version."""
-        load_index = 0  # per-request LOAD sequence number (bnode freshness)
-
-        import hashlib
-        import uuid as _uuid
-
-        # per-operation bnode-freshness seed: deterministic under txn_id
-        # (crash-replay re-derives the same labels; idempotent commit
-        # no-ops), random otherwise (plain per-execution freshness)
-        req_seed = txn_id if txn_id is not None else _uuid.uuid4().hex
+        # per-operation bnode-freshness seed (INSERT DATA, LOAD, templates):
+        # deterministic under txn_id (crash-replay re-derives the same
+        # labels; idempotent commit no-ops), random otherwise (plain
+        # per-execution freshness), distinct per operation, so "LOAD <d>;
+        # LOAD <d>" mints two sets of bnodes
+        req_seed = txn_id if txn_id is not None else uuid.uuid4().hex
 
         def _op_suffix(op_index: int) -> str:
             return hashlib.md5(f"{req_seed}|op{op_index}".encode()).hexdigest()[:12]
 
-        for op_index, op in enumerate(ops):
-            kind = op[0]
-            if kind == "insert_data":
-                pending.insert_rows(self._const_rows(op[1], bnode_suffix=_op_suffix(op_index)))
-            elif kind == "delete_data":
-                if _has_bnode(op[1]):
-                    # SPARQL 1.1 Update §3.1.2: bnodes are disallowed in
-                    # DELETE DATA (they could never denote a stored node)
-                    raise RdfParseError("DELETE DATA must not contain blank nodes")
-                pending.delete_rows(self._const_rows(op[1]))
-            elif kind == "clear":
-                target = op[1]
-                if target == "named":
-                    cond = F.col("graph") != DEFAULT_GRAPH
-                    pending.delete_df(pending.view().filter(cond))
-                elif target == "all":
+        try:
+            for op_index, op in enumerate(ops):
+                kind = op[0]
+                if kind in ("A", "D"):
+                    (pending.insert_rows if kind == "A" else pending.delete_rows)([op[1:]])
+                elif kind == "insert_data":
+                    pending.insert_rows(self._const_rows(op[1], bnode_suffix=_op_suffix(op_index)))
+                elif kind == "delete_data":
+                    if _has_bnode(op[1]):
+                        # SPARQL 1.1 Update §3.1.2: bnodes are disallowed in
+                        # DELETE DATA (they could never denote a stored node)
+                        raise RdfParseError("DELETE DATA must not contain blank nodes")
+                    pending.delete_rows(self._const_rows(op[1]))
+                elif kind == "clear":
+                    pending.clear_graph(op[1])
+                elif kind == "clear_named":
+                    pending.delete_df(pending.view().filter(F.col("graph") != DEFAULT_GRAPH))
+                elif kind == "clear_all":
                     pending.delete_df(pending.view())
-                else:
-                    pending.clear_graph(DEFAULT_GRAPH if target == "default" else target)
-            elif kind == "load":
-                silent, src, into = op[1], op[2], op[3]
-                load_index += 1
-                try:
-                    rows = self._load_rows(
-                        src, into, txn_id=txn_id, load_index=load_index
+                elif kind == "load":
+                    silent, src, into = op[1], op[2], op[3]
+                    try:
+                        rows = self._load_rows(src, into, _op_suffix(op_index))
+                    except Exception:
+                        if silent:
+                            continue
+                        raise
+                    pending.insert_rows(rows)
+                elif kind == "create":
+                    pass  # a quad set has no empty graphs (same as Fuseki TDB)
+                elif kind in ("add", "copy", "move"):
+                    src, dst = op[1], op[2]
+                    if src == dst:
+                        continue  # spec: same graph is a no-op for all three
+                    src_g = DEFAULT_GRAPH if src is None else src
+                    dst_g = DEFAULT_GRAPH if dst is None else dst
+                    # build the source selection against the pre-op state
+                    # BEFORE mutating pending sets (DataFrames capture the
+                    # plan now)
+                    view = pending.view()
+                    moved = (
+                        view.filter(F.col("graph") == src_g)
+                        .withColumn("graph", F.lit(dst_g))
                     )
-                except Exception:
-                    if silent:
-                        continue
-                    raise
-                pending.insert_rows(rows)
-            elif kind == "create":
-                pass  # a quad set has no empty graphs (same as Fuseki TDB)
-            elif kind in ("add", "copy", "move"):
-                src, dst = op[1], op[2]
-                if src == dst:
-                    continue  # spec: same graph is a no-op for all three
-                src_g = DEFAULT_GRAPH if src is None else src
-                dst_g = DEFAULT_GRAPH if dst is None else dst
-                # build the source selection against the pre-op state BEFORE
-                # mutating pending sets (DataFrames capture the plan now)
-                view = pending.view()
-                moved = (
-                    view.filter(F.col("graph") == src_g)
-                    .withColumn("graph", F.lit(dst_g))
-                )
-                if kind in ("copy", "move"):
-                    pending.delete_df(view.filter(F.col("graph") == dst_g))
-                if kind == "move":
-                    pending.delete_df(view.filter(F.col("graph") == src_g))
-                pending.insert_df(moved)
-            elif kind == "modify":
-                self._modify(pending, op, protocol_dataset, _op_suffix(op_index))
-        return pending.commit(txn_id)
+                    if kind in ("copy", "move"):
+                        pending.delete_df(view.filter(F.col("graph") == dst_g))
+                    if kind == "move":
+                        pending.delete_df(view.filter(F.col("graph") == src_g))
+                    pending.insert_df(moved)
+                elif kind == "modify":
+                    self._modify(pending, op, protocol_dataset, _op_suffix(op_index))
+            return pending.commit(txn_id)
+        finally:
+            pending.release()
 
     def _modify(self, pending: _Pending, op: tuple, protocol_dataset, bnode_suffix: str):
         """DELETE/INSERT ... WHERE: evaluate the pattern once against the
@@ -566,25 +585,19 @@ class UpdateEngine:
         ".xml": "application/rdf+xml",
     }
 
-    def _load_rows(
-        self,
-        iri: str,
-        into: str | None,
-        txn_id: str | None = None,
-        load_index: int = 0,
-    ) -> list[tuple]:
+    def _load_rows(self, iri: str, into: str | None, bnode_suffix: str) -> list[tuple]:
         """LOAD <iri> [INTO GRAPH <g>]: fetch + parse an RDF document into
-        quad rows.
+        quad rows (``document_rows``).
 
         file:// and http(s):// IRIs; syntax chosen by file extension
         (NQuads default, matching the package's Kafka-payload default).
         With INTO GRAPH, every parsed quad lands in the target graph
         (Fuseki pours the document into the single target graph).
-        """
+        SPARQL/Jena semantics mint fresh bnodes per LOAD execution (a
+        re-LOAD doubles bnode-rooted structures): ``bnode_suffix`` is the
+        operation's seed (see ``apply``)."""
         import urllib.request
         from urllib.parse import urlparse
-
-        from ..rdf.content_types import parse_payload
 
         parsed = urlparse(iri)
         if parsed.scheme == "file":
@@ -600,26 +613,7 @@ class UpdateEngine:
             (v for k, v in self._LOAD_SUFFIXES.items() if path.endswith(k)),
             "application/n-quads",
         )
-        import hashlib
-        import uuid
-
-        # SPARQL/Jena semantics mint fresh bnodes per LOAD execution (a
-        # re-LOAD doubles bnode-rooted structures), so the label seed must
-        # differ across requests AND across repeated LOADs of the same IRI
-        # within one request ("LOAD <d>; LOAD <d>" must not collapse under
-        # set semantics — hence the per-request load_index in the seed).
-        # Mixing in the request txn_id keeps crash-replay deterministic: a
-        # replayed request re-derives the SAME labels, and the commit's
-        # idempotent txn_id makes the re-apply a no-op.  Without a txn_id
-        # there is no replay contract, so a random seed gives plain
-        # per-execution freshness.
-        seed = f"{iri}|{txn_id if txn_id is not None else uuid.uuid4()}|{load_index}"
-        suffix = hashlib.md5(seed.encode("utf-8")).hexdigest()[:12]
-        ops = parse_payload(payload, ct, bnode_suffix=f"load{suffix}")
-        return [
-            (into if into is not None else g, s, p, ok, ov, dt, lang)
-            for _op, g, s, p, ok, ov, dt, lang in ops
-        ]
+        return document_rows(payload, ct, into, bnode_suffix)
 
     def _const_rows(self, quads: list, bnode_suffix: str | None = None) -> list[tuple]:
         """Constant quads from INSERT DATA / DELETE DATA templates.

@@ -336,8 +336,9 @@ class QuadStore:
         Each side is either a DataFrame with QUAD_COLS columns or a
         sequence of row tuples in QUAD_COLS order.  A delete tuple holding
         only ``(graph,)`` deletes every quad of that graph.  The caller is
-        responsible for net-effect ordering (ingest.projector computes
-        last-op-wins before calling commit).
+        responsible for net-effect ordering: ``sparql.update._Pending``
+        keeps every HTTP write's pending state net, and
+        ``ingest.projector`` computes last-op-wins, before calling commit.
 
         Two tiers:
 

@@ -57,7 +57,6 @@ class TestConnectorConfig:
         c = conn()
         assert c.batch_size == 5000            # SysJenaKafka.java:126
         assert c.batch_bytes == 50 * 1024 * 1024  # SysJenaKafka.java:77
-        assert c.max_txn_duration_s == 300     # PT5M, SysJenaKafka.java:43
         assert c.read_policy == "sync"
 
     def test_no_topic_rejected(self):
@@ -76,10 +75,9 @@ class TestConnectorConfig:
 
     def test_invalid_numbers_fall_back_to_defaults(self):
         # validate-or-default, KConnectorDesc.java:153-192
-        c = conn(batch_size=-5, batch_bytes=0, max_txn_duration_s=-1)
+        c = conn(batch_size=-5, batch_bytes=0)
         assert c.batch_size == 5000
         assert c.batch_bytes == 50 * 1024 * 1024
-        assert c.max_txn_duration_s == 300
 
     def test_unknown_keys_rejected(self):
         with pytest.raises(ConfigError, match="unknown"):

@@ -1542,6 +1542,16 @@ class TestConstructModifiers:
         )
         assert len(df.collect()) == 2
 
+    def test_construct_limit_cuts_solutions_not_triples(self, engine):
+        # LIMIT 1 keeps one solution; the template makes two triples of it
+        df = engine.query(
+            "PREFIX ex: <http://example.org/> "
+            "CONSTRUCT { ?s ex:x ?a . ?s ex:y ?a } WHERE { ?s ex:age ?a } "
+            "ORDER BY ?s LIMIT 1"
+        )
+        rows = sorted((r.subject, r.predicate, r.object_value) for r in df.collect())
+        assert rows == [(EX + "alice", EX + "x", "30"), (EX + "alice", EX + "y", "30")]
+
     def test_trailing_tokens_rejected(self, engine):
         from jena_fuseki_kafka_spark.model import RdfParseError
 

@@ -120,6 +120,12 @@ class TestUpdate:
         upd.update("CLEAR ALL")
         assert store.count(spark) == 0
 
+    def test_clear_graph_named_like_a_keyword_clears_one_graph(self, spark, store, upd):
+        upd.update("INSERT DATA { <http://e/s> <http://e/p> 1 . GRAPH <all> { <http://e/s> <http://e/p> 2 } "
+                   "GRAPH <named> { <http://e/s> <http://e/p> 3 } }")
+        upd.update("CLEAR GRAPH <all> ; DROP GRAPH <named>")
+        assert {g for g, *_ in all_quads(spark, store)} == {DEFAULT_GRAPH}
+
     def test_multi_op_atomic(self, spark, store, upd):
         v0 = store.version
         upd.update(
@@ -446,7 +452,7 @@ class TestGraphManagement:
     ):
         # "LOAD <d>; LOAD <d>" in ONE request (one txn_id) is two LOAD
         # executions — each mints fresh bnodes, so set semantics must not
-        # collapse them (the seed mixes a per-request load index)
+        # collapse them (the seed mixes the operation's index)
         doc = tmp_path / "b3.ttl"
         doc.write_text("@prefix ex: <http://e/> . ex:z ex:p [ ex:q 1 ] .\n")
         upd.update(
