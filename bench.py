@@ -11,14 +11,12 @@ rounds with zero code change), so the median is the round-over-round
 signal.  A warmup pass runs first so JVM/codegen startup isn't attributed
 to the first query.
 
-Record-size contract (VERDICT r8 item 2): the consumer of this output
-keeps only the LAST ~2000 characters of stdout, so the machine JSON line
-must be the final stdout write AND stay under that cap.  The line
-therefore carries medians + sub-totals + calibration only; per-query
-spreads, normalized medians (median / calibration — VERDICT r8 item 5),
-and sample lists go to BENCH_full.json next to this script (and spreads
-to stderr).  A query whose every sample failed appears as an explicit
-null in "queries" rather than a silently missing key (ADVICE r8).
+The JSON line is the final stdout write and carries every row's median,
+the sub-totals and the calibration; per-query spreads, normalized
+medians (median / calibration — VERDICT r8 item 5) and sample lists go
+to BENCH_full.json next to this script (and spreads to stderr).  A query
+whose every sample failed appears as an explicit null in "queries"
+rather than a silently missing key (ADVICE r8).
 
 Sub-totals (VERDICT r8 item 4): "value" remains the whole-suite total for
 continuity, but batch_seconds / streaming_seconds / http_seconds are
@@ -138,38 +136,6 @@ HEADLINE = HEADLINE_BATCH + HEADLINE_STREAMING
 # start — Spark reads it when the streaming query starts, so a runtime
 # conf set is sufficient.
 STREAMING_STATE_PARTITIONS = 4
-
-# Rows measured and recorded in BENCH_full.json but EXCLUDED from the
-# stdout JSON line: the tail-capture budget (<=1900 chars) caps how many
-# per-query medians the driver record can carry (all 58 rows measure
-# 2152 chars — over budget).  History: VERDICT r9 item 4 mandated
-# rotating the exclusion so no row stayed permanently dark, but VERDICT
-# r15 ruled that ANY row present in the previous round's driver-visible
-# line and absent from this round's is a drop-regression, and item 1d
-# ordered m05/q44 (dropped by the r15 parity flip) restored.  Those two
-# rules are incompatible with a rotating exclusion — every parity flip
-# drops the newly-excluded half — so in this final round the line is
-# pinned to a strict SUPERSET of the r15 line: every r15-visible row
-# plus the two restored rows (48 rows, 1836 chars measured).  The ten
-# rows below remain line-excluded exactly as they were in r15 (no new
-# drops); they still run every round, appear in BENCH_full.json with
-# spreads and samples, and each has an always-listed sibling row that
-# would surface a family regression on the line.
-SLIM_LINE_EXCLUDE = {
-    "q29_asof_join",            # q30's interval-join sibling stays listed
-    "q30_interval_join",
-    "q36_per_group_outlier_filter",
-    "q40_salted_fact_dim_join",
-    "t06_topk_bigrams_per_lang",
-    "t10_char_entropy",
-    "p02_curation_pipeline",
-    "m06_audio_vad_segments",
-    "s07_int8_quantization",
-    # d05's verbatim 8-gram collision join is d11's sibling shape
-    # (d11 stays always-listed)
-    "d05_decontamination",
-}
-
 
 def bench_http_four_ops(spark) -> float:
     """Round-trip the four Fuseki service operations (query / update /
@@ -370,23 +336,16 @@ def main():
     # ADVICE r9: a query whose every sample failed shrinks the sub-totals
     # (subtotal() skips its None), so a crash could read as a speedup if
     # only totals are compared — surface the casualty count on the stdout
-    # line (fixed-width, fits the tail budget) and the names in
-    # BENCH_full.json + stderr
+    # line and the names in BENCH_full.json + stderr
     failed = sorted(n for n, vals in samples.items() if not vals)
     record = {
         "metric": "headline_suite_seconds",
         "value": round(batch_s + streaming_s + http_s, 3),
         "unit": "sec",
         # per-row medians ride the line at 2 decimals: the 3rd decimal is
-        # far below the measured sample spreads (~0.5s) and the saved 48
-        # chars keep the 48-row line under the tail cap even in the
-        # all-rows-over-10s contention worst case; BENCH_full.json keeps
-        # the full 3-decimal medians, spreads and raw samples
-        "queries": {
-            n: (round(v, 2) if v is not None else None)
-            for n, v in timings.items()
-            if n not in SLIM_LINE_EXCLUDE
-        },
+        # far below the measured sample spreads (~0.5s); BENCH_full.json
+        # keeps the full 3-decimal medians, spreads and raw samples
+        "queries": {n: (round(v, 2) if v is not None else None) for n, v in timings.items()},
         "batch_seconds": batch_s,
         "streaming_seconds": streaming_s,
         "http_seconds": http_s,
@@ -395,10 +354,9 @@ def main():
         "sf": sf,
     }
     # full record (spreads, raw samples, calibration-normalized medians)
-    # goes to a side file — the stdout line must fit the ~2000-char tail
-    # the bench consumer keeps
+    # goes to a side file
     full = dict(record)
-    full["queries"] = timings  # the full record carries every row
+    full["queries"] = timings  # 3-decimal medians
     full["failed_query_names"] = failed
     full["spreads"] = spreads
     # host-contention forensics (r13 ledger lesson: a clean calibration
@@ -419,18 +377,7 @@ def main():
     side = os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_full.json")
     with open(side, "w") as f:
         json.dump(full, f, indent=1)
-    line = json.dumps(record)
-    if len(line) > 1900:  # belt-and-braces: never outgrow the tail capture
-        slim = dict(record)
-        slim["queries"] = {
-            n: (round(v, 2) if v is not None else None)
-            for n, v in timings.items()
-            if n in HEADLINE_BATCH and n not in SLIM_LINE_EXCLUDE
-        }
-        line = json.dumps(slim)
-        print(f"# JSON line >1900 chars; emitted batch-only queries map "
-              f"(full record in {side})", file=sys.stderr)
-    print(line)
+    print(json.dumps(record))
     spark.stop()
 
 

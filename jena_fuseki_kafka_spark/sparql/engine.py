@@ -18,18 +18,18 @@ from .translate import Translator
 
 
 class SparqlEngine:
-    def __init__(self, quads: DataFrame | Snapshot, max_path_iterations: int = 256):
-        """``quads`` is any DataFrame in QUAD_SCHEMA, or a store
-        ``Snapshot``.  Over a snapshot a constant-subject pattern scans
-        only the leaves of its subject's bucket, and on a small snapshot
-        the query runs as one task (see ``Translator``)."""
+    def __init__(self, quads, max_path_iterations: int = 256):
+        """``quads`` is any DataFrame in QUAD_SCHEMA or a quad source with
+        ``scan(subject=None)`` and ``small``: a store ``Snapshot``, or an
+        update request's pending state.  Over a snapshot a constant-subject
+        pattern scans only the leaves of its subject's bucket, and on a
+        small one the query runs as one task (see ``Translator``)."""
+        if isinstance(quads, DataFrame):
+            missing = [c for c in QUAD_COLS if c not in quads.columns]
+            if missing:
+                raise ValueError(f"quads DataFrame missing columns: {missing}")
+        self.source = quads
         self.snapshot = quads if isinstance(quads, Snapshot) else None
-        if self.snapshot is not None:
-            quads = self.snapshot.scan()
-        missing = [c for c in QUAD_COLS if c not in quads.columns]
-        if missing:
-            raise ValueError(f"quads DataFrame missing columns: {missing}")
-        self.quads = quads
         self.max_path_iterations = max_path_iterations
 
     @classmethod
@@ -61,22 +61,16 @@ class SparqlEngine:
         variables named like the quad columns."""
         ast = parse_sparql(text)
         ds = dataset if dataset is not None else getattr(ast, "dataset", None)
-        df = self._translator(ds).translate(ast)
+        df = self.translator(ds).translate(ast)
         if isinstance(ast, AskQuery):
             return ast, df.count() > 0
         return ast, _sparql_names(df, ast)
 
-    def _translator(self, ds: tuple | None) -> Translator:
-        """A translator over the query dataset ``ds``; a subject-pruned
-        scan is scoped exactly like the full one."""
-        if self.snapshot is None:
-            return Translator(_scope_dataset(self.quads, ds), self.max_path_iterations)
-        return Translator(
-            _scope_dataset(self.quads, ds),
-            self.max_path_iterations,
-            subject_scan=lambda iri: _scope_dataset(self.snapshot.scan(iri), ds),
-            one_task=self.snapshot.small,
-        )
+    def translator(self, ds: tuple | None) -> Translator:
+        """The one builder of translators, for queries and update WHEREs:
+        over the dataset ``ds`` = (default_iris, named_iris), or the
+        source's own when None; a subject-pruned scan is scoped alike."""
+        return Translator(_Scoped(self.source, ds), self.max_path_iterations)
 
     def select_values(self, text: str, dataset: tuple | None = None) -> DataFrame:
         """SELECT with result columns flattened to their lexical values
@@ -85,8 +79,22 @@ class SparqlEngine:
         if not isinstance(ast, SelectQuery):
             raise ValueError("select_values requires a SELECT query")
         ds = dataset if dataset is not None else ast.dataset
-        df = self._translator(ds).translate(ast)
+        df = self.translator(ds).translate(ast)
         return _sparql_names(df.select(*[F.col(c)["value"].alias(c) for c in df.columns]), ast)
+
+
+class _Scoped:
+    """A quad source seen through a query dataset (``_scope_dataset``).  A
+    bare DataFrame is a source whose every scan is all of it, in Spark's
+    own partitioning."""
+
+    def __init__(self, source, ds: tuple | None):
+        self.source, self.ds = source, ds
+        self.small = not isinstance(source, DataFrame) and source.small
+
+    def scan(self, subject: str | None = None) -> DataFrame:
+        frame = isinstance(self.source, DataFrame)
+        return _scope_dataset(self.source if frame else self.source.scan(subject), self.ds)
 
 
 def _sparql_names(df: DataFrame, ast) -> DataFrame:

@@ -23,6 +23,10 @@ Supported update forms:
   adds), so 'INSERT DATA { q }; DELETE DATA { q }' leaves q absent and a
   DELETE WHERE sees quads inserted earlier in the same request
 
+A WHERE gets a query's translator (``SparqlEngine.translator``) over the
+request's ``_Pending`` state, a quad source like a store ``Snapshot``: the
+same subject-pruned, one-task-on-a-small-store plans as a query.
+
 Every other HTTP write goes through the same path: the server turns a
 Graph Store Protocol PUT / POST / DELETE or an RDF Patch into a short list
 of operations for ``UpdateEngine.apply`` (see there), so a PATCH
@@ -44,9 +48,8 @@ from ..rdf.content_types import parse_payload
 from ..store import QuadStore, quad_frame
 from ..store.quadstore import _anti_join_quads
 from .ast import BGP
-from .engine import _scope_dataset
+from .engine import SparqlEngine
 from .parser import SparqlParser
-from .translate import Translator
 
 
 class _UpdateParser(SparqlParser):
@@ -241,9 +244,11 @@ def _quad_pattern_quads(pattern):
 
 
 class _Pending:
-    """A request's pending net effect.  Every operation evaluates against
-    ``view()`` = base MINUS pending deletes UNION pending adds (SPARQL 1.1
-    sequential semantics), and the request ends in one store commit.
+    """A request's pending net effect, and the quad source its operations
+    read (``SparqlEngine`` takes it like a store ``Snapshot``).  Every
+    operation evaluates against ``scan()`` = the snapshot MINUS pending
+    deletes UNION pending adds (SPARQL 1.1 sequential semantics), and the
+    request ends in one store commit.
 
     The state starts as driver-side rows — graphs cleared in full, quads
     deleted, quads inserted: the order the store commit applies them — and
@@ -254,18 +259,17 @@ class _Pending:
     from the pending deletes and vice versa), so no quad is ever in both
     and the commit's delete-then-add order is safe.
 
+    ``scan(subject)`` reads the snapshot's bucket of ``subject``, and
+    ``small`` is the snapshot's: the pending adds join its one partition.
     Joins against the driver-resident rows broadcast them; joins between
     DataFrames carry no hint, so Spark sizes them, and the store sizes its
-    commit joins from the rows it counts.
-
-    The base is read from one store snapshot, pinned until ``release()``:
-    the commit may still scan it."""
+    commit joins from the rows it counts.  The snapshot is pinned until
+    ``release()``: the commit may still scan it."""
 
     def __init__(self, spark: SparkSession, store: QuadStore):
         self.spark = spark
         self.store = store
         self._snapshot = None
-        self._base: DataFrame | None = None
         self.graphs: set[str] = set()
         self.dels: dict[tuple, None] = {}
         self.adds: dict[tuple, None] = {}
@@ -273,32 +277,32 @@ class _Pending:
         self.del_df: DataFrame | None = None
         self.add_df: DataFrame | None = None
 
-    def base(self) -> DataFrame:
-        if self._base is None:
+    def _pinned(self):
+        if self._snapshot is None:
             self._snapshot = self.store.snapshot(self.spark)
-            self._base = self._snapshot.scan()
-        return self._base
+        return self._snapshot
+
+    @property
+    def small(self) -> bool:
+        return self._pinned().small
 
     def release(self) -> None:
         if self._snapshot is not None:
             self._snapshot.release()
 
-    def view(self) -> DataFrame:
-        v = self.base()
-        if self.frames:
-            if self.del_df is not None:
-                v = _anti_join_quads(v, self.del_df)
-            if self.add_df is not None:
-                v = v.unionByName(self.add_df).dropDuplicates(QUAD_COLS)
-            return v
-        if self.graphs:
-            v = v.filter(~F.col("graph").isin(sorted(self.graphs)))
-        if self.dels:
-            v = _anti_join_quads(
-                v, quad_frame(self.spark, list(self.dels)), broadcast_right=True
-            )
-        if self.adds:
-            v = v.unionByName(quad_frame(self.spark, list(self.adds))).dropDuplicates(QUAD_COLS)
+    def scan(self, subject: str | None = None) -> DataFrame:
+        v = self._pinned().scan(subject)
+        dels, adds = self.del_df, self.add_df
+        if not self.frames:
+            if self.graphs:
+                v = v.filter(~F.col("graph").isin(sorted(self.graphs)))
+            dels = quad_frame(self.spark, list(self.dels)) if self.dels else None
+            adds = quad_frame(self.spark, list(self.adds)) if self.adds else None
+        if dels is not None:
+            v = _anti_join_quads(v, dels, broadcast_right=not self.frames)
+        if adds is not None:
+            v = v.unionByName(adds)
+            v = (v.coalesce(1) if self.small else v).dropDuplicates(QUAD_COLS)
         return v
 
     # -- rows -------------------------------------------------------------
@@ -318,7 +322,7 @@ class _Pending:
 
     def clear_graph(self, graph: str) -> None:
         if self.frames:
-            return self.delete_df(self.view().filter(F.col("graph") == graph))
+            return self.delete_df(self.scan().filter(F.col("graph") == graph))
         self.graphs.add(graph)
         self.adds = {r: None for r in self.adds if r[0] != graph}
 
@@ -328,7 +332,7 @@ class _Pending:
             return
         parts = []
         if self.graphs:
-            parts.append(self.base().filter(F.col("graph").isin(sorted(self.graphs))))
+            parts.append(self._pinned().scan().filter(F.col("graph").isin(sorted(self.graphs))))
         if self.dels:
             parts.append(quad_frame(self.spark, list(self.dels)))
         self.del_df = reduce(DataFrame.unionByName, parts) if parts else None
@@ -483,9 +487,9 @@ class UpdateEngine:
                 elif kind == "clear":
                     pending.clear_graph(op[1])
                 elif kind == "clear_named":
-                    pending.delete_df(pending.view().filter(F.col("graph") != DEFAULT_GRAPH))
+                    pending.delete_df(pending.scan().filter(F.col("graph") != DEFAULT_GRAPH))
                 elif kind == "clear_all":
-                    pending.delete_df(pending.view())
+                    pending.delete_df(pending.scan())
                 elif kind == "load":
                     silent, src, into = op[1], op[2], op[3]
                     try:
@@ -506,15 +510,15 @@ class UpdateEngine:
                     # build the source selection against the pre-op state
                     # BEFORE mutating pending sets (DataFrames capture the
                     # plan now)
-                    view = pending.view()
+                    quads = pending.scan()
                     moved = (
-                        view.filter(F.col("graph") == src_g)
+                        quads.filter(F.col("graph") == src_g)
                         .withColumn("graph", F.lit(dst_g))
                     )
                     if kind in ("copy", "move"):
-                        pending.delete_df(view.filter(F.col("graph") == dst_g))
+                        pending.delete_df(quads.filter(F.col("graph") == dst_g))
                     if kind == "move":
-                        pending.delete_df(view.filter(F.col("graph") == src_g))
+                        pending.delete_df(quads.filter(F.col("graph") == src_g))
                     pending.insert_df(moved)
                 elif kind == "modify":
                     self._modify(pending, op, protocol_dataset, _op_suffix(op_index))
@@ -523,9 +527,9 @@ class UpdateEngine:
             pending.release()
 
     def _modify(self, pending: _Pending, op: tuple, protocol_dataset, bnode_suffix: str):
-        """DELETE/INSERT ... WHERE: evaluate the pattern once against the
-        pending view and instantiate both templates from the same
-        bindings."""
+        """DELETE/INSERT ... WHERE: evaluate the pattern once over the
+        pending state, through the translator a query gets, and
+        instantiate both templates from the same bindings."""
         del_tmpl, ins_tmpl, pattern = op[1], op[2], op[3]
         with_graph, using, using_named = op[4], op[5], op[6]
         if del_tmpl and _has_bnode(del_tmpl):
@@ -535,23 +539,18 @@ class UpdateEngine:
             using, using_named = protocol_dataset
         # WITH scopes unqualified template quads and (absent USING) the
         # WHERE pattern's default graph (SPARQL 1.1 Update §3.1.3)
-        if with_graph is not None:
-            wg = ("iri", with_graph)
+        wg = None if with_graph is None else ("iri", with_graph)
+        if wg is not None:
             if del_tmpl:
                 del_tmpl = [(s, p, o, g or wg) for s, p, o, g in del_tmpl]
             if ins_tmpl:
                 ins_tmpl = [(s, p, o, g or wg) for s, p, o, g in ins_tmpl]
-        dataset = pending.view()
-        graph_arg = None
-        if using or using_named:
-            # USING builds the pattern's dataset as FROM does a query's:
-            # default graph := merge of the USING graphs, named graphs :=
-            # the USING NAMED set.  WITH is ignored for the pattern.
-            dataset = _scope_dataset(dataset, (using, using_named))
-        elif with_graph is not None:
-            graph_arg = ("iri", with_graph)
-        translator = Translator(dataset)
-        df = translator._pattern(pattern, graph=graph_arg)
+        # USING builds the pattern's dataset as FROM does a query's:
+        # default graph := merge of the USING graphs, named graphs := the
+        # USING NAMED set; WITH is then ignored for the pattern
+        ds = (using, using_named) if using or using_named else None
+        translator = SparqlEngine(pending).translator(ds)
+        df = translator._pattern(pattern, graph=None if ds else wg)
         cap = self.store.DRIVER_COMMIT_ROWS
         if cap >= 0 and not (ins_tmpl and _has_bnode(ins_tmpl)):
             # probe the binding set with one bounded collect: when it fits,

@@ -2,6 +2,8 @@
 (TestKafkaConnectorAssembler.java:36-380, TestConnectorDescriptor.java,
 TestEnvVariables.java:41-121, TestConfig.java bad-config-*.ttl cases)."""
 
+import os
+
 import pytest
 
 from jena_fuseki_kafka_spark.config import (
@@ -173,12 +175,15 @@ class TestTopicGate:
         )
 
 
-REF_FILES = "/root/reference/jena-fuseki-kafka-module/src/test/files"
+REF_FILES = os.path.join(os.path.dirname(__file__), "fixtures", "config")
 
 
 class TestTurtleConfigLoader:
     """The RDF-graph config path (KafkaConnectorAssembler.java:198-303),
-    driven by the reference's own fixture files."""
+    driven by this repo's reconstructions of the reference's fixture
+    files (``tests/fixtures/config``): the same file names and the
+    settings each test reads, written in the ``fk:`` vocabulary the
+    loader reads."""
 
     def _load(self, name):
         from jena_fuseki_kafka_spark.config import load_turtle_config

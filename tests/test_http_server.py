@@ -290,6 +290,30 @@ class TestQueryEndpoint:
         assert code == 200, body
         assert "<http://example.org/made>" in body and "never" not in body
 
+    def test_exists_inside_filter_expressions(self, own_server):
+        # !EXISTS, EXISTS as an && conjunct, and EXISTS in an OPTIONAL's
+        # filter: joins, not a 500
+        url, _ = own_server
+        code, _, _ = req(f"{url}/update", "POST",
+                         f"INSERT DATA {{ <{EX}s0> <{EX}knows> <{EX}s1> . "
+                         f"<{EX}s1> <{EX}knows> <{EX}s2> }}".encode(),
+                         "application/sparql-update")
+        assert code == 200
+
+        def ask(q):
+            code, _, body = req(f"{url}/query", "POST", q.encode(), "application/sparql-query")
+            assert code == 200, body
+            return json.loads(body)
+
+        got = ask(f"SELECT ?s WHERE {{ ?s <{EX}knows> ?o FILTER(!EXISTS {{ ?o <{EX}knows> ?z }}) }}")
+        assert [b["s"]["value"] for b in got["results"]["bindings"]] == [f"{EX}s1"]
+        got = ask(f"ASK {{ ?s <{EX}knows> ?o FILTER(?s != <{EX}s0> && EXISTS {{ ?o <{EX}knows> ?z }}) }}")
+        assert got["boolean"] is False
+        got = ask(f"SELECT ?s ?o WHERE {{ ?s <{EX}p> ?v FILTER(?v IN (\"v0\", \"v1\")) "
+                  f"OPTIONAL {{ ?s <{EX}knows> ?o FILTER EXISTS {{ ?o <{EX}knows> ?z }} }} }}")
+        assert {(b["s"]["value"], b.get("o", {}).get("value"))
+                for b in got["results"]["bindings"]} == {(f"{EX}s0", f"{EX}s1"), (f"{EX}s1", None)}
+
     def test_protocol_dataset_params(self, server):
         # SPARQL 1.1 Protocol §2.1.4: default-graph-uri scopes the query
         # dataset (and overrides any FROM clause in the query text)
@@ -1108,6 +1132,21 @@ class TestReadJobCounts:
         assert jobs == 1
         got = {(r.graph, r.object_value) for r in store.read(spark).collect() if r.subject == s}
         assert got == {("", "m"), (self.G, "v7")}
+
+    def test_joined_delete_insert_where_is_one_job(self, spark, loaded, count_jobs):
+        # a WHERE joining two patterns gets a query's one-task plan: no
+        # broadcast job for either side
+        srv, store = loaded
+        jobs, _ = count_jobs(lambda: srv.run_update(
+            store,
+            f'WITH <{self.T}> DELETE {{ ?s <{EX}val> ?v }} INSERT {{ ?s <{EX}val> "0" }} '
+            f"WHERE {{ ?s <{EX}type> <{EX}C0> . ?s <{EX}val> ?v FILTER(?v < 30) }}",
+        ))
+        assert jobs == 1
+        got = {(r.subject, r.object_value) for r in store.read(spark).collect()
+               if r.graph == self.T and r.predicate == f"{EX}val"}
+        hit = lambda i: i % 2 == 0 and i * 7 % 50 < 30  # noqa: E731
+        assert got == {(f"{EX}t{i}", "0" if hit(i) else str(i * 7 % 50)) for i in range(60)}
 
 
 class TestGspReadPaths:

@@ -514,6 +514,56 @@ class TestQueryForms:
         assert df.filter(F.col("predicate") == "http://xmlns.com/foaf/0.1/name").count() == 4
 
 
+class TestExistsInExpressions:
+    """EXISTS as a conjunct of a FILTER expression: ``!EXISTS`` is NOT
+    EXISTS, a top-level ``&&`` splits into conjuncts that each filter, and
+    an OPTIONAL's filter (the LeftJoin condition) takes the same path."""
+
+    PRE = "PREFIX ex: <http://example.org/> "
+
+    @pytest.mark.parametrize(
+        "flt, names",
+        [
+            ("!EXISTS { ?s ex:knows ?o }", ["Carol", "Dave"]),
+            ('?n != "Carol" && !EXISTS { ?s ex:knows ?o }', ["Dave"]),
+            ('EXISTS { ?s ex:knows ?o } && ?n != "Alice"', ["Bob"]),
+            ("!EXISTS { ?s ex:knows ?o } && EXISTS { ?s ex:age ?a }", ["Carol"]),
+        ],
+    )
+    def test_select(self, engine, flt, names):
+        df = engine.select_values(f"{self.PRE}SELECT ?n WHERE {{ ?s ex:name ?n FILTER({flt}) }}")
+        assert sorted(vals(df, "n")) == names
+
+    def test_ask(self, engine):
+        where = '?s ex:name ?n FILTER(?n != "{}" && !EXISTS {{ ?s ex:age ?a }})'
+        assert engine.query(f"{self.PRE}ASK {{ {where.format('Carol')} }}") is True
+        assert engine.query(f"{self.PRE}ASK {{ {where.format('Dave')} }}") is False
+
+    @pytest.mark.parametrize(
+        "flt, knows",
+        [
+            # alice knows bob, who knows someone; bob knows carol, who does not
+            ("FILTER EXISTS { ?o ex:knows ?z }", {"Alice": EX + "bob"}),
+            ("FILTER(!EXISTS { ?o ex:knows ?z })", {"Bob": EX + "carol"}),
+            ('FILTER(?n != "Alice" && !EXISTS { ?o ex:knows ?z })', {"Bob": EX + "carol"}),
+        ],
+    )
+    def test_optional(self, engine, flt, knows):
+        df = engine.select_values(
+            f"{self.PRE}SELECT ?n ?o WHERE {{ ?s ex:name ?n OPTIONAL {{ ?s ex:knows ?o {flt} }} }}"
+        )
+        got = {r.n: r.o for r in df.collect()}
+        assert got == {n: knows.get(n) for n in ("Alice", "Bob", "Carol", "Dave")}
+
+    @pytest.mark.parametrize(
+        "flt",
+        ['?n = "Dave" || EXISTS { ?s ex:knows ?o }', "IF(EXISTS { ?s ex:knows ?o }, true, false)"],
+    )
+    def test_exists_under_or_or_in_a_call_is_unsupported(self, engine, flt):
+        with pytest.raises(NotImplementedError, match=r"EXISTS under \|\| or inside a function call"):
+            engine.query(f"{self.PRE}SELECT ?n WHERE {{ ?s ex:name ?n FILTER({flt}) }}")
+
+
 class TestConstructBnodes:
     def test_template_bnode_fresh_per_solution(self, spark):
         # spec §10.2.1: a CONSTRUCT template bnode instantiates fresh per

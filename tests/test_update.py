@@ -594,6 +594,66 @@ class TestTemplatePaths:
         }
 
 
+class TestWhereLayouts:
+    """An update's WHERE is translated as a query is: on a small store
+    every scan is one partition and a constant-subject pattern reads only
+    its subject's bucket; with ``SMALL_COMMIT_ROWS = 0`` the same store is
+    read file-split, whole.  The same requests leave identical stores."""
+
+    PRE = "PREFIX ex: <http://e/> "
+    SEED = (
+        "INSERT DATA { "
+        + " ".join(f'ex:s{i} ex:p "v{i}" . ex:s{i} ex:type ex:T{i % 3} .' for i in range(40))
+        + ' ex:s1 ex:name "one" . ex:s4 ex:name "four" .'
+        + ' GRAPH ex:g1 { ex:a ex:p "a1" . ex:b ex:p "b1" . ex:a ex:q "x" }'
+        + ' GRAPH ex:g2 { ex:a ex:p "a2" . ex:c ex:q "y" } }'
+    )
+    REQUESTS = (
+        # USING: the WHERE's default graph is the merge of g1 and g2
+        "INSERT { GRAPH ex:out { ?s ex:seen ?o } } USING ex:g1 USING ex:g2 WHERE { ?s ex:p ?o }",
+        # WITH: the graph of the templates and of the WHERE
+        'WITH ex:g1 DELETE { ?s ex:p ?o } INSERT { ?s ex:p2 ?o } WHERE { ?s ex:p ?o FILTER(?o != "a1") }',
+        "DELETE { GRAPH ?g { ?s ex:q ?o } } INSERT { GRAPH ?g { ?s ex:q2 ?o } } "
+        "WHERE { GRAPH ?g { ?s ex:q ?o } }",
+        "INSERT { ?s ex:label ?l } WHERE { ?s ex:type ex:T1 OPTIONAL { ?s ex:name ?l } }",
+        # reads a quad inserted earlier in the same request
+        'INSERT DATA { ex:new ex:p "n" } ; INSERT { ex:new ex:copy ?o } WHERE { ex:new ex:p ?o }',
+        # must not see a quad deleted earlier in the same request
+        'DELETE DATA { ex:s5 ex:p "v5" } ; INSERT { ?s ex:had ?o } WHERE { ?s ex:p ?o }',
+        'DELETE DATA { ex:s6 ex:p "v6" } ; INSERT { ex:s6 ex:gone ?o } WHERE { ex:s6 ex:p ?o }',
+        # the pending state as DataFrames (after a COPY), and a bnode template
+        "COPY ex:g2 TO ex:g3 ; INSERT { ?s ex:c3 ?o } WHERE { GRAPH ex:g3 { ?s ex:p ?o } }",
+        "INSERT { ?s ex:note [ ex:of ?o ] } WHERE { ?s ex:type ex:T2 . ?s ex:p ?o FILTER(?o < \"v2\") }",
+    )
+
+    def test_small_and_split_stores_end_equal(self, spark, tmp_path):
+        stores = {}
+        for layout, bound in (("small", None), ("split", 0)):
+            st = QuadStore(str(tmp_path / layout))
+            if bound is not None:
+                st.SMALL_COMMIT_ROWS = bound
+            upd = UpdateEngine(spark, st)
+            upd.update(self.PRE + self.SEED, txn_id="seed")
+            assert st.snapshot(spark).small is (bound is None)
+            stores[layout] = (st, upd)
+        for k, text in enumerate(self.REQUESTS):
+            got = []
+            for st, upd in stores.values():
+                upd.update(self.PRE + text, txn_id=f"r{k}")
+                got.append({tuple(r) for r in st.read(spark).collect()})
+            assert got[0] == got[1], text
+        quads = all_quads(spark, stores["small"][0])
+        assert (DEFAULT_GRAPH, EX + "new", EX + "copy", "n") in quads
+        assert (DEFAULT_GRAPH, EX + "s5", EX + "had", "v5") not in quads
+        assert (DEFAULT_GRAPH, EX + "s7", EX + "had", "v7") in quads
+        assert not any(q[2] == EX + "gone" for q in quads)
+        assert {q for q in quads if q[0] == EX + "out"} == {
+            (EX + "out", EX + s, EX + "seen", o) for s, o in (("a", "a1"), ("b", "b1"), ("a", "a2"))
+        }
+        assert (DEFAULT_GRAPH, EX + "a", EX + "c3", "a2") in quads
+        assert sum(q[2] == EX + "note" for q in quads) == 3
+
+
 class TestBroadcastGate:
     """The store's commit-join broadcast gate.  The Spark-tier commit counts
     each side's rows (the per-bucket aggregate it runs anyway) and
