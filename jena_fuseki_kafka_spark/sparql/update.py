@@ -562,11 +562,12 @@ class UpdateEngine:
                 if ins_tmpl:
                     pending.insert_rows(_instantiate_rows(solutions, ins_tmpl))
                 return
-        # materialize the bindings once: both templates instantiate from
-        # it, and later ops' anti-joins would otherwise re-evaluate the
-        # whole pattern lineage
-        if del_tmpl and ins_tmpl:
-            df = stable_checkpoint(df, eager=True)
+        # materialize the bindings once: the commit reads its deletes and
+        # adds more than once (row counts, then the joins and the write),
+        # later ops' anti-joins would re-evaluate the whole pattern lineage,
+        # and on a small store each evaluation is one task.  Eager when
+        # both templates instantiate from it, else by the first action
+        df = stable_checkpoint(df, eager=bool(del_tmpl and ins_tmpl))
         # a bnode label is <label>-<op suffix>-<hex xxhash64 of the solution>
         if del_tmpl:
             pending.delete_df(translator._instantiate(df, del_tmpl, f"-{bnode_suffix}-"))
