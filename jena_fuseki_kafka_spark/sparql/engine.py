@@ -67,7 +67,7 @@ class SparqlEngine:
         return ast, _sparql_names(df, ast)
 
     def translator(self, ds: tuple | None) -> Translator:
-        """The one builder of translators, for queries and update WHEREs:
+        """Every translator is made here, for queries and update WHEREs:
         over the dataset ``ds`` = (default_iris, named_iris), or the
         source's own when None; a subject-pruned scan is scoped alike."""
         return Translator(_Scoped(self.source, ds), self.max_path_iterations)
