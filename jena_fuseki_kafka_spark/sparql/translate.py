@@ -319,10 +319,15 @@ class Translator:
         if isinstance(node, Join):
             left, right = node.left, node.right
             if isinstance(left, ValuesPattern) and not isinstance(right, ValuesPattern):
-                left, right = right, left  # a VALUES table joins as the right side
+                left, right = right, left
+            rdf = self._pattern(right, graph)
+            if isinstance(right, ValuesPattern) and not self.one_task:
+                # an inline table joins as the broadcast right side, so the
+                # other side never shuffles
+                rdf = F.broadcast(rdf)
             return self._join(
                 self._pattern(left, graph),
-                self._pattern(right, graph),
+                rdf,
                 cb_left=_certainly_bound(left),
                 cb_right=_certainly_bound(right),
             )
@@ -560,11 +565,9 @@ class Translator:
         return T.StructType([T.StructField(v, term_type, True) for v in variables])
 
     def _values(self, node: ValuesPattern) -> DataFrame:
-        """An inline VALUES table, broadcast into the join it meets (a
-        one-task query joins it like any other input).  An UNDEF cell is
-        unbound: ``_certainly_bound`` leaves its variable out, so ``_join``
-        joins it under compatibility semantics over the broadcast table
-        and the other side never shuffles."""
+        """An inline VALUES table.  An UNDEF cell is unbound:
+        ``_certainly_bound`` leaves its variable out, so ``_join`` joins it
+        under compatibility semantics."""
         rows = []
         for row in node.rows:
             vals = []
@@ -576,8 +579,7 @@ class Translator:
                 else:
                     vals.append((term[0], term[1], "", ""))
             rows.append(vals)
-        vdf = self.quads.sparkSession.createDataFrame(rows, self._binding_schema(node.variables))
-        return vdf if self.one_task else F.broadcast(vdf)
+        return self.quads.sparkSession.createDataFrame(rows, self._binding_schema(node.variables))
 
     def _service(self, node: ServicePattern) -> DataFrame:
         """Federated SERVICE: ship the inner group to the remote SPARQL
