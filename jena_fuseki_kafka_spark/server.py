@@ -22,26 +22,32 @@ operations over the engine:
 and two of Fuseki's admin endpoints for the whole server:
 
   GET       /$/ping       200 with the current time (liveness)
-  GET       /$/stats      JSON: each dataset's ``QuadStore.stats()``
+  GET       /$/stats      JSON: each dataset's ``QuadStore.stats()``, and
+                          how many queries and update WHEREs ran on
+                          the driver and how many on Spark
 
 Single-process by design: this is the driver-side control surface (like
 Fuseki's HTTP layer in front of the store), not a data-plane service.
-A query runs as Spark jobs on the cluster that write its result under
-the store's ``_results`` directory before the status line is sent; the
-body is then streamed from those files and they are removed.  On a small
-store that is one job.  Over ``SMALL_COMMIT_ROWS`` each shuffle stage of
-the plan is its own job, and a read in a subject-grouped syntax (Turtle,
-TriG, JSON-LD, RDF/XML) first sorts with ``orderBy("graph", "subject")``,
+On a small store (``Snapshot.small``) a SELECT or ASK inside
+``sparql.arrow_eval``'s fragment (BGPs, GRAPH, OPTIONAL, FILTERs that
+compare a variable with a number, GROUP BY with COUNT) and every GSP
+read run no Spark job: the driver reads the store with pyarrow and
+finishes the answer before the status line.  Any other query runs as
+Spark jobs on the cluster that write its result under the store's
+``_results`` directory before the status line is sent; the body is then
+streamed from those files and they are removed.  On a small store that
+is one job.  Over ``SMALL_COMMIT_ROWS`` each shuffle stage of the plan
+is its own job, and a read in a subject-grouped syntax (Turtle, TriG,
+JSON-LD, RDF/XML) first sorts with ``orderBy("graph", "subject")``,
 which adds two: the range-partition sample and the sort's shuffle.  So a
 GSP GET in Turtle costs 3 jobs there, and a CONSTRUCT in Turtle 4.
-A GSP read of a small store (``Snapshot.small``) runs no Spark job: the
-driver reads the graph's rows with pyarrow before the status line.
 Every write is one ordered update transaction through
 ``UpdateEngine``: a SPARQL Update as parsed, a GSP PUT as "clear the
 graph, insert the body's quads", a POST as the insert, a GSP DELETE as
 the clear, and a PATCH as its A/D rows in order.  Its one
 ``QuadStore.commit`` applies a request-sized write to a small store on
-the driver without a Spark job, and everything else as Spark jobs.
+the driver without a Spark job, and everything else as Spark jobs; an
+update WHERE inside the fragment runs on the driver like a query.
 """
 
 from __future__ import annotations
@@ -53,6 +59,7 @@ import shutil
 import threading
 import uuid
 import weakref
+from collections import Counter
 from datetime import datetime, timezone
 from functools import partial
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
@@ -68,7 +75,8 @@ from .rdf.serialize import (
     negotiate_graph_streamer,
     negotiate_results_streamer,
 )
-from .sparql import SparqlEngine
+from .sparql import SparqlEngine, arrow_eval
+from .sparql import engine as sparql_engine
 from .sparql.ast import ConstructQuery, DescribeQuery
 from .sparql.update import UpdateEngine, document_rows
 from .store import QuadStore
@@ -185,6 +193,9 @@ class SparqlHttpServer:
                 raise ValueError("need store= or stores=")
             stores = {dataset.strip("/"): store}
         self.stores = {name.strip("/"): s for name, s in stores.items()}
+        # (store, "query" | "update_where", "driver" | "spark") -> count
+        self._evaluations: Counter = Counter()
+        self._evaluations_lock = threading.Lock()
         self._httpd: ThreadingHTTPServer | None = None
         self._thread: threading.Thread | None = None
 
@@ -220,8 +231,22 @@ class SparqlHttpServer:
     def stats(self) -> dict:
         """The ``/$/stats`` document: each dataset's store layout
         (``QuadStore.stats``), keyed by its service path as Fuseki keys
-        it.  Nothing from a connector's configuration is in it."""
-        return {"datasets": {f"/{name}": s.stats() for name, s in self.stores.items()}}
+        it, with ``evaluations``: how many queries and update WHEREs
+        were answered on the driver and how many on Spark.  Nothing from
+        a connector's configuration is in it."""
+        with self._evaluations_lock:
+            counts = dict(self._evaluations)
+        return {"datasets": {
+            f"/{name}": {**s.stats(), "evaluations": {
+                what: {path: counts.get((s, what, path), 0) for path in ("driver", "spark")}
+                for what in ("query", "update_where")
+            }}
+            for name, s in self.stores.items()
+        }}
+
+    def _count(self, store: QuadStore, what: str, driver: bool) -> None:
+        with self._evaluations_lock:
+            self._evaluations[store, what, "driver" if driver else "spark"] += 1
 
     def run_query(
         self,
@@ -231,21 +256,35 @@ class SparqlHttpServer:
         dataset: tuple | None = None,
     ):
         """Returns (content_type, chunk_iterator).  The result is computed
-        here, before the caller sends a status: its Spark jobs (one on a
-        small store; see the module docstring) write it under the store's
-        ``_results`` directory (``_ResultBody``), so an execution failure
-        raises from this call, and the iterator then streams it off disk
-        one Arrow batch at a time.  The HTTP layer writes chunked, so a
-        store-sized CONSTRUCT or SELECT never materializes on the driver.
+        here, before the caller sends a status, so a failure raises from
+        this call.
+
+        On a small snapshot (``Snapshot.small``) a SELECT or ASK inside
+        ``arrow_eval``'s fragment is answered on the driver: pyarrow reads
+        of the snapshot and joins in memory, no Spark job and no
+        ``_results`` spill.  The answer is complete and the snapshot
+        released before this returns; the iterator serializes it.  Any
+        other query runs as Spark jobs (one on a small store; see the
+        module docstring) that write its result under the store's
+        ``_results`` directory (``_ResultBody``), and the iterator then
+        streams it off disk one Arrow batch at a time.  The HTTP layer
+        writes chunked, so a store-sized CONSTRUCT or SELECT never
+        materializes on the driver.
 
         ``dataset`` carries the SPARQL 1.1 Protocol ``default-graph-uri`` /
-        ``named-graph-uri`` parameters, which override FROM clauses.
+        ``named-graph-uri`` parameters, which override FROM clauses (such
+        a query takes the Spark path).
 
         The store snapshot the query reads stays pinned until its jobs
         have run, however many commits land meanwhile."""
-        engine = SparqlEngine.from_store(self.spark, store)
+        snapshot = store.snapshot(self.spark)
         try:
-            ast, result = engine.query_typed(text, dataset=dataset)
+            ast = sparql_engine.parse_sparql(text)
+            plan = arrow_eval.plan_query(ast) if dataset is None and snapshot.small else None
+            self._count(store, "query", plan is not None)
+            if plan is not None:
+                return self._driver_query(ast, plan, snapshot, accept)
+            ast, result = SparqlEngine(snapshot).query_ast(ast, dataset)
             # branch on the parsed query form, NOT result column names: a
             # SELECT projecting variables named like the quad columns must
             # still serialize as SPARQL results
@@ -261,7 +300,22 @@ class SparqlHttpServer:
                 return content_type, iter((ask_fn(result),))
             return content_type, _ResultBody(store, result, partial(select_stream, result.columns))
         finally:
-            engine.snapshot.release()
+            snapshot.release()
+
+    @staticmethod
+    def _driver_query(ast, plan, snapshot, accept: str | None):
+        """A SELECT or ASK answered by ``plan`` over ``snapshot`` on the
+        driver, under the query's own variable names."""
+        (select_stream, ask_fn), content_type = negotiate_results_streamer(accept)
+        answer = plan.run(snapshot)
+        if plan.vars is None:
+            return content_type, iter((ask_fn(answer),))
+        names = [ast.var_names.get(v, v) for v in plan.vars]
+        rows = (
+            _ResultRow(zip(names, row.values()))
+            for row in arrow_eval.solutions(answer, plan.vars, RESULT_BATCH_ROWS)
+        )
+        return content_type, select_stream(names, rows)
 
     def run_update(
         self, store: QuadStore, text: str, dataset: tuple | None = None
@@ -269,7 +323,10 @@ class SparqlHttpServer:
         # no txn id: HTTP has no replay contract, and an id would have to
         # stay unique across server restarts to keep the write and its
         # bnode labels fresh
-        return UpdateEngine(self.spark, store).update(text, protocol_dataset=dataset)
+        engine = UpdateEngine(
+            self.spark, store, on_where=partial(self._count, store, "update_where")
+        )
+        return engine.update(text, protocol_dataset=dataset)
 
     def gsp_read(self, store: QuadStore, graph: str | None, accept: str | None = None):
         """Returns (content_type, chunk_iterator), computed before the

@@ -59,7 +59,10 @@ class SparqlEngine:
         e.g. for HTTP serialization, where inferring the form from result
         column names mis-serializes a SELECT that happens to project
         variables named like the quad columns."""
-        ast = parse_sparql(text)
+        return self.query_ast(parse_sparql(text), dataset=dataset)
+
+    def query_ast(self, ast, dataset: tuple | None = None):
+        """:meth:`query_typed` of a query already parsed."""
         ds = dataset if dataset is not None else getattr(ast, "dataset", None)
         df = self.translator(ds).translate(ast)
         if isinstance(ast, AskQuery):

@@ -25,7 +25,9 @@ Supported update forms:
 
 A WHERE gets a query's translator (``SparqlEngine.translator``) over the
 request's ``_Pending`` state, a quad source like a store ``Snapshot``: the
-same subject-pruned, one-task-on-a-small-store plans as a query.
+same subject-pruned, one-task-on-a-small-store plans as a query.  On a
+small store, while the pending state is still driver rows, a WHERE inside
+``arrow_eval``'s fragment runs on the driver instead, with no Spark job.
 
 Every other HTTP write goes through the same path: the server turns a
 Graph Store Protocol PUT / POST / DELETE or an RDF Patch into a short list
@@ -46,7 +48,8 @@ from ..checkpointing import stable_checkpoint
 from ..model import DEFAULT_GRAPH, QUAD_COLS, RdfParseError
 from ..rdf.content_types import parse_payload
 from ..store import QuadStore, quad_frame
-from ..store.quadstore import _anti_join_quads
+from ..store.quadstore import _anti_join_quads, _arrow_table
+from . import arrow_eval
 from .ast import BGP
 from .engine import SparqlEngine
 from .parser import SparqlParser
@@ -261,6 +264,8 @@ class _Pending:
 
     ``scan(subject)`` reads the snapshot's bucket of ``subject``, and
     ``small`` is the snapshot's: the pending adds join its one partition.
+    While the state is rows, ``arrow(filter)`` is the same view read on
+    the driver, for ``arrow_eval``.
     Joins against the driver-resident rows broadcast them; joins between
     DataFrames carry no hint, so Spark sizes them, and the store sizes its
     commit joins from the rows it counts.  The snapshot is pinned until
@@ -304,6 +309,34 @@ class _Pending:
             v = v.unionByName(adds)
             v = (v.coalesce(1) if self.small else v).dropDuplicates(QUAD_COLS)
         return v
+
+    def arrow(self, filter=None):
+        """The quads of ``scan()`` that match ``filter`` (a
+        ``pyarrow.dataset`` expression) as one pyarrow table, read on the
+        driver while the state is rows: the snapshot's ``arrow`` without
+        the cleared graphs and the deleted quads (tuple equality is
+        null-safe, as in the store's driver commit), plus the adds it does
+        not hold.  Only rows sharing a subject with a pending delete or
+        add leave Arrow."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        t = self._pinned().arrow(filter)
+        if self.graphs:
+            cleared = pa.array(sorted(self.graphs), pa.string())
+            t = t.filter(pc.invert(pc.is_in(t["graph"], value_set=cleared)))
+        subjects = {r[1] for r in (*self.dels, *self.adds)}
+        if not subjects:
+            return t
+        near = pc.is_in(t["subject"], value_set=pa.array(sorted(subjects), pa.string()))
+        rows = list(zip(*(t.filter(near).column(c).to_pylist() for c in QUAD_COLS)))
+        have = set(rows)
+        adds = _arrow_table([r for r in self.adds if r not in have])
+        return pa.concat_tables([
+            t.filter(pc.invert(near)),
+            _arrow_table([r for r in rows if r not in self.dels]),
+            adds if filter is None else adds.filter(filter),
+        ])
 
     # -- rows -------------------------------------------------------------
     def insert_rows(self, rows: list[tuple]) -> None:
@@ -378,11 +411,11 @@ def _has_bnode(tmpl) -> bool:
 def _instantiate_rows(solutions: list, template: list) -> list[tuple]:
     """Driver twin of ``Translator._instantiate`` for a bnode-free
     template over collected bindings: the same quads, as row tuples.  A
-    variable binding is a (kind, value, datatype, lang) struct; a template
-    quad with an unbound variable is skipped (SPARQL 1.1 Update §3.1.3)."""
+    solution maps a variable to its (kind, value, datatype, lang) binding;
+    a template quad with an unbound variable is skipped (SPARQL 1.1
+    Update §3.1.3)."""
     out: dict[tuple, None] = {}
-    for sol in solutions:
-        b = sol.asDict()
+    for b in solutions:
 
         def value(t):
             if t[0] != "var":
@@ -421,9 +454,12 @@ def document_rows(payload, content_type: str | None, into: str | None, bnode_suf
 
 
 class UpdateEngine:
-    def __init__(self, spark: SparkSession, store: QuadStore):
+    def __init__(self, spark: SparkSession, store: QuadStore, on_where=None):
+        """``on_where(driver)``, when given, is told of every WHERE this
+        engine evaluates: True when it ran on the driver, False on Spark."""
         self.spark = spark
         self.store = store
+        self.on_where = on_where
 
     # ------------------------------------------------------------ update
     def update(
@@ -528,8 +564,12 @@ class UpdateEngine:
 
     def _modify(self, pending: _Pending, op: tuple, protocol_dataset, bnode_suffix: str):
         """DELETE/INSERT ... WHERE: evaluate the pattern once over the
-        pending state, through the translator a query gets, and
-        instantiate both templates from the same bindings."""
+        pending state and instantiate both templates from the same
+        bindings.  A pattern in ``arrow_eval``'s fragment, over a small
+        store whose pending state is still rows, is evaluated on the
+        driver; when its bindings fit ``DRIVER_COMMIT_ROWS`` they
+        instantiate there with no Spark job.  Otherwise the pattern goes
+        through the translator a query gets."""
         del_tmpl, ins_tmpl, pattern = op[1], op[2], op[3]
         with_graph, using, using_named = op[4], op[5], op[6]
         if del_tmpl and _has_bnode(del_tmpl):
@@ -549,19 +589,36 @@ class UpdateEngine:
         # default graph := merge of the USING graphs, named graphs := the
         # USING NAMED set; WITH is then ignored for the pattern
         ds = (using, using_named) if using or using_named else None
-        translator = SparqlEngine(pending).translator(ds)
-        df = translator._pattern(pattern, graph=None if ds else wg)
         cap = self.store.DRIVER_COMMIT_ROWS
+        solutions = df = None
         if cap >= 0 and not (ins_tmpl and _has_bnode(ins_tmpl)):
-            # probe the binding set with one bounded collect: when it fits,
-            # the bindings are request-sized and instantiate on the driver
-            solutions = df.limit(cap + 1).collect()
-            if len(solutions) <= cap:
-                if del_tmpl:
-                    pending.delete_rows(_instantiate_rows(solutions, del_tmpl))
-                if ins_tmpl:
-                    pending.insert_rows(_instantiate_rows(solutions, ins_tmpl))
-                return
+            plan = None
+            if ds is None and not pending.frames and pending.small:
+                plan = arrow_eval.plan_pattern(pattern, wg)
+            if plan is not None:
+                table = plan.run(pending)
+                if table.num_rows <= cap:
+                    solutions = list(arrow_eval.solutions(table, plan.vars))
+            else:
+                # probe the binding set with one bounded collect: when it
+                # fits, the bindings are request-sized and instantiate on
+                # the driver
+                translator = SparqlEngine(pending).translator(ds)
+                df = translator._pattern(pattern, graph=None if ds else wg)
+                rows = df.limit(cap + 1).collect()
+                if len(rows) <= cap:
+                    solutions = [r.asDict() for r in rows]
+        if self.on_where is not None:
+            self.on_where(solutions is not None and df is None)
+        if solutions is not None:
+            if del_tmpl:
+                pending.delete_rows(_instantiate_rows(solutions, del_tmpl))
+            if ins_tmpl:
+                pending.insert_rows(_instantiate_rows(solutions, ins_tmpl))
+            return
+        if df is None:
+            translator = SparqlEngine(pending).translator(ds)
+            df = translator._pattern(pattern, graph=None if ds else wg)
         # materialize the bindings once: the commit reads its deletes and
         # adds more than once (row counts, then the joins and the write),
         # later ops' anti-joins would re-evaluate the whole pattern lineage,

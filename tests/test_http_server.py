@@ -60,6 +60,17 @@ def own_server(spark, tmp_path):
     srv.stop()
 
 
+@pytest.fixture()
+def translator_only(monkeypatch):
+    """Reads and update WHEREs take the Spark translator even where the
+    driver's Arrow evaluator would answer them, as every query outside
+    its fragment does."""
+    from jena_fuseki_kafka_spark.sparql import arrow_eval
+
+    monkeypatch.setattr(arrow_eval, "plan_query", lambda ast: None)
+    monkeypatch.setattr(arrow_eval, "plan_pattern", lambda pattern, graph: None)
+
+
 def corrupt_one_leaf(store):
     leaf = os.path.join(store.files_dir, store._read_manifest()["files"][-1])
     part = next(f for f in os.listdir(leaf) if f.endswith(".parquet"))
@@ -503,7 +514,7 @@ class TestQueryFailures:
         code, _, body = req(f"{server}/query", "POST", q.encode(), "application/sparql-query")
         assert code == 500 and "SERVICE" in body
 
-    def test_execution_failure_is_500(self, own_server):
+    def test_execution_failure_is_500(self, own_server, translator_only):
         url, store = own_server
         corrupt_one_leaf(store)
         q = f"SELECT ?s ?o WHERE {{ ?s <{EX}p> ?o }}"
@@ -517,6 +528,16 @@ class TestQueryFailures:
         corrupt_one_leaf(store)
         code, _, body = req(f"{url}/data?default")
         assert code == 500 and "parquet" in body.lower(), (code, body[:500])
+
+    def test_fragment_read_failure_on_a_small_store_is_500(self, own_server):
+        # the driver evaluates a query in its fragment before the status
+        # line: a failing Arrow read answers 500, with nothing sent first
+        url, store = own_server
+        corrupt_one_leaf(store)
+        for q in (f"SELECT ?s ?o WHERE {{ ?s <{EX}p> ?o }}", f"ASK {{ ?s <{EX}p> ?o }}"):
+            code, ct, body = req(f"{url}/query?query={quote(q, safe='')}")
+            assert code == 500 and ct.startswith("text/plain"), (code, ct)
+            assert "parquet" in body.lower() and "HTTP/1." not in body, body[:500]
 
     def test_failure_after_headers_leaves_body_unterminated(self, server, monkeypatch):
         first = "<http://example.org/a> <http://example.org/p> \"1\" .\n" * 2000
@@ -579,6 +600,9 @@ class TestSerializerFailures:
         assert_cut_after_headers(head, body, sent[0], "serializer failed")
         assert spilled(store) == []
 
+    def test_run_query_on_the_spark_path(self, own_server, monkeypatch, translator_only):
+        self.test_run_query(own_server, monkeypatch)
+
 
 class TestAdminEndpoints:
     """Fuseki's ``/$/ping`` and ``/$/stats`` on the same server."""
@@ -619,8 +643,57 @@ class TestAdminEndpoints:
         assert list(datasets) == ["/ds"]
         assert set(datasets["/ds"]) == {
             "version", "leaves", "max_leaves_per_bucket", "tombstones", "pinned_snapshots",
+            "evaluations",
         }
         assert datasets["/ds"]["version"] >= 0
+        assert set(datasets["/ds"]["evaluations"]) == {"query", "update_where"}
+
+    def test_stats_count_driver_and_spark_evaluations(self, own_server):
+        url, _ = own_server
+        base = url.rsplit("/", 1)[0]
+
+        def evaluations():
+            return json.loads(req(f"{base}/$/stats")[2])["datasets"]["/ds"]["evaluations"]
+
+        def post(op, text, ct):
+            assert req(f"{url}/{op}", "POST", text.encode(), ct)[0] == 200
+
+        before = evaluations()
+        post("query", f"SELECT ?o WHERE {{ <{EX}s1> <{EX}p> ?o }}", "application/sparql-query")
+        post("query", f"SELECT DISTINCT ?o WHERE {{ ?s <{EX}p> ?o }}", "application/sparql-query")
+        post("query", f"ASK {{ ?s <{EX}p> ?o }}", "application/sparql-query")
+        post("update", f'INSERT {{ ?s <{EX}q> ?o }} WHERE {{ <{EX}s1> <{EX}p> ?o }}',
+             "application/sparql-update")
+        post("update", f"INSERT {{ ?s <{EX}q> ?o }} WHERE {{ {{ <{EX}s2> <{EX}p> ?o }} UNION "
+             f"{{ <{EX}s3> <{EX}p> ?o }} }}", "application/sparql-update")
+        post("update", f'INSERT DATA {{ <{EX}s4> <{EX}q> "x" }}', "application/sparql-update")
+        after = evaluations()
+        delta = {what: {path: after[what][path] - before[what][path] for path in after[what]}
+                 for what in after}
+        assert delta == {"query": {"driver": 2, "spark": 1},
+                         "update_where": {"driver": 1, "spark": 1}}
+
+    def test_evaluation_counts_are_exact_under_threads(self, spark, tmp_path):
+        import threading
+
+        stores = {n: QuadStore(str(tmp_path / n)) for n in ("a", "b")}
+        srv = SparqlHttpServer(spark, stores=stores)
+
+        def count(name):
+            for i in range(2000):
+                srv._count(stores[name], "query" if i % 2 else "update_where", i % 3 == 0)
+
+        threads = [threading.Thread(target=count, args=(n,)) for n in ("a", "b") * 4]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join()
+        per_thread = {"query": {"driver": 333, "spark": 667},
+                      "update_where": {"driver": 334, "spark": 666}}
+        for name in ("a", "b"):
+            got = srv.stats()["datasets"][f"/{name}"]["evaluations"]
+            assert got == {what: {path: 4 * n for path, n in paths.items()}
+                           for what, paths in per_thread.items()}
 
 
 class TestServiceFederation:
@@ -872,13 +945,19 @@ def test_bounded_and_streamed_serializations_identical(server):
 
 
 class TestResultSpill:
-    """Every HTTP read writes its result once under ``<store>/_results``
-    with one Spark job, before the status line, and streams the body from
-    those files: the directory is gone however the body ends, the body no
-    longer depends on the store's files or the client's pace, and the
-    rows come back with their variable names and in their order."""
+    """Every HTTP read on the Spark path writes its result once under
+    ``<store>/_results`` with one Spark job, before the status line, and
+    streams the body from those files: the directory is gone however the
+    body ends, the body no longer depends on the store's files or the
+    client's pace, and the rows come back with their variable names and
+    in their order.  These reads would run on the driver, so every test
+    here takes the translator (``translator_only``)."""
 
     Q = f"SELECT ?s ?o WHERE {{ ?s <{EX}p> ?o }}"
+
+    @pytest.fixture(autouse=True)
+    def _spark_path(self, translator_only):
+        pass
 
     def test_removed_after_complete_body(self, own_server):
         url, store = own_server
@@ -1008,17 +1087,32 @@ def typed_rows(n, graph):
 
 
 class TestReadJobCounts:
-    """An HTTP read costs one Spark job for its result, however many
-    partitions that result has.  On a small store every scan is one
+    """On a small store, a SELECT or ASK inside the driver's fragment
+    (``sparql.arrow_eval``) and an update WHERE inside it run no Spark
+    job.  Every other read costs one Spark job for its result, however
+    many partitions that result has: on a small store every scan is one
     partition, so an aggregate needs no shuffle stage and a point
     DELETE/INSERT WHERE's bounded binding probe no second scan, and the
     joins and unions of a query run in the same single task instead of
-    broadcasting a side each: one job each too."""
+    broadcasting a side each.
+
+    The ``*_is_one_job`` tests of fragment reads and WHEREs pin that
+    translator path on the small store (``translator_only``), which
+    serves every query outside the fragment; each has a twin that runs no
+    job.  Over the bound (``SMALL_COMMIT_ROWS = 0``) the same reads cost a
+    job per shuffle stage and the updates commit on the Spark tier."""
 
     G = f"{EX}jobs"
     T = f"{EX}typed"
     BGP = (f"SELECT ?s ?v ?o WHERE {{ GRAPH <{T}> {{ ?s <{EX}type> <{EX}C0> . "
            f"?s <{EX}val> ?v . FILTER(?v < 30) OPTIONAL {{ ?s <{EX}opt> ?o }} }} }}")
+    COUNT = f"SELECT (COUNT(*) AS ?n) WHERE {{ GRAPH <{G}> {{ ?s ?p ?o }} }}"
+    GROUP = f"SELECT ?o (COUNT(?s) AS ?n) WHERE {{ ?s <{EX}p> ?o }} GROUP BY ?o"
+    UNCONSTRAINED = f"SELECT ?s ?o WHERE {{ ?s <{EX}p> ?o }}"
+    POINT = (f'DELETE {{ <{EX}s7> <{EX}p> ?o }} INSERT {{ <{EX}s7> <{EX}p> "m" }} '
+             f"WHERE {{ <{EX}s7> <{EX}p> ?o }}")
+    JOINED = (f'WITH <{T}> DELETE {{ ?s <{EX}val> ?v }} INSERT {{ ?s <{EX}val> "0" }} '
+              f"WHERE {{ ?s <{EX}type> <{EX}C0> . ?s <{EX}val> ?v FILTER(?v < 30) }}")
 
     @pytest.fixture()
     def loaded(self, spark, tmp_path):
@@ -1028,14 +1122,23 @@ class TestReadJobCounts:
         assert len(store._read_manifest()["files"]) == store.n_buckets
         return SparqlHttpServer(spark, store), store
 
-    def test_bgp_filter_optional_is_one_job(self, loaded, count_jobs):
-        srv, store = loaded
-        jobs, body = count_jobs(lambda: "".join(srv.run_query(store, self.BGP)[1]))
-        got = {(b["s"]["value"], b["v"]["value"], b.get("o", {}).get("value"))
-               for b in json.loads(body)["results"]["bindings"]}
+    @staticmethod
+    def read(srv, store, q, count_jobs):
+        jobs, body = count_jobs(lambda: "".join(srv.run_query(store, q)[1]))
+        return jobs, json.loads(body)["results"]["bindings"]
+
+    def check_bgp(self, loaded, count_jobs, want_jobs):
+        jobs, b = self.read(*loaded, self.BGP, count_jobs)
+        got = {(x["s"]["value"], x["v"]["value"], x.get("o", {}).get("value")) for x in b}
         assert got == {(f"{EX}t{i}", str(i * 7 % 50), f"opt{i}" if i % 3 == 0 else None)
                        for i in range(60) if i % 2 == 0 and i * 7 % 50 < 30}
-        assert jobs == 1
+        assert jobs == want_jobs
+
+    def test_bgp_filter_optional_is_one_job(self, loaded, count_jobs, translator_only):
+        self.check_bgp(loaded, count_jobs, 1)
+
+    def test_bgp_filter_optional_on_a_small_store_runs_no_job(self, loaded, count_jobs):
+        self.check_bgp(loaded, count_jobs, 0)
 
     def test_union_and_minus_are_one_job(self, loaded, count_jobs):
         srv, store = loaded
@@ -1061,7 +1164,8 @@ class TestReadJobCounts:
         assert small.count("FileScan") <= 3 and "Exchange" not in small, small
         assert "Exchange" in split and "Coalesce" not in split, split
 
-    def test_reads_past_32_leaves_list_no_files(self, spark, loaded, count_jobs):
+    def test_reads_past_32_leaves_list_no_files(self, spark, loaded, count_jobs,
+                                                translator_only):
         """Spark lists more than 32 paths with a job of its own; the
         manifest already names every leaf, so no read may pay for one.
         The leaves come from Spark-tier DataFrame commits, which append a
@@ -1085,12 +1189,15 @@ class TestReadJobCounts:
         ))
         assert jobs == 1
 
-    def test_unconstrained_select_is_one_job(self, loaded, count_jobs):
-        srv, store = loaded
-        q = f"SELECT ?s ?o WHERE {{ ?s <{EX}p> ?o }}"
-        jobs, body = count_jobs(lambda: "".join(srv.run_query(store, q)[1]))
-        assert len(json.loads(body)["results"]["bindings"]) == 200
-        assert jobs == 1
+    def check_unconstrained(self, loaded, count_jobs, want_jobs):
+        jobs, b = self.read(*loaded, self.UNCONSTRAINED, count_jobs)
+        assert len(b) == 200 and jobs == want_jobs
+
+    def test_unconstrained_select_is_one_job(self, loaded, count_jobs, translator_only):
+        self.check_unconstrained(loaded, count_jobs, 1)
+
+    def test_unconstrained_select_on_a_small_store_runs_no_job(self, loaded, count_jobs):
+        self.check_unconstrained(loaded, count_jobs, 0)
 
     def test_gsp_get_of_one_graph_is_one_job(self, loaded, count_jobs):
         srv, store = loaded
@@ -1106,47 +1213,128 @@ class TestReadJobCounts:
         assert jobs == 0
         assert spilled(store) == []
 
-    def test_count_by_graph_is_one_job(self, loaded, count_jobs):
-        srv, store = loaded
-        q = f"SELECT (COUNT(*) AS ?n) WHERE {{ GRAPH <{self.G}> {{ ?s ?p ?o }} }}"
-        jobs, body = count_jobs(lambda: "".join(srv.run_query(store, q)[1]))
-        assert json.loads(body)["results"]["bindings"][0]["n"]["value"] == "20"
-        assert jobs == 1
+    def check_count(self, loaded, count_jobs, want_jobs):
+        jobs, b = self.read(*loaded, self.COUNT, count_jobs)
+        assert b[0]["n"]["value"] == "20" and jobs == want_jobs
 
-    def test_group_by_aggregate_is_one_job(self, loaded, count_jobs):
-        srv, store = loaded
-        q = f"SELECT ?o (COUNT(?s) AS ?n) WHERE {{ ?s <{EX}p> ?o }} GROUP BY ?o"
-        jobs, body = count_jobs(lambda: "".join(srv.run_query(store, q)[1]))
-        b = json.loads(body)["results"]["bindings"]
+    def test_count_by_graph_is_one_job(self, loaded, count_jobs, translator_only):
+        self.check_count(loaded, count_jobs, 1)
+
+    def test_count_by_graph_on_a_small_store_runs_no_job(self, loaded, count_jobs):
+        self.check_count(loaded, count_jobs, 0)
+
+    def check_group(self, loaded, count_jobs, want_jobs):
+        jobs, b = self.read(*loaded, self.GROUP, count_jobs)
         assert len(b) == 200 and {x["n"]["value"] for x in b} == {"1"}
-        assert jobs == 1
+        assert jobs == want_jobs
 
-    def test_point_delete_insert_where_is_one_job(self, spark, loaded, count_jobs):
+    def test_group_by_aggregate_is_one_job(self, loaded, count_jobs, translator_only):
+        self.check_group(loaded, count_jobs, 1)
+
+    def test_group_by_aggregate_on_a_small_store_runs_no_job(self, loaded, count_jobs):
+        self.check_group(loaded, count_jobs, 0)
+
+    def check_point_update(self, spark, loaded, count_jobs, want_jobs):
         srv, store = loaded
+        jobs, _ = count_jobs(lambda: srv.run_update(store, self.POINT))
+        assert jobs == want_jobs
         s = f"{EX}s7"
-        jobs, _ = count_jobs(lambda: srv.run_update(
-            store,
-            f'DELETE {{ <{s}> <{EX}p> ?o }} INSERT {{ <{s}> <{EX}p> "m" }} '
-            f"WHERE {{ <{s}> <{EX}p> ?o }}",
-        ))
-        assert jobs == 1
         got = {(r.graph, r.object_value) for r in store.read(spark).collect() if r.subject == s}
         assert got == {("", "m"), (self.G, "v7")}
 
-    def test_joined_delete_insert_where_is_one_job(self, spark, loaded, count_jobs):
+    def test_point_delete_insert_where_is_one_job(self, spark, loaded, count_jobs,
+                                                   translator_only):
+        self.check_point_update(spark, loaded, count_jobs, 1)
+
+    def test_point_delete_insert_where_on_a_small_store_runs_no_job(self, spark, loaded,
+                                                                     count_jobs):
+        self.check_point_update(spark, loaded, count_jobs, 0)
+
+    def check_joined_update(self, spark, loaded, count_jobs, want_jobs):
         # a WHERE joining two patterns gets a query's one-task plan: no
         # broadcast job for either side
         srv, store = loaded
-        jobs, _ = count_jobs(lambda: srv.run_update(
-            store,
-            f'WITH <{self.T}> DELETE {{ ?s <{EX}val> ?v }} INSERT {{ ?s <{EX}val> "0" }} '
-            f"WHERE {{ ?s <{EX}type> <{EX}C0> . ?s <{EX}val> ?v FILTER(?v < 30) }}",
-        ))
-        assert jobs == 1
+        jobs, _ = count_jobs(lambda: srv.run_update(store, self.JOINED))
+        assert jobs == want_jobs
         got = {(r.subject, r.object_value) for r in store.read(spark).collect()
                if r.graph == self.T and r.predicate == f"{EX}val"}
         hit = lambda i: i % 2 == 0 and i * 7 % 50 < 30  # noqa: E731
         assert got == {(f"{EX}t{i}", "0" if hit(i) else str(i * 7 % 50)) for i in range(60)}
+
+    def test_joined_delete_insert_where_is_one_job(self, spark, loaded, count_jobs,
+                                                    translator_only):
+        self.check_joined_update(spark, loaded, count_jobs, 1)
+
+    def test_joined_delete_insert_where_on_a_small_store_runs_no_job(self, spark, loaded,
+                                                                      count_jobs):
+        self.check_joined_update(spark, loaded, count_jobs, 0)
+
+    def test_where_after_delete_data_on_a_small_store_runs_no_job(self, spark, loaded,
+                                                                   count_jobs):
+        """The WHERE reads the request's pending state: the snapshot less
+        the quad the DELETE DATA removed.  On the translator's path that
+        state's anti-join broadcasts the deleted rows, a job of its own."""
+        srv, store = loaded
+        jobs, _ = count_jobs(lambda: srv.run_update(
+            store, f'DELETE DATA {{ <{EX}s10> <{EX}p> "v10" }} ; '
+            f"INSERT {{ ?s <{EX}r> ?o }} WHERE {{ ?s <{EX}p> ?o "
+            f"FILTER(?s = <{EX}s10> || ?s = <{EX}s11>) }}",
+        ))
+        assert jobs == 2  # out of the fragment (||): the translator's path
+        jobs, _ = count_jobs(lambda: srv.run_update(
+            store, f'DELETE DATA {{ <{EX}s12> <{EX}p> "v12" }} ; '
+            f"INSERT {{ <{EX}s12> <{EX}r> ?o }} WHERE {{ <{EX}s12> <{EX}p> ?o }} ; "
+            f"INSERT {{ <{EX}s13> <{EX}r> ?o }} WHERE {{ <{EX}s13> <{EX}p> ?o }}",
+        ))
+        assert jobs == 0
+        got = {(r.subject, r.predicate, r.object_value) for r in store.read(spark).collect()
+               if r.graph == "" and r.subject in {f"{EX}s{i}" for i in (10, 11, 12, 13)}}
+        assert got == {(f"{EX}s11", f"{EX}p", "v11"), (f"{EX}s11", f"{EX}r", "v11"),
+                       (f"{EX}s13", f"{EX}p", "v13"), (f"{EX}s13", f"{EX}r", "v13")}
+
+    def test_fragment_read_at_the_bound(self, loaded, count_jobs):
+        """At ``SMALL_COMMIT_ROWS`` = the store's row count the read runs
+        on the driver; one row under it, on Spark; the answers agree."""
+        srv, store = loaded
+        rows = store.count(srv.spark)
+        answers = []
+        for bound, driver in ((rows, True), (rows - 1, False)):
+            store.SMALL_COMMIT_ROWS = bound
+            try:
+                jobs, b = self.read(srv, store, self.BGP, count_jobs)
+            finally:
+                del store.SMALL_COMMIT_ROWS
+            assert (jobs == 0) == driver, (bound, jobs)
+            answers.append(sorted(json.dumps(x, sort_keys=True) for x in b))
+        assert answers[0] == answers[1] and len(answers[0]) == 19
+
+    def test_fragment_update_where_at_the_bound(self, spark, loaded, count_jobs):
+        srv, store = loaded
+        rows = store.count(spark)
+        for bound, path in ((rows, "driver"), (rows - 1, "spark")):
+            before = srv.stats()["datasets"]["/ds"]["evaluations"]["update_where"]
+            store.SMALL_COMMIT_ROWS = bound
+            try:
+                srv.run_update(store, f"INSERT {{ ?s <{EX}r{bound}> ?o }} "
+                                      f"WHERE {{ GRAPH <{self.G}> {{ ?s <{EX}p> ?o }} }}")
+            finally:
+                del store.SMALL_COMMIT_ROWS
+            after = srv.stats()["datasets"]["/ds"]["evaluations"]["update_where"]
+            assert after[path] == before[path] + 1, (bound, before, after)
+        got = Counter(r.predicate for r in store.read(spark).collect() if r.graph == "")
+        assert got[f"{EX}r{rows}"] == got[f"{EX}r{rows - 1}"] == 20
+
+    @pytest.mark.parametrize("q", [
+        f"SELECT ?s ?x WHERE {{ GRAPH <{T}> {{ {{ ?s <{EX}type> ?x }} UNION {{ ?s <{EX}opt> ?x }} }} }}",
+        f"SELECT ?s ?v WHERE {{ GRAPH <{T}> {{ ?s <{EX}val> ?v }} }} ORDER BY ?v",
+        f"SELECT ?s ?v FROM <{T}> WHERE {{ ?s <{EX}val> ?v }}",
+    ], ids=["union", "order_by", "from"])
+    def test_outside_the_fragment_takes_spark(self, loaded, count_jobs, q):
+        srv, store = loaded
+        before = srv.stats()["datasets"]["/ds"]["evaluations"]["query"]["spark"]
+        jobs, b = self.read(srv, store, q, count_jobs)
+        assert jobs == 1 and len(b) in (60 + 20, 60)
+        assert srv.stats()["datasets"]["/ds"]["evaluations"]["query"]["spark"] == before + 1
 
 
 class TestGspReadPaths:
