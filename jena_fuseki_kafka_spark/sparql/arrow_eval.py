@@ -79,6 +79,7 @@ class Plan:
     vars: list[str] | None
     run: Callable
     maybe: frozenset = frozenset()
+    scans: tuple = ()  # (filter, constant subject or None) of each triple pattern
 
 
 def plan_query(ast) -> Plan | None:
@@ -88,9 +89,10 @@ def plan_query(ast) -> Plan | None:
             if ast.dataset is not None:
                 raise _Outside
             node = _pattern(ast.pattern, None)
-            return Plan(None, lambda source: node.run(source).num_rows > 0)
+            ask = Plan(None, lambda source: node.run(source).num_rows > 0, scans=node.scans)
+            return _reading_once(ask)
         if isinstance(ast, SelectQuery):
-            return _select(ast)
+            return _reading_once(_select(ast))
     except _Outside:
         pass
     return None
@@ -100,9 +102,33 @@ def plan_pattern(pattern, graph) -> Plan | None:
     """The plan of an update's WHERE pattern under ``graph`` (the WITH
     graph as ("iri", g), or None), or None outside the fragment."""
     try:
-        return _pattern(pattern, graph)
+        return _reading_once(_pattern(pattern, graph))
     except _Outside:
         return None
+
+
+def _reading_once(plan: Plan) -> Plan:
+    """``plan`` over one read of its source (``_OneRead``)."""
+    return Plan(plan.vars, lambda source: plan.run(_OneRead(source, plan.scans)), plan.maybe)
+
+
+class _OneRead:
+    """One ``arrow`` read of a source for all the triple patterns of a
+    plan: the quads any of their filters matches, which each pattern then
+    filters again in memory.  When every pattern names the same constant
+    subject, only that subject's bucket is read."""
+
+    def __init__(self, source, scans: tuple):
+        self.scans = scans
+        subjects = {subject for _, subject in scans}
+        if scans:
+            self.table = source.arrow(
+                reduce(operator.or_, [f for f, _ in scans]),
+                subjects.pop() if len(subjects) == 1 else None,
+            )
+
+    def arrow(self, filter):
+        return self.table if len(self.scans) == 1 else self.table.filter(filter)
 
 
 def solutions(table, variables: list[str], batch_rows: int = 8192):
@@ -139,7 +165,7 @@ def _select(q: SelectQuery) -> Plan:
             c: t[c] if n in node.vars else nulls for n in names for c in _cols(n)
         })
 
-    return Plan(names, run)
+    return Plan(names, run, scans=node.scans)
 
 
 def _aggregate(q: SelectQuery, node: Plan) -> Plan:
@@ -196,7 +222,7 @@ def _aggregate(q: SelectQuery, node: Plan) -> Plan:
                 )))
         return pa.table(cols)
 
-    return Plan([n for n, _ in out], run)
+    return Plan([n for n, _ in out], run, scans=node.scans)
 
 
 # ------------------------------------------------------------ patterns
@@ -239,7 +265,7 @@ def _pattern(node, graph) -> Plan:
                 t = t.filter(test(t))
             return t
 
-        return Plan(inner.vars, run, inner.maybe)
+        return Plan(inner.vars, run, inner.maybe, inner.scans)
     raise _Outside
 
 
@@ -265,10 +291,10 @@ def _join(left: Plan, right: Plan, how: str = "inner", compat: bool = False) -> 
     keys = [_ONE] + [c for v in common for c in _cols(v)]
 
     def run(source):
-        out = left.run(source).join(right.run(source), keys=keys, join_type=how)
+        out = left.run(source).join(right.run(source), keys=keys, join_type=how, use_threads=False)
         return out.select([_ONE] + [c for v in order for c in _cols(v)])
 
-    return Plan(order, run, maybe)
+    return Plan(order, run, maybe, left.scans + right.scans)
 
 
 def _scope(graph):
@@ -355,7 +381,7 @@ def _triple(s, p, o, graph) -> Plan:
         )
         return out.filter(reduce(pc.and_, same)) if same else out
 
-    return Plan(names, run)
+    return Plan(names, run, scans=((scan, s[1] if s[0] == "iri" else None),))
 
 
 # ------------------------------------------------------------ FILTER

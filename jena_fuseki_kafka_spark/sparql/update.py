@@ -310,8 +310,8 @@ class _Pending:
             v = (v.coalesce(1) if self.small else v).dropDuplicates(QUAD_COLS)
         return v
 
-    def arrow(self, filter=None):
-        """The quads of ``scan()`` that match ``filter`` (a
+    def arrow(self, filter=None, subject: str | None = None):
+        """The quads of ``scan(subject)`` that match ``filter`` (a
         ``pyarrow.dataset`` expression) as one pyarrow table, read on the
         driver while the state is rows: the snapshot's ``arrow`` without
         the cleared graphs and the deleted quads (tuple equality is
@@ -321,7 +321,7 @@ class _Pending:
         import pyarrow as pa
         import pyarrow.compute as pc
 
-        t = self._pinned().arrow(filter)
+        t = self._pinned().arrow(filter, subject)
         if self.graphs:
             cleared = pa.array(sorted(self.graphs), pa.string())
             t = t.filter(pc.invert(pc.is_in(t["graph"], value_set=cleared)))

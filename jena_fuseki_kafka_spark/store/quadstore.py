@@ -742,9 +742,16 @@ class Snapshot:
             df = quad_frame(self.spark, ())
         return df.coalesce(1) if self.small else df
 
-    def arrow(self, filter=None):
+    def arrow(self, filter=None, subject: str | None = None):
         """Every row (matching ``filter``, a ``pyarrow.dataset``
         expression) as one pyarrow table, read on the driver with one
-        ``pyarrow.dataset`` read: no Spark job.  Meant for ``small``
-        snapshots, as the table holds its rows in driver memory."""
-        return self.store._read_leaves(self.files, filter)
+        ``pyarrow.dataset`` read: no Spark job.  Given a ``subject``, only
+        the leaves of its bucket are read, as ``scan`` does; ``filter``
+        must then hold that subject only.  Meant for ``small`` snapshots,
+        as the table holds its rows in driver memory."""
+        from .xxh64 import spark_bucket
+
+        files = self.files
+        if subject is not None:
+            files = self.store._leaves_in(files, {spark_bucket(subject, self.store.n_buckets)})
+        return self.store._read_leaves(files, filter)
