@@ -279,6 +279,8 @@ class SparqlHttpServer:
         have run, however many commits land meanwhile."""
         snapshot = store.snapshot(self.spark)
         try:
+            # the engine module's parser, as a query's other callers reach
+            # it: perfbench/tracing.py times the parse layer there
             ast = sparql_engine.parse_sparql(text)
             plan = arrow_eval.plan_query(ast) if dataset is None and snapshot.small else None
             self._count(store, "query", plan is not None)
