@@ -263,8 +263,9 @@ class SparqlHttpServer:
         ``arrow_eval``'s fragment is answered on the driver: pyarrow reads
         of the snapshot and joins in memory, no Spark job and no
         ``_results`` spill.  The answer is complete and the snapshot
-        released before this returns; the iterator serializes it.  Any
-        other query runs as Spark jobs (one on a small store; see the
+        released before this returns; the iterator serializes it.  A join
+        that would hold more than ``SMALL_COMMIT_ROWS`` solutions sends the
+        query to Spark instead.  Any other query runs as Spark jobs (one on a small store; see the
         module docstring) that write its result under the store's
         ``_results`` directory (``_ResultBody``), and the iterator then
         streams it off disk one Arrow batch at a time.  The HTTP layer
@@ -283,9 +284,14 @@ class SparqlHttpServer:
             # it: perfbench/tracing.py times the parse layer there
             ast = sparql_engine.parse_sparql(text)
             plan = arrow_eval.plan_query(ast) if dataset is None and snapshot.small else None
+            if plan is not None:
+                try:
+                    answer = plan.run(snapshot, store.SMALL_COMMIT_ROWS)
+                except arrow_eval.TooLarge:
+                    plan = None
             self._count(store, "query", plan is not None)
             if plan is not None:
-                return self._driver_query(ast, plan, snapshot, accept)
+                return self._driver_answer(ast, plan.vars, answer, accept)
             ast, result = SparqlEngine(snapshot).query_ast(ast, dataset)
             # branch on the parsed query form, NOT result column names: a
             # SELECT projecting variables named like the quad columns must
@@ -305,17 +311,17 @@ class SparqlHttpServer:
             snapshot.release()
 
     @staticmethod
-    def _driver_query(ast, plan, snapshot, accept: str | None):
-        """A SELECT or ASK answered by ``plan`` over ``snapshot`` on the
-        driver, under the query's own variable names."""
+    def _driver_answer(ast, variables, answer, accept: str | None):
+        """A SELECT's solution table (``variables``; None for ASK and its
+        bool ``answer``) from ``arrow_eval``, serialized under the query's
+        own variable names."""
         (select_stream, ask_fn), content_type = negotiate_results_streamer(accept)
-        answer = plan.run(snapshot)
-        if plan.vars is None:
+        if variables is None:
             return content_type, iter((ask_fn(answer),))
-        names = [ast.var_names.get(v, v) for v in plan.vars]
+        names = [ast.var_names.get(v, v) for v in variables]
         rows = (
             _ResultRow(zip(names, row.values()))
-            for row in arrow_eval.solutions(answer, plan.vars, RESULT_BATCH_ROWS)
+            for row in arrow_eval.solutions(answer, variables, RESULT_BATCH_ROWS)
         )
         return content_type, select_stream(names, rows)
 

@@ -20,6 +20,11 @@ the caller takes the translator unchanged.  The fragment:
 - GROUP BY variables with ``COUNT(*)`` / ``COUNT(?v)``, or those counts
   over the whole solution set.
 
+A plan runs with a row bound (the store's ``SMALL_COMMIT_ROWS``): a join
+whose result would hold more solutions raises ``TooLarge`` before it is
+built, and the caller takes the translator, which spills to disk where
+the driver would have to hold the rows.
+
 A solution set is a pyarrow table with four string columns per variable,
 ``v.kind``, ``v.value``, ``v.datatype`` and ``v.lang`` (``""`` for no
 datatype or language tag, all four null when unbound): the terms
@@ -65,6 +70,10 @@ class _Outside(Exception):
     """The query is outside the fragment."""
 
 
+class TooLarge(Exception):
+    """A join would give more solutions than the plan's row bound."""
+
+
 def _cols(var: str) -> list[str]:
     return [f"{var}.{f}" for f in FIELDS]
 
@@ -72,7 +81,8 @@ def _cols(var: str) -> list[str]:
 @dataclass
 class Plan:
     """A compiled query or pattern.  ``vars`` are its result variables, in
-    the translator's column order (None for ASK); ``run(source)`` is the
+    the translator's column order (None for ASK); ``run(source,
+    max_rows)`` of a plan from ``plan_query`` / ``plan_pattern`` is the
     solution table (the bool, for ASK).  ``maybe`` holds the variables a
     pattern may leave unbound: those only an OPTIONAL binds."""
 
@@ -109,17 +119,22 @@ def plan_pattern(pattern, graph) -> Plan | None:
 
 def _reading_once(plan: Plan) -> Plan:
     """``plan`` over one read of its source (``_OneRead``)."""
-    return Plan(plan.vars, lambda source: plan.run(_OneRead(source, plan.scans)), plan.maybe)
+    return Plan(
+        plan.vars,
+        lambda source, max_rows: plan.run(_OneRead(source, plan.scans, max_rows)),
+        plan.maybe,
+    )
 
 
 class _OneRead:
     """One ``arrow`` read of a source for all the triple patterns of a
     plan: the quads any of their filters matches, which each pattern then
     filters again in memory.  When every pattern names the same constant
-    subject, only that subject's bucket is read."""
+    subject, only that subject's bucket is read.  ``max_rows`` bounds
+    every join of the plan."""
 
-    def __init__(self, source, scans: tuple):
-        self.scans = scans
+    def __init__(self, source, scans: tuple, max_rows: int):
+        self.scans, self.max_rows = scans, max_rows
         subjects = {subject for _, subject in scans}
         if scans:
             self.table = source.arrow(
@@ -291,10 +306,27 @@ def _join(left: Plan, right: Plan, how: str = "inner", compat: bool = False) -> 
     keys = [_ONE] + [c for v in common for c in _cols(v)]
 
     def run(source):
-        out = left.run(source).join(right.run(source), keys=keys, join_type=how, use_threads=False)
+        lt, rt = left.run(source), right.run(source)
+        if lt.num_rows * max(rt.num_rows, 1) > source.max_rows:
+            if _join_rows(lt, rt, keys, how) > source.max_rows:
+                raise TooLarge
+        out = lt.join(rt, keys=keys, join_type=how, use_threads=False)
         return out.select([_ONE] + [c for v in order for c in _cols(v)])
 
     return Plan(order, run, maybe, left.scans + right.scans)
+
+
+def _join_rows(left, right, keys: list[str], how: str) -> int:
+    """How many rows joining ``left`` and ``right`` on ``keys`` gives,
+    from the row count of each key on each side."""
+    import pyarrow.compute as pc
+
+    counts = right.group_by(keys).aggregate([([], "count_all")])
+    pairs = left.group_by(keys).aggregate([([], "count_all")]).join(
+        counts.rename_columns(keys + ["right"]), keys, join_type=how, use_threads=False
+    )
+    per_left = pairs["right"] if how == "inner" else pc.fill_null(pairs["right"], 1)
+    return pc.sum(pc.multiply(pairs["count_all"], per_left)).as_py() or 0
 
 
 def _scope(graph):

@@ -567,7 +567,8 @@ class UpdateEngine:
         pending state and instantiate both templates from the same
         bindings.  A pattern in ``arrow_eval``'s fragment, over a small
         store whose pending state is still rows, is evaluated on the
-        driver; when its bindings fit ``DRIVER_COMMIT_ROWS`` they
+        driver (unless a join would hold more than ``SMALL_COMMIT_ROWS``
+        solutions); when its bindings fit ``DRIVER_COMMIT_ROWS`` they
         instantiate there with no Spark job.  Otherwise the pattern goes
         through the translator a query gets."""
         del_tmpl, ins_tmpl, pattern = op[1], op[2], op[3]
@@ -596,7 +597,11 @@ class UpdateEngine:
             if ds is None and not pending.frames and pending.small:
                 plan = arrow_eval.plan_pattern(pattern, wg)
             if plan is not None:
-                table = plan.run(pending)
+                try:
+                    table = plan.run(pending, self.store.SMALL_COMMIT_ROWS)
+                except arrow_eval.TooLarge:
+                    plan = None
+            if plan is not None:
                 if table.num_rows <= cap:
                     solutions = list(arrow_eval.solutions(table, plan.vars))
             else:

@@ -1324,6 +1324,22 @@ class TestReadJobCounts:
         got = Counter(r.predicate for r in store.read(spark).collect() if r.graph == "")
         assert got[f"{EX}r{rows}"] == got[f"{EX}r{rows - 1}"] == 20
 
+    def test_a_join_past_the_bound_takes_spark(self, spark, own_server, count_jobs):
+        """A driver join is bounded by ``SMALL_COMMIT_ROWS`` solutions, the
+        bound that makes the store small: one that would hold more runs on
+        Spark instead."""
+        _, store = own_server
+        srv = SparqlHttpServer(spark, store)
+        store.SMALL_COMMIT_ROWS = 200  # the store's row count
+        keyed = f"SELECT * WHERE {{ ?s <{EX}p> ?o . ?s <{EX}p> ?o2 }}"
+        cross = f"SELECT * WHERE {{ ?s <{EX}p> ?o . ?t <{EX}p> ?o2 }}"
+        for q, rows, driver in ((keyed, 200, True), (cross, 200 * 200, False)):
+            before = srv.stats()["datasets"]["/ds"]["evaluations"]["query"]
+            jobs, b = self.read(srv, store, q, count_jobs)
+            after = srv.stats()["datasets"]["/ds"]["evaluations"]["query"]
+            assert len(b) == rows and (jobs == 0) == driver, (q, jobs)
+            assert after["driver"] - before["driver"] == int(driver)
+
     @pytest.mark.parametrize("q", [
         f"SELECT ?s ?x WHERE {{ GRAPH <{T}> {{ {{ ?s <{EX}type> ?x }} UNION {{ ?s <{EX}opt> ?x }} }} }}",
         f"SELECT ?s ?v WHERE {{ GRAPH <{T}> {{ ?s <{EX}val> ?v }} }} ORDER BY ?v",

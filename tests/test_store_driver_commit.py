@@ -218,9 +218,9 @@ def test_cross_writer_interop(spark, tmp_path):
 
 def test_driver_path_actually_engages(spark, tmp_path, count_jobs):
     """On a small store the HTTP mutations commit without any Spark job,
-    and a point DELETE/INSERT WHERE costs one job: the bounded collect of
-    its bindings over the one-partition snapshot.  Pinned by job count, so a regression cannot silently
-    re-route HTTP writes through Spark jobs."""
+    and so does a point DELETE/INSERT WHERE: its WHERE runs on the driver
+    (``sparql.arrow_eval``).  Pinned by job count, so a regression cannot
+    silently re-route HTTP writes through Spark jobs."""
     store = QuadStore(str(tmp_path / "e"))
     pre = _quads("pre", 200) + _quads("pg", 20, graph=G)
     store.commit(spark, adds=spark.createDataFrame(pre, QUAD_SCHEMA), assume_unique=True)
@@ -253,7 +253,7 @@ def test_driver_path_actually_engages(spark, tmp_path, count_jobs):
         'DELETE { <http://e/pre2> <http://e/p> ?o } INSERT { <http://e/pre2> <http://e/p> "m" } '
         "WHERE { <http://e/pre2> <http://e/p> ?o }",
     ))
-    assert jobs == 1, f"point DELETE/INSERT WHERE launched {jobs} Spark jobs"
+    assert jobs == 0, f"point DELETE/INSERT WHERE launched {jobs} Spark jobs"
     expect = set(_quads("pre", 5)) - {_quads("pre", 3)[2]}
     expect.add(("", "http://e/pre2", "http://e/p", "literal", "m", None, None))
     assert _snapshot(spark, store) == sorted(expect)
@@ -263,7 +263,7 @@ def test_thousand_small_commits_keep_one_leaf_per_bucket(spark, tmp_path, count_
     """1,000 two-quad driver-tier commits (inserts, deletes and PATCH-style
     add+delete pairs) on a Spark-written preload leave every bucket with
     at most one leaf and the snapshot at its closed form, and the point,
-    COUNT and BGP reads stay at one Spark job each."""
+    COUNT and BGP reads run on the driver with no Spark job."""
     store = QuadStore(str(tmp_path / "k"))
     pre = _quads("pre", 400) + [
         ("", f"http://e/pre{i}", "http://e/type", "iri", "http://e/C", None, None)
@@ -307,5 +307,5 @@ def test_thousand_small_commits_keep_one_leaf_per_bucket(spark, tmp_path, count_
         jobs, body = count_jobs(lambda: "".join(srv.run_query(store, q)[1]))
         got = [{k: v["value"] for k, v in b.items()} for b in json.loads(body)["results"]["bindings"]]
         assert sorted(got, key=str) == sorted(want, key=str), name
-        assert jobs == 1, name
+        assert jobs == 0, name
     assert store.stats()["pinned_snapshots"] == 0
