@@ -265,12 +265,12 @@ class SparqlHttpServer:
         ``_results`` spill.  The answer is complete and the snapshot
         released before this returns; the iterator serializes it.  A join
         that would hold more than ``SMALL_COMMIT_ROWS`` solutions sends the
-        query to Spark instead.  Any other query runs as Spark jobs (one on a small store; see the
-        module docstring) that write its result under the store's
-        ``_results`` directory (``_ResultBody``), and the iterator then
-        streams it off disk one Arrow batch at a time.  The HTTP layer
-        writes chunked, so a store-sized CONSTRUCT or SELECT never
-        materializes on the driver.
+        query to Spark instead.  Any other query runs as Spark jobs (one
+        on a small store; see the module docstring) that write its result
+        under the store's ``_results`` directory (``_ResultBody``), and the
+        iterator then streams it off disk one Arrow batch at a time.  The
+        HTTP layer writes chunked, so a store-sized CONSTRUCT or SELECT
+        never materializes on the driver.
 
         ``dataset`` carries the SPARQL 1.1 Protocol ``default-graph-uri`` /
         ``named-graph-uri`` parameters, which override FROM clauses (such
